@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registry query at the target scale factor
   * and prints one JSON line. A warmup pass at sf0.001 runs every query
   * first so JIT/codegen compilation is not billed to the first timed query
@@ -34,17 +32,7 @@ object Bench {
     val loadStart = HostProbe.loadavg()
     val probeStart = HostProbe.spinProbe()
     val ioStart = HostProbe.ioProbe()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // serial driver-side partition listing — see Sessions.builder
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "8192")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local("bench", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_ONLY=q93_cluster_sizes,… runs a subset in isolation —

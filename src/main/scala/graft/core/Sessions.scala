@@ -13,6 +13,19 @@ import org.apache.spark.sql.SparkSession
   * `flink-statistics/.../action/ActionLogJob.java:85`). Checkpointing is
   * per-query (`option("checkpointLocation", …)`), replacing the reference's
   * 60 s exactly-once checkpoints + HBase state rehydration (T12).
+  *
+  * Generated-code cache: Spark keeps compiled whole-stage classes in a
+  * JVM-wide cache keyed by (class loader, source), sized ONCE when
+  * `CodeGenerator` first initialises, from the static conf
+  * `spark.sql.codegen.cache.maxEntries` (default 100). Measured working
+  * set: one `reco_batch` benchmark iteration compiles about 400 distinct
+  * (class loader, source) pairs and one `rank_past_bound` iteration about
+  * 170; every new streaming query adds about 100–140 more under its own
+  * cloned session's class loader, which are never hit again. With the
+  * default cap nearly every query recompiled its classes on every run
+  * (about 20 ms each in Janino). Hence: every session of this repository
+  * — mains, benchmark and tests — is built here, so the first session to
+  * compile always carries the cap.
   */
 object Sessions {
   def builder(appName: String, cores: Int = Runtime.getRuntime.availableProcessors(),
@@ -43,6 +56,10 @@ object Sessions {
       // parallelizes across executors — it is a per-deployment knob
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         "8192")
+      // 1000 holds a batch iteration's ~400 classes plus the ~280 a pair
+      // of streaming queries pushes in between two reuses, with headroom
+      // for the cache's per-segment split; 4096 measured no faster
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
     if (rocksDbState)
       b.config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
@@ -102,49 +102,39 @@ object StreamingDashboard {
       .select(col("key"), unix_millis(col("w.start")).as("window_start_ms"),
         col("pv"), col("uv_sketch"))
 
-  /** Coarse rollup with UV: sums PV and unions the HLL sketches, emitting
-    * the estimated distinct-user count per coarse window. */
-  def rollupSketch(fiveMin: DataFrame): DataFrame =
-    Granularities.map { case (name, g) =>
+  /** The 5-min partials grouped by every coarse window they feed: each
+    * partial is exploded ONCE into one row per granularity, carrying the
+    * (granularity, window start) pair it floors into (1d aligned UTC+8, the
+    * reference's exact flooring `(t+8h)/(g)*(g)−8h`), and a single
+    * `groupBy` then aggregates all four granularities — one shuffle, not a
+    * union of four aggregations.
+    */
+  private def byCoarseWindow(fiveMin: DataFrame): RelationalGroupedDataset = {
+    val windows = Granularities.map { case (name, g) =>
       val offset = if (name == "1d") DayOffsetMs else 0L
-      fiveMin.select(col("key"),
-          lit(name).as("granularity"),
-          floorWindow(col("window_start_ms"), g, offset)
-            .as("window_start_ms"),
-          col("pv"), col("uv_sketch"))
-        .groupBy("key", "granularity", "window_start_ms")
-        .agg(sum("pv").as("pv"),
-          hll_sketch_estimate(hll_union_agg(col("uv_sketch"))).as("uv"))
-    }.reduce(_ unionByName _)
+      struct(lit(name).as("granularity"),
+        floorWindow(col("window_start_ms"), g, offset).as("window_start_ms"))
+    }
+    fiveMin.withColumn("w", explode(array(windows: _*)))
+      .groupBy(col("key"), col("w.granularity").as("granularity"),
+        col("w.window_start_ms").as("window_start_ms"))
+  }
 
-  /** Coarse-window rollup of stored 5-min partials: floor each 5-min start
-    * into its 15min/1h/1d window (1d aligned UTC+8, the reference's exact
-    * flooring `(t+8h)/(g)*(g)−8h`) and sum PV. Pure batch transform —
-    * runs inside foreachBatch over the metric store.
+  /** Coarse rollup with UV: sums PV and unions the HLL sketches, emitting
+    * the estimated distinct-user count per coarse window — one aggregation
+    * over the partials, like [[rollup]]. */
+  def rollupSketch(fiveMin: DataFrame): DataFrame =
+    byCoarseWindow(fiveMin).agg(sum("pv").as("pv"),
+      hll_sketch_estimate(hll_union_agg(col("uv_sketch"))).as("uv"))
+
+  /** Coarse-window rollup of stored 5-min partials: every 15min/1h/1d (and
+    * the 5min identity) window the partials fall in, with summed PV, from
+    * ONE aggregation over the partials. Pure batch transform — runs inside
+    * foreachBatch over the touched days of the metric store, so a flush
+    * costs O(touched days' partials).
     */
   def rollup(fiveMin: DataFrame): DataFrame =
-    Granularities.map { case (name, g) =>
-      val offset = if (name == "1d") DayOffsetMs else 0L
-      fiveMin.select(col("key"),
-          lit(name).as("granularity"),
-          floorWindow(col("window_start_ms"), g, offset)
-            .as("window_start_ms"),
-          col("pv"))
-        .groupBy("key", "granularity", "window_start_ms")
-        .agg(sum("pv").as("pv"))
-    }.reduce(_ unionByName _)
-
-  /** The distinct coarse (key, granularity, window_start_ms) triples a
-    * batch of 5-min partials contributes to — the restriction set for the
-    * incremental rollup: only these windows are recomputed per trigger,
-    * never the whole store history.
-    */
-  def touchedCoarseWindows(fiveMin: DataFrame): DataFrame =
-    Granularities.map { case (name, g) =>
-      val offset = if (name == "1d") DayOffsetMs else 0L
-      fiveMin.select(col("key"), lit(name).as("granularity"),
-        floorWindow(col("window_start_ms"), g, offset).as("window_start_ms"))
-    }.reduce(_ unionByName _).distinct()
+    byCoarseWindow(fiveMin).agg(sum("pv").as("pv"))
 
   /** T1: processing-time tagging — Spark is event-time-first, so the
     * reference's `timeWindow` on processing time
@@ -157,15 +147,18 @@ object StreamingDashboard {
 
   /** Per-trigger incremental flush shared by [[run]] and [[runSketch]]:
     * (a) upsert the batch's changed 5-min partials into the day-partitioned
-    * fine store; (b) recompute ONLY the coarse windows those partials touch,
-    * reading only the touched day partitions of the fine store; (c) upsert
-    * them into the day-partitioned coarse store, which rewrites only the
-    * touched `day=` directories.
+    * fine store; (b) roll up EVERY coarse window of the touched days, in one
+    * aggregation over those days' fine partitions; (c) upsert them into the
+    * day-partitioned coarse store, which rewrites the touched `day=`
+    * directories in full.
     *
     * This is the reference's flush-only-touched-windows trigger behavior
-    * (`ActionLogJobSecond.java:358-378`): cost per trigger is O(touched
-    * days' partials), not O(store history) — the previous full-store
-    * re-rollup would grow without bound on a long-running stream.
+    * (`ActionLogJobSecond.java:358-378`) at day granularity: cost per
+    * trigger is O(touched days' partials), not O(store history). Rolling up
+    * a touched day's untouched coarse windows too is idempotent — they are
+    * recomputed from the same stored partials, so they equal what the
+    * store holds — and it spares restricting the rollup to the touched
+    * windows, which cost a second exploded aggregation and a join.
     */
   private def incrementalFlush(batch: DataFrame, storePath: String,
                                roll: DataFrame => DataFrame): Unit = {
@@ -182,10 +175,7 @@ object StreamingDashboard {
       // UTC+8 day partition (see dayFloor) — read only those directories
       val fineTouched = spark.read.option("basePath", fineStore)
         .parquet(days.toIndexedSeq.map(d => s"$fineStore/day=$d"): _*)
-      val touched = touchedCoarseWindows(fine)
       val coarse = roll(fineTouched.drop("day"))
-        .join(touched, Seq("key", "granularity", "window_start_ms"),
-          "left_semi")
         .withColumn("day", dayFloor(col("window_start_ms")))
       Sinks.upsertMetricStorePartitioned(spark, s"$storePath/coarse", coarse,
         Seq("key", "granularity", "window_start_ms"))

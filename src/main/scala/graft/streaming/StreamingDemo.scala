@@ -27,13 +27,7 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local("streaming-demo", 8)
     spark.sparkContext.setLogLevel("WARN")
 
     val work = Files.createTempDirectory("graft_stream_demo").toString

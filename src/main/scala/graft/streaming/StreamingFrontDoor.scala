@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The assembled ingest front door, driven end to end WITH batch
@@ -37,13 +36,7 @@ import org.apache.spark.sql.functions._
 object StreamingFrontDoor {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local("front-door", 8)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

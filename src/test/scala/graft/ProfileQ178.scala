@@ -5,12 +5,7 @@ import org.apache.spark.sql.functions._
 /** Isolated stage timing for q178 (measurement main, not shipped). */
 object ProfileQ178 {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local("profile-q178", 32)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.1"
     val li = graft.core.Tables.lineitem(spark, dir)

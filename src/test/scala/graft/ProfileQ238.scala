@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.functions._
 object ProfileQ238 {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.Sessions.builder("profile-q236", 32)
+    val spark = graft.core.Sessions.builder("profile-q238", 32)
       .master("local[32]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.1"

@@ -11,15 +11,7 @@ trait SparkSpecBase extends AnyFunSuite {
 object SparkSpecBase {
   // one session for the whole forked test JVM
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.Sessions.local("graft-test", 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -3,9 +3,10 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.model.SensorReading
 import graft.streaming.{Alerts, StreamingDashboard, StreamingDedup}
@@ -121,6 +122,57 @@ class StreamingSpec extends SparkSpecBase {
       .select("key", "granularity", "window_start_ms", "pv")
       .as[(String, String, Long, Long)].collect().toSet
     assert(got == truth, s"incremental != batch truth:\n$got\nvs\n$truth")
+  }
+
+  /** Two AvailableNow triggers on ONE UTC+8 day that touch different
+    * hours. The second flush rolls the whole touched day up again, hours
+    * the trigger did not touch included, so the coarse store must still
+    * equal a from-scratch rollup of the fine store. */
+  private def flushTwiceInOneDay(
+      pipeline: (DataFrame, String, String) => DataStreamWriter[Row],
+      roll: DataFrame => DataFrame, cols: Seq[String]): Unit = {
+    implicit val s = spark
+    val dir = Files.createTempDirectory("graft_flush").toString
+    val mem = MemoryStream[(Timestamp, Long, String)]
+    val events = mem.toDF().toDF("ts", "user_id", "key")
+    def at(hhmm: String) = Timestamp.valueOf(s"2024-01-01 $hhmm:00")
+    def trigger(): Unit = {
+      val q = pipeline(events, s"$dir/store", s"$dir/ckpt").start()
+      try q.awaitTermination() finally q.stop()
+    }
+    mem.addData((at("10:00"), 1L, "a"), (at("10:07"), 2L, "a"),
+      (at("10:20"), 1L, "b"))
+    trigger()
+    mem.addData((at("12:03"), 3L, "a"), (at("12:31"), 1L, "b"),
+      (at("12:32"), 4L, "b"))
+    trigger()
+    val fine = spark.read.parquet(s"$dir/store/fine")
+    assert(fine.select("day").distinct().count() == 1,
+      "both triggers must land in one UTC+8 day")
+    val truth = roll(fine.drop("day")).select(cols.map(col): _*)
+      .collect().toSet
+    val got = spark.read.parquet(s"$dir/store/coarse")
+      .select(cols.map(col): _*).collect().toSet
+    assert(got == truth, s"incremental != from-scratch rollup:\n$got\nvs\n$truth")
+    val dayPv = got.toSeq.filter(_.getAs[String]("granularity") == "1d")
+      .map(_.getAs[Long]("pv")).sum
+    assert(dayPv == 6L, s"the day window must count both triggers: $got")
+  }
+
+  test("T5 one-aggregation flush: two same-day triggers on different hours " +
+    "leave the exact coarse store equal to a from-scratch rollup") {
+    flushTwiceInOneDay(
+      StreamingDashboard.run(_, _, _, trigger = Trigger.AvailableNow()),
+      StreamingDashboard.rollup,
+      Seq("key", "granularity", "window_start_ms", "pv"))
+  }
+
+  test("T13 one-aggregation flush: two same-day triggers on different hours " +
+    "leave the sketch coarse store equal to a from-scratch rollupSketch") {
+    flushTwiceInOneDay(
+      StreamingDashboard.runSketch(_, _, _, trigger = Trigger.AvailableNow()),
+      StreamingDashboard.rollupSketch,
+      Seq("key", "granularity", "window_start_ms", "pv", "uv"))
   }
 
   test("T6: temperature change alert fires on jumps above threshold") {
