@@ -75,12 +75,15 @@ object Scale {
   class TopKPayloadAgg[P](k: Int, distinctPayloads: Boolean = false)
                          (implicit ord: Ordering[P],
                           tt: scala.reflect.runtime.universe.TypeTag[P])
-    extends Aggregator[(Double, P), Seq[(Double, P)], Seq[P]] {
+    extends Aggregator[(Double, P), IndexedSeq[(Double, P)], Seq[P]] {
     private def order(a: (Double, P), b: (Double, P)): Boolean =
       a._1 > b._1 || (a._1 == b._1 && ord.lt(a._2, b._2))
-    override def zero: Seq[(Double, P)] = Seq.empty
-    override def reduce(buf: Seq[(Double, P)], in: (Double, P))
-    : Seq[(Double, P)] = {
+    // the buffer type is IndexedSeq: the O(1) reject and the binary search
+    // index it, and on a List (what Seq builders produce) `length` and
+    // `apply` walk the list
+    override def zero: IndexedSeq[(Double, P)] = Vector.empty
+    override def reduce(buf: IndexedSeq[(Double, P)], in: (Double, P))
+    : IndexedSeq[(Double, P)] = {
       if (k <= 0) buf
       else if (buf.length >= k && !order(in, buf(buf.length - 1))) buf
       else {
@@ -94,19 +97,18 @@ object Scale {
         // (the order is total), so uniqueness is an O(1) check here
         if (distinctPayloads && lo < buf.length && buf(lo) == in) buf
         else {
-          val out = scala.collection.mutable.ArrayBuffer.from(buf)
-          out.insert(lo, in)
-          if (out.length > k) out.remove(k)
-          out.toSeq
+          val out = buf.patch(lo, Seq(in), 0)
+          if (out.length > k) out.take(k) else out
         }
       }
     }
-    override def merge(a: Seq[(Double, P)], b: Seq[(Double, P)])
-    : Seq[(Double, P)] = {
-      val out = new scala.collection.mutable.ArrayBuffer[(Double, P)](k)
+    override def merge(a: IndexedSeq[(Double, P)], b: IndexedSeq[(Double, P)])
+    : IndexedSeq[(Double, P)] = {
+      val out = Vector.newBuilder[(Double, P)]
+      var n = 0
       var i = 0
       var j = 0
-      while (out.length < k && (i < a.length || j < b.length)) {
+      while (n < k && (i < a.length || j < b.length)) {
         if (distinctPayloads && i < a.length && j < b.length && a(i) == b(j)) {
           out += a(i); i += 1; j += 1 // one slot for an exact duplicate
         } else if (j >= b.length || (i < a.length && order(a(i), b(j)))) {
@@ -114,13 +116,14 @@ object Scale {
         } else {
           out += b(j); j += 1
         }
+        n += 1
       }
-      out.toSeq
+      out.result()
     }
-    override def finish(buf: Seq[(Double, P)]): Seq[P] =
+    override def finish(buf: IndexedSeq[(Double, P)]): Seq[P] =
       buf.map(_._2)
-    override def bufferEncoder: Encoder[Seq[(Double, P)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Double, P)]]()
+    override def bufferEncoder: Encoder[IndexedSeq[(Double, P)]] =
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[IndexedSeq[(Double, P)]]()
     override def outputEncoder: Encoder[Seq[P]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[P]]()
   }
@@ -272,7 +275,9 @@ object Scale {
     * even when the probed relation is corpus-sized — a full count()
     * there was a complete pass over a 100 TB-scale edge relation purely
     * to learn "is it small?" (r16 VERDICT item). OperatorSpec pins the
-    * short-circuit with an accumulator-instrumented scan. */
+    * short-circuit with an accumulator-instrumented scan. The short-circuit
+    * holds for an unpersisted frame only: on a persisted one, every
+    * partition the probe touches is computed and cached whole. */
   def atMostRows(df: DataFrame, bound: Long): Boolean = {
     require(bound >= 0L, s"bound must be non-negative: $bound")
     // limit() takes an Int: past Int.MaxValue the short-circuit cannot
@@ -431,22 +436,26 @@ object Scale {
       .toLong
 
   /** Bounded-input probe shared by the two-phase devices: persist the
-    * input (scope-tracked) and ask [[atMostRows]]. On the bounded answer
-    * the caller windows the CACHED frame (the probe's pass already
-    * materialized it — upstream runs once); on the unbounded answer the
-    * partial cache is dropped and the probe cost was O(bound) rows of
-    * LocalLimit output (per-partition short-circuit), not a full pass. */
+    * input (scope-tracked) and ask [[atMostRows]]; returns the persisted
+    * frame and whether it holds at most `cutover` rows. The probe is one
+    * full pass of the caller's upstream whichever way it answers: reading
+    * any row of a persisted partition computes and caches the whole
+    * partition, and the limit's per-partition LocalLimit runs on every
+    * partition. So both paths read the cached frame — the bounded one
+    * windows it, the unbounded one range-partitions it — and the upstream
+    * runs once either way. The cache backs the returned plan until the
+    * caller's CacheScope ends (or clearCache outside one), like the
+    * two-phase path's own partitioned frame. `cutover` <= 0 skips the
+    * probe: `df` comes back as it is, unbounded. */
   private def boundedForRank(df: DataFrame, cutover: Long)
-  : Option[DataFrame] = {
-    if (cutover <= 0L) return None
+  : (DataFrame, Boolean) = {
+    if (cutover <= 0L) return (df, false)
     // respect a caller's existing persist (tokenBudgetSelectBy hands in a
     // frame it already cached) — re-persisting the same plan only warns
-    val alreadyCached =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val cached =
-      if (alreadyCached) df else graft.core.CacheScope.track(df.persist())
-    if (atMostRows(cached, cutover)) Some(cached)
-    else { if (!alreadyCached) cached.unpersist(false); None }
+      if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
+      else graft.core.CacheScope.track(df.persist())
+    (cached, atMostRows(cached, cutover))
   }
 
   /** Scale-correct global running sum of an integral column ordered by a
@@ -461,20 +470,21 @@ object Scale {
     *
     * r19 bounded-input cutover: the two-phase form costs two extra jobs a
     * bounded input never needs (the range partitioner's sample pass plus
-    * the per-partition-totals collect, each re-running the caller's
-    * upstream plan). When the input is at most `cutoverRows` rows
-    * (probed with [[atMostRows]] on a scope-tracked persist, so upstream
-    * runs ONCE), the running sum is one ordinary window over the cached
+    * the per-partition-totals collect). The input is persisted and
+    * probed with [[atMostRows]] — a full pass that fills the cache — and
+    * both answers read that cache, so the caller's upstream runs ONCE.
+    * At most `cutoverRows` rows take one ordinary window over the cached
     * rows — row-identical by the same order-independence argument, and the
     * SinglePartition exchange it plans carries at most `cutoverRows` rows
-    * by construction. Above the bound the plan is exactly the pre-r19
-    * two-phase shape (the probe's partial cache is dropped). `cutoverRows`:
+    * by construction. Above the bound the two-phase plan range-partitions
+    * the cached frame. `cutoverRows`:
     * [[RankCutoverFromConf]] resolves `spark.graft.rank.cutoverRows`
     * (default [[DefaultRankCutoverRows]]); 0 disables the probe — the
     * PlanSpec locks pin the at-scale shape through that setting.
     *
-    * Cache note: the partitioned frame backs the returned plan — released
-    * by the caller's CacheScope after its action (or clearCache outside).
+    * Cache note: the probed input and the partitioned frame back the
+    * returned plan — released by the caller's CacheScope after its action
+    * (or clearCache outside).
     */
   def globalCumSum(df: DataFrame, orderCol: String, valueCol: String,
                    outCol: String = "cum",
@@ -491,15 +501,14 @@ object Scale {
                           cutoverRows: Long = RankCutoverFromConf)
   : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    boundedForRank(df, resolveRankCutover(df, cutoverRows)) match {
-      case Some(cached) =>
-        val w = Window.orderBy(orderCols.map(col): _*)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        return cached.withColumn(outCol,
-          sum(col(valueCol).cast("long")).over(w))
-      case None => ()
+    val (input, bounded) =
+      boundedForRank(df, resolveRankCutover(df, cutoverRows))
+    if (bounded) {
+      val w = Window.orderBy(orderCols.map(col): _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      return input.withColumn(outCol, sum(col(valueCol).cast("long")).over(w))
     }
-    val parts = graft.core.CacheScope.track(df
+    val parts = graft.core.CacheScope.track(input
       .repartitionByRange(orderCols.map(col): _*)
       .withColumn("__pid", spark_partition_id())
       .persist())
@@ -545,7 +554,8 @@ object Scale {
     * group, no funnel at all), global otherwise (a SinglePartition
     * exchange of at most `cutoverRows` rows). Row-identical: rank under a
     * total order does not depend on the partitioning. Above the bound the
-    * plan is exactly the pre-r19 two-phase shape.
+    * two-phase plan range-partitions that same cached frame, so the
+    * caller's upstream runs once on either side of the bound.
     */
   def groupedRankOrdered(df: DataFrame, groupCols: Seq[String],
                          orderCols: Seq[String],
@@ -553,17 +563,17 @@ object Scale {
                          cutoverRows: Long = RankCutoverFromConf)
   : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    boundedForRank(df, resolveRankCutover(df, cutoverRows)) match {
-      case Some(cached) =>
-        val w =
-          if (groupCols.isEmpty) Window.orderBy(orderCols.map(col): _*)
-          else Window.partitionBy(groupCols.map(col): _*)
-            .orderBy(orderCols.map(col): _*)
-        return cached.withColumn(outCol, row_number().over(w).cast("long"))
-      case None => ()
+    val (input, bounded) =
+      boundedForRank(df, resolveRankCutover(df, cutoverRows))
+    if (bounded) {
+      val w =
+        if (groupCols.isEmpty) Window.orderBy(orderCols.map(col): _*)
+        else Window.partitionBy(groupCols.map(col): _*)
+          .orderBy(orderCols.map(col): _*)
+      return input.withColumn(outCol, row_number().over(w).cast("long"))
     }
     val keys = groupCols ++ orderCols
-    val parts = graft.core.CacheScope.track(df
+    val parts = graft.core.CacheScope.track(input
       .repartitionByRange(keys.map(col): _*)
       .withColumn("__pid", spark_partition_id())
       .persist())

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.llm.TextAnalysis
@@ -1542,12 +1543,9 @@ object Sketch {
 
   /** Grouped KMV — [[kmvEstimate]] per group key (the q161 treatment
     * for the bottom-k sketch): each group keeps its k smallest distinct
-    * hashes via the range-partitioned two-phase grouped rank
-    * ([[Scale.groupedRankOrdered]] — a plain
-    * `row_number over (partition by group)` funnels a low-cardinality
-    * group's ENTIRE distinct-hash set through one task, the exact
-    * failure that helper exists for; a Double-scored bounded aggregator
-    * is out too, a 57-bit hash does not fit a Double). Output one row
+    * hashes in one bounded aggregate ([[BottomKDistinctAgg]] — a plain
+    * `row_number over (partition by group)` would funnel a low-cardinality
+    * group's ENTIRE distinct-hash set through one task). Output one row
     * per group: (group, k, n_kept, theta, estimate, n_exact) with the
     * same saturated/exact regimes as the ungrouped form. A group whose
     * values are all NULL emits (k, 0, null, 0, 0) — the row
@@ -1558,25 +1556,21 @@ object Sketch {
                          valueCol: String = "item",
                          k: Int = 256): DataFrame = {
     require(k >= 2, s"k must be >= 2: $k")
-    // cutoverRows = 0: the trim input here is one cheap projection +
-    // distinct with a SINGLE consumer, the regime where the r19 rank
-    // cutover's probe+persist is pure overhead — same-JVM conf-flip A/B
-    // on q236 measured the cutover path 0.642 s vs 0.433 s two-phase
-    // (6 alternating rounds), while the matrix path below keeps the
-    // default (q238's flip measured the cutover WINNING 1.337 vs
-    // 1.972 s). Row-identical either way (the device's contract).
-    val sketch = groupedKmvHashes(items, groupCol, valueCol, k,
-        cutoverRows = 0L)
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_kept"), max(col("h")).as("theta"))
+    // n_kept and theta read straight off each group's sorted bottom-k
+    // buffer: no explode, no second aggregate
+    val sketch = groupedBottomK(items, groupCol, valueCol, k)
+      .select(col(groupCol).as("__g"),
+        size(col("__hs")).cast("long").as("n_kept"),
+        array_max(col("__hs")).as("theta"))
     val exact = items.groupBy(col(groupCol))
       .agg(countDistinct(col(valueCol)).as("n_exact"))
     // sketch LEFT-joined onto the exact group spine: a group whose
     // values are all NULL has no hashes (NULLs are outside the sketch
     // domain) but IS a group — it must surface as (k, 0, null, 0, 0),
     // exactly what kmvEstimate returns on that group's data alone (the
-    // r14 ADVICE equivalence gap: an inner join silently dropped it)
-    exact.join(sketch, Seq(groupCol), "left")
+    // r14 ADVICE equivalence gap: an inner join silently dropped it).
+    // Null-safe on the key: the NULL group is a group too
+    exact.join(sketch, col(groupCol) <=> col("__g"), "left")
       .select(col(groupCol), lit(k.toLong).as("k"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"), col("theta"),
         col("n_exact"))
@@ -1584,28 +1578,84 @@ object Sketch {
         kmvEstimateCol(k).as("estimate"), col("n_exact"))
   }
 
+  /** Bottom-k distinct aggregate over longs: the k smallest distinct
+    * non-NULL inputs, ascending. The buffer is a sorted `Array[Long]` of
+    * at most k values, so a group's state is O(k) however large the group
+    * — the grouped twin of [[kmvHashes]]'s per-partition k-heaps.
+    * Bottom-k sets are mergeable summaries (the k smallest of a union are
+    * the k smallest of the two buffers' union), so the trim runs map-side
+    * and a shuffle carries at most partitions × groups × k longs. `reduce`
+    * rejects a value at or above a full buffer's maximum in O(1), finds
+    * the slot by binary search, drops a value already kept, and once the
+    * buffer is full inserts in place (the largest falls off); `merge`
+    * inserts the other buffer's values, at most k of them, stopping at
+    * the first that cannot enter. */
+  class BottomKDistinctAgg(k: Int)
+    extends Aggregator[java.lang.Long, Array[Long], Array[Long]] {
+    require(k >= 1, s"k must be >= 1: $k")
+    override def zero: Array[Long] = Array.emptyLongArray
+    override def reduce(buf: Array[Long], in: java.lang.Long): Array[Long] =
+      if (in == null) buf else insert(buf, in.longValue)
+    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var out = a
+      var j = 0
+      while (j < b.length && !(out.length >= k && b(j) >= out(k - 1))) {
+        out = insert(out, b(j))
+        j += 1
+      }
+      out
+    }
+    private def insert(buf: Array[Long], v: Long): Array[Long] = {
+      val n = buf.length
+      if (n >= k && v >= buf(n - 1)) return buf
+      val at = java.util.Arrays.binarySearch(buf, v)
+      if (at >= 0) return buf // already kept: distinct
+      val lo = -at - 1
+      if (n < k) {
+        val out = new Array[Long](n + 1)
+        System.arraycopy(buf, 0, out, 0, lo)
+        out(lo) = v
+        System.arraycopy(buf, lo, out, lo + 1, n - lo)
+        out
+      } else {
+        System.arraycopy(buf, lo, buf, lo + 1, n - 1 - lo)
+        buf(lo) = v
+        buf
+      }
+    }
+    override def finish(buf: Array[Long]): Array[Long] = buf
+    override def bufferEncoder: Encoder[Array[Long]] =
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+    override def outputEncoder: Encoder[Array[Long]] =
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+  }
+
+  /** Each group's bottom-k distinct hash array `__hs` (ascending), one
+    * row per group of `hashes` (columns `groupCol`, `h`). */
+  private def bottomKPerGroup(hashes: DataFrame, groupCol: String,
+                              k: Int): DataFrame =
+    hashes.groupBy(col(groupCol))
+      .agg(udaf(new BottomKDistinctAgg(k), Encoders.LONG)(col("h"))
+        .as("__hs"))
+
+  private def groupedBottomK(items: DataFrame, groupCol: String,
+                             valueCol: String, k: Int): DataFrame =
+    bottomKPerGroup(
+      items.select(col(groupCol), salted(col(valueCol), "|kmv").as("h")),
+      groupCol, k)
+
   /** Per-group bottom-k distinct-hash relation (groupCol, h) — the
-    * grouped twin of [[kmvHashes]], shared by [[groupedKmvEstimate]]'s
-    * sketch leg and the overlap matrix. Per-group trim goes through the
-    * range-partitioned two-phase grouped rank
-    * ([[graft.ops.Scale.groupedRankOrdered]]), never a plain per-group
-    * window: a low-cardinality group would funnel its entire
-    * distinct-hash set through one task. */
+    * grouped twin of [[kmvHashes]], feeding the overlap matrix and the
+    * grouped stores: one `groupBy(group)` with the bounded
+    * [[BottomKDistinctAgg]], exploded. The k smallest distinct hashes of
+    * a group are unique, so no `distinct()` is needed; NULL values hash
+    * to NULL and are ignored, as in [[kmvHashes]]. */
   def groupedKmvHashes(items: DataFrame, groupCol: String,
                        valueCol: String = "item",
-                       k: Int = 256,
-                       cutoverRows: Long =
-                         graft.ops.Scale.RankCutoverFromConf): DataFrame = {
+                       k: Int = 256): DataFrame = {
     require(k >= 2, s"k must be >= 2: $k")
-    val hashes = items
-      .select(col(groupCol), salted(col(valueCol), "|kmv").as("h"))
-      .filter(col("h").isNotNull) // NULLs excluded — see kmvHashes
-      .distinct()
-    graft.ops.Scale
-      .groupedRankOrdered(hashes, Seq(groupCol), Seq("h"), "__rn",
-        cutoverRows)
-      .filter(col("__rn") <= k)
-      .select(col(groupCol), col("h"))
+    groupedBottomK(items, groupCol, valueCol, k)
+      .select(col(groupCol), explode(col("__hs")).as("h"))
   }
 
   /** Pairwise theta-sketch overlap MATRIX over a per-group bottom-k
@@ -2019,23 +2069,19 @@ object Sketch {
     * group's merged bottom-k is among that group's bottom-k in some
     * epoch, so the re-trim recovers exactly the one-shot grouped sketch
     * of everything the epochs saw (the [[mergedKmvEstimate]] argument,
-    * per group). The window here is a plain per-group row_number — fine
-    * ONLY because its input is the STORE relation (≤ epochs·k rows per
-    * group by construction), never a corpus. */
+    * per group). The re-trim is the same bounded [[BottomKDistinctAgg]]
+    * the one-shot sketch uses; it also drops hashes an epoch replay
+    * stored twice. */
   def mergedGroupedKmvHashes(spark: org.apache.spark.sql.SparkSession,
                              path: String,
                              epochFilter: Column = lit(true)): DataFrame = {
     val kv = groupedKmvLayoutKv(spark, path)
     val (k, g) = (kv("gk").toInt, kv("group"))
     guardFoldedWindow(spark, path, kv, epochFilter)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(g)).orderBy(col("h"))
-    readStoreRows(spark, path, s"epoch BIGINT, `$g` STRING, h BIGINT")
-      .filter(epochFilter)
-      .select(col(g), col("h")).distinct()
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .select(col(g), col("h"))
+    bottomKPerGroup(
+        readStoreRows(spark, path, s"epoch BIGINT, `$g` STRING, h BIGINT")
+          .filter(epochFilter), g, k)
+      .select(col(g), explode(col("__hs")).as("h"))
   }
 
   /** The pairwise audience-overlap matrix of a grouped KMV store —

@@ -1467,18 +1467,31 @@ class OperatorSpec extends SparkSpecBase {
     val rows = ((1 to 5000).map(i => ("a", Some(s"u$i"))) ++
       (1 to 100).map(i => ("b", Some(s"v$i"))) ++
       (1 to 3).map(_ => ("c", Option.empty[String]))).toDF("grp", "item")
-    val grouped = graft.ops.Sketch.groupedKmvEstimate(rows, "grp")
-      .as[(String, Long, Long, Option[Long], Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4, r._5, r._6))).toMap
-    assert(grouped.keySet == Set("a", "b", "c"),
-      s"NULL-only group must not drop: ${grouped.keySet}")
-    for (g <- Seq("a", "b", "c")) {
-      val solo = graft.ops.Sketch.kmvEstimate(
-          rows.filter(col("grp") === g).select("item"))
-        .as[(Long, Long, Option[Long], Long, Long)].head()
-      assert(grouped(g) == ((solo._1, solo._2, solo._3, solo._4, solo._5)),
-        s"group $g: ${grouped(g)} != $solo")
+    def checkPerGroup(in: org.apache.spark.sql.DataFrame,
+                      groups: Seq[Option[String]]): Unit = {
+      val grouped = graft.ops.Sketch.groupedKmvEstimate(in, "grp")
+        .as[(Option[String], Long, Long, Option[Long], Long, Long)]
+        .collect().map(r => r._1 -> ((r._2, r._3, r._4, r._5, r._6))).toMap
+      assert(grouped.keySet == groups.toSet,
+        s"NULL-only group must not drop: ${grouped.keySet}")
+      for (g <- groups) {
+        val solo = graft.ops.Sketch.kmvEstimate(in.filter(
+            g.fold(col("grp").isNull)(col("grp") === _)).select("item"))
+          .as[(Long, Long, Option[Long], Long, Long)].head()
+        assert(grouped(g) == ((solo._1, solo._2, solo._3, solo._4, solo._5)),
+          s"group $g: ${grouped(g)} != $solo")
+      }
     }
+    checkPerGroup(rows, Seq(Some("a"), Some("b"), Some("c")))
+    // the same rows spread over 8 partitions, plus a NULL group key and
+    // repeated values: each group's partial bottom-k buffers merge across
+    // tasks, and a value repeated in several tasks must still occupy one
+    // slot
+    val spread = rows
+      .union(((1 to 400).map(i => (null: String, Option(s"n${i % 300}"))) ++
+        (1 to 2000).map(i => ("a", Option(s"u${i * 2}")))).toDF("grp", "item"))
+      .repartition(8)
+    checkPerGroup(spread, Seq(Some("a"), Some("b"), Some("c"), None))
   }
 
   test("KMV store: merged epochs are bit-identical to a one-shot sketch " +

@@ -115,6 +115,20 @@ class PropertySpec extends AnyFunSuite {
     }, "topK distinct")
   }
 
+  test("BottomKDistinctAgg is a mergeable summary: any split, merged in " +
+    "any grouping, keeps the k smallest distinct non-NULL values") {
+    val agg = new graft.ops.Sketch.BottomKDistinctAgg(6)
+    val vals = Gen.listOf(Gen.option(Gen.choose(0L, 40L)))
+    holds(Prop.forAll(vals, Gen.choose(1, 7)) { (xs, nParts) =>
+      val parts = xs.grouped(math.max(1, xs.length / nParts)).toList
+      val merged = parts
+        .map(p => p.foldLeft(agg.zero)((b, v) =>
+          agg.reduce(b, v.map(java.lang.Long.valueOf).orNull)))
+        .foldLeft(agg.zero)(agg.merge)
+      agg.finish(merged).toSeq == xs.flatten.distinct.sorted.take(6)
+    }, "bottom-k mergeability")
+  }
+
   test("Misra-Gries guarantee under arbitrary splits: every item with " +
     "true count > n/(k+1) survives the merged summary, and no reported " +
     "count overcounts") {

@@ -199,13 +199,20 @@ class ScaleSpec extends SparkSpecBase {
     val rnd = new scala.util.Random(7)
     var buf = agg.zero
     val rows = (1 to 400).map(i => (rnd.nextInt(50).toDouble, i.toLong))
+    // the O(1) reject and the binary search index the buffer: a List
+    // buffer would make each of them a walk
+    def indexed(b: Any): Boolean = b.isInstanceOf[IndexedSeq[_]]
+    assert(indexed(buf), s"zero is a ${buf.getClass.getName}")
     rows.foreach { r =>
       buf = agg.reduce(buf, r)
       assert(buf.length <= 7, s"buffer grew to ${buf.length}")
+      assert(indexed(buf), s"reduce returned a ${buf.getClass.getName}")
     }
     var other = agg.zero
     rows.reverse.foreach { r => other = agg.reduce(other, r) }
-    assert(agg.merge(buf, other).length <= 7)
+    val merged = agg.merge(buf, other)
+    assert(merged.length <= 7)
+    assert(indexed(merged), s"merge returned a ${merged.getClass.getName}")
     // multi-partition distributed path vs driver-side sort-and-take
     val expected = rows
       .sortWith((a, b) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2))
@@ -431,5 +438,33 @@ class ScaleSpec extends SparkSpecBase {
     val viaWindow = df.withColumn("r", row_number().over(w).cast("long"))
       .select("id", "r").as[(Long, Long)].collect().toMap
     assert(twoPhase == viaWindow)
+  }
+
+  test("above the rank cutover the upstream runs once: the probe's cache " +
+    "feeds the two-phase plan (globalCumSum and groupedRankOrdered)") {
+    val n = 5000L
+    // every upstream row passes this map once per execution of the plan
+    def counted(acc: org.apache.spark.util.LongAccumulator) =
+      spark.range(n).map { x => acc.add(1); x }.toDF("id")
+        .select(col("id"), (col("id") % 3).as("g"), (col("id") % 11).as("v"))
+    val accSum = spark.sparkContext.longAccumulator("cumsum-upstream")
+    val cum = graft.core.CacheScope.scoped {
+      Scale.globalCumSum(counted(accSum), "id", "v", cutoverRows = 16L)
+        .select("id", "cum").as[(Long, Long)].collect()
+    }
+    assert(cum.length == n)
+    assert(cum.toMap.apply(n - 1) == (0L until n).map(_ % 11).sum)
+    assert(accSum.value == n,
+      s"globalCumSum ran its upstream ${accSum.value} rows for $n")
+    val accRank = spark.sparkContext.longAccumulator("rank-upstream")
+    val ranks = graft.core.CacheScope.scoped {
+      Scale.groupedRankOrdered(counted(accRank), Seq("g"), Seq("id"), "r",
+          cutoverRows = 16L)
+        .select("id", "r").as[(Long, Long)].collect()
+    }
+    assert(ranks.length == n)
+    assert(ranks.forall { case (id, r) => r == id / 3 + 1 })
+    assert(accRank.value == n,
+      s"groupedRankOrdered ran its upstream ${accRank.value} rows for $n")
   }
 }
