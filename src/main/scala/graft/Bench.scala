@@ -35,6 +35,20 @@ object Bench {
     val spark = graft.core.Sessions.local("bench", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
+    // A conf-flip A/B (JAVA_TOOL_OPTIONS=-Dspark.graft.…=…) times a
+    // different program than the default one. Its line must not reach the
+    // default artifacts: tools/benchdiff.py takes the newest
+    // BENCH_ISOLATED.json line per query to refute a default-config
+    // regression. Such a run names its own file.
+    val flipped = spark.sparkContext.getConf.getAll.map(_._1)
+      .filter(_.startsWith("spark.graft.")).sorted
+    if (flipped.nonEmpty && !sys.env.contains("SPARK_GRAFT_BENCH_FILE")) {
+      System.err.println(s"[bench] ${flipped.mkString(", ")} set: a " +
+        "conf-flipped run must name its artifact with SPARK_GRAFT_BENCH_FILE")
+      spark.stop()
+      sys.exit(2)
+    }
+
     // SPARK_GRAFT_ONLY=q93_cluster_sizes,… runs a subset in isolation —
     // the re-measurement protocol for a query flagged slow in a full run
     // (tools/benchdiff.py's caveat: shared-host load and 107-query session

@@ -7,6 +7,10 @@ import java.nio.file.{Files, Paths}
   * queries, with the scale-relevant properties called out. Run after plan-
   * affecting changes: sbt "runMain graft.DumpPlans" [sfDir]
   *
+  * Given query names (`runMain graft.DumpPlans <sfDir> q104_dsir_select …`)
+  * it prints each one's full formatted plan to stdout instead and leaves
+  * PLANS.md alone.
+  *
   * The point of the artifact: `.explain("formatted")` is the evidence that
   * each operator got the plan it was designed for (pruned scans, broadcast
   * dims, no cartesian, no single-partition exchange) — PlanSpec asserts
@@ -14,14 +18,17 @@ import java.nio.file.{Files, Paths}
   */
 object DumpPlans {
   /** The rank and prefix-sum devices are dumped past their bounded-input
-    * cutover: the session sets `spark.graft.rank.cutoverRows` to 0. */
+    * cutover: the session sets `spark.graft.rank.cutoverRows` to 0 unless
+    * the JVM already supplies a value
+    * (`JAVA_TOOL_OPTIONS=-Dspark.graft.rank.cutoverRows=…`). */
+  private val CutoverKey = "spark.graft.rank.cutoverRows"
   private val RankCutoverRows = "0"
   private val AtScale = " [at-scale shape: dumped with " +
-    s"spark.graft.rank.cutoverRows=$RankCutoverRows, so the plan below is " +
+    s"$CutoverKey=$RankCutoverRows, so the plan below is " +
     "the two-phase device PlanSpec locks; an input of at most the bound " +
     "(2^20 rows by default) instead windows the probe's cached rows]"
 
-  private val Headline = Seq(
+  private[graft] val Headline = Seq(
     "q01_agg_sum" -> "pruned scan + partial agg",
     "q05_join_chain" -> "all dims broadcast, fact never re-shuffled",
     "q09_anti_join_sql" -> "NOT IN rewritten to broadcast null-aware anti join",
@@ -81,17 +88,36 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val named = args.drop(1)
     val spark = graft.core.Sessions.local("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.graft.rank.cutoverRows", RankCutoverRows)
+    if (spark.conf.getOption(CutoverKey).isEmpty)
+      spark.conf.set(CutoverKey, RankCutoverRows)
+    def planOf(q: String): String = {
+      val plan = SparkEntry.queries(q)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      spark.sqlContext.clearCache()
+      plan
+    }
+    try {
+      if (named.nonEmpty)
+        for (q <- named) println(s"===== $q =====\n${planOf(q)}")
+      else writePlansMd(sfDir, spark.conf.get(CutoverKey), planOf)
+    } finally spark.stop()
+  }
+
+  private def writePlansMd(sfDir: String, cutover: String,
+                           planOf: String => String): Unit = {
+    // the headline notes describe the at-scale shape
+    require(cutover == RankCutoverRows,
+      s"PLANS.md is dumped at $CutoverKey=$RankCutoverRows; name the " +
+        "queries to print their plans under another value")
     val sb = new StringBuilder
     sb.append("# PLANS — headline physical plans (generated by DumpPlans)\n\n")
     sb.append(s"Source data: `$sfDir`. Regenerate: " +
       "`sbt \"runMain graft.DumpPlans\"`.\n")
     for ((q, why) <- Headline) {
-      val df = SparkEntry.queries(q)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = planOf(q)
       sb.append(s"\n## $q — $why\n\n```\n")
       // the operator tree, plus the scan evidence (pruned schema + pushed
       // filters) from the verbose section. Deep trees (cached multi-stage
@@ -109,11 +135,9 @@ object DumpPlans {
       if (evidence.nonEmpty)
         sb.append("\n\n").append(evidence.mkString("\n"))
       sb.append("\n```\n")
-      spark.sqlContext.clearCache()
     }
     Files.write(Paths.get("PLANS.md"),
       sb.toString.getBytes(StandardCharsets.UTF_8))
     println(s"[plans] wrote PLANS.md (${Headline.size} queries)")
-    spark.stop()
   }
 }

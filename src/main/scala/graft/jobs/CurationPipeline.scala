@@ -82,18 +82,14 @@ object CurationPipeline {
              gopherRepetition: Boolean = false)
   : Seq[(String, DataFrame)] = {
     // construction-phase wall-clock attribution (the eager fixpoints and
-    // checkpoints run HERE, not at the consumer's first action) — always
-    // recorded into lastConstructTicks; GRAFT_CURATION_TIMING=1 also
-    // prints the lines live
+    // checkpoints run HERE, not at the consumer's first action), recorded
+    // into lastConstructTicks
     lastConstructTicks.set(Nil)
     var __t = System.nanoTime()
     def tick(what: String): Unit = {
       val now = System.nanoTime()
       lastConstructTicks.set(
         lastConstructTicks.get() :+ ((what, (now - __t) / 1e9)))
-      if (sys.env.contains("GRAFT_CURATION_TIMING")) {
-        println(f"[construct] $what%-22s ${(now - __t) / 1e9}%7.2f s")
-      }
       __t = now
     }
     // 1. scrub BEFORE dedup (two docs differing only in masked spans

@@ -869,7 +869,7 @@ object Dedup {
   }
 
   /** Sorted-neighborhood near-dup pairs — the third candidate-generation
-    * family next to LSH banding ([[minHashLshCandidates]]) and prefix
+    * family next to LSH banding ([[minHashLshCandidatesFrom]]) and prefix
     * filtering ([[prefixFilterJaccardPairs]]): sort the corpus by a
     * blocking key (here the lowercased first `keyLen` characters), slide
     * a `window`-row neighborhood down the sorted order, and verify only
@@ -969,23 +969,6 @@ object Dedup {
         min(xxhash64(col("__g") + lit(i.toLong)))): _*).as("minhash"))
 
 
-  /** MinHash-LSH candidate pairs: signature split into `bands` bands of
-    * `rowsPerBand` rows; docs agreeing on any full band meet in a bucket
-    * join; candidates deduped across bands. Near-dup probability follows the
-    * (1−(1−s^r)^b) S-curve. Returns (id_a, id_b) candidates — callers verify
-    * with [[ngramJaccardPairs]]-style exact Jaccard on the candidate set
-    * only (cheap: candidate count ≪ n²).
-    */
-  def minHashLshCandidates(docs: DataFrame, w: Int, bands: Int,
-                           rowsPerBand: Int, idCol: String = "doc_id",
-                           textCol: String = "text"): DataFrame =
-    // multiset shingles: banding takes MINs, so duplicates cannot change
-    // a signature and the distinct form's exchange is skipped (r18)
-    minHashLshCandidatesFrom(
-      shingles(docs, w, idCol, textCol, distinct = false)
-        .filter(col("shingle").isNotNull),
-      bands, rowsPerBand, idCol)
-
   /** (id, band, bucket) rows from a (id, shingle) frame: minhash
     * signatures split into `bands` bands of `rowsPerBand` rows, each band's
     * slice hashed to one 64-bit bucket key. The banding layout shared by
@@ -994,21 +977,20 @@ object Dedup {
     * exactly the buckets the batch pipeline would). */
   def bandedSignatures(sh: DataFrame, bands: Int, rowsPerBand: Int,
                        idCol: String = "doc_id"): DataFrame =
-    bandedSignaturesOfSigs(minHashSignatures(sh, bands * rowsPerBand, idCol),
-      bands, rowsPerBand, idCol)
-
-  /** Banding of an (id, minhash) signature frame — the band/bucket layout
-    * shared by the shingle-relation and in-row signature builders. */
-  def bandedSignaturesOfSigs(sigs: DataFrame, bands: Int, rowsPerBand: Int,
-                             idCol: String = "doc_id"): DataFrame =
-    sigs
+    minHashSignatures(sh, bands * rowsPerBand, idCol)
       .select(col(idCol),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => slice(col("minhash"), b * rowsPerBand + lit(1), lit(rowsPerBand))))
           .as(Seq("band", "bucket")))
       .withColumn("bucket", xxhash64(col("band"), col("bucket").cast("string")))
 
-  /** Candidate generation from a pre-computed (id, shingle) frame. */
+  /** MinHash-LSH candidate pairs from a pre-computed (id, shingle) frame:
+    * signature split into `bands` bands of `rowsPerBand` rows; docs
+    * agreeing on any full band meet in a bucket join; candidates deduped
+    * across bands. Near-dup probability follows the (1−(1−s^r)^b) S-curve.
+    * Returns (id_a, id_b) candidates — callers verify with
+    * [[ngramJaccardPairs]]-style exact Jaccard on the candidate set only
+    * (cheap: candidate count ≪ n²). */
   def minHashLshCandidatesFrom(sh: DataFrame, bands: Int, rowsPerBand: Int,
                                idCol: String = "doc_id"): DataFrame = {
     // both sides of the bucket self-join read the banded signatures —
@@ -1036,12 +1018,13 @@ object Dedup {
     // at sf0.1). Row-set results are identical.
     //
     // r19, tried and REVERTED (the r18 VERDICT's "signatures in one
-    // projection" idea, measured both ways by ProfileMinhashInRow with
-    // pair-set equality asserted): an in-row front end — shingle strings
-    // via the unrolled element_at chain, masked gram hashes and
-    // array_distinct verify sets in one cached projection, signatures as
-    // 64 in-row array_min folds (no shingle relation, no pre-banding
-    // Exchange, no collect_set). Same-JVM alternating mins at sf0.1:
+    // projection" idea, measured both ways with pair-set equality asserted
+    // by the ProfileMinhashInRow A/B, recoverable from commit f372b9f): an
+    // in-row front end — shingle strings via the unrolled element_at chain,
+    // masked gram hashes and array_distinct verify sets in one cached
+    // projection, signatures as 64 in-row array_min folds (no shingle
+    // relation, no pre-banding Exchange, no collect_set). Same-JVM
+    // alternating mins at sf0.1:
     // at q96's parameters (tau .8, bands 16x4) it measured 1.25-1.39 s
     // old vs 1.15-1.25 s in-row — within host noise; at q30's OWN
     // parameters (tau .5, bands 32x2, raw docs) it measured 2.29 s old
@@ -1394,8 +1377,6 @@ object Dedup {
     var last = labelSum(labels)
     var iter = 0
     var converged = false
-    val ccTiming = sys.env.contains("GRAFT_CC_TIMING")
-    var tRound = System.nanoTime()
     while (iter < maxIters && !converged) {
         val nbrMin = sym.join(labels, sym("__dst") === labels("id"))
           .groupBy(col("__src").as("id")).agg(min(col("comp")).as("__nbr"))
@@ -1408,12 +1389,6 @@ object Dedup {
         converged = s.compareTo(last) == 0
         last = s
         iter += 1
-        if (ccTiming) {
-          val now = System.nanoTime()
-          println(f"[cc] round $iter ${(now - tRound) / 1e9}%6.2f s" +
-            s" sum=$s converged=$converged")
-          tRound = now
-        }
     }
     // the checkpointed edge/label RDDs are reclaimed by the
     // ContextCleaner once unreferenced — localCheckpoint has no explicit

@@ -415,8 +415,9 @@ object Similarity {
     * Output equals [[embeddingNearDupPairs]] whenever every qualifying pair
     * shares a cell in ≥1 table. Like q30/q33, the registry parameters are
     * recall-1.0-tuned on the gate corpora and pinned by LlmOpsSpec +
-    * ScaleSpec (candidate-fraction bound); re-tune via the TuneIvf harness
-    * whenever fixtures or scales change. At 100 TB: scale `k` with corpus
+    * ScaleSpec (candidate-fraction bound); re-tune whenever fixtures or
+    * scales change (the TuneIvf/TuneIvfSf01 sweeps that set them can be
+    * recovered from commit f372b9f). At 100 TB: scale `k` with corpus
     * size (bucket size n/k bounds the per-cell quadratic term), keep the
     * quantizer sample bounded, and the assignment scan stays one pass.
     *
@@ -834,7 +835,8 @@ object Similarity {
     * sf0.001/0.01/0.1 with m=16, kCodes=32 — refine=160 carries ≥1.4×
     * margin at every scale while re-ranking ≤8% of the bench corpus. On
     * clustered real embedding spaces the same codebooks displace far less.
-    * Re-run TunePq when fixtures or scales change.
+    * Re-measure the minimum refine when fixtures or scales change (the
+    * TunePq sweep that measured it can be recovered from commit f372b9f).
     *
     * The ADC pass stays in DataFrame land: `m` array lookups per candidate
     * fold into one `aggregate` expression (small and codegen-safe, unlike
@@ -848,8 +850,7 @@ object Similarity {
     // refine selection via the bounded top-K aggregate, NOT the rank
     // window: flat ADC scores the whole corpus per query, and a window
     // partition would sort those n rows in one task — O(refine) state
-    // instead (see boundedTopIds; TunePq still measures the full ordering
-    // through pqAdcRanks)
+    // instead (see boundedTopIds)
     val cand = boundedTopIds(
       pqAdcScores(corpus, queries, m, kCodes, iters, sampleN, idCol, vecCol),
       "adc", refine)
@@ -865,8 +866,8 @@ object Similarity {
 
   /** Every (query, corpus) pair with its asymmetric-distance score:
     * codebooks trained, corpus PQ-encoded, per-query LUTs broadcast, ADC
-    * folded in one codegen-safe `aggregate` — the shared scan under
-    * [[pqAdcRanks]] (measurement) and [[pqTopK]] (bounded refine). */
+    * folded in one codegen-safe `aggregate` — the scan under
+    * [[pqTopK]]'s bounded refine. */
   private def pqAdcScores(corpus: DataFrame, queries: DataFrame,
                           m: Int, kCodes: Int,
                           iters: Int, sampleN: Int,
@@ -887,22 +888,6 @@ object Similarity {
             element_at(col("codes"), j + 1) + 1)))
       .select("query_id", "neighbor_id", "adc")
   }
-
-  /** The ADC ordering underneath [[pqTopK]]: every (query, corpus) pair
-    * with its compressed-domain rank (adc desc, neighbor asc). Exposed so
-    * the refine boundary is measurable (TunePq) rather than asserted —
-    * measurement needs the FULL ordering, so this is the one place the
-    * per-query rank window is the right tool. */
-  def pqAdcRanks(corpus: DataFrame, queries: DataFrame,
-                 m: Int = 8, kCodes: Int = 16,
-                 iters: Int = 8, sampleN: Int = 1024,
-                 idCol: String = "vec_id",
-                 vecCol: String = "embedding"): DataFrame =
-    pqAdcScores(corpus, queries, m, kCodes, iters, sampleN, idCol, vecCol)
-      .withColumn("adc_rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("adc").desc, col("neighbor_id"))).cast("long"))
-      .select("query_id", "neighbor_id", "adc_rank")
 
   /** Per-label embedding centroids: per-dimension mean over each label's
     * vectors — the class-prototype statistic (nearest-centroid classifiers,

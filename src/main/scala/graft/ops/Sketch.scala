@@ -65,9 +65,6 @@ object Sketch {
     s"CAST((CAST($e AS HUGEINT) * $MixK2) % $MixMod AS BIGINT)",
     s"xor($e, ($e) >> 29)")
 
-  private[graft] def testSalted(value: Column, salt: String): Column =
-    salted(value, salt)
-
   private def salted(value: Column, salt: String): Column =
     mix57(TextAnalysis.fingerprint(concat(value.cast("string"), lit(salt))))
 

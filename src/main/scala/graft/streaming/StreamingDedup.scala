@@ -339,9 +339,11 @@ object StreamingDedup {
     * at ≥ `tau`, and the surviving (id_a, id_b, cosine) pairs handed to
     * `onPairs`. The union of emissions equals the batch IVF pipeline run
     * under the same quantizers (StreamingSpec pins it); quantizer quality
-    * itself is the separately-tested concern (TuneIvf — a batch-0 sample
-    * stands in for the corpus sample, the standard streaming trade, and
-    * retraining means re-assigning the store, a batch job).
+    * itself is the batch pipeline's concern (its parameters are pinned by
+    * LlmOpsSpec; the TuneIvf sweep that set them can be recovered from
+    * commit f372b9f) — a batch-0 sample stands in for the corpus sample,
+    * the standard streaming trade, and retraining means re-assigning the
+    * store, a batch job.
     *
     * Store layout mirrors the minhash stream (`asg,vecs/batch=<id>`,
     * publish-last, replay-idempotent, checkpoint-reset fail-loud);

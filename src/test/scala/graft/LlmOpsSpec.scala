@@ -153,7 +153,7 @@ class LlmOpsSpec extends SparkSpecBase {
 
   test("IVF embedding near-dup at registry params (12 tables × 64 cells) " +
     "equals the exact all-pairs form — q42 runs the IVF path on this " +
-    "guarantee (TuneIvf re-tunes it if fixtures change)") {
+    "guarantee (re-tune it if fixtures change)") {
     val emb = Tables.embeddings(spark, sfDir)
     val exact = Similarity.embeddingNearDupPairs(emb, tau = 0.45)
       .as[(Long, Long, Double)].collect().toSet

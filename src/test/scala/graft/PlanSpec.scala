@@ -1027,4 +1027,10 @@ class PlanSpec extends SparkSpecBase {
     assert(selected < total,
       s"pruning must beat the full layout ($selected of $total days)")
   }
+
+  test("DumpPlans' headline list names only registry queries") {
+    val unknown = DumpPlans.Headline.map(_._1)
+      .filterNot(SparkEntry.queries.contains)
+    assert(unknown.isEmpty, s"not in SparkEntry.queries: $unknown")
+  }
 }
