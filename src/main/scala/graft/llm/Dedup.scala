@@ -47,14 +47,6 @@ object Dedup {
     docs.withColumn("canonical_id",
       min(col(idCol)).over(Window.partitionBy(col(textCol))))
 
-  /** Exact duplicate pairs (canonical, dup) — rows whose text matches an
-    * earlier id. */
-  def exactDupPairs(docs: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame =
-    exactCanonical(docs, idCol, textCol)
-      .filter(col(idCol) =!= col("canonical_id"))
-      .select(col("canonical_id"), col(idCol).as("dup_id"))
-
   /** Hash-first exact canonicalization — the 100 TB form: shuffle only
     * (hash, id) (16 bytes/row instead of the document text), assign the
     * min-id per hash, then verify the survivor actually matches the text
@@ -1084,24 +1076,12 @@ object Dedup {
     // dir): append must validate the FULL hash layout — w and rowsPerBand
     // change the bucket hashes without changing the band count, so they
     // cannot be recovered (or checked) from the data rows themselves
-    writeLayout(docs.sparkSession, path, w, bands, rowsPerBand)
+    graft.ops.Sketch.writeLayoutRecord(docs.sparkSession, path,
+      signatureLayout(w, bands, rowsPerBand))
   }
 
-  private def layoutFile(spark: org.apache.spark.sql.SparkSession,
-                         path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path, "_graft_layout")
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def writeLayout(spark: org.apache.spark.sql.SparkSession,
-                          path: String, w: Int, bands: Int,
-                          rowsPerBand: Int): Unit = {
-    val (fs, p) = layoutFile(spark, path)
-    val out = fs.create(p, true)
-    try out.write(s"w=$w,bands=$bands,rowsPerBand=$rowsPerBand\n"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private def signatureLayout(w: Int, bands: Int, rowsPerBand: Int) =
+    s"w=$w,bands=$bands,rowsPerBand=$rowsPerBand"
 
   /** Append a new batch's signatures to an existing store. Safe because
     * banded-signature rows are add-only and deterministic (hash family is
@@ -1123,19 +1103,14 @@ object Dedup {
                            bands: Int, rowsPerBand: Int,
                            idCol: String = "doc_id",
                            textCol: String = "text"): Unit = {
-    val spark = newDocs.sparkSession
-    val (fs, p) = layoutFile(spark, path)
-    require(fs.exists(p),
+    val record =
+      graft.ops.Sketch.readLayoutRecord(newDocs.sparkSession, path)
+    require(record.isDefined,
       s"signature store at $path has no layout record — only stores " +
         "written by writeSignatureStore are appendable (the bucket hash " +
         "layout cannot be recovered from the data rows)")
-    val recorded = {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-    }
-    val requested = s"w=$w,bands=$bands,rowsPerBand=$rowsPerBand"
+    val (recorded, requested) =
+      (record.get, signatureLayout(w, bands, rowsPerBand))
     require(recorded == requested,
       s"signature store at $path was written with ($recorded), append " +
         s"requested ($requested) — rebuild the store, mixed hash layouts " +

@@ -2,35 +2,12 @@ package graft.model
 
 /** Row models mirroring the reference's entry classes (SURVEY §1.1).
   * Time is epoch millis in Long at the edges, as in the reference
-  * (`flink-base/.../entries/SensorReading.scala:8`,
-  * `flink-statistics/.../entries/OfflineActionLog.java:7-23`).
+  * (`flink-base/.../entries/SensorReading.scala:8`).
   */
 
 /** `SensorReading(id, timestamp, temperature)` —
   * `flink-base/src/main/scala/com/wufuqiang/flink/base/entries/SensorReading.scala:8`. */
 case class SensorReading(id: String, timestamp: Long, temperature: Double)
-
-/** Action log record (`flink-statistics/.../entries/OfflineActionLog.java`,
-  * parse spec `OfflineDataSetUtils.java:66-113`): sentinel-filled strings,
-  * epoch-ms actionTime. */
-case class ActionLog(sceneId: String, userId: String, itemId: String,
-                     action: String, contextExist: String, actionTime: Long)
-
-/** AUC variant with strategy/channel dimensions
-  * (`flink-auccalc/.../AucCalcVersion5.java:200-214`). */
-case class AucActionLog(sceneId: String, userId: String, itemId: String,
-                        action: String, recallStrategyId: String,
-                        channel: String, sortStrategyId: String,
-                        predictModelId: String, label: Int)
-
-/** Recall log (`AucCalcVersion5.java:236-247`): string-encoded score. */
-case class RecallLog(sceneId: String, userId: String, itemId: String,
-                     score: String, recallScore: String)
-
-/** Per-(key, window) metric accumulator — replaces the reference's
-  * HBase-backed `CategoryMap` state (`ActionLogJob.java:139-163`). */
-case class MetricAcc(key: String, windowStart: Long, granularityMs: Long,
-                     pv: Long, userIds: Set[Long])
 
 object Sentinels {
   /** `OfflineDataSetUtils.java:39`. */

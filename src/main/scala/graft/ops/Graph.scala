@@ -792,7 +792,7 @@ object Graph {
                                   maxIters: Int = 200,
                                   driverBelow: Long = 1L << 18): DataFrame = {
     val e0 = normalizeDirectedEdges(edges)
-    if (atMost(e0, driverBelow)) sccOnDriver(e0)
+    if (Scale.atMostRows(e0, driverBelow)) sccOnDriver(e0)
     else sccOfNormalized(e0, maxPeels, maxIters)._1
   }
 
@@ -888,15 +888,6 @@ object Graph {
                                   maxIters: Int = 200)
   : (DataFrame, SccStats) =
     sccOfNormalized(normalizeDirectedEdges(edges), maxPeels, maxIters)
-
-  /** Bounded cutover probe (r16 VERDICT item): answers "at most `bound`
-    * rows?" with a limit+count that short-circuits at bound+1 — the
-    * driver-cutover decision must not cost a complete pass over a
-    * corpus-sized edge relation just to learn "is it small?" (today the
-    * probed leaf is a cached localCheckpoint, but the probe keeps the
-    * decision O(bound) by contract, not by cache luck). */
-  private def atMost(df: DataFrame, bound: Long): Boolean =
-    Scale.atMostRows(df, bound)
 
   /** Cast/NULL-drop/dedup a directed edge list once, eagerly — shared
     * by the SCC entry points so [[sccCondensation]] does not normalize
@@ -1213,7 +1204,7 @@ object Graph {
                       maxIters: Int = 200,
                       driverBelow: Long = 1L << 18): DataFrame = {
     val e0 = normalizeDirectedEdges(edges)
-    if (atMost(e0, driverBelow)) return condensationOnDriver(e0)
+    if (Scale.atMostRows(e0, driverBelow)) return condensationOnDriver(e0)
     val scc = sccOfNormalized(e0, maxPeels, maxIters)._1
       .localCheckpoint(true)
     val members = scc.groupBy(col("scc")).agg(count(lit(1)).as("n_members"))

@@ -249,6 +249,21 @@ object Scale {
       .agg(topFreqColumn(k).name("top"))
       .select(explode(col("top")).as(Seq("item", "cnt")))
 
+  /** Pre-r16 top-freq stores recorded `k=<n>` — the SAME key set the
+    * KMV family uses, which is why r16 renamed the key to `tfk=`. The
+    * rename shipped with no migration hint, so a store written by a
+    * pre-rename revision failed every read with a bare "not a top-freq
+    * store" (r16 ADVICE). This hint upgrades that to an explicit
+    * migration message: the fix is a one-line rewrite of the store's
+    * `_graft_layout` record, not a rebuild of the data. */
+  private val TopFreqLegacyHints = Map(
+    Set("k") -> ("has the legacy pre-rename top-freq layout 'k=<n>' — " +
+      "or is a KMV store, the key sets collide, which is why the key " +
+      "was renamed. If this store was written by appendTopFreqStore " +
+      "before the rename, rewrite its _graft_layout record once from " +
+      "'k=<n>' to 'tfk=<n>' (the rows are unchanged); if it is a KMV " +
+      "store, use mergedKmvEstimate or mergedKmvHashes"))
+
   /** Misra-Gries heavy-hitter STORE — the frequency member of the
     * mergeable-store family (bloom words OR, HLL registers MAX,
     * histogram counters ADD; MG counters ADD with a decrement budget):
@@ -267,6 +282,47 @@ object Scale {
     * widths has no single decrement budget, so mismatched appends fail
     * loud.
     */
+  private[graft] val TopFreqStore = Sketch.StoreFamily("top-freq",
+    Seq("tfk"),
+    _ => "item STRING, cnt BIGINT, epoch BIGINT",
+    (rows, _) => rows.groupBy(col("item")).agg(sum(col("cnt")).as("cnt")),
+    Sketch.SelfOverwritingAdd, TopFreqLegacyHints)
+
+  /** Create/replace a top-freq store at `path` with one epoch's summary. */
+  def writeTopFreqStore(items: org.apache.spark.sql.Dataset[String],
+                        path: String, epoch: Long, k: Int): Unit =
+    Sketch.createStore(TopFreqStore, topFreqSummary(items, k), path, epoch,
+      k)
+
+  /** Append one epoch's ≤ k-row summary; fails loud on a missing layout
+    * record, a different k, or an epoch at or below the fold watermark.
+    * The epoch's partition is rewritten by dynamic overwrite, so an
+    * at-least-once re-delivery (foreachBatch replays the same batch id
+    * after a failure) replaces its own summary instead of adding a
+    * second one that [[mergedHeavyHitters]] would double-count — which
+    * would break the never-overcount half of the MG contract. */
+  def appendTopFreqStore(items: org.apache.spark.sql.Dataset[String],
+                         path: String, epoch: Long, k: Int): Unit =
+    Sketch.appendStore(TopFreqStore, topFreqSummary(items, k), path, epoch,
+      k)
+
+  /** Quiesced compaction: every epoch EXCEPT the newest folds into one
+    * per-item counter-sum baseline (see [[Sketch.compactStore]]). */
+  def compactTopFreqStore(spark: org.apache.spark.sql.SparkSession,
+                          path: String): Unit =
+    Sketch.compactStore(spark, path, TopFreqStore)
+
+  /** Merge a store's epochs (all, or the span `epochFilter` keeps) into
+    * (item, est_cnt), counters summed per item — ≤ k rows per epoch in,
+    * ≤ k·epochs groups out, never the vocabulary. est_cnt ≤ true count,
+    * true − est ≤ Σ per-epoch decrement budgets ≤ n/(k+1) over the
+    * span's n rows. */
+  def mergedHeavyHitters(spark: org.apache.spark.sql.SparkSession,
+                         path: String,
+                         epochFilter: Column = lit(true)): DataFrame =
+    Sketch.mergedStore(spark, path, TopFreqStore, epochFilter)._2
+      .withColumnRenamed("cnt", "est_cnt")
+
   /** Bounded size probe: "does `df` have at most `bound` rows?" via
     * limit(bound + 1).count() — short-circuits after pulling bound + 1
     * rows instead of running a complete count() pass. The graph driver
@@ -287,130 +343,6 @@ object Scale {
     // driver?" has bigger problems than the probe's cost.
     if (bound >= Int.MaxValue.toLong) df.count() <= bound
     else df.limit(bound.toInt + 1).count() <= bound
-  }
-
-  /** Pre-r16 top-freq stores recorded `k=<n>` — the SAME key set the
-    * KMV family uses, which is why r16 renamed the key to `tfk=`. The
-    * rename shipped with no migration hint, so a store written by a
-    * pre-rename revision failed every read with a bare "not a top-freq
-    * store" (r16 ADVICE). This hint upgrades that to an explicit
-    * migration message: the fix is a one-line rewrite of the store's
-    * `_graft_layout` record, not a rebuild of the data. */
-  private val TopFreqLegacyHints = Map(
-    Set("k") -> ("has the legacy pre-rename top-freq layout 'k=<n>' — " +
-      "or is a KMV store, the key sets collide, which is why the key " +
-      "was renamed. If this store was written by appendTopFreqStore " +
-      "before the rename, rewrite its _graft_layout record once from " +
-      "'k=<n>' to 'tfk=<n>' (the rows are unchanged); if it is a KMV " +
-      "store, use the mergedKmvDistinct readers"))
-
-  def writeTopFreqStore(items: org.apache.spark.sql.Dataset[String],
-                        path: String, epoch: Long, k: Int): Unit = {
-    val spark = items.sparkSession
-    Sketch.requireEpochId(epoch)
-    topFreqSummary(items, k)
-      .select(col("item"), col("cnt"), lit(epoch).as("epoch"))
-      .write.mode("overwrite").partitionBy("epoch").parquet(path)
-    val (fs, lp) = Sketch.layoutFile(spark, path)
-    val out = fs.create(lp, true)
-    // "tfk=", not "k=": the KMV store's layout is exactly "k=<n>", and
-    // key-set identity is how readStoreLayout tells families apart — a
-    // shared key set would let a KMV merge silently accept an MG store
-    try out.write(s"tfk=$k\n"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Whether a top-freq store (with its layout record) exists at `path`. */
-  def topFreqStoreExists(spark: org.apache.spark.sql.SparkSession,
-                         path: String): Boolean = {
-    val (fs, lp) = Sketch.layoutFile(spark, path)
-    fs.exists(lp)
-  }
-
-  /** Append one epoch's ≤ k-row summary; fails loud on a missing layout
-    * record or a different k.
-    *
-    * Replay-idempotent by LAYOUT, because ADD-merged counters cannot be
-    * deduplicated after the fact: the store partitions by epoch and this
-    * write dynamically OVERWRITES only the incoming epoch's partition —
-    * an at-least-once re-delivery (foreachBatch replays the same batch
-    * id after a failure) rewrites its own epoch dir instead of appending
-    * a second summary that [[mergedHeavyHitters]] would double-count,
-    * which would break the never-overcount half of the MG contract.
-    * (Read-side dedup is no alternative: MG summaries are not
-    * bit-reproducible across runs, so two summaries of one epoch don't
-    * compare equal.) The bloom/HLL stores tolerate duplicate epochs
-    * because OR/MAX are idempotent merges; ADD is not. */
-  def appendTopFreqStore(items: org.apache.spark.sql.Dataset[String],
-                         path: String, epoch: Long, k: Int): Unit = {
-    val spark = items.sparkSession
-    require(epoch >= 0, s"epoch must be >= 0 (negative ids are reserved " +
-      s"for fold baselines): $epoch")
-    val kv = Sketch.readStoreLayout(spark, path, "top-freq", Set("tfk"),
-      hints = TopFreqLegacyHints, optionalKeys = Set("folded_through"))
-    // the fold keeps the NEWEST epoch partition live, so a replay of
-    // that batch stays a self-overwrite; anything at or below the
-    // watermark was folded into the baseline and must fail loud
-    kv.get("folded_through").foreach(ft => require(epoch > ft.toLong,
-      s"epoch $epoch was folded into the baseline of $path (watermark " +
-        s"$ft) — ADD-merged MG counters double-count on replay; use a " +
-        "fresh epoch id above the watermark"))
-    require(kv("tfk") == k.toString,
-      s"top-freq store at $path was written with (tfk=${kv("tfk")}), " +
-        s"append requested (k=$k) — rebuild the store, mixed summary " +
-        "widths have no single decrement budget")
-    topFreqSummary(items, k)
-      .select(col("item"), col("cnt"), lit(epoch).as("epoch"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("epoch").parquet(path)
-  }
-
-  /** Quiesced compaction of a top-freq store: fold every epoch EXCEPT
-    * the newest into one per-item counter-sum baseline at the reserved
-    * [[graft.ops.Sketch.FoldEpoch]] partition, leaving the newest
-    * batch's partition in place. Counter addition is associative, so
-    * [[mergedHeavyHitters]] is bit-identical across the fold AND the
-    * replay story survives it: Structured Streaming re-delivers at most
-    * the LAST batch, whose dynamic partition overwrite keeps rewriting
-    * its own (still-live) partition — a full fold would have moved that
-    * batch's rows into the baseline, and its replay would then
-    * double-count (the never-overcount half of the MG contract).
-    * Single-writer while quiesced; park/rename swap. */
-  def compactTopFreqStore(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit = {
-    Sketch.recoverParked(spark, path)
-    val kv = Sketch.readStoreLayout(spark, path, "top-freq",
-      Set("tfk"), hints = TopFreqLegacyHints,
-      optionalKeys = Set("folded_through"))
-    // the keep-newest protocol (fold everything below the newest live
-    // epoch, watermark monotone, no watermark when nothing folded)
-    // lives ONCE in Sketch.compactKeepNewest, shared with the CMS store
-    Sketch.compactKeepNewest(spark, path, s"tfk=${kv("tfk")}",
-      kv.get("folded_through").map(_.toLong)
-        .getOrElse(graft.ops.Sketch.FoldEpoch),
-      below => below.groupBy(col("item")).agg(sum(col("cnt")).as("cnt")),
-      emptySchemaDdl = "item STRING, cnt BIGINT, epoch BIGINT")
-  }
-
-  /** Merge a store's epochs (all, or the span `epochFilter` keeps) into
-    * (item, est_cnt), counters summed per item — ≤ k rows per epoch in,
-    * ≤ k·epochs groups out, never the vocabulary. est_cnt ≤ true count,
-    * true − est ≤ Σ per-epoch decrement budgets ≤ n/(k+1) over the
-    * span's n rows. */
-  def mergedHeavyHitters(spark: org.apache.spark.sql.SparkSession,
-                         path: String,
-                         epochFilter: Column = lit(true)): DataFrame = {
-    val kv = Sketch.readStoreLayout(spark, path, "top-freq", Set("tfk"),
-      hints = TopFreqLegacyHints,
-      optionalKeys = Set("folded_through")) // loud
-    val rows = Sketch.readStoreRows(spark, path,
-      "item STRING, cnt BIGINT, epoch BIGINT")
-    Sketch.guardFoldedWindow(spark, path, kv, epochFilter)
-    rows
-      .filter(epochFilter)
-      .groupBy(col("item")).agg(sum(col("cnt")).as("est_cnt"))
   }
 
   /** Sentinel for the rank/prefix-sum devices' `cutoverRows` parameter:

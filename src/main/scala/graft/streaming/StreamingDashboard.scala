@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
+import graft.ops.Sketch
 import graft.sinks.Sinks
 
 /** Real-time dashboard core (SURVEY §2.10) — the reference's
@@ -24,10 +25,11 @@ import graft.sinks.Sinks
   *  - T12 state rehydration from HBase on restart → unnecessary: offsets +
   *    window state live in the checkpoint; the store merge in foreachBatch
   *    is the sink-level read-merge-write equivalent.
-  *  - T13 streaming UV: exact `approx_count_distinct` tradeoff is config —
-  *    exact `collect_set` cardinality at test scale, HLL sketch at 100 TB
-  *    (mergeable across rollups, the property the reference got from HBase
-  *    sets).
+  *  - T13 streaming UV: two pipelines. [[run]] counts exact `collect_set`
+  *    cardinality per 5-min window (not mergeable, so its coarse rows
+  *    carry pv only); [[runSketch]] keeps an HLL sketch per window, which
+  *    unions upward into coarse UV — the 100 TB path, mergeable across
+  *    rollups, the property the reference got from HBase sets.
   */
 object StreamingDashboard {
 
@@ -59,32 +61,26 @@ object StreamingDashboard {
     */
   def dayFloor(ms: Column): Column = floorWindow(ms, 86400000L, DayOffsetMs)
 
-  /** T2: watermarked 5-minute windowed PV/UV per key. `exactUv` picks
-    * exact distinct-set counting (test scale) vs HLL (cluster scale).
-    * Output columns: key, window_start_ms, pv, uv. NOTE: exact-mode uv is
-    * NOT mergeable — it is correct for the 5-min windows only, and [[run]]'s
-    * coarse rollup deliberately carries pv alone (distinct counts cannot be
-    * summed). Coarse UV comes from the sketch pipeline ([[runSketch]]),
-    * whose HLL column unions upward losslessly.
+  /** T2: watermarked 5-minute windowed PV/UV per key, uv by exact
+    * distinct-set counting. Output columns: key, window_start_ms, pv, uv.
+    * NOTE: the exact uv is NOT mergeable — it is correct for the 5-min
+    * windows only, and [[run]]'s coarse rollup deliberately carries pv
+    * alone (distinct counts cannot be summed). Coarse UV comes from the
+    * sketch pipeline ([[runSketch]]), whose HLL column unions upward
+    * losslessly.
     */
   def fiveMinAgg(events: DataFrame, keyCol: String, tsCol: String,
-                 userCol: String, lateness: String = "10 minutes",
-                 exactUv: Boolean = true): DataFrame = {
-    val base = events.withWatermark(tsCol, lateness)
+                 userCol: String, lateness: String = "10 minutes")
+  : DataFrame =
+    // COUNT(DISTINCT) is unsupported on streams; the distinct set lives
+    // in window state (the in-checkpoint analog of the reference's HBase
+    // user-id sets, T13)
+    events.withWatermark(tsCol, lateness)
       .groupBy(col(keyCol).as("key"), window(col(tsCol), "5 minutes").as("w"))
-    // COUNT(DISTINCT) is unsupported on streams; exact mode keeps the
-    // distinct set in window state (the in-checkpoint analog of the
-    // reference's HBase user-id sets, T13), HLL mode is the 100 TB path.
-    val agged =
-      if (exactUv)
-        base.agg(count(lit(1)).as("pv"),
-          size(collect_set(col(userCol))).cast("long").as("uv"))
-      else
-        base.agg(count(lit(1)).as("pv"),
-          approx_count_distinct(col(userCol)).as("uv"))
-    agged.select(col("key"), unix_millis(col("w.start")).as("window_start_ms"),
-      col("pv"), col("uv"))
-  }
+      .agg(count(lit(1)).as("pv"),
+        size(collect_set(col(userCol))).cast("long").as("uv"))
+      .select(col("key"), unix_millis(col("w.start")).as("window_start_ms"),
+        col("pv"), col("uv"))
 
   /** Sketch-mode 5-min aggregation: PV + a mergeable HLL sketch of the
     * user set (DataSketches binary). This is the 100 TB answer to T13: the
@@ -188,7 +184,7 @@ object StreamingDashboard {
                 keyCol: String = "key", tsCol: String = "ts",
                 userCol: String = "user_id",
                 trigger: Trigger = Trigger.ProcessingTime("5 minutes"))
-  : DataStreamWriter[org.apache.spark.sql.Row] =
+  : DataStreamWriter[Row] =
     fiveMinAggSketch(events, keyCol, tsCol, userCol)
       .writeStream
       .outputMode("update")
@@ -197,6 +193,21 @@ object StreamingDashboard {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         incrementalFlush(batch, storePath, rollupSketch)
       }
+
+  /** The writeStream shell every epoch-store runner shares: append
+    * output, the checkpoint, the trigger, and `step` per micro-batch with
+    * its batch id as the epoch id. The step is normally one
+    * [[Sketch.epochStep]] per store. */
+  private[streaming] def epochStoreStream(input: DataFrame,
+                                          checkpoint: String,
+                                          trigger: Trigger)
+                                         (step: (DataFrame, Long) => Unit)
+  : DataStreamWriter[Row] =
+    input.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch(step)
 
   /** Deterministic-HLL UV maintained at ingest: each micro-batch appends
     * its m-row register spine to a [[graft.ops.Sketch]] register store
@@ -208,75 +219,40 @@ object StreamingDashboard {
     * this one is the oracle-checkable register relation (q140's twin)
     * kept incrementally, the way the reference's per-day HBase user sets
     * were (`ActionLogJobSecond.java:359-376`) at m rows per epoch instead
-    * of corpus-sized state.
-    *
-    * Replay safety: a re-run batchId appends duplicate epoch rows, which
-    * MAX-merge to the identical registers — the estimate cannot drift
-    * (the store doc's re-append note); the first batch creates the store
-    * only when no layout record exists, so a restart never clobbers
-    * accumulated epochs.
+    * of corpus-sized state. A replayed batchId's duplicate epoch rows
+    * MAX-merge to the identical registers; `compactEvery` > 0 folds the
+    * store after every that-many batches ([[Sketch.epochStep]]).
     */
   def runHllRegisterStore(events: DataFrame, storePath: String,
                           checkpoint: String, userCol: String = "user_id",
                           p: Int = 6,
                           trigger: Trigger = Trigger.AvailableNow(),
                           compactEvery: Int = 0)
-  : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val items = batch.select(col(userCol).as("item"))
-        // recover a torn fold BEFORE the exists-check: a replay into the
-        // park window must append to the restored history, not
-        // overwrite-create a fresh store the next fold's recovery would
-        // then delete the parked history in favor of
-        graft.ops.Sketch.recoverParked(batch.sparkSession, storePath)
-        if (!graft.ops.Sketch.hllStoreExists(batch.sparkSession, storePath))
-          graft.ops.Sketch.writeHllStore(items, storePath, epoch = id, p = p)
-        else
-          graft.ops.Sketch.appendHllStore(items, storePath, epoch = id, p = p)
-        // in-runner auto-fold (single-writer: foreachBatch is the only
-        // writer and the fold runs between batch commits). Crash-safe:
-        // a fold that lands before the checkpoint commit just means the
-        // batch replays next to the baseline — MAX-merge is idempotent
-        if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-          graft.ops.Sketch.compactHllStore(batch.sparkSession, storePath)
-      }
+  : DataStreamWriter[Row] =
+    epochStoreStream(events, checkpoint, trigger) { (batch, id) =>
+      Sketch.epochStep(Sketch.HllStore, Sketch.hllRegisters(batch, userCol, p),
+        storePath, id, compactEvery, p)
+    }
 
   /** Streamed KMV bottom-k store maintenance — each micro-batch appends
     * its bottom-k hash epoch (epoch = batchId), so
     * [[graft.ops.Sketch.mergedKmvEstimate]] over the store is
-    * bit-identical to one-shot sketching everything ingested (union of
-    * per-epoch bottom-k sets contains the true bottom-k of the union;
-    * distinct + re-trim recovers it exactly). Replayed batches reuse
-    * their epoch id and vanish in the merge's distinct — at-least-once
-    * tolerant like the HLL register store, and unlike HLL the merged
-    * sketch supports DIRECT set intersection downstream (q226).
+    * bit-identical to one-shot sketching everything ingested. Replayed
+    * batches reuse their epoch id and vanish in the merge's distinct —
+    * at-least-once tolerant like the HLL register store, and unlike HLL
+    * the merged sketch supports DIRECT set intersection downstream
+    * (q226).
     */
   def runKmvStore(events: DataFrame, storePath: String,
                   checkpoint: String, userCol: String = "user_id",
                   k: Int = 256,
                   trigger: Trigger = Trigger.AvailableNow(),
                   compactEvery: Int = 0)
-  : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val items = batch.select(col(userCol).as("item"))
-        graft.ops.Sketch.recoverParked(batch.sparkSession, storePath)
-        if (!graft.ops.Sketch.kmvStoreExists(batch.sparkSession, storePath))
-          graft.ops.Sketch.writeKmvStore(items, storePath, epoch = id, k = k)
-        else
-          graft.ops.Sketch.appendKmvStore(items, storePath, epoch = id, k = k)
-        // auto-fold cadence; union + re-trim is idempotent under a
-        // replayed batch landing next to the folded baseline
-        if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-          graft.ops.Sketch.compactKmvStore(batch.sparkSession, storePath)
-      }
+  : DataStreamWriter[Row] =
+    epochStoreStream(events, checkpoint, trigger) { (batch, id) =>
+      Sketch.epochStep(Sketch.KmvStore, Sketch.kmvHashes(batch, userCol, k),
+        storePath, id, compactEvery, k)
+    }
 
   /** Streaming audience-overlap monitor: ONE stream maintains TWO KMV
     * stores (each micro-batch appends the epoch of rows matching that
@@ -292,23 +268,13 @@ object StreamingDashboard {
                           predA: Column, predB: Column,
                           valueCol: String = "item", k: Int = 256,
                           trigger: Trigger = Trigger.AvailableNow())
-  : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s = batch.sparkSession
-        def leg(path: String, pred: Column): Unit = {
-          val items = batch.filter(pred).select(col(valueCol).as("item"))
-          if (!graft.ops.Sketch.kmvStoreExists(s, path))
-            graft.ops.Sketch.writeKmvStore(items, path, epoch = id, k = k)
-          else
-            graft.ops.Sketch.appendKmvStore(items, path, epoch = id, k = k)
-        }
-        leg(pathA, predA)
-        leg(pathB, predB)
-      }
+  : DataStreamWriter[Row] =
+    epochStoreStream(events, checkpoint, trigger) { (batch, id) =>
+      for ((path, pred) <- Seq(pathA -> predA, pathB -> predB))
+        Sketch.epochStep(Sketch.KmvStore,
+          Sketch.kmvHashes(batch.filter(pred), valueCol, k), path, id,
+          0, k)
+    }
 
   /** Streaming grouped-audience store — [[runKmvOverlapStores]]' two-
     * predicate form generalized to a GROUP COLUMN: each micro-batch
@@ -317,34 +283,20 @@ object StreamingDashboard {
     * [[graft.ops.Sketch.groupedKmvStoreOverlapMatrix]] over the store
     * answers the FULL pairwise audience-overlap matrix (the q238
     * dashboard) at any quiesce point — bit-identical to the one-shot
-    * grouped matrix of everything ingested (per-group store-merge ==
-    * one-shot, and the theta algebra reads only merged hashes), for
-    * every segment pair at once, never retaining a corpus.
+    * grouped matrix of everything ingested, for every segment pair at
+    * once, never retaining a corpus.
     */
   def runGroupedKmvStore(events: DataFrame, storePath: String,
                          checkpoint: String, groupCol: String,
                          valueCol: String = "item", k: Int = 256,
                          trigger: Trigger = Trigger.AvailableNow(),
                          compactEvery: Int = 0)
-  : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.ops.Sketch.recoverParked(batch.sparkSession, storePath)
-        // kmvStoreExists only probes the layout record, whose filename
-        // is shared across store families — it serves the grouped store
-        if (!graft.ops.Sketch.kmvStoreExists(batch.sparkSession, storePath))
-          graft.ops.Sketch.writeGroupedKmvStore(batch, storePath,
-            epoch = id, groupCol = groupCol, valueCol = valueCol, k = k)
-        else
-          graft.ops.Sketch.appendGroupedKmvStore(batch, storePath,
-            epoch = id, groupCol = groupCol, valueCol = valueCol, k = k)
-        if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-          graft.ops.Sketch.compactGroupedKmvStore(batch.sparkSession,
-            storePath)
-      }
+  : DataStreamWriter[Row] =
+    epochStoreStream(events, checkpoint, trigger) { (batch, id) =>
+      Sketch.epochStep(Sketch.GroupedKmvStore,
+        Sketch.groupedKmvHashes(batch, groupCol, valueCol, k), storePath,
+        id, compactEvery, k, groupCol)
+    }
 
   /** Full pipeline: 5-min update-mode aggregation → per-trigger foreachBatch
     * that (a) upserts the changed 5-min partials into the metric store and
@@ -358,7 +310,7 @@ object StreamingDashboard {
           keyCol: String = "key", tsCol: String = "ts",
           userCol: String = "user_id",
           trigger: Trigger = Trigger.ProcessingTime("5 minutes"))
-  : DataStreamWriter[org.apache.spark.sql.Row] =
+  : DataStreamWriter[Row] =
     fiveMinAgg(events, keyCol, tsCol, userCol)
       .writeStream
       .outputMode("update")

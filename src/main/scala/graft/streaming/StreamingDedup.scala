@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+
+import graft.ops.{Scale, Sketch}
 
 /** Streaming exact dedup — the ingest-time counterpart of the batch
   * [[graft.llm.Dedup.exactCanonicalByHash]]: documents are keyed by the
@@ -96,43 +98,22 @@ object StreamingDedup {
     * any epoch span from m/32-row state per epoch, never corpus-sized
     * history. The cheap front gate BEFORE the minhash/signature store
     * machinery: a negative probe is definitive (no false negatives), so
-    * only maybe-seen keys pay the exact path.
-    *
-    * Replay safety: a re-run batchId appends duplicate epoch rows,
-    * which OR-merge to the identical words — the filter cannot drift;
-    * the first batch creates the store only when no layout record
-    * exists, so a restart never clobbers accumulated epochs
-    * (StreamingSpec pins both, mirroring the HLL register store).
+    * only maybe-seen keys pay the exact path. A re-run batchId appends
+    * duplicate epoch rows, which OR-merge to the identical words; a
+    * restart appends to the existing store (StreamingSpec pins both).
     */
   def runBloomStore(docs: DataFrame, storePath: String,
                     checkpoint: String, valueCol: String = "text",
                     bitsLog2: Int = 12, k: Int = 3,
-                    trigger: org.apache.spark.sql.streaming.Trigger =
-                      org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+                    trigger: Trigger = Trigger.AvailableNow(),
                     compactEvery: Int = 0)
   : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val members = batch.select(col(valueCol).as("item"))
-        // recover a torn fold before the exists-check (see the HLL
-        // runner: a replay must never overwrite-create over parked
-        // history)
-        graft.ops.Sketch.recoverParked(batch.sparkSession, storePath)
-        if (!graft.ops.Sketch.bloomStoreExists(batch.sparkSession,
-            storePath))
-          graft.ops.Sketch.writeBloomStore(members, storePath, epoch = id,
-            bitsLog2 = bitsLog2, k = k)
-        else
-          graft.ops.Sketch.appendBloomStore(members, storePath, epoch = id,
-            bitsLog2 = bitsLog2, k = k)
-        // auto-fold cadence (single-writer between batch commits); a
-        // replayed batch re-ORs next to the baseline harmlessly
-        if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-          graft.ops.Sketch.compactBloomStore(batch.sparkSession, storePath)
-      }
+    StreamingDashboard.epochStoreStream(docs, checkpoint, trigger) {
+      (batch, id) =>
+        Sketch.epochStep(Sketch.BloomStore,
+          Sketch.bloomWords(batch, valueCol, bitsLog2, k), storePath, id,
+          compactEvery, bitsLog2, k)
+    }
 
   /** Heavy-hitter store maintained at ingest — each micro-batch appends
     * its ≤ k-row Misra-Gries summary
@@ -145,81 +126,48 @@ object StreamingDedup {
     * HLL register sink (cardinality): three questions about an unbounded
     * stream, each answered from bounded mergeable state. Replayed
     * batches (foreachBatch is at-least-once) dynamically OVERWRITE their
-    * own epoch partition ([[graft.ops.Scale.appendTopFreqStore]]
-    * partitions by epoch) — ADD-merged counters, unlike the bloom OR /
-    * HLL MAX, would double-count a duplicated epoch and break the
-    * never-overcount half of the MG contract, so idempotence here comes
-    * from the write layout, not the merge algebra.
+    * own epoch partition — ADD-merged counters, unlike the bloom OR /
+    * HLL MAX, would double-count a duplicated epoch, so idempotence here
+    * comes from the write layout, not the merge algebra.
     */
   def runTopFreqStore(rows: DataFrame, storePath: String,
                       checkpoint: String, valueCol: String = "text",
                       k: Int = 64,
-                      trigger: org.apache.spark.sql.streaming.Trigger =
-                        org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+                      trigger: Trigger = Trigger.AvailableNow(),
                       compactEvery: Int = 0)
   : DataStreamWriter[Row] =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        import batch.sparkSession.implicits._
-        val items = batch.select(col(valueCol).cast("string")).as[String]
-        graft.ops.Sketch.recoverParked(batch.sparkSession, storePath)
-        if (!graft.ops.Scale.topFreqStoreExists(batch.sparkSession,
-            storePath))
-          graft.ops.Scale.writeTopFreqStore(items, storePath, epoch = id,
-            k = k)
-        else
-          graft.ops.Scale.appendTopFreqStore(items, storePath, epoch = id,
-            k = k)
-        // auto-fold cadence: the MG fold keeps THIS batch's partition
-        // live, so a replay still overwrites only its own partition
-        if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-          graft.ops.Scale.compactTopFreqStore(batch.sparkSession, storePath)
-      }
+    StreamingDashboard.epochStoreStream(rows, checkpoint, trigger) {
+      (batch, id) =>
+        val items = batch.select(col(valueCol).cast("string"))
+          .as(Encoders.STRING)
+        Sketch.epochStep(Scale.TopFreqStore, Scale.topFreqSummary(items, k),
+          storePath, id, compactEvery, k)
+    }
 
-  /** Count-min store maintained at ingest (r16 VERDICT item #5 — the
-    * last epoch-store family without a streaming runner): each
-    * micro-batch appends its d·w counter slab
-    * ([[graft.ops.Sketch.writeCmsStore]] /
+  /** Count-min store maintained at ingest: each micro-batch appends its
+    * d·w counter slab ([[graft.ops.Sketch.writeCmsStore]] /
     * [[graft.ops.Sketch.appendCmsStore]]); any later reader probes an
     * epoch span with [[graft.ops.Sketch.mergedCmsEstimates]] under the
     * CMS one-sided guarantee (est ≥ true, bit-identical to one-shot
     * sketching the span's union — counter addition is re-counting).
     * Completes the frequency trio: [[runBloomStore]] membership,
     * [[runTopFreqStore]] "what is hot" in ≤ k rows, this "how often is
-    * THIS item" for any probe. ADD-merged counters double-count a
-    * replayed epoch, so idempotence comes from the write layout exactly
-    * like the MG store: each batch dynamically overwrites its own epoch
-    * partition, and the fold keeps the newest batch's partition live
-    * (StreamingSpec pins mid-stream fold bit-identity + the loud
-    * below-watermark replay). */
+    * THIS item" for any probe. Replay safety is the MG store's: each
+    * batch dynamically overwrites its own epoch partition, and the fold
+    * keeps the newest batch's partition live (StreamingSpec pins
+    * mid-stream fold bit-identity + the loud below-watermark replay). */
   def runCmsStore(rows: DataFrame, storePath: String,
                   checkpoint: String, valueCol: String = "text",
                   d: Int = 4, w: Int = 64,
-                  trigger: org.apache.spark.sql.streaming.Trigger =
-                    org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+                  trigger: Trigger = Trigger.AvailableNow(),
                   compactEvery: Int = 0)
   : DataStreamWriter[Row] =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val items = batch.select(col(valueCol).as("item"))
-        graft.ops.Sketch.recoverParked(batch.sparkSession, storePath)
-        if (!graft.ops.Sketch.cmsStoreExists(batch.sparkSession, storePath))
-          graft.ops.Sketch.writeCmsStore(items, storePath, epoch = id,
-            d = d, w = w)
-        else
-          graft.ops.Sketch.appendCmsStore(items, storePath, epoch = id,
-            d = d, w = w)
-        // auto-fold cadence: the fold keeps THIS batch's partition live,
-        // so a replay still overwrites only its own partition
-        if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-          graft.ops.Sketch.compactCmsStore(batch.sparkSession, storePath)
-      }
+    StreamingDashboard.epochStoreStream(rows, checkpoint, trigger) {
+      (batch, id) =>
+        Sketch.epochStep(Sketch.CmsStore,
+          Sketch.cmsCounterSlab(batch, valueCol, d, w), storePath, id,
+          compactEvery, d, w)
+    }
 
   /** Streaming NEAR-dup detection — the minhash-band counterpart of
     * [[dedupByContent]]: each micro-batch's documents are shingled,

@@ -1555,7 +1555,7 @@ class OperatorSpec extends SparkSpecBase {
     graft.sinks.Sinks.renameOrThrow(fs, fsP,
       new org.apache.hadoop.fs.Path(dir + "__old"))
     graft.ops.Sketch.recoverParked(spark, dir)
-    assert(graft.ops.Sketch.kmvStoreExists(spark, dir),
+    assert(graft.ops.Sketch.storeExists(spark, dir),
       "recovery must restore the parked store before the exists-check")
     graft.ops.Sketch.appendKmvStore(e3, dir, epoch = 5L)
     assert(graft.ops.Sketch.mergedKmvEstimate(spark, dir)
@@ -2542,5 +2542,61 @@ class OperatorSpec extends SparkSpecBase {
     finally out2.close()
     val n = graft.ops.Scale.mergedHeavyHitters(spark, dir).count()
     assert(n > 0L && n <= 5L, s"post-migration read: $n rows")
+  }
+
+  test("store families: each writes its exact layout record, CMS and " +
+    "top-freq partition by epoch, and every other family's merged " +
+    "reader refuses the store by name or with its redirect hint") {
+    import graft.ops.{Scale, Sketch}
+    val base = java.nio.file.Files.createTempDirectory("graft_families")
+      .toString
+    val items = Seq("a", "b", "c").toDF("item")
+    val grouped = Seq(("x", "a"), ("y", "b")).toDF("g", "item")
+    val values = Seq(0.5, 1.5).toDF("v")
+    val groupedValues = Seq(("x", 0.5), ("y", 1.5)).toDF("g", "v")
+    // (family, writer, exact layout record)
+    val writers: Seq[(String, String => Unit, String)] = Seq(
+      ("HLL", Sketch.writeHllStore(items, _, 1L), "p=6"),
+      ("bloom", Sketch.writeBloomStore(items, _, 1L), "bits=12,k=3"),
+      ("KMV", Sketch.writeKmvStore(items, _, 1L), "k=256"),
+      ("grouped KMV", Sketch.writeGroupedKmvStore(grouped, _, 1L, "g"),
+        "gk=256,group=g"),
+      ("histogram", Sketch.writeHistStore(values, _, 1L, "v", 0.0, 0.5, 8),
+        "lo=0.0,width=0.5,bins=8"),
+      ("grouped histogram", Sketch.writeGroupedHistStore(groupedValues, _,
+        1L, "g", "v", 0.0, 0.5, 8), "lo=0.0,width=0.5,bins=8,group=g"),
+      ("CMS", Sketch.writeCmsStore(items, _, 1L), "cmsd=4,cmsw=64"),
+      ("top-freq", Scale.writeTopFreqStore(Seq("a", "a", "b").toDS(), _,
+        1L, 64), "tfk=64"))
+    val readers: Map[String, String => org.apache.spark.sql.DataFrame] = Map(
+      "HLL" -> (Sketch.mergedHllEstimate(spark, _)),
+      "bloom" -> (Sketch.mergedBloomWords(spark, _)),
+      "KMV" -> (Sketch.mergedKmvEstimate(spark, _)),
+      "grouped KMV" -> (Sketch.mergedGroupedKmvHashes(spark, _)),
+      "histogram" -> (Sketch.mergedHistQuantiles(spark, _, Seq(50))),
+      "grouped histogram" ->
+        (Sketch.mergedGroupedHistQuantiles(spark, _, Seq(50))),
+      "CMS" -> (Sketch.mergedCmsCounters(spark, _)),
+      "top-freq" -> (Scale.mergedHeavyHitters(spark, _)))
+    for ((family, write, layout) <- writers) {
+      val path = s"$base/${family.replace(' ', '_')}"
+      write(path)
+      val lp = new org.apache.hadoop.fs.Path(path, "_graft_layout")
+      val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val in = fs.open(lp)
+      val recorded = try new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+      assert(recorded == layout + "\n", s"$family layout: '$recorded'")
+      assert(fs.exists(new org.apache.hadoop.fs.Path(path, "epoch=1")) ==
+        Set("CMS", "top-freq").contains(family),
+        s"$family: only the self-overwriting families write epoch=<id> dirs")
+      assert(readers(family)(path).count() > 0L, s"$family reads itself")
+      for ((other, read) <- readers if other != family) {
+        val err = intercept[IllegalArgumentException](read(path))
+        assert(err.getMessage.contains(s"not a $other store") ||
+          err.getMessage.contains("use merged"),
+          s"$other reader on a $family store: ${err.getMessage}")
+      }
+    }
   }
 }

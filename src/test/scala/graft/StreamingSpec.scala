@@ -399,6 +399,39 @@ class StreamingSpec extends SparkSpecBase {
     }
   }
 
+  test("T13e overlap runner recovers a parked store before its exists-" +
+    "check: a batch after a fold that crashed mid-swap appends to the " +
+    "history instead of replacing it") {
+    implicit val s = spark
+    val dir = Files.createTempDirectory("graft_kmvoverlap_park").toString
+    val mem = MemoryStream[(Long, String)]
+    val q = StreamingDashboard.runKmvOverlapStores(
+      mem.toDF().toDF("user_id", "kind"), s"$dir/a", s"$dir/b",
+      s"$dir/ckpt", predA = col("kind") === "click",
+      predB = col("kind") === "buy", valueCol = "user_id",
+      trigger = Trigger.ProcessingTime("0 seconds")).start()
+    val batch1 = (1L to 2000L).map(u => (u, "click")) ++
+      (1L to 100L).map(u => (u, "buy"))
+    val batch2 = (1500L to 4000L).map(u => (u, "click"))
+    try {
+      mem.addData(batch1); q.processAllAvailable()
+      // a compaction of store A that crashed after parking the live dir
+      val pathA = new org.apache.hadoop.fs.Path(s"$dir/a")
+      graft.sinks.Sinks.renameOrThrow(
+        pathA.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        pathA, new org.apache.hadoop.fs.Path(s"$dir/a__old"))
+      mem.addData(batch2); q.processAllAvailable()
+    } finally q.stop()
+    val merged = graft.ops.Sketch.mergedKmvEstimate(spark, s"$dir/a")
+      .as[(Long, Long, Long, Long)].head()
+    val clicks = (batch1 ++ batch2).toDF("user_id", "kind")
+      .filter(col("kind") === "click")
+    val oneShot = graft.ops.Sketch.kmvEstimate(clicks, valueCol = "user_id")
+      .as[(Long, Long, Long, Long, Long)].head()
+    assert(merged == ((oneShot._1, oneShot._2, oneShot._3, oneShot._4)),
+      s"store A after the parked fold $merged != both batches $oneShot")
+  }
+
   test("T13f streamed grouped KMV store: the quiesce-time overlap " +
     "MATRIX equals the one-shot grouped matrix of everything ingested, " +
     "for every segment pair at once") {
