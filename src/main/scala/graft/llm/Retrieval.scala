@@ -239,8 +239,9 @@ object Retrieval {
     * query term is a count over its (pruned) posting list, so appends keep
     * df consistent for free. Group assignment hashes the DISTINCT-token
     * table, not the posting stream (the q77 vocabulary-not-occurrences
-    * lesson). All artifacts swap atomically under the store protocol;
-    * single-writer, like every store in the repo.
+    * lesson). All artifacts swap together under
+    * [[graft.sinks.Sinks.replaceDir]]; single-writer, like every store in
+    * the repo.
     */
   def writeInvertedIndex(docs: DataFrame, path: String, groups: Int = 64,
                          idCol: String = "doc_id",
@@ -252,21 +253,14 @@ object Retrieval {
       coalesce(size(toksOfText), lit(0)).as("dl"),
       toksOfText.as("toks")).persist())
     base.count() // eager: stats and postings both read it
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val oldP = new org.apache.hadoop.fs.Path(path + "__old")
-    graft.sinks.Sinks.recoverOld(fs, oldP, hp)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
-    fs.delete(tmp, true)
-    base.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_tokens"))
-      .withColumn("groups", lit(groups))
-      .repartition(1).write.parquet(s"$tmp/stats")
-    invPostingRows(base, groups)
-      .repartition(col("grp")) // one file per group dir, not one per task
-      .write.partitionBy("grp").parquet(s"$tmp/postings")
-    if (fs.exists(hp)) graft.sinks.Sinks.renameOrThrow(fs, hp, oldP)
-    graft.sinks.Sinks.renameOrThrow(fs, tmp, hp)
-    fs.delete(oldP, true)
+    graft.sinks.Sinks.replaceDir(spark, path) { tmp =>
+      base.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_tokens"))
+        .withColumn("groups", lit(groups))
+        .repartition(1).write.parquet(s"$tmp/stats")
+      invPostingRows(base, groups)
+        .repartition(col("grp")) // one file per group dir, not one per task
+        .write.partitionBy("grp").parquet(s"$tmp/postings")
+    }
   }
 
   /** Posting rows (tok, doc_id, dl, tf, grp) from a (doc_id, dl, toks)
@@ -291,17 +285,14 @@ object Retrieval {
     * contract as the signature stores); a crash between the posting write
     * and the stats swap leaves the index searchable with stale scalars —
     * re-run the LAST append only after checking for duplicate ids. A crash
-    * INSIDE the swap window (stats parked at `stats__old`, replacement not
-    * yet published) is repaired on entry before anything is read.
+    * INSIDE the swap window (old stats parked, replacement not yet
+    * published) is repaired on entry before anything is read.
     */
   def appendInvertedIndex(batch: DataFrame, path: String,
                           idCol: String = "doc_id",
                           textCol: String = "text"): Unit = {
     val spark = batch.sparkSession
-    val statsP = new org.apache.hadoop.fs.Path(s"$path/stats")
-    val fs = statsP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val oldP = new org.apache.hadoop.fs.Path(s"$path/stats__old")
-    graft.sinks.Sinks.recoverOld(fs, oldP, statsP)
+    graft.sinks.Sinks.recoverSwap(spark, s"$path/stats")
     val st =
       try spark.read.parquet(s"$path/stats").head()
       catch {
@@ -321,16 +312,12 @@ object Retrieval {
       .repartition(col("grp"))
       .write.partitionBy("grp").mode("append").parquet(s"$path/postings")
     val add = base.agg(count(lit(1)), sum(col("dl"))).head()
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/stats__tmp")
-    fs.delete(tmp, true)
-    spark.range(1).select(
-        lit(st.getAs[Long]("n_docs") + add.getLong(0)).as("n_docs"),
-        lit(st.getAs[Long]("tot_tokens") + add.getLong(1)).as("tot_tokens"),
-        lit(groups).as("groups"))
-      .repartition(1).write.parquet(tmp.toString)
-    graft.sinks.Sinks.renameOrThrow(fs, statsP, oldP)
-    graft.sinks.Sinks.renameOrThrow(fs, tmp, statsP)
-    fs.delete(oldP, true)
+    graft.sinks.Sinks.replaceDir(spark, s"$path/stats")(tmp =>
+      spark.range(1).select(
+          lit(st.getAs[Long]("n_docs") + add.getLong(0)).as("n_docs"),
+          lit(st.getAs[Long]("tot_tokens") + add.getLong(1)).as("tot_tokens"),
+          lit(groups).as("groups"))
+        .repartition(1).write.parquet(tmp))
   }
 
   /** BM25 top-k over a STORED index: the postings read prunes to the query

@@ -360,27 +360,6 @@ object Similarity {
       .toDF("id", "tbl", "centroid")
   }
 
-  /** Index-build variant of the assignment scan: carries the vector through
-    * (the postings row stores it), so writing the index is ONE pass — no
-    * second corpus scan or shuffle join to re-attach the payload. */
-  private def ivfPostingRows(embeddings: DataFrame,
-                             centroids: Array[Array[Array[Float]]],
-                             idCol: String, vecCol: String): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(centroids)
-    embeddings
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .mapPartitions { rows =>
-        val cents = bc.value
-        rows.flatMap { case (id, v) =>
-          cents.indices.iterator.map(t => (id, v, t, nearestCell(cents(t), v)))
-        }
-      }
-      .toDF("id", "vec", "tbl", "centroid")
-  }
-
   /** Candidate pairs under the IVF partitions: ids sharing a (table,
     * centroid) cell, deduped across tables BEFORE any scoring. Exposed
     * separately so the candidate volume is testable (ScaleSpec asserts the
@@ -1183,54 +1162,6 @@ object Similarity {
         col("n_hit").cast("double") / col("n_truth"))
   }
 
-  /** Persist an IVF index: `path/centroids` holds the tables·k quantizer
-    * vectors (bounded, broadcastable), `path/postings` holds one row per
-    * (vector, table) stored under its nearest cell — PARTITIONED BY
-    * (tbl, centroid), so a search touches only the probed cells'
-    * directories and the rest of the corpus is never listed or read. This
-    * is the materialized form of the inverted-file layout the in-memory
-    * [[ivfTopK]] computes per call; vectors are duplicated once per table
-    * (the standard multi-table IVF storage trade — set tables=1 for a
-    * storage-tight single-quantizer index).
-    */
-  def writeIvfIndex(corpus: DataFrame, path: String,
-                    kCentroids: Int = 64, tables: Int = 12,
-                    iters: Int = 8, sampleN: Int = 1024,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding",
-                    trainOn: DataFrame = null): Unit = {
-    val spark = corpus.sparkSession
-    // quantizer training decoupled from the indexed corpus (standard IVF
-    // practice — train on a representative sample, index everything):
-    // `trainOn` defaults to the corpus itself
-    val cents = trainIvfCentroids(Option(trainOn).getOrElse(corpus),
-      kCentroids, tables, iters, sampleN, idCol, vecCol)
-    // build the whole index under a temp root, then swap the root with the
-    // store protocol (park old, rename new, discard parked): centroids and
-    // postings must change together — two independent overwrites would let
-    // a crash (or a concurrent reader) pair new quantizers with old cells
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val oldP = new org.apache.hadoop.fs.Path(path + "__old")
-    graft.sinks.Sinks.recoverOld(fs, oldP, hp) // prior crash mid-swap
-    val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
-    fs.delete(tmp, true)
-    val centRows = for {
-      t <- cents.indices
-      c <- cents(t).indices
-    } yield (t, c, cents(t)(c))
-    spark.createDataFrame(centRows).toDF("tbl", "centroid", "cvec")
-      .repartition(1)
-      .write.parquet(s"$tmp/centroids")
-    ivfPostingRows(corpus, cents, idCol, vecCol)
-      .repartition(col("tbl"), col("centroid")) // one file per cell dir
-      .write.partitionBy("tbl", "centroid")
-      .parquet(s"$tmp/postings")
-    if (fs.exists(hp)) graft.sinks.Sinks.renameOrThrow(fs, hp, oldP)
-    graft.sinks.Sinks.renameOrThrow(fs, tmp, hp)
-    fs.delete(oldP, true) // best-effort: leftover __old is repaired next run
-  }
-
   /** Read a stored index's quantizers back as the in-memory
     * tables×k×dim array (bounded by construction — centroid counts are
     * index parameters, never corpus-sized). `private[graft]`: the
@@ -1246,106 +1177,6 @@ object Similarity {
     Array.tabulate(tables) { t =>
       centRows.filter(_._1 == t).sortBy(_._2).map(_._3)
     }
-  }
-
-  /** Append a batch of vectors to an existing stored IVF index — the daily
-    * incremental path a 100 TB embedding store needs (a full
-    * [[writeIvfIndex]] rebuild re-reads the whole corpus). The batch is
-    * assigned with the STORED quantizers (centroids are immutable once
-    * written — postings are add-only under fixed centroids, so appending
-    * parquet files into the existing (tbl, centroid) partition dirs is
-    * safe; Spark's output committer publishes the new files only at job
-    * commit). Fails loud before writing anything if the index is missing or
-    * the batch's vector dimension disagrees with the stored quantizers —
-    * [[cellDot]] would otherwise silently truncate the dot products.
-    *
-    * Quantizer drift is the documented trade: cells grow as the
-    * distribution shifts; rebuild (retrain) when cell-size skew degrades
-    * probe recall.
-    */
-  def appendIvfIndex(batch: DataFrame, path: String,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): Unit = {
-    val spark = batch.sparkSession
-    val cents =
-      try readCentroids(spark, path)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalArgumentException(
-            s"appendIvfIndex: no IVF index at $path (write one with " +
-              s"writeIvfIndex first): ${e.getMessage}")
-      }
-    val k = cents.head.length
-    require(cents.forall(_.length == k),
-      s"appendIvfIndex: corrupt index at $path — tables disagree on " +
-        s"centroid count (${cents.map(_.length).mkString(",")})")
-    val dim = cents.head.head.length
-    val dims = batch.agg(
-      min(size(col(vecCol))).as("mn"), max(size(col(vecCol))).as("mx")).head()
-    require(!dims.isNullAt(0) && dims.getInt(0) == dim && dims.getInt(1) == dim,
-      s"appendIvfIndex: batch vector dims [${dims.get(0)}, ${dims.get(1)}] " +
-        s"!= stored quantizer dim $dim at $path")
-    ivfPostingRows(batch, cents, idCol, vecCol)
-      .repartition(col("tbl"), col("centroid")) // one file per cell per batch
-      .write.partitionBy("tbl", "centroid")
-      .mode("append")
-      .parquet(s"$path/postings")
-  }
-
-  /** Posting-list size per (tbl, centroid) cell of a stored IVF index —
-    * the rebuild signal for [[appendIvfIndex]]'s documented quantizer-drift
-    * trade: appended batches grow cells unevenly as the data distribution
-    * shifts, and probe cost follows the hottest probed cells. The scan
-    * reads ONLY the two partition columns, so this is a file-listing-sized
-    * job, not a corpus read. */
-  def ivfCellStats(spark: org.apache.spark.sql.SparkSession,
-                   path: String): DataFrame =
-    spark.read.parquet(s"$path/postings")
-      .groupBy("tbl", "centroid")
-      .agg(count(lit(1)).as("n_postings"))
-
-  /** Per-table skew summary over [[ivfCellStats]]: max/mean cell size
-    * (1.0 = perfectly balanced). Rebuild (retrain quantizers via
-    * [[writeIvfIndex]]) when the ratio drifts past the tolerance your
-    * probe-latency budget allows — the standard IVF maintenance loop. */
-  def ivfSkew(spark: org.apache.spark.sql.SparkSession,
-              path: String): DataFrame =
-    ivfCellStats(spark, path)
-      .groupBy("tbl")
-      .agg(count(lit(1)).as("n_cells"),
-        sum(col("n_postings")).as("n_postings"),
-        (max(col("n_postings")) /
-          (sum(col("n_postings")) / count(lit(1)))).as("max_over_mean"))
-
-  /** Search a stored IVF index: the bounded centroid table is collected,
-    * queries are assigned their `probes` nearest cells per table, and the
-    * postings scan is joined on the PARTITION columns — dynamic partition
-    * pruning (checked in LlmOpsSpec) reads only the probed cell
-    * directories. Same contract as [[ivfTopK]]; with identical training
-    * parameters the results are identical (deterministic quantizers).
-    */
-  def searchIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                     queries: DataFrame, k: Int, probes: Int = 16,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
-    val cents = readCentroids(spark, path)
-    val qAsg = ivfAssignments(queries, cents, probes, idCol, vecCol)
-      .toDF("query_id", "tbl", "centroid")
-    val postings = spark.read.parquet(s"$path/postings")
-      .select(col("id").as("neighbor_id"), col("vec").as("cv"),
-        col("tbl"), col("centroid"))
-    val qv = queries.select(col(idCol).cast("long").as("query_id"),
-      col(vecCol).as("qv"))
-    // score on the pruned scan itself (the posting row carries the vector),
-    // then dedup (pair, score) — same pair from different tables produces
-    // the same score, and a second full postings scan is never needed
-    rankTopK(
-      postings.join(broadcast(qAsg), Seq("tbl", "centroid"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .join(broadcast(qv), "query_id")
-        .select(col("query_id"), col("neighbor_id"),
-          cosine(col("qv"), col("cv")).as("score"))
-        .distinct(), k)
   }
 
   /** One-pass posting rows for the COMPRESSED index: each corpus vector is
@@ -1380,9 +1211,10 @@ object Similarity {
     * store hold its index in a fraction of the corpus size), PARTITIONED BY
     * (tbl, centroid) so a search lists only probed cells. `path/centroids`
     * and `path/codebooks` hold the two bounded quantizer families; all
-    * three artifacts swap atomically under the same store protocol as
-    * [[writeIvfIndex]] (codes are meaningless under different codebooks —
-    * they must change together).
+    * three artifacts are built under one tmp root and swap together under
+    * [[graft.sinks.Sinks.replaceDir]] (codes are meaningless under
+    * different codebooks, and two independent overwrites would let a
+    * crash or a concurrent reader pair new quantizers with old cells).
     */
   def writeIvfPqIndex(corpus: DataFrame, path: String,
                       kCentroids: Int = 64, tables: Int = 12,
@@ -1397,32 +1229,25 @@ object Similarity {
       sampleN, idCol, vecCol)
     val books = trainPqCodebooks(trainSet, m, kCodes, iters, sampleN,
       idCol, vecCol)
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val oldP = new org.apache.hadoop.fs.Path(path + "__old")
-    graft.sinks.Sinks.recoverOld(fs, oldP, hp)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
-    fs.delete(tmp, true)
-    val centRows = for {
-      t <- cents.indices; c <- cents(t).indices
-    } yield (t, c, cents(t)(c))
-    spark.createDataFrame(centRows).toDF("tbl", "centroid", "cvec")
-      .repartition(1).write.parquet(s"$tmp/centroids")
-    val bookRows = for {
-      j <- books.indices; c <- books(j).indices
-    } yield (j, c, books(j)(c))
-    spark.createDataFrame(bookRows).toDF("sub", "code", "cw")
-      .repartition(1).write.parquet(s"$tmp/codebooks")
-    // one file per (tbl, centroid) dir: without the shuffle every write
-    // task emits a sliver into every partition dir (cells × tasks small
-    // files — measured 4× slower to write AND to search)
-    ivfPqPostingRows(corpus, cents, books, idCol, vecCol)
-      .repartition(col("tbl"), col("centroid"))
-      .write.partitionBy("tbl", "centroid")
-      .parquet(s"$tmp/postings")
-    if (fs.exists(hp)) graft.sinks.Sinks.renameOrThrow(fs, hp, oldP)
-    graft.sinks.Sinks.renameOrThrow(fs, tmp, hp)
-    fs.delete(oldP, true)
+    graft.sinks.Sinks.replaceDir(spark, path) { tmp =>
+      val centRows = for {
+        t <- cents.indices; c <- cents(t).indices
+      } yield (t, c, cents(t)(c))
+      spark.createDataFrame(centRows).toDF("tbl", "centroid", "cvec")
+        .repartition(1).write.parquet(s"$tmp/centroids")
+      val bookRows = for {
+        j <- books.indices; c <- books(j).indices
+      } yield (j, c, books(j)(c))
+      spark.createDataFrame(bookRows).toDF("sub", "code", "cw")
+        .repartition(1).write.parquet(s"$tmp/codebooks")
+      // one file per (tbl, centroid) dir: without the shuffle every write
+      // task emits a sliver into every partition dir (cells × tasks small
+      // files — measured 4× slower to write AND to search)
+      ivfPqPostingRows(corpus, cents, books, idCol, vecCol)
+        .repartition(col("tbl"), col("centroid"))
+        .write.partitionBy("tbl", "centroid")
+        .parquet(s"$tmp/postings")
+    }
   }
 
   /** Read a stored index's PQ codebooks back as the m×k×sub array
@@ -1437,14 +1262,16 @@ object Similarity {
   }
 
   /** Append a batch to an existing compressed index — the daily-ingest path
-    * of [[writeIvfPqIndex]], mirroring [[appendIvfIndex]]: the batch is
-    * assigned AND encoded under the STORED quantizers and codebooks (both
-    * immutable once written — appended codes stay comparable to every
-    * earlier batch's), then its posting files land in the existing
-    * (tbl, centroid) partition dirs. Fails loud before writing when the
-    * index is missing or the batch's vector dimension disagrees with
-    * either quantizer family. Same drift trade as the uncompressed append:
-    * rebuild when cell skew or codebook mismatch degrades recall.
+    * of [[writeIvfPqIndex]] (a full rebuild re-reads the whole corpus):
+    * the batch is assigned AND encoded under the STORED quantizers and
+    * codebooks (both immutable once written — appended codes stay
+    * comparable to every earlier batch's), then its posting files land in
+    * the existing (tbl, centroid) partition dirs; Spark's output committer
+    * publishes them only at job commit. Fails loud before writing when
+    * the index is missing or the batch's vector dimension disagrees with
+    * either quantizer family. Quantizer drift is the documented trade:
+    * cells grow unevenly as the distribution shifts — rebuild (retrain)
+    * when cell skew or codebook mismatch degrades recall.
     */
   def appendIvfPqIndex(batch: DataFrame, path: String,
                        idCol: String = "vec_id",
@@ -1475,39 +1302,34 @@ object Similarity {
   }
 
   /** Compact a stored index's postings after incremental appends — the
-    * small-file maintenance step between [[ivfSkew]]'s monitor and a full
-    * retrain: every append lands one file per (tbl, centroid) cell per
+    * small-file maintenance step short of a full retrain: every append
+    * lands one file per (tbl, centroid) cell per
     * batch, so a daily-ingest index accumulates one file per cell per DAY
     * and probe latency decays into file-open overhead. This job rewrites
     * the postings tree with one file per cell again — rows unchanged, and
     * the quantizer/codebook artifacts are untouched, so assignments and
-    * codes stay valid — then swaps the postings dir atomically under the
-    * store protocol. Works on both the full-vector ([[writeIvfIndex]]) and
-    * compressed ([[writeIvfPqIndex]]) layouts. Single-writer: do not run
-    * concurrently with appends (same ownership contract as the append).
+    * codes stay valid — then swaps the postings dir under
+    * [[graft.sinks.Sinks.replaceDir]]. Works on the compressed
+    * ([[writeIvfPqIndex]]) layout and, with `partCols = Seq("grp")`, on
+    * the sparse inverted index. Single-writer: do not run concurrently
+    * with appends (same ownership contract as the append).
     */
   def compactIndexPostings(spark: org.apache.spark.sql.SparkSession,
                            path: String,
                            partCols: Seq[String] = Seq("tbl", "centroid"))
   : Unit = {
     val post = s"$path/postings"
-    val postP = new org.apache.hadoop.fs.Path(post)
-    val fs = postP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val oldP = new org.apache.hadoop.fs.Path(post + "__old")
-    graft.sinks.Sinks.recoverOld(fs, oldP, postP) // prior crash mid-swap
-    require(fs.exists(postP),
-      s"compactIndexPostings: no postings at $post (write an index first)")
-    val tmp = new org.apache.hadoop.fs.Path(post + "__tmp")
-    fs.delete(tmp, true)
-    // lazy read + eager tmp write: the rewrite executes while the live
-    // postings dir still exists, BEFORE the swap. partCols defaults to the
-    // ANN cell layout; the sparse inverted index compacts on Seq("grp")
-    spark.read.parquet(post)
-      .repartition(partCols.map(col): _*)
-      .write.partitionBy(partCols: _*).parquet(tmp.toString)
-    graft.sinks.Sinks.renameOrThrow(fs, postP, oldP)
-    graft.sinks.Sinks.renameOrThrow(fs, tmp, postP)
-    fs.delete(oldP, true)
+    graft.sinks.Sinks.replaceDir(spark, post) { tmp =>
+      val postP = new org.apache.hadoop.fs.Path(post)
+      require(postP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(postP),
+        s"compactIndexPostings: no postings at $post (write an index first)")
+      // lazy read + eager tmp write: the rewrite executes while the live
+      // postings dir still exists, BEFORE the swap
+      spark.read.parquet(post)
+        .repartition(partCols.map(col): _*)
+        .write.partitionBy(partCols: _*).parquet(tmp)
+    }
   }
 
   /** Search the compressed index: queries probe their `probes` nearest

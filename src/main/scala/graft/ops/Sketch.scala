@@ -68,6 +68,13 @@ object Sketch {
   private def salted(value: Column, salt: String): Column =
     mix57(TextAnalysis.fingerprint(concat(value.cast("string"), lit(salt))))
 
+  /** The count-min bucket of `value` in hash row `j` of a `w`-wide
+    * sketch — the one rule the one-shot sketch, the join-size preflight,
+    * the epoch store and its probe all hash by (counters built one way
+    * and probed another would answer garbage). */
+  private def cmsBucket(value: Column, j: Int, w: Int): Column =
+    pmod(salted(value, s"|cms$j"), lit(w.toLong))
+
   /** Count-min sketch, built AND probed: `d` salted hash rows × `w`
     * counters over the exact per-item counts, then every distinct item
     * probed back — est = min over rows of its counter. The output
@@ -88,8 +95,7 @@ object Sketch {
     val hashed = cnt.select(
       col(valueCol) +: col("true_cnt") +:
         (0 until d).map(j =>
-          pmod(salted(col(valueCol), s"|cms$j"), lit(w.toLong))
-            .as(s"__h$j")): _*)
+          cmsBucket(col(valueCol), j, w).as(s"__h$j")): _*)
     val counters = (0 until d).map { j =>
       hashed.groupBy(col(s"__h$j").as("bucket"))
         .agg(sum("true_cnt").as("counter"))
@@ -126,21 +132,8 @@ object Sketch {
                        valueCol: String = "item",
                        d: Int = 4, w: Int = 64): DataFrame = {
     require(d >= 1 && w >= 1, s"d and w must be positive: d=$d w=$w")
-    def counters(items: DataFrame, as: String) = {
-      val cnt = items.groupBy(col(valueCol))
-        .agg(count(lit(1)).as("__c"))
-      // ONE pass per side: all d bucket columns come off a single cnt
-      // scan, unpivoted map-side into (row_j, bucket, __c) rows and
-      // folded by key — the r14 ADVICE fix (d unioned groupBys each
-      // re-ran the per-key aggregate from the raw items, ~d+1 full
-      // input passes at the documented d=4). The d·|keys| unpivot rows
-      // exist only map-side of one combine-enabled shuffle.
-      val pairs = (0 until d).map(j => struct(lit(j).as("row_j"),
-        pmod(salted(col(valueCol), s"|cms$j"), lit(w.toLong)).as("bucket")))
-      cnt.select(explode(array(pairs: _*)).as("rb"), col("__c"))
-        .groupBy(col("rb.row_j").as("row_j"), col("rb.bucket").as("bucket"))
-        .agg(sum("__c").as(as))
-    }
+    def counters(items: DataFrame, as: String) =
+      cmsCounterSlab(items, valueCol, d, w).withColumnRenamed("counter", as)
     // every hash row contributes to the min — a row where A's and B's
     // occupied buckets are DISJOINT has true inner product 0 (the
     // tightest bound of all), so missing rows must come back as 0 via
@@ -193,17 +186,22 @@ object Sketch {
   // ---------------------------------------------------------------------
 
   /** One epoch's (row_j, bucket, counter) slab — the counters half of
-    * [[countMinEstimates]], via the one-pass unpivot device of
-    * [[countMinJoinSize]] (never d separate input passes). Buckets with
-    * no mass are absent: a missing (row, bucket) is zero, and zeros add
-    * nothing under the span merge. */
+    * [[countMinEstimates]], also each side of [[countMinJoinSize]].
+    * ONE input pass: all d bucket columns come off a single per-key
+    * count, unpivoted map-side into (row_j, bucket, __c) rows and folded
+    * by key — the r14 ADVICE fix (d unioned groupBys each re-ran the
+    * per-key aggregate from the raw items, ~d+1 full input passes at the
+    * documented d=4). The d·|keys| unpivot rows exist only map-side of
+    * one combine-enabled shuffle. Buckets with no mass are absent: a
+    * missing (row, bucket) is zero, and zeros add nothing under the span
+    * merge. */
   private[graft] def cmsCounterSlab(items: DataFrame, valueCol: String,
                                     d: Int, w: Int): DataFrame = {
     require(d >= 1 && w >= 1, s"d and w must be positive: d=$d w=$w")
     val cnt = items.groupBy(col(valueCol))
       .agg(count(lit(1)).as("__c"))
     val pairs = (0 until d).map(j => struct(lit(j).as("row_j"),
-      pmod(salted(col(valueCol), s"|cms$j"), lit(w.toLong)).as("bucket")))
+      cmsBucket(col(valueCol), j, w).as("bucket")))
     cnt.select(explode(array(pairs: _*)).as("rb"), col("__c"))
       .groupBy(col("rb.row_j").as("row_j"), col("rb.bucket").as("bucket"))
       .agg(sum("__c").as("counter"))
@@ -263,8 +261,7 @@ object Sketch {
     val items = probes.select(col(valueCol)).distinct()
     val hashed = (0 until d).map(j =>
       items.select(col(valueCol), lit(j).as("row_j"),
-        pmod(salted(col(valueCol), s"|cms$j"), lit(w.toLong))
-          .as("bucket")))
+        cmsBucket(col(valueCol), j, w).as("bucket")))
       .reduce(_ unionByName _)
     hashed.join(merged, Seq("row_j", "bucket"), "left")
       .groupBy(col(valueCol))
@@ -738,7 +735,7 @@ object Sketch {
     * while the owning stream is quiesced; the swap is [[swapFolded]]. */
   private[graft] def compactStore(spark: org.apache.spark.sql.SparkSession,
                                   path: String, fam: StoreFamily): Unit = {
-    recoverParked(spark, path)
+    graft.sinks.Sinks.recoverSwap(spark, path)
     val kv = readStoreLayout(spark, path, fam)
     // cast: a partitionBy("epoch") column reads back with an INFERRED
     // (int-sized) type when every dir name fits one
@@ -780,7 +777,7 @@ object Sketch {
                                path: String, epoch: Long,
                                compactEvery: Int, layout: Any*): Unit = {
     val spark = slab.sparkSession
-    recoverParked(spark, path)
+    graft.sinks.Sinks.recoverSwap(spark, path)
     if (storeExists(spark, path))
       appendStore(fam, slab, path, epoch, layout: _*)
     else createStore(fam, slab, path, epoch, layout: _*)
@@ -795,47 +792,22 @@ object Sketch {
   private def withFoldWatermark(base: String, ft: Long): String =
     if (ft >= 0L) s"$base,$FoldedThroughKey=$ft" else base
 
-  /** Restore a store parked by a crashed swap (dst renamed to `__old`
-    * but the folded tmp never renamed in): the parked dir moves back.
-    * Every compaction and every runner step call this FIRST. Plain
-    * READERS stay read-only by design: a reader that mutated would race
-    * other readers on the rename, and the torn window already fails
-    * loud with the no-layout-record message rather than answering wrong.
-    * Callers of this method are WRITERS (the single-writer contract), so
-    * the rename cannot race. */
-  def recoverParked(spark: org.apache.spark.sql.SparkSession,
-                    path: String): Unit = {
-    val dstP = new org.apache.hadoop.fs.Path(path)
-    val fs = dstP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sinks.Sinks.recoverOld(fs,
-      new org.apache.hadoop.fs.Path(path + "__old"), dstP)
-  }
-
   /** The swap half of every compaction: write the folded relation plus
-    * the layout record into `path__tmp`, then swap under the
-    * park/rename/crash-recover protocol — a crash mid-swap leaves either
+    * the layout record into the swap's tmp dir and publish it under
+    * [[graft.sinks.Sinks.replaceDir]] — a crash mid-swap leaves either
     * the old store or the folded one, never a torn dir. The folded plan
     * MUST read the live store lazily: it materializes during the tmp
     * write, before the live dir moves. */
   private def swapFolded(spark: org.apache.spark.sql.SparkSession,
                          path: String, layoutLine: String,
                          folded: DataFrame,
-                         partitionCols: Seq[String] = Nil): Unit = {
-    val dstP = new org.apache.hadoop.fs.Path(path)
-    val oldP = new org.apache.hadoop.fs.Path(path + "__old")
-    val tmpP = new org.apache.hadoop.fs.Path(path + "__tmp")
-    val fs = dstP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sinks.Sinks.recoverOld(fs, oldP, dstP)
-    fs.delete(tmpP, true)
-    val w = folded.write
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmpP.toString)
-    writeLayoutRecord(spark, tmpP.toString, layoutLine)
-    graft.sinks.Sinks.renameOrThrow(fs, dstP, oldP)
-    graft.sinks.Sinks.renameOrThrow(fs, tmpP, dstP)
-    fs.delete(oldP, true)
-    ()
-  }
+                         partitionCols: Seq[String] = Nil): Unit =
+    graft.sinks.Sinks.replaceDir(spark, path) { tmp =>
+      val w = folded.write
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(tmp)
+      writeLayoutRecord(spark, tmp, layoutLine)
+    }
 
   /** Post-fold window guard (r16 ADVICE, tightened by the r17 review):
     * a fold erases the per-epoch rows at or below the recorded

@@ -2,6 +2,7 @@ package graft.sinks
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,39 +34,75 @@ object Sinks {
     * parquet + full-key anti-join merge keeps the same semantics here.
     */
   def upsertMetricStore(spark: SparkSession, path: String, updates: DataFrame,
-                        keyCols: Seq[String]): Unit = {
-    // existence must be checked explicitly: treating ANY read failure as
-    // "store missing" would overwrite the store with just this batch's
-    // updates on a transient IO error — silent loss of all accumulated
-    // metrics. A real failure propagates so the streaming batch retries.
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val oldP = new org.apache.hadoop.fs.Path(path + "__old")
-    recoverOld(fs, oldP, hp) // a prior run may have crashed mid-swap
-    val merged =
-      if (!fs.exists(hp)) updates
-      else spark.read.parquet(path)
-        .join(updates.select(keyCols.map(col): _*).distinct(),
-          keyCols, "left_anti").unionByName(updates)
-    // write via temp dir: the read above and the overwrite below would
-    // otherwise race on the same files
-    val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // crash-safe swap (never delete-then-rename): at every instant either
-    // the store or its __old copy holds the full history — a crash leaves a
-    // state the recovery above repairs instead of an empty store that a
-    // retry would silently re-seed from one batch
-    if (fs.exists(hp)) renameOrThrow(fs, hp, oldP)
-    renameOrThrow(fs, tmp, hp)
-    fs.delete(oldP, true) // best-effort: leftover __old is repaired next run
+                        keyCols: Seq[String]): Unit =
+    replaceDir(spark, path) { tmp =>
+      // existence must be checked explicitly (and after the swap's
+      // recovery): treating ANY read failure as "store missing" would
+      // overwrite the store with just this batch's updates on a transient
+      // IO error — silent loss of all accumulated metrics. A real failure
+      // propagates so the streaming batch retries.
+      val (fs, hp) = fsPath(spark, path)
+      val merged =
+        if (!fs.exists(hp)) updates
+        else spark.read.parquet(path)
+          .join(updates.select(keyCols.map(col): _*).distinct(),
+            keyCols, "left_anti").unionByName(updates)
+      merged.write.parquet(tmp)
+    }
+
+  /** The crash-safe swap every store rewritten in place goes through
+    * (the snapshot-then-recover contract of a checkpointed sink): repair
+    * a swap a crash left half done ([[recoverSwap]]), drop a stale
+    * `path__tmp`, `write(tmp)`, park the live dir as `path__old`, rename
+    * the tmp dir into place, drop the parked copy. Never delete-then-
+    * rename: at every instant either `path` or `path__old` holds the
+    * full content, so a crash leaves one of three states — a partial
+    * `__tmp` beside the live dir, the live dir parked with no `path`, or
+    * the new dir published beside its parked predecessor — each of which
+    * the next call repairs instead of re-seeding the store from one
+    * batch. `write` runs while the live dir is still in place, so it may
+    * read it (lazily or not). Single-writer per `path`. */
+  def replaceDir(spark: SparkSession, path: String)
+                (write: String => Unit): Unit = {
+    recoverSwap(spark, path)
+    val (fs, dst) = fsPath(spark, path)
+    val tmp = new Path(path + "__tmp")
+    fs.delete(tmp, true)
+    write(tmp.toString)
+    val parked = new Path(path + "__old")
+    publish(fs, tmp, dst, parked)
+    fs.delete(parked, true) // best-effort: leftover __old is repaired next run
+  }
+
+  /** The recovery half of [[replaceDir]] on its own, for writers that
+    * must read the live store BEFORE they build its replacement (a read
+    * inside the torn window would see no store and answer as if it were
+    * empty). Plain readers stay read-only: a reader that renamed would
+    * race other readers, and the torn window already fails loud or reads
+    * as absent. */
+  def recoverSwap(spark: SparkSession, path: String): Unit = {
+    val (fs, dst) = fsPath(spark, path)
+    recoverOld(fs, new Path(path + "__old"), dst)
+  }
+
+  private def fsPath(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** Park `dst` (when it exists) at `parked`, then rename `src` into
+    * place — the one publish step of every swap. */
+  private def publish(fs: FileSystem, src: Path, dst: Path,
+                      parked: Path): Unit = {
+    if (fs.exists(dst)) renameOrThrow(fs, dst, parked)
+    renameOrThrow(fs, src, dst)
   }
 
   /** Hadoop rename returns `false` (no exception) on many failures; a swap
     * step that silently no-ops would let the next step destroy the only
     * surviving copy — fail loud so the streaming batch retries instead. */
-  private[graft] def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
-                                   src: org.apache.hadoop.fs.Path,
-                                   dst: org.apache.hadoop.fs.Path): Unit =
+  private[graft] def renameOrThrow(fs: FileSystem, src: Path,
+                                   dst: Path): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"rename $src -> $dst failed")
 
@@ -74,9 +111,7 @@ object Sinks {
     * → the rename-into-place never happened, restore the old content;
     * destination present → the swap completed and the old copy is garbage.
     */
-  private[graft] def recoverOld(fs: org.apache.hadoop.fs.FileSystem,
-                                old: org.apache.hadoop.fs.Path,
-                                dst: org.apache.hadoop.fs.Path): Unit =
+  private def recoverOld(fs: FileSystem, old: Path, dst: Path): Unit =
     if (fs.exists(old)) {
       if (!fs.exists(dst)) renameOrThrow(fs, old, dst)
       else { fs.delete(old, true); () }
@@ -89,19 +124,22 @@ object Sinks {
     * rewritten, or even listed, so a long-lived store costs O(touched days)
     * per trigger, not O(history) — the flush-only-what-changed behavior of
     * the reference's per-window HBase puts.
+    *
+    * Each touched day swaps under [[replaceDir]]'s protocol, with its
+    * parked copy at `path__old/day=<d>` — OUTSIDE the store root, where
+    * it can never read back as a bogus partition value. A crash mid-loop
+    * leaves some days swapped and some not; the recovery pass repairs
+    * every parked day, and a re-run of the batch is an idempotent
+    * upsert over the days it already swapped.
     */
   def upsertMetricStorePartitioned(spark: SparkSession, path: String,
                                    updates: DataFrame, keyCols: Seq[String],
                                    dayCol: String = "day"): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // __old lives OUTSIDE the store root: a day=<d>__old dir inside it
-    // would read back as a bogus partition value
-    val oldRoot = new org.apache.hadoop.fs.Path(path + "__old")
+    val (fs, hp) = fsPath(spark, path)
+    val oldRoot = new Path(path + "__old")
     if (fs.exists(oldRoot)) { // a prior run crashed mid-swap: repair ALL days
       fs.listStatus(oldRoot).foreach(st =>
-        recoverOld(fs, st.getPath,
-          new org.apache.hadoop.fs.Path(hp, st.getPath.getName)))
+        recoverOld(fs, st.getPath, new Path(hp, st.getPath.getName)))
       fs.delete(oldRoot, true)
     }
     val u = updates.persist()
@@ -110,7 +148,7 @@ object Sinks {
         .map(_.getLong(0))
       if (days.isEmpty) return
       val existingDirs = days
-        .map(d => new org.apache.hadoop.fs.Path(path, s"$dayCol=$d"))
+        .map(d => new Path(path, s"$dayCol=$d"))
         .filter(fs.exists).map(_.toString)
       val merged =
         if (existingDirs.isEmpty) u
@@ -121,26 +159,16 @@ object Sinks {
           .unionByName(u)
       // materialize into a temp dir first (the merge plan reads the very
       // files being replaced), then swap only the touched partition dirs
-      val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
+      val tmp = new Path(path + "__tmp")
       merged.write.mode(SaveMode.Overwrite)
         .partitionBy(dayCol).parquet(tmp.toString)
       fs.mkdirs(hp)
+      fs.mkdirs(oldRoot)
       days.foreach { d =>
-        val src = new org.apache.hadoop.fs.Path(tmp, s"$dayCol=$d")
-        val dst = new org.apache.hadoop.fs.Path(hp, s"$dayCol=$d")
-        // crash-safe per-day swap: park the current partition under
-        // __old/, rename the new one into place, then discard the parked
-        // copy — a crash anywhere leaves either dst or its __old copy
-        // intact for the recovery pass above (delete-then-rename had a
-        // window that lost the day's whole accumulated history)
-        if (fs.exists(src)) {
-          if (fs.exists(dst)) {
-            fs.mkdirs(oldRoot)
-            renameOrThrow(fs, dst,
-              new org.apache.hadoop.fs.Path(oldRoot, s"$dayCol=$d"))
-          }
-          renameOrThrow(fs, src, dst)
-        }
+        val src = new Path(tmp, s"$dayCol=$d")
+        if (fs.exists(src))
+          publish(fs, src, new Path(hp, s"$dayCol=$d"),
+            new Path(oldRoot, s"$dayCol=$d"))
       }
       fs.delete(tmp, true)
       fs.delete(oldRoot, true)

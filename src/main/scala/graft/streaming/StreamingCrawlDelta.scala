@@ -66,6 +66,9 @@ object StreamingCrawlDelta {
   : DataStreamWriter[Row] =
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
+      // single writer of the store: repair a crashed roll's parked
+      // snapshot before this batch reads it
+      graft.sinks.Sinks.recoverSwap(spark, s"$storePath/snapshot")
       graft.core.CacheScope.scoped {
         val pairs = graft.core.CacheScope.track(
           distinctPairs(batch, groupCol, textCol).persist())
@@ -122,6 +125,9 @@ object StreamingCrawlDelta {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("__len",
         org.apache.spark.sql.types.LongType)))
+    // a roll that crashed mid-swap left the snapshot parked: restore it
+    // BEFORE the read, or the close is computed against no snapshot
+    graft.sinks.Sinks.recoverSwap(spark, s"$storePath/snapshot")
     val old = readSnapshot(spark, storePath, schema)
     // arrival partitions are pairwise disjoint by construction (each
     // batch anti-joined everything older; compaction only re-lays out
@@ -150,18 +156,11 @@ object StreamingCrawlDelta {
         sum((lit(1L) - col("__o")) * col("__n") * col("__len"))
           .as("chars_added"))
       .localCheckpoint()
-    // swap under the store protocol (park old, rename new, recover a
-    // prior crash mid-swap), then retire the folded arrival dirs
-    val snapP = new org.apache.hadoop.fs.Path(s"$storePath/snapshot")
-    val oldP = new org.apache.hadoop.fs.Path(s"$storePath/snapshot__old")
-    val tmpP = new org.apache.hadoop.fs.Path(s"$storePath/snapshot__tmp")
-    val fs = snapP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sinks.Sinks.recoverOld(fs, oldP, snapP)
-    fs.delete(tmpP, true)
-    arrivals.write.parquet(tmpP.toString)
-    if (fs.exists(snapP)) graft.sinks.Sinks.renameOrThrow(fs, snapP, oldP)
-    graft.sinks.Sinks.renameOrThrow(fs, tmpP, snapP)
-    fs.delete(oldP, true)
+    // swap under the store protocol, then retire the folded arrival dirs
+    graft.sinks.Sinks.replaceDir(spark, s"$storePath/snapshot")(
+      arrivals.write.parquet)
+    val fs = new org.apache.hadoop.fs.Path(storePath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$storePath/arrivals"), true)
     fs.delete(new org.apache.hadoop.fs.Path(s"$storePath/arrivals_compact"),
       true)

@@ -282,7 +282,7 @@ object StreamingDedup {
     * `probes` nearest cells per table under quantizers TRAINED ON BATCH 0
     * and FROZEN into the store (cell ids are only comparable under one
     * quantizer family — the same reason [[graft.llm.Similarity
-    * .appendIvfIndex]] never retrains), cell-joined against the persisted
+    * .appendIvfPqIndex]] never retrains), cell-joined against the persisted
     * assignments of every earlier batch plus itself, exact-cosine-verified
     * at ≥ `tau`, and the surviving (id_a, id_b, cosine) pairs handed to
     * `onPairs`. The union of emissions equals the batch IVF pipeline run
@@ -451,7 +451,7 @@ object StreamingDedup {
     * into `asg_compact/data/__bkt=<tbl·stride+centroid>/`, one partition
     * per exact cell, so a micro-batch's probe reads only its probed cells'
     * dirs instead of every batch ever published (the same layout argument
-    * as the stored IVF index's (tbl, centroid) partitioning). Same
+    * as the stored IVF+PQ index's (tbl, centroid) partitioning). Same
     * incremental/atomic/single-writer contract as the band compaction. */
   def compactCellStore(spark: org.apache.spark.sql.SparkSession,
                        storePath: String): Unit =
@@ -485,16 +485,14 @@ object StreamingDedup {
   /** Shared compaction fold: committed raw `batch=<id>` dirs newer than
     * the recorded `upto`, plus any existing compacted data, rewritten as
     * one layout partitioned by the Int `__bkt` column `addGroup` derives;
-    * three-file artifact swapped atomically (park old, rename new), folded
-    * raw dirs retired afterward. */
+    * three-file artifact swapped under [[graft.sinks.Sinks.replaceDir]],
+    * folded raw dirs retired afterward. */
   private[streaming] def foldStore(spark: org.apache.spark.sql.SparkSession,
                         root: String, compRoot: String, buckets: Int)
                        (addGroup: DataFrame => DataFrame): Unit = {
     val rootP = new org.apache.hadoop.fs.Path(root)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val compP = new org.apache.hadoop.fs.Path(compRoot)
-    val oldP = new org.apache.hadoop.fs.Path(compRoot + "__old")
-    graft.sinks.Sinks.recoverOld(fs, oldP, compP) // prior crash mid-swap
+    graft.sinks.Sinks.recoverSwap(spark, compRoot) // prior crash mid-swap
     val prev = readCompactMeta(spark, compRoot)
     val prevUpto = prev.map(_._1).getOrElse(-1L)
     val fresh = committedBatchDirs(fs, rootP).filter(_._1 > prevUpto)
@@ -509,18 +507,16 @@ object StreamingDedup {
       spark.read.parquet(s"$compRoot/data").drop("__bkt")).toSeq
     val all = (rawPart ++ oldPart).reduce(_ unionByName _)
     val upto = (fresh.map(_._1) :+ prevUpto).max
-    val tmp = new org.apache.hadoop.fs.Path(compRoot + "__tmp")
-    fs.delete(tmp, true)
-    addGroup(all)
-      .repartition(col("__bkt")) // one file per group dir, not one sliver/task
-      .write.partitionBy("__bkt").parquet(s"$tmp/data")
-    val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "_graft_compact"), true)
-    try out.write(s"upto=$upto,buckets=$buckets\n"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(compP)) graft.sinks.Sinks.renameOrThrow(fs, compP, oldP)
-    graft.sinks.Sinks.renameOrThrow(fs, tmp, compP)
-    fs.delete(oldP, true)
+    graft.sinks.Sinks.replaceDir(spark, compRoot) { tmp =>
+      addGroup(all)
+        .repartition(col("__bkt")) // one file per group dir, not per task
+        .write.partitionBy("__bkt").parquet(s"$tmp/data")
+      val out = fs.create(
+        new org.apache.hadoop.fs.Path(tmp, "_graft_compact"), true)
+      try out.write(s"upto=$upto,buckets=$buckets\n"
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
     // retire every folded raw dir (≤ upto — including one a replayed batch
     // republished after an earlier compaction already folded it)
     committedBatchDirs(fs, rootP).filter(_._1 <= upto)

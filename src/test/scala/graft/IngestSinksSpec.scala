@@ -103,6 +103,80 @@ class IngestSinksSpec extends SparkSpecBase {
     assert(!fs.exists(new Path(pdir + "__old")))
   }
 
+  test("K7: replaceDir repairs each of its three on-disk crash states — " +
+    "the next write equals the run with no crash and leaves no __tmp/__old") {
+    import org.apache.hadoop.fs.Path
+    val root = Files.createTempDirectory("graft_swap").toString
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val batches = Seq(
+      Seq(("k1", 5L), ("k2", 7L)), Seq(("k1", 9L), ("k3", 1L)),
+      Seq(("k2", 4L), ("k4", 2L))).map(_.toDF("key", "pv"))
+    def upsert(dir: String, bs: Seq[org.apache.spark.sql.DataFrame]): Unit =
+      bs.foreach(Sinks.upsertMetricStore(spark, dir, _, Seq("key")))
+    def content(dir: String) =
+      spark.read.parquet(dir).as[(String, Long)].collect().toSet
+    // (state, lay it down over `dir`, how many batches the clean run wrote)
+    val states = Seq[(String, String => Unit, Int)](
+      ("a: stale partial __tmp, live dir intact", { dir =>
+        upsert(dir, batches.take(1))
+        fs.mkdirs(new Path(dir + "__tmp"))
+        fs.create(new Path(dir + "__tmp/part-partial.parquet")).close()
+      }, 2),
+      ("b: live dir parked at __old, no live dir", { dir =>
+        upsert(dir, batches.take(1))
+        Sinks.renameOrThrow(fs, new Path(dir), new Path(dir + "__old"))
+      }, 2),
+      // the batch-2 swap published, then crashed before dropping the
+      // parked predecessor: the writer's next call is batch 3
+      ("c: new dir published, predecessor still at __old", { dir =>
+        upsert(dir, batches.take(2))
+        upsert(dir + "__old", batches.take(1))
+      }, 3))
+    for (((name, layDown, n), i) <- states.zipWithIndex) {
+      val clean = s"$root/clean$i"
+      upsert(clean, batches.take(n))
+      val dir = s"$root/crash$i"
+      layDown(dir)
+      upsert(dir, Seq(batches(n - 1)))
+      assert(content(dir) == content(clean), s"state $name")
+      assert(!fs.exists(new Path(dir + "__tmp")) &&
+        !fs.exists(new Path(dir + "__old")), s"state $name left swap debris")
+    }
+  }
+
+  test("K7: partitioned upsert — a crash mid-loop (day=1 swapped, its " +
+    "parked copy left, day=2 not swapped) is repaired by re-running the batch") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val root = Files.createTempDirectory("graft_swapp").toString
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val b1 = Seq(("k1", 1L, 5L), ("k2", 2L, 7L)).toDF("key", "day", "pv")
+    val b2 = Seq(("k1", 1L, 9L), ("k3", 2L, 1L)).toDF("key", "day", "pv")
+    def upsert(dir: String, b: org.apache.spark.sql.DataFrame): Unit =
+      Sinks.upsertMetricStorePartitioned(spark, dir, b, Seq("key", "day"))
+    def content(dir: String) = spark.read.parquet(dir)
+      .select("key", "day", "pv").as[(String, Long, Long)].collect().toSet
+    val clean = s"$root/clean"
+    upsert(clean, b1)
+    upsert(clean, b2)
+    val dir = s"$root/crash"
+    upsert(dir, b1)
+    // batch 2's loop parked day=1 and published its new copy, then died
+    // with day=2's new copy still in the tmp dir
+    fs.mkdirs(new Path(dir + "__old"))
+    Sinks.renameOrThrow(fs, new Path(dir, "day=1"),
+      new Path(dir + "__old/day=1"))
+    FileUtil.copy(fs, new Path(clean, "day=1"), fs, new Path(dir, "day=1"),
+      false, conf)
+    FileUtil.copy(fs, new Path(clean, "day=2"), fs,
+      new Path(dir + "__tmp/day=2"), false, conf)
+    assert(content(dir) != content(clean)) // the torn state is observable
+    upsert(dir, b2)
+    assert(content(dir) == content(clean))
+    assert(!fs.exists(new Path(dir + "__tmp")) &&
+      !fs.exists(new Path(dir + "__old")))
+  }
+
   test("K4: list publishing honors the Redis contract through InMemoryKv") {
     val kv = new Sinks.InMemoryKv
     val df = Seq(("item1", Seq("a:0.9", "b:0.8"))).toDF("key", "values")

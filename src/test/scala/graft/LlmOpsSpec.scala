@@ -480,65 +480,6 @@ class LlmOpsSpec extends SparkSpecBase {
     }
   }
 
-  test("stored IVF index: search equals the in-memory path and the postings " +
-    "scan is partition-pruned to the probed cells") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val queries = emb.filter(col("vec_id") < 10)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
-    Similarity.writeIvfIndex(emb, dir)
-    val fromIndex = Similarity.searchIvfIndex(spark, dir, queries, k = 5)
-    val plan = fromIndex.queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning"),
-      s"postings scan must prune to the probed (tbl, centroid) dirs:\n$plan")
-    val got = fromIndex.select("query_id", "neighbor_id")
-      .as[(Long, Long)].collect().toSet
-    val inMem = Similarity.ivfTopK(emb, queries, k = 5)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    assert(got == inMem,
-      s"index search diverged: missing ${inMem -- got}, extra ${got -- inMem}")
-  }
-
-  test("incremental IVF append: write-half + append-half equals a full " +
-    "rebuild with the same training sample; dim mismatch fails loud") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val mid = 250L // sf0.001 has 500 vectors with dense ids
-    val first = emb.filter(col("vec_id") < mid)
-    val rest = emb.filter(col("vec_id") >= mid)
-    val queries = emb.filter(col("vec_id") < 10)
-    val incDir = java.nio.file.Files.createTempDirectory("graft_ivf_inc").toString
-    Similarity.writeIvfIndex(first, incDir)
-    Similarity.appendIvfIndex(rest, incDir)
-    // the reference relation: postings over the FULL corpus, quantizers
-    // trained on the same sample the incremental index trained on (`first`)
-    val fullDir = java.nio.file.Files.createTempDirectory("graft_ivf_full").toString
-    Similarity.writeIvfIndex(emb, fullDir, trainOn = first)
-    val inc = Similarity.searchIvfIndex(spark, incDir, queries, k = 5)
-    assert(inc.queryExecution.executedPlan.toString.contains("dynamicpruning"),
-      "appended index lost partition pruning")
-    val full = Similarity.searchIvfIndex(spark, fullDir, queries, k = 5)
-    val a = inc.select("query_id", "neighbor_id", "rnk")
-      .as[(Long, Long, Int)].collect().toSet
-    val b = full.select("query_id", "neighbor_id", "rnk")
-      .as[(Long, Long, Int)].collect().toSet
-    assert(a == b, s"append diverged from rebuild: missing ${b -- a}, extra ${a -- b}")
-    // guard rails: wrong-dim batch refused before any write; missing index refused
-    val bad = emb.select(col("vec_id"), slice(col("embedding"), 1, 8).as("embedding"))
-    intercept[IllegalArgumentException] { Similarity.appendIvfIndex(bad, incDir) }
-    intercept[IllegalArgumentException] {
-      Similarity.appendIvfIndex(emb, incDir + "_nope")
-    }
-    // maintenance signal: cell stats account for every appended posting
-    // (one row per vector per table) and the skew summary stays sane
-    val nVec = emb.count()
-    val stats = Similarity.ivfCellStats(spark, incDir)
-    val perTbl = stats.groupBy("tbl").agg(sum("n_postings").as("n"))
-      .select("n").as[Long].collect()
-    assert(perTbl.forall(_ == nVec), s"per-table postings $perTbl != $nVec")
-    val skew = Similarity.ivfSkew(spark, incDir)
-      .select("max_over_mean").as[Double].collect()
-    assert(skew.forall(s => s >= 1.0 && s.isFinite), s"skew $skew")
-  }
-
   test("compressed IVF+PQ stored index: search equals brute force, the " +
     "postings scan is partition-pruned, and no full vector is stored") {
     val emb = Tables.embeddings(spark, sfDir)

@@ -1550,11 +1550,11 @@ class OperatorSpec extends SparkSpecBase {
     // replayed while the store sits parked must recover-then-append —
     // an exists-check without recovery would overwrite-CREATE a fresh
     // store holding only the replay, and the next fold's recovery would
-    // then delete the parked history. recoverParked before the
+    // then delete the parked history. recoverSwap before the
     // exists-check (what every runner now does) keeps history intact.
     graft.sinks.Sinks.renameOrThrow(fs, fsP,
       new org.apache.hadoop.fs.Path(dir + "__old"))
-    graft.ops.Sketch.recoverParked(spark, dir)
+    graft.sinks.Sinks.recoverSwap(spark, dir)
     assert(graft.ops.Sketch.storeExists(spark, dir),
       "recovery must restore the parked store before the exists-check")
     graft.ops.Sketch.appendKmvStore(e3, dir, epoch = 5L)

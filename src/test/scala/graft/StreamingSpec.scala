@@ -902,6 +902,25 @@ class StreamingSpec extends SparkSpecBase {
     assert(summed == twinLive,
       s"stream/batch divergence: missing ${twinLive -- summed}, " +
         s"extra ${summed -- twinLive}")
+    // a roll that crashed after parking the snapshot (snapshot__old, no
+    // snapshot): the next roll must restore it BEFORE it reads it, and
+    // close exactly as the clean roll below does (run on a copy)
+    val crashed = Files.createTempDirectory("graft_cd_crash")
+      .toString + "/store"
+    org.apache.hadoop.fs.FileUtil.copy(cfs,
+      new org.apache.hadoop.fs.Path(store), cfs,
+      new org.apache.hadoop.fs.Path(crashed), false,
+      spark.sparkContext.hadoopConfiguration)
+    graft.sinks.Sinks.renameOrThrow(cfs,
+      new org.apache.hadoop.fs.Path(s"$crashed/snapshot"),
+      new org.apache.hadoop.fs.Path(s"$crashed/snapshot__old"))
+    val closedAfterCrash = graft.streaming.StreamingCrawlDelta
+      .rollForward(spark, crashed)
+      .as[(String, Long, Long, Long, Long, Long, Long, Long)]
+      .collect().toSet
+    assert(closedAfterCrash == twin,
+      s"roll-forward after a crashed roll diverged: missing " +
+        s"${twin -- closedAfterCrash}, extra ${closedAfterCrash -- twin}")
     // the quiesce close is the full eight-column relation
     val closed = graft.streaming.StreamingCrawlDelta.rollForward(spark, store)
       .as[(String, Long, Long, Long, Long, Long, Long, Long)]
