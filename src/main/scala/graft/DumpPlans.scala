@@ -54,16 +54,16 @@ object DumpPlans {
     "q100_mmr_rerank" -> "pairwise grid joins the bounded candidate relation to itself on the query key; greedy selection per-query in flatMapGroups — the corpus is never touched",
     "q101_leakage_safe_split" -> "cluster ids collapse (aggregate-before-join) before fetching the canonical member's bucket; split assignment is a projection",
     "q102_decontaminate" -> "DISTINCT eval grams aggregate before probing train shingles on the shingle key — the q61 join with the sides swapped",
-    "q103_token_budget" -> ("quality-ordered spend via the two-phase prefix sum (__pid-partitioned window); the 1-row corpus total broadcast under the integer budget boundary" + AtScale),
+    "q103_token_budget" -> ("quality-ordered spend via the two-phase prefix sum (one range_running_sum pass over the range partitions); the 1-row corpus total broadcast under the integer budget boundary" + AtScale),
     "q104_dsir_select" -> ("both LMs are vocabulary-sized join sides off ONE explode; totals broadcast; importance rank is the two-phase prefix count" + AtScale),
-    "q105_curriculum_order" -> ("q91 tercile sub-plan + broadcast cutoffs, q69 salted draw, rank via the __pid-partitioned prefix count" + AtScale),
+    "q105_curriculum_order" -> ("q91 tercile sub-plan + broadcast cutoffs, q69 salted draw, rank via the range-carried prefix count" + AtScale),
     "q109_gopher_rules" -> "every rule verdict is a row expression over one pruned scan — no shuffle anywhere in the plan",
     "q110_crop_pairs" -> "salted-draw offsets and both slices as row expressions on the scan; no explode, row count stays |docs|",
     "q111_cdc_dedup" -> "boundary cuts are array expressions on the scan; chunk numbering is a doc-partitioned window (bounded by doc length); then q67's aggregate + join-back — hot chunks become one aggregate row, never one window partition",
     "q112_winnow_pairs" -> "explode first, scalar work after: per-token fingerprint, lead()-chain gram fold and winnow argmin share ONE doc-partitioned sort; sketch join is ~2/(win+1) the size of a full shingle join",
     "q113_bpe_segment" -> "frozen merge table rides the closure — map-only plan, zero exchanges; the scan is the plan",
     "q114_vocab_coverage" -> "top-K vocabulary as TakeOrderedAndProject over the term counts, broadcast back onto the explode — the occurrence table never shuffles for the join",
-    "q116_stratified_split" -> ("range-partitioned grouped rank: __pid-partitioned windows, per-(partition,stratum) offsets and stratum sizes broadcast — no per-stratum single task" + AtScale),
+    "q116_stratified_split" -> ("range-partitioned grouped rank: one range_row_number pass over the range partitions, started from O(partitions) driver-side summaries; stratum sizes broadcast — no per-stratum single task" + AtScale),
     "q118_bpe_packing" -> ("map-side segmentation feeding the two-phase prefix sum — the running total never funnels to one task" + AtScale),
     "q120_source_health" -> "four per-doc flag relations joined on the id key (vocab broadcast, dup via aggregate-join), one |sources|-key aggregate — the dashboard costs one pass",
     "q131_small_qty_revenue" -> "correlated avg subquery decorrelated to an agg join; both decorrelation sides shuffle on the same key; part filter broadcast",
@@ -71,14 +71,14 @@ object DumpPlans {
     "q136_zorder_key" -> "Morton interleave as pure integer row expressions — the scan is the plan",
     "q137_session_detail" -> "ONE user-key exchange serves the lag window, the running-sum window, and the (user, session) aggregate",
     "q138_pagerank" -> "per-round edge-vs-ranks key join + map-side dst sum + vertex left join; lineage truncated per round (checkpoint leaves in the plan)",
-    "q206_winsorized_lengths" -> ("per-source rank through the two-phase __pid windows; quantile rows picked by rank-key equi-joins on the bounded counts relation, clamp+mean one more grouped aggregate" + AtScale),
+    "q206_winsorized_lengths" -> ("per-source rank through the two-phase range_row_number pass; quantile rows picked by rank-key equi-joins on the bounded counts relation, clamp+mean one more grouped aggregate" + AtScale),
     "q225_kmv_uv" -> "bottom-k as TakeOrderedAndProject (per-partition k-heaps, no global sort); the whole sketch is k longs",
     "q228_cms_join_size" -> "both key relations fold map-side into d*w counters; the only joins are the broadcast counter grid and the exact-audit leg — no key ever shuffles for the estimate",
     "q233_random_walks" -> "id-ordered indexed adjacency (one src-keyed rank window), then len equi joins of the bounded frontier; lineage truncated per step",
     "q234_negative_samples" -> ("two-phase prefix sum builds the degree line; interval lookup is the bucketed tagged-union as-of window — never a range join, intervals replicate only into buckets they overlap" + AtScale),
     "q207_coverage_curve" -> ("global vocabulary rank + running mass through the two-phase devices; three literal V rows join the bounded rank relation — the corpus crosses the shuffle as (token, count) only" + AtScale),
     "q208_hits" -> "per-round auth/hub propagation as edge-keyed joins, 1-row L1 normalizers broadcast back via the crossJoin idiom, per-round localCheckpoint leaves",
-    "q211_rfm_segments" -> ("three chained two-phase global ranks over the customer aggregate (__pid windows); one <=125-row segment aggregate" + AtScale),
+    "q211_rfm_segments" -> ("three chained two-phase global ranks over the customer aggregate (range_row_number passes, no window); one <=125-row segment aggregate" + AtScale),
     "q213_referential_orphans" -> "ONE fact scan checks all three lineitem foreign keys: presence-flag left joins (dims broadcast, orders key-shuffled) into one counter aggregate, rows via literal-struct explode",
     "q217_collocations" -> "unigram/bigram token-keyed aggregates, bounded lift join, global top-50 as TakeOrderedAndProject — never a full sort",
     "q237_kmv_difference" -> "both sides collapse to k-hash TakeOrderedAndProject sketches before any set op; the EXCEPT legs run on <=2k rows under one broadcast threshold — only the exact-audit legs touch the corpora",

@@ -1398,8 +1398,9 @@ object TextAnalysis {
     * 100 TB posture: the global running total is
     * [[graft.ops.Scale.globalCumSumOrdered]] — range-partition on the
     * order key, per-partition sums collected (one row per partition, the
-    * only driver state), offsets broadcast back — NOT a single-task
-    * `Window.orderBy`. The corpus total is one more row broadcast.
+    * only driver state), then one narrow pass that carries each
+    * partition's offset — NOT a single-task `Window.orderBy`. The corpus
+    * total is one more row broadcast.
     */
   def tokenBudgetSelect(docs: DataFrame, budgetNum: Long = 2L,
                         budgetDen: Long = 5L, idCol: String = "doc_id",

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession, TypedColumn}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -41,13 +42,6 @@ object Scale {
       .agg(aggs.head._2._2(s"__p_${aggs.head._1}").as(aggs.head._1),
         aggs.tail.map { case (n, (_, m)) => m(s"__p_$n").as(n) }: _*)
   }
-
-  /** Convenience: salted count + sum(value). */
-  def saltedCountSum(df: DataFrame, key: Column, value: Column,
-                     salts: Int = 16): DataFrame =
-    saltedAgg(df, key, salts, Seq(
-      "cnt" -> (count(lit(1)), (p: String) => sum(col(p))),
-      "sum_value" -> (sum(value), (p: String) => sum(col(p)))))
 
   /** Bounded top-K typed aggregator: keeps at most `k` (score, payload)
     * pairs in the aggregation buffer, so per-group state is O(k) instead of
@@ -390,19 +384,48 @@ object Scale {
     (cached, atMostRows(cached, cutover))
   }
 
+  /** Range-partition `input` on `keys` and sort each partition on them,
+    * persisted (scope-tracked): the at-scale devices' one data exchange.
+    * Partition p holds the p-th contiguous key range, so the partition
+    * index and then the position within the partition are the global key
+    * order — the [[graft.functions.RangeCarry]] pass relies on that. */
+  private def rangeSorted(input: DataFrame, keys: Seq[String]): DataFrame = {
+    val k = keys.map(col)
+    graft.core.CacheScope.track(input
+      .repartitionByRange(k: _*)
+      .sortWithinPartitions(k: _*)
+      .persist())
+  }
+
+  /** One narrow job over `df`'s partitions: `f` folds a partition's rows
+    * (reused `InternalRow`s — copy what outlives the call) into one
+    * summary. The result is in partition order. */
+  private def perPartition[T: scala.reflect.ClassTag](df: DataFrame)
+      (f: Iterator[InternalRow] => T): Array[T] =
+    df.queryExecution.toRdd.mapPartitions(it => Iterator.single(f(it)))
+      .collect()
+
   /** Scale-correct global running sum of an integral column ordered by a
     * unique key. The naive `sum.over(Window.orderBy(key))` funnels the whole
     * dataset through ONE window task (its Exchange is SinglePartition); this
     * is the classic two-phase prefix sum instead: range-partition on the key
-    * (contiguous, ordered ranges), within-partition running sums in
-    * parallel, then one bounded collect of the per-partition totals whose
-    * exclusive prefix is broadcast back as each partition's offset. Integer
-    * addition is order-independent, so the result is exact and deterministic
-    * for a unique key regardless of where the range boundaries land.
+    * and sort within the partitions (contiguous, ordered ranges — the one
+    * data exchange), one narrow job that folds each partition into its
+    * total and whether it holds a non-NULL value, the exclusive prefix of
+    * those O(partitions) pairs on the driver, then one narrow pass that
+    * carries the running sum through each partition from its start
+    * ([[graft.functions.RangeCarry.runningSum]]). Nothing data-sized is
+    * exchanged, sorted, windowed or joined after the range partitioning.
+    * Integer addition is order-independent, so the result is exact and
+    * deterministic for a unique key regardless of where the range
+    * boundaries land. NULL values follow SUM's window semantics across
+    * partitions: NULL until the first non-NULL value of the whole order,
+    * the running total after — an all-NULL partition or a NULL head of a
+    * later partition carries the total before it.
     *
     * r19 bounded-input cutover: the two-phase form costs two extra jobs a
     * bounded input never needs (the range partitioner's sample pass plus
-    * the per-partition-totals collect). The input is persisted and
+    * the per-partition summary). The input is persisted and
     * probed with [[atMostRows]] — a full pass that fills the cache — and
     * both answers read that cache, so the caller's upstream runs ONCE.
     * At most `cutoverRows` rows take one ordinary window over the cached
@@ -412,11 +435,15 @@ object Scale {
     * the cached frame. `cutoverRows`:
     * [[RankCutoverFromConf]] resolves `spark.graft.rank.cutoverRows`
     * (default [[DefaultRankCutoverRows]]); 0 disables the probe — the
-    * PlanSpec locks pin the at-scale shape through that setting.
+    * PlanSpec locks pin the at-scale shape through that setting. Both
+    * paths return the input's columns in order with `outCol` last (or in
+    * place, if the input has it).
     *
     * Cache note: the probed input and the partitioned frame back the
     * returned plan — released by the caller's CacheScope after its action
-    * (or clearCache outside).
+    * (or clearCache outside). The pass is valid only over that cached
+    * layout: its starts index the cached partitions (a pass over more
+    * partitions than the summary saw fails loud).
     */
   def globalCumSum(df: DataFrame, orderCol: String, valueCol: String,
                    outCol: String = "cum",
@@ -435,30 +462,26 @@ object Scale {
     import org.apache.spark.sql.expressions.Window
     val (input, bounded) =
       boundedForRank(df, resolveRankCutover(df, cutoverRows))
+    val value = col(valueCol).cast("long")
     if (bounded) {
       val w = Window.orderBy(orderCols.map(col): _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      return input.withColumn(outCol, sum(col(valueCol).cast("long")).over(w))
+      return input.withColumn(outCol, sum(value).over(w))
     }
-    val parts = graft.core.CacheScope.track(input
-      .repartitionByRange(orderCols.map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist())
-    val totals = parts.groupBy("__pid")
-      .agg(sum(col(valueCol).cast("long")).as("t"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var running = 0L
-    val offsets = totals.map { case (pid, t) =>
-      val o = (pid, running); running += t; o
+    val parts = rangeSorted(input, orderCols)
+    // per range partition: (total, holds a non-NULL value)
+    val totals = perPartition(parts.select(value)) { rows =>
+      var t = 0L
+      var any = false
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) { t += r.getLong(0); any = true }
+      }
+      (t, any)
     }
-    val offDf = parts.sparkSession.createDataFrame(offsets.toIndexedSeq)
-      .toDF("__pid", "__offset")
-    val w = Window.partitionBy("__pid").orderBy(orderCols.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    parts.join(broadcast(offDf), "__pid")
-      .withColumn(outCol,
-        sum(col(valueCol).cast("long")).over(w) + col("__offset"))
-      .drop("__pid", "__offset")
+    val starts = totals.scanLeft(0L)(_ + _._1).init
+    val seenBefore = totals.scanLeft(false)(_ || _._2).init
+    parts.withColumn(outCol,
+      graft.functions.RangeCarry.runningSum(value, starts, seenBefore))
   }
 
   /** Per-group rank under a total order — the grouped twin of
@@ -466,18 +489,20 @@ object Scale {
     * strata can individually dwarf an executor (a per-language rank over a
     * 100 TB lake: `row_number over (partition by lang order by ...)` puts
     * ALL of `en` through one task). Range-partition on (group ++ order)
-    * keys so each partition holds contiguous runs of at most a few groups,
-    * count rows per (partition, group) — a tiny relation: ≤ partitions +
-    * distinct-groups rows, because contiguous ranges mean each group spans
-    * a prefix-closed set of partitions — derive each (partition, group)'s
-    * exclusive prefix with a window over that counts relation (partition by
-    * group, order by partition id), and broadcast it back. Within a
-    * partition a group's rows are ranked by an ordinary window (safe: the
-    * partition is executor-sized by construction). The offsets join uses
-    * null-safe equality on the actual group columns — no string-encoded
-    * composite key — so NULL group values and values containing any
-    * delimiter rank correctly, and nothing round-trips through the driver.
-    * Deterministic when (group ++ order) is unique.
+    * keys and sort within the partitions (the one data exchange), so each
+    * partition holds contiguous runs of at most a few groups and only its
+    * FIRST group can continue from earlier partitions. One narrow job
+    * folds each partition into its row count and its first and last group
+    * key with the length of each of those runs — O(partitions) rows on the
+    * driver, whatever the number of groups. The driver walks them in
+    * partition order to get each partition's start: how many rows of its
+    * first group sit in earlier partitions (a group may span many). One
+    * narrow pass then numbers the rows through each partition from that
+    * start, restarting at 1 on every new group
+    * ([[graft.functions.RangeCarry.rowNumber]]). Group keys compare as
+    * whole values under the sort's own ordering — NULL groups and values
+    * containing any delimiter rank correctly, with no string-encoded
+    * composite key. Deterministic when (group ++ order) is unique.
     *
     * r19 bounded-input cutover (same device and conf as
     * [[globalCumSumOrdered]]): at most `cutoverRows` rows rank through one
@@ -495,6 +520,7 @@ object Scale {
                          cutoverRows: Long = RankCutoverFromConf)
   : DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.catalyst.expressions.RowOrdering
     val (input, bounded) =
       boundedForRank(df, resolveRankCutover(df, cutoverRows))
     if (bounded) {
@@ -504,44 +530,47 @@ object Scale {
           .orderBy(orderCols.map(col): _*)
       return input.withColumn(outCol, row_number().over(w).cast("long"))
     }
-    val keys = groupCols ++ orderCols
-    val parts = graft.core.CacheScope.track(input
-      .repartitionByRange(keys.map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist())
-    val counts = parts
-      .groupBy(col("__pid") +: groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__c"))
-    // Exclusive per-group prefix over partition ids: range partitioning on
-    // (group ++ order) makes lower pid = lower order range within a group,
-    // so the running count over pid IS the group's rank offset.
-    val wOff = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offDf = counts
-      .withColumn("__offset", coalesce(sum(col("__c")).over(wOff), lit(0L)))
-      .select(col("__pid").as("__opid") +:
-        groupCols.map(c => col(c).as(s"__og_$c")) :+ col("__offset"): _*)
-    val joinCond = groupCols
-      .map(c => col(c) <=> col(s"__og_$c"))
-      .foldLeft(col("__pid") === col("__opid"))(_ && _)
-    val w = Window.partitionBy(col("__pid") +: groupCols.map(col): _*)
-      .orderBy(orderCols.map(col): _*)
-    parts.join(broadcast(offDf), joinCond)
-      .withColumn(outCol, row_number().over(w).cast("long") + col("__offset"))
-      .drop("__pid" +: "__opid" +: "__offset" +: groupCols.map(c => s"__og_$c"): _*)
+    val parts = rangeSorted(input, groupCols ++ orderCols)
+    val keys = parts.select(groupCols.map(col): _*)
+    val keyTypes = keys.schema.map(_.dataType)
+    // per range partition: (rows, first key, its run length, last key,
+    // its run length); the keys of an empty partition are null
+    val runs = perPartition(keys) { rows =>
+      val ord = RowOrdering.createNaturalAscendingOrdering(keyTypes)
+      var n = 0L
+      var first: InternalRow = null
+      var firstLen = 0L
+      var cur: InternalRow = null
+      var curLen = 0L
+      rows.foreach { r =>
+        if (cur != null && ord.compare(r, cur) == 0) curLen += 1
+        else {
+          if (cur != null && first == null) { first = cur; firstLen = curLen }
+          cur = r.copy()
+          curLen = 1
+        }
+        n += 1
+      }
+      if (first == null) { first = cur; firstLen = curLen }
+      (n, first, firstLen, cur, curLen)
+    }
+    val ord = RowOrdering.createNaturalAscendingOrdering(keyTypes)
+    var carryKey: InternalRow = null
+    var carry = 0L
+    val starts = runs.map { case (n, first, firstLen, last, lastLen) =>
+      if (n == 0L) 0L
+      else {
+        val start =
+          if (carryKey != null && ord.compare(first, carryKey) == 0) carry
+          else 0L
+        if (firstLen == n) { carryKey = first; carry = start + n }
+        else { carryKey = last; carry = lastLen }
+        start
+      }
+    }
+    parts.withColumn(outCol, graft.functions.RangeCarry.rowNumber(
+      struct(groupCols.map(col): _*), starts))
   }
-
-  /** Bucketed-table layout for co-located joins: write both sides bucketed
-    * by the join key → the sort-merge join reads pre-bucketed files with no
-    * Exchange (checked in BucketingSpec). At 100 TB this is the difference
-    * between re-shuffling the fact table per query and never shuffling it.
-    */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-      .format("parquet").saveAsTable(table)
 
   /** Z-order (Morton) interleave of two non-negative integer columns,
     * `bits` bits each — the multi-dimension data-skipping sort key: rows

@@ -65,12 +65,23 @@ object Sinks {
   def replaceDir(spark: SparkSession, path: String)
                 (write: String => Unit): Unit = {
     recoverSwap(spark, path)
-    val (fs, dst) = fsPath(spark, path)
+    val (fs, _) = fsPath(spark, path)
     val tmp = new Path(path + "__tmp")
     fs.delete(tmp, true)
     write(tmp.toString)
+    publishDir(spark, tmp.toString, path)
+  }
+
+  /** The publish half of [[replaceDir]] for a replacement already written
+    * elsewhere: repair a half-done swap of `path`, park it, rename `src`
+    * into place, drop the parked copy. `src` stays whole until the
+    * rename, so a crash leaves `src` or `path` holding the new content
+    * and `path` or `path__old` the old. */
+  def publishDir(spark: SparkSession, src: String, path: String): Unit = {
+    recoverSwap(spark, path)
+    val (fs, dst) = fsPath(spark, path)
     val parked = new Path(path + "__old")
-    publish(fs, tmp, dst, parked)
+    publish(fs, new Path(src), dst, parked)
     fs.delete(parked, true) // best-effort: leftover __old is repaired next run
   }
 

@@ -66,7 +66,12 @@ object StreamingCrawlDelta {
   : DataStreamWriter[Row] =
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
-      // single writer of the store: repair a crashed roll's parked
+      // a roll that committed but did not finish still owes its close:
+      // the stream must not read the store under it
+      if (storeFs(spark, storePath).exists(rollPath(storePath)))
+        throw new IllegalStateException(s"$storePath holds a committed " +
+          "roll that did not finish: run rollForward before streaming")
+      // single writer of the store: repair a crashed swap's parked
       // snapshot before this batch reads it
       graft.sinks.Sinks.recoverSwap(spark, s"$storePath/snapshot")
       graft.core.CacheScope.scoped {
@@ -109,10 +114,21 @@ object StreamingCrawlDelta {
     * n_new, n_retained, n_removed, n_added, chars_removed, chars_added)
     * between the frozen snapshot and the accumulated arrivals — the
     * point where removals become provable — then the store ROLLS
-    * FORWARD: the arrival union becomes the new frozen snapshot (parked
-    * swap, crash-recoverable) and the arrival batches retire. Returned
-    * relation is materialized BEFORE the swap (localCheckpoint), so
-    * reading it after the roll cannot re-scan moved files.
+    * FORWARD: the arrival union becomes the new frozen snapshot and the
+    * arrival batches retire.
+    *
+    * The roll is one atomic step. It stages the close relation and the
+    * new snapshot under `roll__tmp/` and commits with ONE rename to
+    * `roll/`; only then does it publish the snapshot (parked swap) and
+    * retire the arrivals, and it drops `roll/` last. A crash before the
+    * commit leaves the store as it was (the stale staging is dropped and
+    * the roll recomputed); a crash after it leaves `roll/`, and the next
+    * call finishes those steps and returns the committed close instead of
+    * closing the new snapshot against its own arrivals. Either way a
+    * re-run returns what the clean run returns and leaves the same store.
+    * The stream refuses to start over a committed, unfinished roll. The
+    * returned relation is materialized (localCheckpoint) from the
+    * committed copy, so reading it after the roll re-scans nothing.
     *
     * SINGLE-WRITER: run while the stream is quiesced, the same
     * ownership contract as the near-dup store compactions. */
@@ -125,7 +141,9 @@ object StreamingCrawlDelta {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("__len",
         org.apache.spark.sql.types.LongType)))
-    // a roll that crashed mid-swap left the snapshot parked: restore it
+    val fs = storeFs(spark, storePath)
+    if (fs.exists(rollPath(storePath))) return finishRoll(spark, storePath)
+    // a swap that crashed mid-way left the snapshot parked: restore it
     // BEFORE the read, or the close is computed against no snapshot
     graft.sinks.Sinks.recoverSwap(spark, s"$storePath/snapshot")
     val old = readSnapshot(spark, storePath, schema)
@@ -155,17 +173,40 @@ object StreamingCrawlDelta {
           .as("chars_removed"),
         sum((lit(1L) - col("__o")) * col("__n") * col("__len"))
           .as("chars_added"))
-      .localCheckpoint()
-    // swap under the store protocol, then retire the folded arrival dirs
-    graft.sinks.Sinks.replaceDir(spark, s"$storePath/snapshot")(
-      arrivals.write.parquet)
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // stage the close and the new snapshot, then commit with one rename
+    val staged = new org.apache.hadoop.fs.Path(s"$storePath/roll__tmp")
+    fs.delete(staged, true)
+    delta.write.parquet(s"$staged/delta")
+    arrivals.write.parquet(s"$staged/snapshot")
+    graft.sinks.Sinks.renameOrThrow(fs, staged, rollPath(storePath))
+    finishRoll(spark, storePath)
+  }
+
+  /** The steps after a roll's commit, each safe to repeat: publish the
+    * staged snapshot (when it is still staged), retire the arrival dirs,
+    * drop `roll/`. Returns the committed close, materialized first. */
+  private def finishRoll(spark: SparkSession, storePath: String): DataFrame = {
+    val fs = storeFs(spark, storePath)
+    val roll = rollPath(storePath)
+    val delta = spark.read.parquet(s"$roll/delta").localCheckpoint()
+    val staged = new org.apache.hadoop.fs.Path(s"$roll/snapshot")
+    if (fs.exists(staged))
+      graft.sinks.Sinks.publishDir(spark, staged.toString,
+        s"$storePath/snapshot")
+    else graft.sinks.Sinks.recoverSwap(spark, s"$storePath/snapshot")
     fs.delete(new org.apache.hadoop.fs.Path(s"$storePath/arrivals"), true)
     fs.delete(new org.apache.hadoop.fs.Path(s"$storePath/arrivals_compact"),
       true)
+    fs.delete(roll, true)
     delta
   }
+
+  private def rollPath(storePath: String) =
+    new org.apache.hadoop.fs.Path(s"$storePath/roll")
+
+  private def storeFs(spark: SparkSession, storePath: String) =
+    new org.apache.hadoop.fs.Path(storePath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Quiesced arrivals compaction — the device the scaladoc promised
     * (r14 next-round item): folds the accumulated `arrivals/batch=<id>`

@@ -41,6 +41,30 @@ class PlanSpec extends SparkSpecBase {
     }
   }
 
+  // The at-scale rank devices' shape in a plan string: every `carry`
+  // (range_running_sum or range_row_number) is a Project straight over
+  // the InMemoryTableScan of its range-partitioned frame (AQE prints a
+  // TableCacheQueryStage wrapper between them in a materialised plan),
+  // and the first exchange below it is that frame's rangepartitioning,
+  // with no window or join in between — so the range partitioning is the
+  // device's only data-sized exchange and nothing re-shuffles, re-sorts
+  // or windows the rows to compute the prefix.
+  private def rangeCarries(p: String, carry: String): Unit = {
+    val lines = p.linesIterator.toIndexedSeq
+    val at = lines.indices.filter(i => lines(i).contains(s"$carry("))
+    assert(at.nonEmpty, s"the at-scale device must carry $carry:\n$p")
+    for (i <- at) {
+      val below = lines.drop(i + 1)
+      assert(below.find(!_.contains("TableCacheQueryStage"))
+          .exists(_.contains("InMemoryTableScan")),
+        s"$carry must read the cached range partitions directly:\n$p")
+      val ex = below.indexWhere(_.contains("Exchange "))
+      assert(ex >= 0 && below(ex).contains("rangepartitioning") &&
+        !below.take(ex).exists(l => l.contains("Window") || l.contains("Join")),
+        s"the device's one data exchange must be its rangepartitioning:\n$p")
+    }
+  }
+
   test("rank cutover: a bounded input plans ONE window over the probe's " +
     "cached rows (no range repartition, no offset machinery), and the " +
     "at-scale path is unchanged two-phase") {
@@ -52,8 +76,8 @@ class PlanSpec extends SparkSpecBase {
         .globalCumSum(docs, "doc_id", "n_chars", cutoverRows = 1L << 20)
         .queryExecution.executedPlan.toString
       // bounded plan: a plain running-sum window over the cached probe —
-      // none of the two-phase machinery (no __pid, no range exchange)
-      assert(!bounded.contains("__pid") &&
+      // none of the two-phase machinery (no carry, no range exchange)
+      assert(!bounded.contains("range_running_sum") &&
         !bounded.contains("rangepartitioning"),
         s"bounded path must not build the two-phase device:\n$bounded")
       assert(bounded.contains("InMemory"),
@@ -63,9 +87,10 @@ class PlanSpec extends SparkSpecBase {
       val atScale = graft.ops.Scale
         .globalCumSum(docs, "doc_id", "n_chars", cutoverRows = 0L)
         .queryExecution.executedPlan.toString
-      // cutover disabled = the pre-r19 two-phase shape, bit for bit
-      assert(atScale.contains("__pid") &&
-        atScale.contains("rangepartitioning"),
+      // cutover disabled = the range-partitioned two-phase shape: one
+      // carry pass over the range partitions, no window, no join
+      rangeCarries(atScale, "range_running_sum")
+      assert(!atScale.contains("Window") && !atScale.contains("Join"),
         s"at-scale path must stay the range-partitioned two-phase:\n$atScale")
     }
     spark.sqlContext.clearCache()
@@ -82,7 +107,8 @@ class PlanSpec extends SparkSpecBase {
         .groupedRankOrdered(docs, Seq("lang"), Seq("n_chars", "doc_id"),
           "r", cutoverRows = 1L << 20)
         .queryExecution.executedPlan.toString
-      assert(!p.contains("__pid") && !p.contains("rangepartitioning"),
+      assert(!p.contains("range_row_number") &&
+        !p.contains("rangepartitioning"),
         s"bounded grouped rank must not build the two-phase device:\n$p")
       assert(!p.contains("Exchange SinglePartition"),
         s"grouped bounded rank must partition by the group columns:\n$p")
@@ -381,13 +407,12 @@ class PlanSpec extends SparkSpecBase {
   // note the lock shape: scalar totals legitimately finish on an
   // Exchange SinglePartition over per-partition partials (bounded rows =
   // #partitions — every agg(sum) in the repo has it); the scale killer is
-  // a GLOBAL window, i.e. a windowspecdefinition with no __pid partition
-  // column. Lock the window spec, not the exchange.
+  // a GLOBAL window ordered on the raw key. Lock the carry and the window
+  // spec, not the exchange.
   test("q103 token budget lays out the spend curve with the two-phase " +
     "prefix sum — the running-sum window is partition-local, never global") {
     val p = planOf("q103_token_budget")
-    assert(p.contains("windowspecdefinition(__pid"),
-      s"cumulative spend must window inside __pid partitions:\n$p")
+    rangeCarries(p, "range_running_sum") // cumulative spend
     assert(!p.contains("windowspecdefinition(__negq"),
       s"a window ordered straight on the quality key is the global " +
         s"single-task form:\n$p")
@@ -400,8 +425,7 @@ class PlanSpec extends SparkSpecBase {
   test("q104 DSIR rank is the two-phase prefix count; nothing cartesian " +
     "beyond the broadcast 1-row totals") {
     val p = planOf("q104_dsir_select")
-    assert(p.contains("windowspecdefinition(__pid"),
-      s"importance rank must window inside __pid partitions:\n$p")
+    rangeCarries(p, "range_running_sum") // importance rank
     assert(!p.contains("windowspecdefinition(__neg#") &&
       !p.contains("windowspecdefinition(__neg,"),
       s"a window ordered straight on the weight is the global form:\n$p")
@@ -518,9 +542,8 @@ class PlanSpec extends SparkSpecBase {
     val p = planOf("q118_bpe_packing")
     assert(!p.contains("Exchange SinglePartition"),
       s"no single-task funnel:\n$p")
-    val winLines = p.linesIterator.filter(_.contains("Window [")).toSeq
-    assert(winLines.nonEmpty && winLines.forall(_.contains("__pid")),
-      s"running sum must be partition-local:\n$p")
+    rangeCarries(p, "range_running_sum")
+    assert(!p.contains("Window ["), s"running sum must be the carry:\n$p")
   }
 
   test("q121 BPE encode: merge table and id map ride the closure — " +
@@ -535,9 +558,8 @@ class PlanSpec extends SparkSpecBase {
     val p = planOf("q122_packed_batches")
     assert(!p.contains("Exchange SinglePartition"),
       s"no single-task funnel:\n$p")
-    val winLines = p.linesIterator.filter(_.contains("Window [")).toSeq
-    assert(winLines.nonEmpty && winLines.forall(_.contains("__pid")),
-      s"running sum must be partition-local:\n$p")
+    rangeCarries(p, "range_running_sum")
+    assert(!p.contains("Window ["), s"running sum must be the carry:\n$p")
   }
 
   test("q128 Q5-shape: the deepest relational plan broadcasts every " +
@@ -690,16 +712,13 @@ class PlanSpec extends SparkSpecBase {
     "offset windows)") {
     val p = planOf("q186_sorted_neighborhood")
     assert(!p.contains("CartesianProduct"), p)
-    val rnLines = p.linesIterator
-      .filter(_.contains("row_number() windowspecdefinition")).toSeq
-    assert(rnLines.nonEmpty && rnLines.forall(_.contains("__pid")),
-      s"row_number must be partition-local, never global:\n$p")
-    // SinglePartition may appear ONLY under the offset windows, whose
-    // input is the ≤|partitions|-row count relation — every such line
-    // is a sum over __c, never over corpus columns
-    val spOk = p.linesIterator.filter(_.contains("Window [sum(__c"))
-      .forall(_.contains("__pid"))
-    assert(spOk, s"offset windows must ride the bounded counts:\n$p")
+    rangeCarries(p, "range_row_number")
+    assert(!p.contains("row_number() windowspecdefinition"),
+      s"the global rank must be the carry, never a window:\n$p")
+    // the offsets are computed on the driver from per-partition
+    // summaries: no exchange funnels rows to one task
+    assert(!p.contains("Exchange SinglePartition"),
+      s"no single-task funnel:\n$p")
   }
 
   test("q224 capped containment: the maxShingleDf cap is really in the " +
@@ -747,7 +766,7 @@ class PlanSpec extends SparkSpecBase {
     def optimizedOf(df: => org.apache.spark.sql.DataFrame): String =
       graft.core.CacheScope.scoped { df.queryExecution.optimizedPlan.toString }
     // 100 TB posture: bound 0 forces the unhinted path — no broadcast
-    // hint anywhere in q29/q185; q186 keeps only its __pid offset hints
+    // hint anywhere in q29/q185/q186 (q186's rank has no offsets join)
     val p29 = optimizedOf(graft.llm.Dedup.ngramJaccardPairs(
       docs, w = 3, tau = 0.5, maxBroadcastDocs = 0L))
     assert(!p29.contains("strategy=broadcast"),
@@ -761,9 +780,8 @@ class PlanSpec extends SparkSpecBase {
       maxBroadcastDocs = 0L))
     val hinted = p186.linesIterator
       .filter(_.contains("strategy=broadcast")).toSeq
-    assert(hinted.forall(_.contains("__pid")),
-      s"above the gate q186 may hint only the bounded __pid offset " +
-        s"joins:\n${hinted.mkString("\n")}")
+    assert(hinted.isEmpty,
+      s"above the gate, no hint may survive:\n${hinted.mkString("\n")}")
     // bounded-corpus path: the gate measures the doc count and hints
     val pHinted = optimizedOf(graft.llm.Dedup.ngramJaccardPairs(
       docs, w = 3, tau = 0.5))
@@ -776,10 +794,9 @@ class PlanSpec extends SparkSpecBase {
     "grouped form — every row_number window partitions on __pid, " +
     "never a bare source partition that funnels a stratum to one task") {
     val p = planOfScoped("q206_winsorized_lengths")
-    val rnLines = p.linesIterator
-      .filter(_.contains("row_number() windowspecdefinition")).toSeq
-    assert(rnLines.nonEmpty && rnLines.forall(_.contains("__pid")),
-      s"row_number must be partition-local:\n$p")
+    rangeCarries(p, "range_row_number")
+    assert(!p.contains("row_number() windowspecdefinition"),
+      s"row_number must be the range carry — the carry, never a window:\n$p")
     spark.sqlContext.clearCache()
   }
 
@@ -787,11 +804,11 @@ class PlanSpec extends SparkSpecBase {
     "the two-phase devices (__pid-partitioned windows); no cartesian " +
     "beyond the broadcast totals") {
     val p = planOfScoped("q207_coverage_curve")
-    val winLines = p.linesIterator
-      .filter(l => l.contains("row_number() windowspecdefinition") ||
-        l.contains("Window [sum(cnt")).toSeq
-    assert(winLines.nonEmpty && winLines.forall(_.contains("__pid")),
-      s"rank and running-mass windows must be partition-local:\n$p")
+    rangeCarries(p, "range_row_number")
+    rangeCarries(p, "range_running_sum")
+    assert(!p.contains("row_number() windowspecdefinition") &&
+      !p.contains("Window [sum(cnt"),
+      s"rank and running mass must be the carries, never windows:\n$p")
     assert(!p.contains("CartesianProduct"), p)
     spark.sqlContext.clearCache()
   }
@@ -800,10 +817,9 @@ class PlanSpec extends SparkSpecBase {
     "every row_number window partitions on __pid, the customer " +
     "universe never funnels through one task") {
     val p = planOfScoped("q211_rfm_segments")
-    val rnLines = p.linesIterator
-      .filter(_.contains("row_number() windowspecdefinition")).toSeq
-    assert(rnLines.nonEmpty && rnLines.forall(_.contains("__pid")),
-      s"quintile ranks must be partition-local:\n$p")
+    rangeCarries(p, "range_row_number")
+    assert(!p.contains("row_number() windowspecdefinition"),
+      s"quintile ranks must be the range carry — the carry, never a window:\n$p")
     spark.sqlContext.clearCache()
   }
 
@@ -811,10 +827,9 @@ class PlanSpec extends SparkSpecBase {
     "form — row_number windows partition on __pid, the order universe " +
     "never funnels through one task") {
     val p = planOfScoped("q219_equidepth_hist")
-    val rnLines = p.linesIterator
-      .filter(_.contains("row_number() windowspecdefinition")).toSeq
-    assert(rnLines.nonEmpty && rnLines.forall(_.contains("__pid")),
-      s"the rank must be partition-local:\n$p")
+    rangeCarries(p, "range_row_number")
+    assert(!p.contains("row_number() windowspecdefinition"),
+      s"the rank must be the range carry — the carry, never a window:\n$p")
     spark.sqlContext.clearCache()
   }
 
@@ -906,11 +921,10 @@ class PlanSpec extends SparkSpecBase {
     val p = planOf("q116_stratified_split")
     assert(!p.contains("Exchange SinglePartition"),
       s"no single-task funnel:\n$p")
-    val winLines = p.linesIterator.filter(_.contains("Window [")).toSeq
-    assert(winLines.nonEmpty && winLines.forall(_.contains("__pid")),
-      s"rank windows must be partition-local:\n$p")
+    rangeCarries(p, "range_row_number")
+    assert(!p.contains("Window ["), s"the rank must be the carry:\n$p")
     assert(p.contains("BroadcastHashJoin"),
-      s"offsets and stratum sizes must broadcast:\n$p")
+      s"stratum sizes must broadcast:\n$p")
     assert(!p.contains("SortMergeJoin"), s"nothing may shuffle-join:\n$p")
   }
 
@@ -918,10 +932,9 @@ class PlanSpec extends SparkSpecBase {
     "range-partitioned two-phase form — row_number windows partition on " +
     "__pid, no language funnels through one task") {
     val p = planOfScoped("q242_perplexity_buckets")
-    val rnLines = p.linesIterator
-      .filter(_.contains("row_number() windowspecdefinition")).toSeq
-    assert(rnLines.nonEmpty && rnLines.forall(_.contains("__pid")),
-      s"the per-lang rank must be partition-local:\n$p")
+    rangeCarries(p, "range_row_number")
+    assert(!p.contains("row_number() windowspecdefinition"),
+      s"the per-lang rank must be the range carry — the carry, never a window:\n$p")
     spark.sqlContext.clearCache()
   }
 
@@ -929,10 +942,9 @@ class PlanSpec extends SparkSpecBase {
     "the range-partitioned two-phase form — row_number windows partition " +
     "on __pid, no language funnels through one task") {
     val p = planOfScoped("q243_weighted_sample_grouped")
-    val rnLines = p.linesIterator
-      .filter(_.contains("row_number() windowspecdefinition")).toSeq
-    assert(rnLines.nonEmpty && rnLines.forall(_.contains("__pid")),
-      s"the per-lang bottom-k rank must be partition-local:\n$p")
+    rangeCarries(p, "range_row_number")
+    assert(!p.contains("row_number() windowspecdefinition"),
+      s"the per-lang bottom-k rank must be the range carry — the carry, never a window:\n$p")
     spark.sqlContext.clearCache()
   }
 

@@ -6,25 +6,11 @@ import graft.core.Tables
 import graft.llm.Similarity
 import graft.ops.Scale
 
-/** Scale-technique tests: salted aggregation equivalence, bounded top-K
-  * aggregator vs collect_list+sort, bucketed join shuffle elimination.
+/** Scale-technique tests: the rank devices on both sides of their
+  * cutover, bounded top-K aggregators vs collect_list+sort, pair caps.
   */
 class ScaleSpec extends SparkSpecBase {
   import spark.implicits._
-
-  test("salted aggregation equals direct aggregation") {
-    val ev = Tables.events(spark, sfDir)
-    val direct = ev.groupBy(col("event_type").as("key"))
-      .agg(count(lit(1)).as("cnt"),
-        sum(col("value").cast("decimal(18,2)")).as("sum_value"))
-      .select(col("key"), col("cnt"), col("sum_value").cast("string"))
-      .as[(String, Long, String)].collect().toSet
-    val salted = Scale.saltedCountSum(ev,
-        col("event_type"), col("value").cast("decimal(18,2)"), salts = 8)
-      .select(col("key"), col("cnt"), col("sum_value").cast("string"))
-      .as[(String, Long, String)].collect().toSet
-    assert(salted == direct)
-  }
 
   test("two-phase global cumsum equals the single-window form — on BOTH " +
     "sides of the r19 bounded-input cutover") {
@@ -350,33 +336,6 @@ class ScaleSpec extends SparkSpecBase {
     }
   }
 
-  test("bucketed tables join without an exchange") {
-    for (t <- Seq("g_bucket_l", "g_bucket_r")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      // a metastore-less location left by a prior JVM blocks CREATE
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(loc)
-      }
-    }
-    val ev = Tables.events(spark, sfDir).select("event_id", "user_id", "value")
-    Scale.writeBucketed(ev, "g_bucket_l", "user_id", 4)
-    Scale.writeBucketed(ev.select(col("user_id"),
-      col("value").as("v2")), "g_bucket_r", "user_id", 4)
-    val l = spark.table("g_bucket_l")
-    val r = spark.table("g_bucket_r")
-    val joined = l.join(r, "user_id")
-    // force SMJ (no broadcast) to observe the bucketed layout
-    val smj = l.hint("merge").join(r.hint("merge"), "user_id")
-    val plan = smj.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      s"bucketed SMJ should have no shuffle:\n$plan")
-    assert(joined.count() > 0)
-  }
-
   test("grouped two-phase rank equals the partitioned window, across " +
     "range-partition boundaries and multi-column groups") {
     import org.apache.spark.sql.expressions.Window
@@ -438,6 +397,89 @@ class ScaleSpec extends SparkSpecBase {
     val viaWindow = df.withColumn("r", row_number().over(w).cast("long"))
       .select("id", "r").as[(Long, Long)].collect().toMap
     assert(twoPhase == viaWindow)
+  }
+
+  /** The at-scale devices' layout of `df`: the rows of each range
+    * partition of `keys` (the test session has 4 shuffle partitions).
+    * Persisted like the devices' frames: a cached plan keeps its range
+    * partitions, where AQE would coalesce these small ones into one. */
+  private def rangeLayout(df: org.apache.spark.sql.DataFrame,
+                          keys: Seq[String]): Seq[Seq[org.apache.spark.sql.Row]] =
+    graft.core.CacheScope.scoped {
+      import graft.core.CacheScope.track
+      track(df.persist()).count()
+      track(df.repartitionByRange(keys.map(col): _*)
+          .sortWithinPartitions(keys.map(col): _*).persist()).rdd
+        .mapPartitions(it => Iterator.single(it.toSeq)).collect().toSeq
+    }
+
+  test("at-scale global cumsum equals the bounded window row for row when " +
+    "NULL values fill a range partition or head a later one") {
+    val rnd = new scala.util.Random(5)
+    // 1000 ids range-partition into 4 ranges of about 250. Shape (a) is
+    // NULL below 3 and on [150, 600): the second range is all NULL and
+    // the third opens with NULLs. (b) is NULL on [450, 560): the third
+    // range opens with NULLs after earlier values, no range is all NULL.
+    // (c) is NULL below 600: no value is seen before the third range.
+    def shape(nullIf: Int => Boolean) = (0 until 1000).map { i =>
+      (i.toLong,
+        if (nullIf(i)) None else Some(rnd.nextInt(100).toLong - 20L))
+    }.toDF("id", "v")
+    val a = shape(i => i < 3 || (i >= 150 && i < 600))
+    val b = shape(i => i >= 450 && i < 560)
+    val c = shape(_ < 600)
+    val ranges = rangeLayout(a, Seq("id"))
+      .filter(_.nonEmpty).map(r => (r.head.getLong(0), r.last.getLong(0)))
+    assert(ranges.size >= 3 &&
+      ranges.exists { case (lo, hi) => lo >= 150 && hi < 600 } &&
+      ranges.exists { case (lo, _) => lo > 450 && lo < 560 },
+      s"the shapes need an all-NULL range and a NULL-headed one: $ranges")
+    for ((df, name) <- Seq(a -> "a", b -> "b", c -> "c")) {
+      def run(cutover: Long) = graft.core.CacheScope.scoped {
+        Scale.globalCumSum(df, "id", "v", cutoverRows = cutover)
+          .select("id", "cum").as[(Long, Option[Long])].collect().toMap
+      }
+      val bounded = run(1L << 20)
+      val atScale = run(16L)
+      assert(atScale.size == 1000 && bounded.size == 1000)
+      val diff = bounded.toSeq.sorted.filter { case (id, c) => atScale(id) != c }
+      assert(diff.isEmpty, s"shape $name: (id, bounded) where at-scale " +
+        s"differs: ${diff.take(8).map { case (id, c) => (id, c, atScale(id)) }}")
+    }
+  }
+
+  test("at-scale grouped rank equals the bounded window on partition-" +
+    "boundary shapes: a group over three ranges, one-row groups, a NULL " +
+    "group and an empty range") {
+    val rnd = new scala.util.Random(13)
+    // rows in key order: 60 NULL-group rows, 660 rows of group "m" (over
+    // the first three of the 4 ranges), 36 one-row groups, then 444
+    // copies of the largest key ("z", 0): the range partitioner's last
+    // bound lands on that key, so the last range holds no row. The copies
+    // tie, so ranks compare as the multiset of (group, v, rank).
+    val vs = rnd.shuffle((1 to 2000).toVector)
+    val rows = (0 until 60).map(i => (null: String, vs(i).toLong)) ++
+      (60 until 720).map(i => ("m", vs(i).toLong)) ++
+      (720 until 756).map(i => (f"s$i%04d", vs(i).toLong)) ++
+      Seq.fill(444)(("z", 0L))
+    val df = rnd.shuffle(rows).toDF("g", "v")
+    val layout = rangeLayout(df, Seq("g", "v"))
+    val mRanges = layout.count(_.exists(r => r.getString(0) == "m"))
+    assert(mRanges >= 3 && layout.exists(_.isEmpty),
+      s"need group m over >= 3 ranges and an empty range: " +
+        layout.map(_.size))
+    def run(cutover: Long) = graft.core.CacheScope.scoped {
+      Scale.groupedRankOrdered(df, Seq("g"), Seq("v"), "r",
+          cutoverRows = cutover)
+        .select("g", "v", "r").as[(Option[String], Long, Long)].collect()
+        .toSeq.sorted
+    }
+    val bounded = run(1L << 20)
+    val atScale = run(16L)
+    assert(atScale.size == rows.size)
+    assert(atScale == bounded,
+      s"first differences: ${atScale.zip(bounded).filter(p => p._1 != p._2).take(8)}")
+    assert(atScale.filter(_._1 == Some("z")).map(_._3) == (1L to 444L))
   }
 
   test("above the rank cutover the upstream runs once: the probe's cache " +

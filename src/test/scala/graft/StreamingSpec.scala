@@ -944,6 +944,74 @@ class StreamingSpec extends SparkSpecBase {
       s"rolled snapshot must hold the new crawl's set: $frozen vs $expect")
   }
 
+  test("crawl-delta roll is one atomic step: a re-run after a crash at " +
+    "each point of the roll returns the clean roll's close and leaves the " +
+    "clean roll's store") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    import graft.streaming.StreamingCrawlDelta
+    def closeOf(df: DataFrame) =
+      df.as[(String, Long, Long, Long, Long, Long, Long, Long)].collect().toSet
+    val docs = graft.core.Tables.documents(spark, sfDir)
+      .select(col("doc_id").cast("long").as("doc_id"), col("source"),
+        col("text"))
+    val oldDocs = docs.filter(pmod(col("doc_id"), lit(2L)) === 0L)
+    val newDocs = docs.filter(pmod(col("doc_id"), lit(2L)) === 1L)
+    val root = Files.createTempDirectory("graft_cd_roll").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(root).getFileSystem(conf)
+    def copy(src: String, dst: String): Unit = {
+      FileUtil.copy(fs, new Path(src), fs, new Path(dst), false, conf); ()
+    }
+    // the quiesced store a stream leaves behind: the frozen old crawl and
+    // the new crawl's first-seen (source, hash, length) as one arrival batch
+    val store = s"$root/clean"
+    StreamingCrawlDelta.writeSnapshotStore(oldDocs, store)
+    newDocs.groupBy(col("source"), xxhash64(col("text")).as("__h"))
+      .agg(min(length(col("text")).cast("long")).as("__len"))
+      .write.parquet(s"$store/arrivals/batch=0")
+    val states = Seq("staging", "committed", "published", "parked")
+    for (st <- states) copy(store, s"$root/$st")
+    val twin = closeOf(graft.llm.Dedup.snapshotDelta(oldDocs, newDocs))
+    val clean = closeOf(StreamingCrawlDelta.rollForward(spark, store))
+    assert(clean == twin && twin.exists(_._5 > 0L) && twin.exists(_._6 > 0L),
+      "the clean roll must close removals and additions as the twin does")
+    def snapshotOf(dir: String) = spark.read.parquet(s"$dir/snapshot")
+      .as[(String, Long, Long)].collect().toSet
+    val rolled = snapshotOf(store)
+    // each crash state laid down by hand, as the roll leaves it
+    def commit(dir: String, staged: Boolean): Unit = {
+      clean.toSeq.toDF("source", "n_old", "n_new", "n_retained",
+          "n_removed", "n_added", "chars_removed", "chars_added")
+        .write.parquet(s"$dir/roll/delta")
+      if (staged) copy(s"$store/snapshot", s"$dir/roll/snapshot")
+    }
+    // crashed while staging: a partial roll__tmp, nothing committed
+    Seq(("x", 0L)).toDF("source", "n_old")
+      .write.parquet(s"$root/staging/roll__tmp/delta")
+    // committed, nothing after: the live snapshot and arrivals untouched
+    commit(s"$root/committed", staged = true)
+    // the new snapshot published, the arrivals not yet retired
+    commit(s"$root/published", staged = false)
+    fs.delete(new Path(s"$root/published/snapshot"), true)
+    copy(s"$store/snapshot", s"$root/published/snapshot")
+    // mid-publish: the old snapshot parked, no live snapshot
+    commit(s"$root/parked", staged = true)
+    graft.sinks.Sinks.renameOrThrow(fs, new Path(s"$root/parked/snapshot"),
+      new Path(s"$root/parked/snapshot__old"))
+    for (st <- states) {
+      val dir = s"$root/$st"
+      val again = closeOf(StreamingCrawlDelta.rollForward(spark, dir))
+      assert(again == clean, s"$st: re-run diverged from the clean roll: " +
+        s"missing ${clean -- again}, extra ${again -- clean}")
+      assert(snapshotOf(dir) == rolled,
+        s"$st: the rolled snapshot must be the new crawl's set")
+      for (gone <- Seq("arrivals", "arrivals_compact", "roll", "roll__tmp",
+          "snapshot__old", "snapshot__tmp"))
+        assert(!fs.exists(new Path(s"$dir/$gone")),
+          s"$st: $gone must not survive the roll")
+    }
+  }
+
   test("streaming minhash near-dup: a quiesced mid-stream compaction " +
     "preserves the union of emissions, and the probe prunes the compacted " +
     "scan to the batch's bucket groups") {
