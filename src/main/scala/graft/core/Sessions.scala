@@ -18,14 +18,33 @@ import org.apache.spark.sql.SparkSession
   * JVM-wide cache keyed by (class loader, source), sized ONCE when
   * `CodeGenerator` first initialises, from the static conf
   * `spark.sql.codegen.cache.maxEntries` (default 100). Measured working
-  * set: one `reco_batch` benchmark iteration compiles about 400 distinct
-  * (class loader, source) pairs and one `rank_past_bound` iteration about
-  * 170; every new streaming query adds about 100–140 more under its own
-  * cloned session's class loader, which are never hit again. With the
-  * default cap nearly every query recompiled its classes on every run
-  * (about 20 ms each in Janino). Hence: every session of this repository
-  * — mains, benchmark and tests — is built here, so the first session to
-  * compile always carries the cap.
+  * set: the first `reco_batch` benchmark iteration compiles about 240
+  * (class loader, source) pairs, and one `rank_past_bound` iteration about
+  * 170; each whole-stage source counts twice, once under the driver's
+  * class loader and once under the executor's. With the default cap
+  * nearly every query recompiled its classes on every run (about 20 ms
+  * each in Janino). Hence: every session of this repository — mains,
+  * benchmark and tests — is built here, so the first session to compile
+  * always carries the cap.
+  *
+  * Artifact isolation is off (`spark.sql.artifact.isolation.enabled`).
+  * Isolation gives each session, and so each streaming query's cloned
+  * session, its own artifact state and executor class loader; since the
+  * class cache is keyed by class loader, every new streaming query then
+  * compiled its 40-odd classes again and never hit them on a later run.
+  * Isolation only separates artifacts (jars, files, archives) that one
+  * session adds from its siblings, and nothing here adds any: no
+  * `addArtifact` call and no Spark Connect server. With it off, a re-run
+  * of a streaming dashboard compiles nothing (`CodegenCacheSpec`).
+  *
+  * Whole-stage class names carry no stage id
+  * (`spark.sql.codegen.useIdInClassName`). The id is a per-query counter,
+  * and under AQE it follows the order in which query stages are planned,
+  * which is not the same from run to run: the same stage body came out as
+  * `GeneratedIteratorForCodegenStage6` once and `…Stage7` the next time,
+  * a different source and so a cache miss. That accounted for about 50 of
+  * the classes a measured `reco_batch` iteration still compiled; the id
+  * stays in the generated code's comment and in every plan string.
   */
 object Sessions {
   def builder(appName: String, cores: Int = Runtime.getRuntime.availableProcessors(),
@@ -56,10 +75,16 @@ object Sessions {
       // parallelizes across executors — it is a per-deployment knob
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         "8192")
-      // 1000 holds a batch iteration's ~400 classes plus the ~280 a pair
-      // of streaming queries pushes in between two reuses, with headroom
-      // for the cache's per-segment split; 4096 measured no faster
+      // 1000 holds a batch iteration's ~240 classes with headroom for the
+      // cache's per-segment split (a Guava cache evicts per segment, well
+      // before the whole cap fills) and for sources that differ per run;
+      // 4096 measured no faster
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // one class loader for every session and its clones, so streaming
+      // queries share the generated-class cache, and class names that do
+      // not vary with AQE's stage order (see the scaladoc)
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.useIdInClassName", "false")
     if (rocksDbState)
       b.config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

@@ -136,54 +136,86 @@ object Sinks {
     * per trigger, not O(history) — the flush-only-what-changed behavior of
     * the reference's per-window HBase puts.
     *
-    * Each touched day swaps under [[replaceDir]]'s protocol, with its
-    * parked copy at `path__old/day=<d>` — OUTSIDE the store root, where
-    * it can never read back as a bogus partition value. A crash mid-loop
-    * leaves some days swapped and some not; the recovery pass repairs
-    * every parked day, and a re-run of the batch is an idempotent
-    * upsert over the days it already swapped.
+    * Two steps, which a caller with more than one store may interleave:
+    * [[mergeDays]] builds the touched days' new content, the caller
+    * writes it to `path__tmp` (partitioned by `dayCol`), and
+    * [[publishDays]] swaps those days into place.
     */
   def upsertMetricStorePartitioned(spark: SparkSession, path: String,
                                    updates: DataFrame, keyCols: Seq[String],
                                    dayCol: String = "day"): Unit = {
-    val (fs, hp) = fsPath(spark, path)
-    val oldRoot = new Path(path + "__old")
-    if (fs.exists(oldRoot)) { // a prior run crashed mid-swap: repair ALL days
-      fs.listStatus(oldRoot).foreach(st =>
-        recoverOld(fs, st.getPath, new Path(hp, st.getPath.getName)))
-      fs.delete(oldRoot, true)
-    }
     val u = updates.persist()
     try {
-      val days = u.select(col(dayCol)).distinct().collect()
-        .map(_.getLong(0))
+      val days = touchedDays(u, dayCol)
       if (days.isEmpty) return
-      val existingDirs = days
-        .map(d => new Path(path, s"$dayCol=$d"))
-        .filter(fs.exists).map(_.toString)
-      val merged =
-        if (existingDirs.isEmpty) u
-        // read ONLY the touched day dirs (basePath keeps the partition
-        // column) — the rest of the store is not even listed
-        else spark.read.option("basePath", path).parquet(existingDirs.toIndexedSeq: _*)
-          .join(u.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-          .unionByName(u)
-      // materialize into a temp dir first (the merge plan reads the very
-      // files being replaced), then swap only the touched partition dirs
-      val tmp = new Path(path + "__tmp")
-      merged.write.mode(SaveMode.Overwrite)
-        .partitionBy(dayCol).parquet(tmp.toString)
-      fs.mkdirs(hp)
-      fs.mkdirs(oldRoot)
-      days.foreach { d =>
-        val src = new Path(tmp, s"$dayCol=$d")
-        if (fs.exists(src))
-          publish(fs, src, new Path(hp, s"$dayCol=$d"),
-            new Path(oldRoot, s"$dayCol=$d"))
-      }
-      fs.delete(tmp, true)
-      fs.delete(oldRoot, true)
+      // the merge plan reads the very files being replaced: materialize it
+      // into the tmp dir first, then swap only the touched partition dirs
+      val tmp = path + "__tmp"
+      mergeDays(spark, path, u, keyCols, days, dayCol)
+        .write.mode(SaveMode.Overwrite).partitionBy(dayCol).parquet(tmp)
+      publishDays(spark, tmp, path, days, dayCol)
     } finally u.unpersist()
+  }
+
+  /** The distinct `dayCol` values of `updates` — one job. */
+  def touchedDays(updates: DataFrame, dayCol: String = "day"): Seq[Long] =
+    updates.select(col(dayCol)).distinct().collect().map(_.getLong(0))
+      .toIndexedSeq
+
+  /** The merge step of [[upsertMetricStorePartitioned]]: the stored rows
+    * of the touched `days` whose key the updates do not carry, plus the
+    * updates — the days' full new content, lazily. It first repairs days
+    * a crash left parked (a parked day read here would look empty), then
+    * reads ONLY the touched day dirs; basePath keeps the partition
+    * column, and the rest of the store is not even listed. */
+  def mergeDays(spark: SparkSession, path: String, updates: DataFrame,
+                keyCols: Seq[String], days: Seq[Long],
+                dayCol: String = "day"): DataFrame = {
+    val (fs, _) = fsPath(spark, path)
+    recoverDays(fs, path)
+    val existingDirs = days.map(d => new Path(path, s"$dayCol=$d"))
+      .filter(fs.exists).map(_.toString)
+    if (existingDirs.isEmpty) updates
+    else spark.read.option("basePath", path).parquet(existingDirs: _*)
+      .join(updates.select(keyCols.map(col): _*).distinct(), keyCols,
+        "left_anti")
+      .unionByName(updates)
+  }
+
+  /** The publish step of [[upsertMetricStorePartitioned]]: swap each of
+    * `days` from `tmp` (a `dayCol`-partitioned write) into the store under
+    * [[replaceDir]]'s protocol, with its parked copy at
+    * `path__old/day=<d>` — OUTSIDE the store root, where it can never read
+    * back as a bogus partition value — then drop `tmp`. A crash mid-loop
+    * leaves some days swapped and some not; the next merge or publish
+    * repairs every parked day first, and a re-run of the batch is an
+    * idempotent upsert over the days it already swapped. */
+  def publishDays(spark: SparkSession, tmp: String, path: String,
+                  days: Seq[Long], dayCol: String = "day"): Unit = {
+    val (fs, hp) = fsPath(spark, path)
+    recoverDays(fs, path)
+    val oldRoot = new Path(path + "__old")
+    fs.mkdirs(hp)
+    fs.mkdirs(oldRoot)
+    days.foreach { d =>
+      val src = new Path(tmp, s"$dayCol=$d")
+      if (fs.exists(src))
+        publish(fs, src, new Path(hp, s"$dayCol=$d"),
+          new Path(oldRoot, s"$dayCol=$d"))
+    }
+    fs.delete(new Path(tmp), true)
+    fs.delete(oldRoot, true)
+  }
+
+  /** Repair every day a crashed [[publishDays]] left parked under
+    * `path__old`, then drop the parked root. */
+  private def recoverDays(fs: FileSystem, path: String): Unit = {
+    val oldRoot = new Path(path + "__old")
+    if (fs.exists(oldRoot)) {
+      fs.listStatus(oldRoot).foreach(st =>
+        recoverOld(fs, st.getPath, new Path(path, st.getPath.getName)))
+      fs.delete(oldRoot, true)
+    }
   }
 
   /** K4/K5/K6 abstraction: keyed writes with DEL→RPUSH→EXPIRE (list) or

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, Row,
+  SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
@@ -15,16 +16,21 @@ import graft.sinks.Sinks
   *    `withWatermark` (identical semantics: watermark = max event time −
   *    delay, late rows dropped — which is also T4's 10-minute grace drop).
   *  - T3 multi-resolution windows (5min/15min/1h/1d, day aligned UTC+8):
-  *    the 5-min aggregation is the only streaming state; coarse windows are
-  *    rolled up from stored 5-min partials in `foreachBatch` — exactly the
-  *    reference's "coarse windows fed by merging fine ones" design
-  *    (`ActionLogJob.java:260-329`) with the HBase store replaced by the
-  *    keyed parquet metric store.
+  *    the 5-min aggregation is the only streaming state; each trigger
+  *    merges its 5-min partials into the touched UTC+8 days of the fine
+  *    store, and rolls every coarse window of those days up from that one
+  *    merge in `foreachBatch` — exactly the reference's "coarse windows
+  *    fed by merging fine ones" design (`ActionLogJob.java:260-329`) with
+  *    the HBase store replaced by a keyed parquet metric store in two
+  *    day-partitioned halves, `fine/` and `coarse/`.
   *  - T5 re-emission every trigger with overwrite-by-key → update output
-  *    mode + idempotent upsert.
+  *    mode + idempotent upsert of the fine days, and a rewrite of the
+  *    touched coarse days.
   *  - T12 state rehydration from HBase on restart → unnecessary: offsets +
-  *    window state live in the checkpoint; the store merge in foreachBatch
-  *    is the sink-level read-merge-write equivalent.
+  *    window state live in the checkpoint, and a batch that crashed in
+  *    its flush replays into the same stores (the consistent snapshot plus
+  *    idempotent sinks of Flink's state management); the fine merge in
+  *    foreachBatch is the sink-level read-merge-write equivalent.
   *  - T13 streaming UV: two pipelines. [[run]] counts exact `collect_set`
   *    cardinality per 5-min window (not mergeable, so its coarse rows
   *    carry pv only); [[runSketch]] keeps an HLL sketch per window, which
@@ -126,7 +132,7 @@ object StreamingDashboard {
   /** Coarse-window rollup of stored 5-min partials: every 15min/1h/1d (and
     * the 5min identity) window the partials fall in, with summed PV, from
     * ONE aggregation over the partials. Pure batch transform — runs inside
-    * foreachBatch over the touched days of the metric store, so a flush
+    * foreachBatch over the touched days' merged partials, so a flush
     * costs O(touched days' partials).
     */
   def rollup(fiveMin: DataFrame): DataFrame =
@@ -142,39 +148,53 @@ object StreamingDashboard {
     df.withColumn(as, current_timestamp())
 
   /** Per-trigger incremental flush shared by [[run]] and [[runSketch]]:
-    * (a) upsert the batch's changed 5-min partials into the day-partitioned
-    * fine store; (b) roll up EVERY coarse window of the touched days, in one
-    * aggregation over those days' fine partitions; (c) upsert them into the
-    * day-partitioned coarse store, which rewrites the touched `day=`
-    * directories in full.
+    * (a) find the batch's touched UTC+8 days; (b) merge the batch's
+    * changed 5-min partials into those days' stored fine partials
+    * ([[Sinks.mergeDays]]) and persist that fine merge; (c) write it to
+    * the fine tmp dir, and `roll` of it — EVERY coarse window of the
+    * touched days, in one aggregation — to the coarse tmp dir; (d) only
+    * then publish the fine days, then the coarse days
+    * ([[Sinks.publishDays]]).
     *
     * This is the reference's flush-only-touched-windows trigger behavior
     * (`ActionLogJobSecond.java:358-378`) at day granularity: cost per
-    * trigger is O(touched days' partials), not O(store history). Rolling up
-    * a touched day's untouched coarse windows too is idempotent — they are
-    * recomputed from the same stored partials, so they equal what the
-    * store holds — and it spares restricting the rollup to the touched
-    * windows, which cost a second exploded aggregation and a join.
+    * trigger is O(touched days' partials), not O(store history). The
+    * coarse days are REPLACED, not merged: every coarse window of a UTC+8
+    * day is a function of that day's fine partials alone (see
+    * [[dayFloor]]), and the fine merge holds all of them, so the coarse
+    * store is never read and the just-published fine store is never read
+    * back. Every read happens before any swap, so a dropped cache block
+    * recomputes against files still in place.
+    *
+    * Exactly-once by replay: a crash anywhere leaves the batch
+    * uncommitted in the checkpoint, and its replay re-merges the same
+    * partials — an idempotent upsert into a fine day it may already hold —
+    * and rewrites both stores' touched days whole. A crash between the
+    * two publishes (new fine days, old coarse days) converges the same
+    * way; [[Sinks.publishDays]] repairs a half-done swap of either store,
+    * and the tmp writes overwrite stale tmp dirs.
     */
   private def incrementalFlush(batch: DataFrame, storePath: String,
                                roll: DataFrame => DataFrame): Unit = {
     val spark = batch.sparkSession
-    val fineStore = s"$storePath/fine"
+    val (fineStore, coarseStore) = (s"$storePath/fine", s"$storePath/coarse")
     val fine = batch.withColumn("day", dayFloor(col("window_start_ms")))
       .persist()
     try {
-      val days = fine.select("day").distinct().collect().map(_.getLong(0))
+      val days = Sinks.touchedDays(fine)
       if (days.isEmpty) return
-      Sinks.upsertMetricStorePartitioned(spark, fineStore, fine,
-        Seq("key", "window_start_ms"))
-      // all partials feeding a touched coarse window live in the same
-      // UTC+8 day partition (see dayFloor) — read only those directories
-      val fineTouched = spark.read.option("basePath", fineStore)
-        .parquet(days.toIndexedSeq.map(d => s"$fineStore/day=$d"): _*)
-      val coarse = roll(fineTouched.drop("day"))
-        .withColumn("day", dayFloor(col("window_start_ms")))
-      Sinks.upsertMetricStorePartitioned(spark, s"$storePath/coarse", coarse,
-        Seq("key", "granularity", "window_start_ms"))
+      val merged = Sinks.mergeDays(spark, fineStore, fine,
+        Seq("key", "window_start_ms"), days).persist()
+      try {
+        merged.write.mode(SaveMode.Overwrite).partitionBy("day")
+          .parquet(s"${fineStore}__tmp")
+        roll(merged.drop("day"))
+          .withColumn("day", dayFloor(col("window_start_ms")))
+          .write.mode(SaveMode.Overwrite).partitionBy("day")
+          .parquet(s"${coarseStore}__tmp")
+        Sinks.publishDays(spark, s"${fineStore}__tmp", fineStore, days)
+        Sinks.publishDays(spark, s"${coarseStore}__tmp", coarseStore, days)
+      } finally merged.unpersist()
     } finally fine.unpersist()
   }
 
@@ -300,11 +320,11 @@ object StreamingDashboard {
 
   /** Full pipeline: 5-min update-mode aggregation → per-trigger foreachBatch
     * that (a) upserts the changed 5-min partials into the metric store and
-    * (b) recomputes + upserts only the coarse windows those partials touch —
-    * the reference's 5-minute flush cadence (`ActionLogJobSecond.java:
-    * 175-187`) with `Trigger.ProcessingTime`. Coarse rows carry pv only
-    * (exact uv is not mergeable — see [[fiveMinAgg]]); use [[runSketch]]
-    * when coarse UV is needed.
+    * (b) rewrites the coarse windows of the UTC+8 days those partials touch
+    * ([[incrementalFlush]]) — the reference's 5-minute flush cadence
+    * (`ActionLogJobSecond.java:175-187`) with `Trigger.ProcessingTime`.
+    * Coarse rows carry pv only (exact uv is not mergeable — see
+    * [[fiveMinAgg]]); use [[runSketch]] when coarse UV is needed.
     */
   def run(events: DataFrame, storePath: String, checkpoint: String,
           keyCol: String = "key", tsCol: String = "ts",

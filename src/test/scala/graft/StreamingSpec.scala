@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -173,6 +173,102 @@ class StreamingSpec extends SparkSpecBase {
       StreamingDashboard.runSketch(_, _, _, trigger = Trigger.AvailableNow()),
       StreamingDashboard.rollupSketch,
       Seq("key", "granularity", "window_start_ms", "pv", "uv"))
+  }
+
+  /** A crash inside a flush between its fine publish and its coarse
+    * publish, laid down on disk: run the batch, restore `coarse/` to its
+    * pre-batch copy, and drop the batch's commit (and the no-data batch
+    * after it) so the checkpoint replays it. `staleTmp` adds partial
+    * `fine__tmp`/`coarse__tmp` dirs. The restart must leave `fine` equal
+    * to a clean run's and `coarse` equal to a from-scratch rollup of it. */
+  private def crashBetweenPublishes(
+      pipeline: (DataFrame, String, String) => DataStreamWriter[Row],
+      roll: DataFrame => DataFrame, fineCols: Seq[Column],
+      coarseCols: Seq[String], staleTmp: Boolean): Unit = {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val root = Files.createTempDirectory("graft_crash").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(root).getFileSystem(conf)
+    // a file source, not a MemoryStream: a replay must re-read what the
+    // first attempt read, and a MemoryStream drops committed offsets
+    val in = s"$root/in"
+    fs.mkdirs(new Path(in))
+    val events = spark.readStream.schema("ts timestamp, user_id long, key string")
+      .csv(in)
+    def addFile(name: String, rows: Seq[String]): Unit = {
+      Files.write(java.nio.file.Paths.get(in, name), rows.mkString("\n").getBytes)
+      ()
+    }
+    def at(day: Int, hhmm: String) = f"2024-01-$day%02d $hhmm:00"
+    def trigger(dir: String): Seq[Long] = {
+      val q = pipeline(events, s"$dir/store", s"$dir/ckpt").start()
+      try q.awaitTermination() finally q.stop()
+      q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+    }
+    def copy(src: String, dst: String): Unit = {
+      FileUtil.copy(fs, new Path(src), fs, new Path(dst), false, conf); ()
+    }
+    def fine(dir: String) = spark.read.parquet(s"$dir/store/fine")
+      .select(fineCols: _*).collect().toSet
+    // the second batch touches the first batch's day and a later one
+    val (clean, crash) = (s"$root/clean", s"$root/crash")
+    addFile("b0.csv", Seq(s"${at(1, "10:00")},1,a", s"${at(1, "10:07")},2,a",
+      s"${at(1, "10:20")},1,b"))
+    trigger(clean)
+    trigger(crash)
+    copy(s"$crash/store/coarse", s"$root/coarse_pre")
+    addFile("b1.csv", Seq(s"${at(1, "12:03")},3,a", s"${at(1, "12:31")},1,b",
+      s"${at(4, "09:10")},4,b"))
+    trigger(clean)
+    val Seq(k) = trigger(crash)
+    fs.delete(new Path(s"$crash/store/coarse"), true)
+    copy(s"$root/coarse_pre", s"$crash/store/coarse")
+    for (log <- Seq("offsets", "commits"); st <- fs.listStatus(
+        new Path(s"$crash/ckpt/$log"))) {
+      val id = st.getPath.getName.stripPrefix(".").stripSuffix(".crc")
+      if (id.forall(_.isDigit) &&
+          (id.toLong > k || (log == "commits" && id.toLong == k)))
+        fs.delete(st.getPath, false)
+    }
+    if (staleTmp) for (store <- Seq("fine", "coarse")) {
+      fs.mkdirs(new Path(s"$crash/store/${store}__tmp/day=0"))
+      fs.create(new Path(s"$crash/store/${store}__tmp/day=0/part-partial.parquet"))
+        .close()
+    }
+    assert(trigger(crash) == Seq(k), "the restart must replay the batch")
+    assert(fine(crash) == fine(clean), "replayed fine store != clean run")
+    val truth = roll(spark.read.parquet(s"$crash/store/fine").drop("day"))
+      .select(coarseCols.map(col): _*).collect().toSet
+    val got = spark.read.parquet(s"$crash/store/coarse")
+      .select(coarseCols.map(col): _*).collect().toSet
+    assert(got == truth, s"coarse != rollup of fine:\n$got\nvs\n$truth")
+    assert(got.count(_.getAs[String]("granularity") == "1d") == 3,
+      s"both touched days must hold their day windows: $got")
+    for (store <- Seq("fine", "coarse"); debris <- Seq("__tmp", "__old"))
+      assert(!fs.exists(new Path(s"$crash/store/$store$debris")),
+        s"$store$debris left behind")
+  }
+
+  test("T5/T12 crash between the fine and the coarse publish: the replayed " +
+    "batch leaves fine equal to a clean run and coarse its rollup") {
+    for (staleTmp <- Seq(false, true))
+      crashBetweenPublishes(
+        StreamingDashboard.run(_, _, _, trigger = Trigger.AvailableNow()),
+        StreamingDashboard.rollup,
+        Seq("key", "window_start_ms", "pv", "uv", "day").map(col),
+        Seq("key", "granularity", "window_start_ms", "pv"), staleTmp)
+  }
+
+  test("T13 crash between the fine and the coarse publish: the replayed " +
+    "sketch batch leaves fine equal to a clean run and coarse its " +
+    "rollupSketch") {
+    for (staleTmp <- Seq(false, true))
+      crashBetweenPublishes(
+        StreamingDashboard.runSketch(_, _, _, trigger = Trigger.AvailableNow()),
+        StreamingDashboard.rollupSketch,
+        Seq(col("key"), col("window_start_ms"), col("pv"),
+          hll_sketch_estimate(col("uv_sketch")).as("uv"), col("day")),
+        Seq("key", "granularity", "window_start_ms", "pv", "uv"), staleTmp)
   }
 
   test("T6: temperature change alert fires on jumps above threshold") {
