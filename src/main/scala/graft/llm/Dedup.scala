@@ -615,8 +615,8 @@ object Dedup {
   /** Exact n-gram Jaccard near-dup pairs: docs sharing ≥1 shingle are
     * candidates (inverted-index join on the shingle), then |∩| / |∪| ≥ τ.
     * The shingle join is the scale risk: at 100 TB, hot shingles explode the
-    * candidate set — production path is [[minHashLsh]]; this exact form is
-    * the oracle-checkable ground truth.
+    * candidate set — production path is [[minHashDedupPairs]]; this exact
+    * form is the oracle-checkable ground truth.
     */
   def ngramJaccardPairs(docs: DataFrame, w: Int, tau: Double,
                         idCol: String = "doc_id",
@@ -1051,81 +1051,10 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** Write a corpus's banded minhash signatures as a persistent store —
-    * the amortization layer of INCREMENTAL dedup: a 100 TB corpus's
-    * signatures are computed once, and each daily batch then dedups
-    * against the store without touching the historical text
-    * ([[incrementalDedupPairs]]). Layout: (id, band, bucket) parquet.
-    * At warehouse scale, bucket the table by `bucket`
-    * ([[graft.ops.Scale]]'s bucketed writer) so the probe join is
-    * exchange-free on the store side.
-    */
-  def writeSignatureStore(docs: DataFrame, path: String, w: Int,
-                          bands: Int, rowsPerBand: Int,
-                          idCol: String = "doc_id",
-                          textCol: String = "text"): Unit = {
-    // multiset shingles: minhash MINs are duplicate-insensitive, so the
-    // stored (id, band, bucket) rows are bit-identical to the distinct
-    // form's and the distinct exchange is skipped (r18)
-    bandedSignatures(
-        shingles(docs, w, idCol, textCol, distinct = false)
-          .filter(col("shingle").isNotNull),
-        bands, rowsPerBand, idCol)
-      .write.mode("overwrite").parquet(path)
-    // layout metadata, written AFTER the overwrite (which replaces the
-    // dir): append must validate the FULL hash layout — w and rowsPerBand
-    // change the bucket hashes without changing the band count, so they
-    // cannot be recovered (or checked) from the data rows themselves
-    graft.ops.Sketch.writeLayoutRecord(docs.sparkSession, path,
-      signatureLayout(w, bands, rowsPerBand))
-  }
-
-  private def signatureLayout(w: Int, bands: Int, rowsPerBand: Int) =
-    s"w=$w,bands=$bands,rowsPerBand=$rowsPerBand"
-
-  /** Append a new batch's signatures to an existing store. Safe because
-    * banded-signature rows are add-only and deterministic (hash family is
-    * seed-free — the batch meets earlier batches in exactly the buckets a
-    * full rebuild would produce). Fails loud when the store's recorded
-    * layout (w, bands, rowsPerBand — ALL THREE define the bucket hashes)
-    * does not match the append's, or when the store has no layout record:
-    * mixed layouts silently miss collisions.
-    *
-    * Single-writer contract (matching the streaming store's batch-ownership
-    * note): the layout check-then-append is not concurrency-safe — an
-    * append racing a [[writeSignatureStore]] rebuild (which deletes the
-    * dir, layout file included) or a second appender can interleave into a
-    * store that passes the layout check but holds mixed or partial data.
-    * Serialize rebuilds and appends through one owner (the daily-ingest
-    * scheduler slot that owns the store).
-    */
-  def appendSignatureStore(newDocs: DataFrame, path: String, w: Int,
-                           bands: Int, rowsPerBand: Int,
-                           idCol: String = "doc_id",
-                           textCol: String = "text"): Unit = {
-    val record =
-      graft.ops.Sketch.readLayoutRecord(newDocs.sparkSession, path)
-    require(record.isDefined,
-      s"signature store at $path has no layout record — only stores " +
-        "written by writeSignatureStore are appendable (the bucket hash " +
-        "layout cannot be recovered from the data rows)")
-    val (recorded, requested) =
-      (record.get, signatureLayout(w, bands, rowsPerBand))
-    require(recorded == requested,
-      s"signature store at $path was written with ($recorded), append " +
-        s"requested ($requested) — rebuild the store, mixed hash layouts " +
-        "silently miss collisions")
-    bandedSignatures( // multiset shingles: same rows, one less exchange
-        shingles(newDocs, w, idCol, textCol, distinct = false)
-          .filter(col("shingle").isNotNull),
-        bands, rowsPerBand, idCol)
-      .write.mode("append").parquet(path)
-  }
-
   /** Incremental near-duplicate pairs: a new document batch against an
     * already-signed corpus — the daily-ingest form of [[minHashDedupPairs]].
-    * `store` holds the corpus's banded signatures ((id, band, bucket) —
-    * [[writeSignatureStore]] output or [[bandedSignatures]] directly);
+    * `store` holds the corpus's banded signatures ((id, band, bucket) rows
+    * of [[bandedSignatures]], computed once and kept, e.g. as parquet);
     * `corpus` is the document table the store ids resolve in (used ONLY to
     * re-shingle verification candidates). Only the NEW batch is signed;
     * historical text is touched for candidate ids alone (a semi-join

@@ -236,12 +236,11 @@ object Retrieval {
     * but a query still prunes to ≤ |query terms| of the `groups` dirs —
     * the same bucket-group trade as the streaming band store's compaction
     * layout. Document frequencies are NOT a separate artifact: df of a
-    * query term is a count over its (pruned) posting list, so appends keep
-    * df consistent for free. Group assignment hashes the DISTINCT-token
-    * table, not the posting stream (the q77 vocabulary-not-occurrences
-    * lesson). All artifacts swap together under
-    * [[graft.sinks.Sinks.replaceDir]]; single-writer, like every store in
-    * the repo.
+    * query term is a count over its (pruned) posting list. Group
+    * assignment hashes the DISTINCT-token table, not the posting stream
+    * (the q77 vocabulary-not-occurrences lesson). The index is built whole
+    * from `docs`; both artifacts swap together under
+    * [[graft.sinks.Sinks.replaceDir]].
     */
   def writeInvertedIndex(docs: DataFrame, path: String, groups: Int = 64,
                          idCol: String = "doc_id",
@@ -257,67 +256,17 @@ object Retrieval {
       base.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_tokens"))
         .withColumn("groups", lit(groups))
         .repartition(1).write.parquet(s"$tmp/stats")
-      invPostingRows(base, groups)
+      val tf = base.select(col("doc_id"), col("dl"),
+          explode(col("toks")).as("tok"))
+        .groupBy("doc_id", "dl", "tok").agg(count(lit(1)).as("tf"))
+      val vocabGrp = tf.select("tok").distinct()
+        .withColumn("grp",
+          pmod(TextAnalysis.fingerprint(col("tok")), lit(groups.toLong))
+            .cast("int"))
+      tf.join(broadcast(vocabGrp), "tok")
         .repartition(col("grp")) // one file per group dir, not one per task
         .write.partitionBy("grp").parquet(s"$tmp/postings")
     }
-  }
-
-  /** Posting rows (tok, doc_id, dl, tf, grp) from a (doc_id, dl, toks)
-    * base: tf aggregate, then group assignment joined from the hashed
-    * DISTINCT-token table. */
-  private def invPostingRows(base: DataFrame, groups: Int): DataFrame = {
-    val tf = base.select(col("doc_id"), col("dl"),
-        explode(col("toks")).as("tok"))
-      .groupBy("doc_id", "dl", "tok").agg(count(lit(1)).as("tf"))
-    val vocabGrp = tf.select("tok").distinct()
-      .withColumn("grp",
-        pmod(TextAnalysis.fingerprint(col("tok")), lit(groups.toLong))
-          .cast("int"))
-    tf.join(broadcast(vocabGrp), "tok")
-  }
-
-  /** Append a document batch to a stored inverted index — the daily-ingest
-    * path: the batch's postings land in the existing group dirs (same
-    * fingerprint sharding, read from stats), then the stats row is
-    * atomically rewritten with the batch's counts folded in. Fails loud
-    * when no index exists. Batch ids must be new to the index (same
-    * contract as the signature stores); a crash between the posting write
-    * and the stats swap leaves the index searchable with stale scalars —
-    * re-run the LAST append only after checking for duplicate ids. A crash
-    * INSIDE the swap window (old stats parked, replacement not yet
-    * published) is repaired on entry before anything is read.
-    */
-  def appendInvertedIndex(batch: DataFrame, path: String,
-                          idCol: String = "doc_id",
-                          textCol: String = "text"): Unit = {
-    val spark = batch.sparkSession
-    graft.sinks.Sinks.recoverSwap(spark, s"$path/stats")
-    val st =
-      try spark.read.parquet(s"$path/stats").head()
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalArgumentException(
-            s"appendInvertedIndex: no index at $path (write one with " +
-              s"writeInvertedIndex first): ${e.getMessage}")
-      }
-    val groups = st.getAs[Int]("groups")
-    val toksOfText = TextAnalysis.tokens(col(textCol))
-    val base = graft.core.CacheScope.track(batch.select(
-      col(idCol).cast("long").as("doc_id"),
-      coalesce(size(toksOfText), lit(0)).as("dl"),
-      toksOfText.as("toks")).persist())
-    base.count()
-    invPostingRows(base, groups)
-      .repartition(col("grp"))
-      .write.partitionBy("grp").mode("append").parquet(s"$path/postings")
-    val add = base.agg(count(lit(1)), sum(col("dl"))).head()
-    graft.sinks.Sinks.replaceDir(spark, s"$path/stats")(tmp =>
-      spark.range(1).select(
-          lit(st.getAs[Long]("n_docs") + add.getLong(0)).as("n_docs"),
-          lit(st.getAs[Long]("tot_tokens") + add.getLong(1)).as("tot_tokens"),
-          lit(groups).as("groups"))
-        .repartition(1).write.parquet(tmp))
   }
 
   /** BM25 top-k over a STORED index: the postings read prunes to the query

@@ -128,7 +128,7 @@ object Similarity {
         .otherwise(lit(0L))
     }.reduce((a, b) => a.bitwiseOR(b))
 
-  /** One-pass banding shared by the LSH paths: every table's bucket id is
+  /** One-pass banding for [[lshTopK]]'s two sides: every table's bucket id is
     * computed in a single projection and `posexplode`d into (tbl, bucket)
     * rows — ONE scan of the vectors instead of a `tables`-way union of
     * scans (the union form re-read the corpus per table). */
@@ -141,10 +141,11 @@ object Similarity {
         .as(Seq("tbl", "bucket")))
 
   /** Embedding-cosine near-duplicate pairs: all pairs (a < b) with cosine ≥
-    * `tau` — the embedding-space dedup variant (exact form; the LSH-bucketed
-    * candidate path of [[lshTopK]] is the 100 TB route, where only
-    * same-bucket pairs are scored). Norms are precomputed per vector and
-    * broadcast so each pair costs one codegen'd dot product.
+    * `tau` — the embedding-space dedup variant (exact form; the
+    * recall-certified IVF path of [[embeddingNearDupPairsCertified]] is the
+    * 100 TB route, where only same-cell pairs are scored, and falls back to
+    * this form). Norms are precomputed per vector and broadcast so each
+    * pair costs one codegen'd dot product.
     */
   def embeddingNearDupPairs(embeddings: DataFrame, tau: Double,
                             idCol: String = "vec_id",
@@ -164,10 +165,10 @@ object Similarity {
 
   /** Exact-cosine verification of a candidate pair set: join the vectors
     * back (norms precomputed once per side), score each candidate with one
-    * codegen'd dot product, keep cosine ≥ `tau`. Shared tail of every
-    * bucketed near-dup path — the output is exact on whatever candidates
-    * arrive, so recall of the candidate generator is the only approximation
-    * anywhere.
+    * codegen'd dot product, keep cosine ≥ `tau`. Shared by the certified
+    * path's truth set and its IVF branch — the output is exact on whatever
+    * candidates arrive, so recall of the candidate generator is the only
+    * approximation anywhere.
     */
   private def verifyPairs(embeddings: DataFrame, cand: DataFrame, tau: Double,
                           idCol: String, vecCol: String): DataFrame = {
@@ -182,38 +183,6 @@ object Similarity {
         (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
       .filter(col("cos") >= tau)
       .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
-  }
-
-  /** LSH-bucketed embedding near-duplicate pairs — applicable at HIGH
-    * thresholds (τ ≳ 0.8, i.e. angle ≲ 37°), where a few sign bits separate
-    * near-dups from the bulk: vectors are bucketed by `tables` independent
-    * random-hyperplane signatures of `nPlanes` bits; only same-(table,
-    * bucket) pairs are scored, then verified with the exact cosine ≥ `tau` —
-    * no cartesian anywhere in the plan.
-    *
-    * At low τ (inside the random-cosine bulk, e.g. 0.45 on 64-dim data) a
-    * random pair crosses few hyperplanes, so the buckets stop pruning —
-    * candidate count approaches all-pairs and the structure buys nothing.
-    * That regime belongs to [[embeddingNearDupPairsIvf]], whose buckets are
-    * data-dependent (k-means cells) instead of random planes.
-    *
-    * Output is identical to [[embeddingNearDupPairs]] whenever every
-    * qualifying pair collides in ≥1 table — miss probability per pair is
-    * (1−p^nPlanes)^tables with p = 1 − θ/π.
-    */
-  def embeddingNearDupPairsLsh(embeddings: DataFrame, tau: Double,
-                               nPlanes: Int = 2, tables: Int = 16,
-                               idCol: String = "vec_id",
-                               vecCol: String = "embedding",
-                               dim: Int = 64): DataFrame = {
-    val banded = bandedBuckets(embeddings, tables, nPlanes, idCol, vecCol,
-      dim, "id", "v")
-    val a = banded.select(col("tbl"), col("bucket"), col("id").as("id_a"))
-    val b = banded.select(col("tbl"), col("bucket"), col("id").as("id_b"))
-    val cand = a.join(b, Seq("tbl", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    verifyPairs(embeddings, cand, tau, idCol, vecCol)
   }
 
   /** splitmix64 — the standard 64-bit finalizer mix; deterministic stand-in
@@ -295,20 +264,6 @@ object Similarity {
     out
   }
 
-  /** IVF assignments: one row per (vector, table, probed centroid). Each
-    * table contributes the `probes` nearest centroids by dot product (the
-    * vector's own norm is constant per row, so dot order = cosine order).
-    *
-    * ONE scan of the corpus computes every table's assignment. This is the
-    * rare justified `mapPartitions`: expressing tables·k (≈768) dot
-    * products as column expressions overflows the generated method budget
-    * and Catalyst falls back to interpreted projection (measured 30× slower
-    * at sf0.1) — here the centroids ride one broadcast and each row runs a
-    * tight JIT'd loop with the same float→double array-order accumulation
-    * as [[graft.functions.FloatVecDot]], so scores are bit-identical to the
-    * expression form. Ties take the highest centroid index, matching the
-    * natural struct-ordering max of the expression form.
-    */
   /** Dot of `v` against centroid `c` of table `ct` — float→double in array
     * order, bit-identical to [[graft.functions.FloatVecDot]]. */
   private def cellDot(ct: Array[Array[Float]], v: Array[Float],
@@ -335,10 +290,29 @@ object Similarity {
     best
   }
 
-  def ivfAssignments(embeddings: DataFrame,
-                     centroids: Array[Array[Array[Float]]], probes: Int,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
+  /** Ranked IVF assignments: one row per (vector, table, probed centroid)
+    * with the probe rank `rnk` (1 = nearest). Each table contributes the
+    * `probes` nearest centroids by dot product (the vector's own norm is
+    * constant per row, so dot order = cosine order), best first, the
+    * highest centroid index first on ties — [[nearestCell]]'s rule, which
+    * is the `probes == 1` fast path. One ranked scan serves a whole probe
+    * ladder: filter `rnk <= p` instead of re-scanning.
+    *
+    * ONE scan of the corpus computes every table's assignment. This is the
+    * rare justified `mapPartitions`: expressing tables·k (≈768) dot
+    * products as column expressions overflows the generated method budget
+    * and Catalyst falls back to interpreted projection (measured 30× slower
+    * at sf0.1) — here the centroids ride one broadcast and each row runs a
+    * tight JIT'd loop with the same float→double array-order accumulation
+    * as [[graft.functions.FloatVecDot]], so scores are bit-identical to the
+    * expression form.
+    */
+  private[graft] def rankedIvfAssignments(embeddings: DataFrame,
+                                          centroids: Array[Array[Array[Float]]],
+                                          probes: Int,
+                                          idCol: String = "vec_id",
+                                          vecCol: String = "embedding")
+  : DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(centroids)
@@ -350,21 +324,41 @@ object Similarity {
         rows.flatMap { case (id, v) =>
           cents.indices.iterator.flatMap { t =>
             val ct = cents(t)
-            if (probes == 1) Iterator.single((id, t, nearestCell(ct, v)))
+            if (probes == 1) Iterator.single((id, t, nearestCell(ct, v), 1))
             else ct.indices
               .sortBy(c => (-cellDot(ct, v, c), -c))
-              .take(probes).iterator.map(c => (id, t, c))
+              .take(probes).iterator.zipWithIndex
+              .map { case (c, r) => (id, t, c, r + 1) }
           }
         }
       }
-      .toDF("id", "tbl", "centroid")
+      .toDF("id", "tbl", "centroid", "rnk")
+  }
+
+  /** IVF assignments: [[rankedIvfAssignments]] without the rank — one row
+    * per (vector, table, probed centroid). */
+  def ivfAssignments(embeddings: DataFrame,
+                     centroids: Array[Array[Array[Float]]], probes: Int,
+                     idCol: String = "vec_id",
+                     vecCol: String = "embedding"): DataFrame =
+    rankedIvfAssignments(embeddings, centroids, probes, idCol, vecCol)
+      .drop("rnk")
+
+  /** Pairs (a < b) sharing a (table, centroid) cell of an assignment
+    * relation, deduped across tables BEFORE any scoring. */
+  private def sameCellPairs(asg: DataFrame): DataFrame = {
+    val a = asg.select(col("tbl"), col("centroid"), col("id").as("id_a"))
+    val b = asg.select(col("tbl"), col("centroid"), col("id").as("id_b"))
+    a.join(b, Seq("tbl", "centroid"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
   }
 
   /** Candidate pairs under the IVF partitions: ids sharing a (table,
-    * centroid) cell, deduped across tables BEFORE any scoring. Exposed
-    * separately so the candidate volume is testable (ScaleSpec asserts the
-    * gate corpus stays < 0.3 · C(n,2) — the property the hyperplane path
-    * lost at low τ).
+    * centroid) cell. The reference candidate relation the specs measure
+    * (ScaleSpec asserts the gate corpus stays < 0.3 · C(n,2) — the pruning
+    * random hyperplanes lose at low τ; StreamingSpec compares the
+    * streaming embedding dedup against it).
     */
   def ivfCandidatePairs(embeddings: DataFrame,
                         centroids: Array[Array[Array[Float]]], probes: Int,
@@ -376,52 +370,7 @@ object Similarity {
     val asg = graft.core.CacheScope.track(
       ivfAssignments(embeddings, centroids, probes, idCol, vecCol).persist())
     asg.count()
-    val a = asg.select(col("tbl"), col("centroid"), col("id").as("id_a"))
-    val b = asg.select(col("tbl"), col("centroid"), col("id").as("id_b"))
-    a.join(b, Seq("tbl", "centroid"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-  }
-
-  /** IVF-bucketed embedding near-duplicate pairs — the low-τ scale path
-    * (data-dependent k-means cells prune where random hyperplanes cannot):
-    * train `tables` deterministic coarse quantizers on a bounded sample,
-    * assign every vector to its nearest centroid per table (`probes` > 1
-    * widens each table's probe set), score ONLY same-cell pairs, then
-    * exact-verify cosine ≥ `tau`. No cartesian anywhere; candidate volume ≈
-    * Σ_cells (cell/n)² per table instead of all pairs.
-    *
-    * Output equals [[embeddingNearDupPairs]] whenever every qualifying pair
-    * shares a cell in ≥1 table. Like q30/q33, the registry parameters are
-    * recall-1.0-tuned on the gate corpora and pinned by LlmOpsSpec +
-    * ScaleSpec (candidate-fraction bound); re-tune whenever fixtures or
-    * scales change (the TuneIvf/TuneIvfSf01 sweeps that set them can be
-    * recovered from commit f372b9f). At 100 TB: scale `k` with corpus
-    * size (bucket size n/k bounds the per-cell quadratic term), keep the
-    * quantizer sample bounded, and the assignment scan stays one pass.
-    *
-    * Applicability boundary, measured (TuneIvfSf01): at sf0.1 — 2000
-    * uniform random vectors, where τ=0.45 sits in the random-cosine bulk —
-    * these parameters recall 125/144 of the exact tail pairs at candidate
-    * fraction 0.15; pushing recall to 1.0 there requires a ≥0.5 candidate
-    * fraction at ANY (tables, k, probes) combination, i.e. half of
-    * all-pairs. That is the data's geometry, not a tuning gap: full-recall
-    * low-τ search on unclustered data is Θ(n²) for every bucketing scheme.
-    * IVF's scale value is on corpora with real duplicate structure, where
-    * qualifying pairs are co-located; the gate corpora (recall 1.0) and
-    * this doc record both sides of that line.
-    */
-  def embeddingNearDupPairsIvf(embeddings: DataFrame, tau: Double,
-                               k: Int = 64, tables: Int = 12,
-                               probes: Int = 1, iters: Int = 8,
-                               sampleN: Int = 1024,
-                               idCol: String = "vec_id",
-                               vecCol: String = "embedding"): DataFrame = {
-    val cents = trainIvfCentroids(embeddings, k, tables, iters, sampleN,
-      idCol, vecCol)
-    verifyPairs(embeddings,
-      ivfCandidatePairs(embeddings, cents, probes, idCol, vecCol),
-      tau, idCol, vecCol)
+    sameCellPairs(asg)
   }
 
   /** Deterministic certification sample: the `m` ids with the smallest
@@ -430,33 +379,6 @@ object Similarity {
   private def certSampleIds(emb: DataFrame, m: Int): DataFrame =
     emb.select(col("id"))
       .orderBy(abs(xxhash64(col("id"))), col("id")).limit(m)
-
-  /** Ranked multi-probe assignment scan: every vector's top-`maxProbes`
-    * cells per table with their probe rank, so one corpus pass serves a
-    * whole escalation ladder (filter `rnk <= p` instead of re-scanning). */
-  private def ivfAssignmentsRanked(emb: DataFrame,
-                                   centroids: Array[Array[Array[Float]]],
-                                   maxProbes: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(centroids)
-    emb.select(col("id"), col("v"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { rows =>
-        val cents = bc.value
-        rows.flatMap { case (id, v) =>
-          cents.indices.iterator.flatMap { t =>
-            val ct = cents(t)
-            // same order as the multi-probe path above: best dot first,
-            // highest cell index on ties (nearestCell's >= update rule)
-            ct.indices.sortBy(c => (-cellDot(ct, v, c), -c))
-              .take(maxProbes).iterator.zipWithIndex
-              .map { case (c, r) => (id, t, c, r + 1) }
-          }
-        }
-      }
-      .toDF("id", "tbl", "centroid", "rnk")
-  }
 
   /** Exact qualifying partners of the certification sample: every (sample
     * id, other id) pair with cosine ≥ τ — an m×n broadcast scan (linear in
@@ -469,15 +391,34 @@ object Similarity {
         .join(emb.select(col("id").as("id_b")), col("id_a") =!= col("id_b")),
       tau, "id", "v")
 
-  /** Recall-certified embedding near-duplicate pairs — the escalation path
-    * that retires silent recall loss: measure the IVF candidate generator's
-    * recall on a deterministic held-out sample BEFORE trusting it, escalate
-    * probes up the ladder while the measured recall misses `targetRecall`,
-    * and when no rung certifies, run the exact all-pairs form — because a
-    * bucketing that the measurement says cannot prune costs more than the
-    * scan it fails to replace (TuneIvfSf01: recall 1.0 at τ inside the
+  /** Recall-certified embedding near-duplicate pairs — the one near-dup
+    * device above the cutover, and the escalation path that retires silent
+    * recall loss: measure the IVF candidate generator's recall on a
+    * deterministic held-out sample BEFORE trusting it, escalate probes up
+    * the ladder while the measured recall misses `targetRecall`, and when
+    * no rung certifies, run the exact all-pairs form — because a bucketing
+    * that the measurement says cannot prune costs more than the scan it
+    * fails to replace (TuneIvfSf01: recall 1.0 at τ inside the
     * random-cosine bulk needs a ≥0.5 candidate fraction at ANY
-    * (tables, k, probes), i.e. half of all-pairs plus assignment overhead).
+    * (tables, k, probes), i.e. half of all-pairs plus assignment overhead;
+    * at sf0.1 — 2000 uniform random vectors, τ = 0.45 — rung 1 at the
+    * default parameters recalls 125/144 of the exact pairs at candidate
+    * fraction 0.15). Full-recall low-τ search on unclustered data is Θ(n²)
+    * for every bucketing scheme; IVF's value is on corpora with real
+    * duplicate structure, where qualifying pairs are co-located.
+    *
+    * The IVF branch trains `tables` deterministic coarse quantizers on a
+    * bounded sample, assigns every vector to its `p` nearest centroids per
+    * table (p = the certified rung), scores ONLY same-cell pairs, then
+    * exact-verifies cosine ≥ `tau`. No cartesian anywhere; candidate volume
+    * ≈ Σ_cells (cell/n)² per table instead of all pairs. The registry
+    * parameters are recall-1.0-tuned on the gate corpora (LlmOpsSpec pins
+    * the IVF branch through `exactBelow = 0`; ScaleSpec bounds the
+    * candidate fraction); re-tune whenever fixtures or scales change (the
+    * TuneIvf/TuneIvfSf01 sweeps that set them can be recovered from commit
+    * f372b9f). At 100 TB: scale `k` with corpus size (bucket size n/k
+    * bounds the per-cell quadratic term), keep the quantizer sample
+    * bounded, and the assignment scan stays one pass.
     *
     * The certificate: `certQueries` ids (smallest |xxhash64| — fixed per
     * corpus), their exact τ-partners from one m×n broadcast scan, and per
@@ -499,10 +440,12 @@ object Similarity {
     * Seq(1) precisely so escalation jumps from the honest fast path
     * straight to exact instead of stopping at a marginally-passing
     * intermediate rung; ladders beyond rung 1 are for corpora where
-    * multi-probe genuinely prunes (use [[nearDupCertCurve]] to see).
+    * multi-probe genuinely prunes ([[certifiedRung]] reports which rung
+    * passed).
     *
-    * Below `exactBelow` vectors the operator skips IVF entirely and runs
-    * the exact scan — the flat-index-below-threshold cutover every ANN
+    * Below `exactBelow` vectors (a bounded [[graft.ops.Scale.atMostRows]]
+    * probe; `exactBelow <= 0` skips it) the operator skips IVF entirely and
+    * runs the exact scan — the flat-index-below-threshold cutover every ANN
     * stack has: at small n the all-pairs scan costs LESS than quantizer
     * training + assignment + certificate (measured at sf0.1's n = 2000:
     * exact 0.82 s vs raw IVF 0.84 s warm), and its recall certainty is
@@ -518,8 +461,8 @@ object Similarity {
     * co-locates — and this operator's point is that it happens by
     * MEASUREMENT, visibly, instead of recall silently walking away. On
     * corpora with real duplicate structure (the production case) rung 1
-    * certifies and the cost over [[embeddingNearDupPairsIvf]] is the
-    * certificate alone.
+    * certifies and the cost over the bare IVF join is the certificate
+    * alone.
     */
   def embeddingNearDupPairsCertified(embeddings: DataFrame, tau: Double,
                                      k: Int = 64, tables: Int = 12,
@@ -536,7 +479,28 @@ object Similarity {
     val e = graft.core.CacheScope.track(embeddings
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .persist())
-    if (e.count() < exactBelow) return embeddingNearDupPairs(e, tau, "id", "v")
+    if (exactBelow > 0L && graft.ops.Scale.atMostRows(e, exactBelow - 1))
+      return embeddingNearDupPairs(e, tau, "id", "v")
+    certifiedRung(e, tau, k, tables, iters, sampleN, certQueries,
+        targetRecall, probeLadder) match {
+      case (Some(p), ranked) =>
+        verifyPairs(e, sameCellPairs(ranked.filter(col("rnk") <= p)),
+          tau, "id", "v")
+      case (None, _) => embeddingNearDupPairs(e, tau, "id", "v")
+    }
+  }
+
+  /** The certificate ladder of [[embeddingNearDupPairsCertified]] over its
+    * (id: long, v) frame: the first rung of `probeLadder` whose sampled
+    * recall reaches `targetRecall` (None when none does), with the ranked
+    * assignment scan — ONE corpus pass for the whole ladder — that the
+    * certified branch joins. Scope-tracked caches: call inside a
+    * `CacheScope`. */
+  private[graft] def certifiedRung(e: DataFrame, tau: Double, k: Int,
+                                   tables: Int, iters: Int, sampleN: Int,
+                                   certQueries: Int, targetRecall: Double,
+                                   probeLadder: Seq[Int])
+  : (Option[Int], DataFrame) = {
     val ids = certSampleIds(e, certQueries)
     val truth = graft.core.CacheScope.track(
       certTruthPairs(e, ids, tau).select("id_a", "id_b").persist())
@@ -544,9 +508,9 @@ object Similarity {
     val need = math.ceil(targetRecall * nTruth).toLong
     val cents = trainIvfCentroids(e, k, tables, iters, sampleN, "id", "v")
     val ranked = graft.core.CacheScope.track(
-      ivfAssignmentsRanked(e, cents, probeLadder.max).persist())
+      rankedIvfAssignments(e, cents, probeLadder.max, "id", "v").persist())
     ranked.count()
-    val certified = probeLadder.find { p =>
+    val rung = probeLadder.find { p =>
       nTruth == 0L || {
         val asgP = ranked.filter(col("rnk") <= p)
         val sAsg = asgP.join(broadcast(ids), Seq("id"))
@@ -557,67 +521,7 @@ object Similarity {
         truth.join(cand, Seq("id_a", "id_b"), "left_semi").count() >= need
       }
     }
-    certified match {
-      case Some(p) =>
-        val asgP = ranked.filter(col("rnk") <= p)
-        val a = asgP.select(col("tbl"), col("centroid"), col("id").as("id_a"))
-        val b = asgP.select(col("tbl"), col("centroid"), col("id").as("id_b"))
-        verifyPairs(e,
-          a.join(b, Seq("tbl", "centroid"))
-            .filter(col("id_a") < col("id_b"))
-            .select("id_a", "id_b").distinct(),
-          tau, "id", "v")
-      case None => embeddingNearDupPairs(e, tau, "id", "v")
-    }
-  }
-
-  /** The committed recall-vs-cost curve behind [[embeddingNearDupPairsCertified]]
-    * (the TuneKnnGraph discipline): per ladder rung, the sampled certificate
-    * (truth hits on the held-out queries) AND the full-corpus candidate
-    * volume — recall against cost in one relation, plus an `exact` row
-    * (recall 1 at all-pairs cost) as the fallback's coordinates. */
-  def nearDupCertCurve(embeddings: DataFrame, tau: Double,
-                       probeLadder: Seq[Int],
-                       k: Int = 64, tables: Int = 12,
-                       iters: Int = 8, sampleN: Int = 1024,
-                       certQueries: Int = 256,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val e = graft.core.CacheScope.track(embeddings
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .persist())
-    val n = e.count()
-    val ids = certSampleIds(e, certQueries)
-    val truth = graft.core.CacheScope.track(
-      certTruthPairs(e, ids, tau).select("id_a", "id_b").persist())
-    val nTruth = truth.count()
-    val cents = trainIvfCentroids(e, k, tables, iters, sampleN, "id", "v")
-    val ranked = graft.core.CacheScope.track(
-      ivfAssignmentsRanked(e, cents, probeLadder.max).persist())
-    ranked.count()
-    val rungs = probeLadder.map { p =>
-      val asgP = ranked.filter(col("rnk") <= p)
-      val sAsg = asgP.join(broadcast(ids), Seq("id"))
-        .select(col("tbl"), col("centroid"), col("id").as("id_a"))
-      val hit = truth.join(
-        sAsg.join(asgP, Seq("tbl", "centroid"))
-          .filter(col("id_a") =!= col("id"))
-          .select(col("id_a"), col("id").as("id_b")).distinct(),
-        Seq("id_a", "id_b"), "left_semi").count()
-      val a = asgP.select(col("tbl"), col("centroid"), col("id").as("id_a"))
-      val b = asgP.select(col("tbl"), col("centroid"), col("id").as("id_b"))
-      val nCand = a.join(b, Seq("tbl", "centroid"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct().count()
-      (p.toString, hit, nTruth, nCand)
-    }
-    (rungs :+ (("exact", nTruth, nTruth, n * (n - 1) / 2)))
-      .toDF("rung", "n_hit", "n_truth", "n_cand")
-      .withColumn("sample_recall",
-        when(col("n_truth") === 0, 1.0)
-          .otherwise(col("n_hit").cast("double") / col("n_truth")))
+    (rung, ranked)
   }
 
   /** Scalar int8 quantization of the embedding column — the 4× storage cut
@@ -1215,19 +1119,19 @@ object Similarity {
     * [[graft.sinks.Sinks.replaceDir]] (codes are meaningless under
     * different codebooks, and two independent overwrites would let a
     * crash or a concurrent reader pair new quantizers with old cells).
+    * The index is built whole: both quantizer families train on `corpus`,
+    * and a changed corpus means a new index.
     */
   def writeIvfPqIndex(corpus: DataFrame, path: String,
                       kCentroids: Int = 64, tables: Int = 12,
                       m: Int = 16, kCodes: Int = 32,
                       iters: Int = 8, sampleN: Int = 1024,
                       idCol: String = "vec_id",
-                      vecCol: String = "embedding",
-                      trainOn: DataFrame = null): Unit = {
+                      vecCol: String = "embedding"): Unit = {
     val spark = corpus.sparkSession
-    val trainSet = Option(trainOn).getOrElse(corpus)
-    val cents = trainIvfCentroids(trainSet, kCentroids, tables, iters,
+    val cents = trainIvfCentroids(corpus, kCentroids, tables, iters,
       sampleN, idCol, vecCol)
-    val books = trainPqCodebooks(trainSet, m, kCodes, iters, sampleN,
+    val books = trainPqCodebooks(corpus, m, kCodes, iters, sampleN,
       idCol, vecCol)
     graft.sinks.Sinks.replaceDir(spark, path) { tmp =>
       val centRows = for {
@@ -1259,77 +1163,6 @@ object Similarity {
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
     val m = bookRows.map(_._1).max + 1
     Array.tabulate(m)(j => bookRows.filter(_._1 == j).sortBy(_._2).map(_._3))
-  }
-
-  /** Append a batch to an existing compressed index — the daily-ingest path
-    * of [[writeIvfPqIndex]] (a full rebuild re-reads the whole corpus):
-    * the batch is assigned AND encoded under the STORED quantizers and
-    * codebooks (both immutable once written — appended codes stay
-    * comparable to every earlier batch's), then its posting files land in
-    * the existing (tbl, centroid) partition dirs; Spark's output committer
-    * publishes them only at job commit. Fails loud before writing when
-    * the index is missing or the batch's vector dimension disagrees with
-    * either quantizer family. Quantizer drift is the documented trade:
-    * cells grow unevenly as the distribution shifts — rebuild (retrain)
-    * when cell skew or codebook mismatch degrades recall.
-    */
-  def appendIvfPqIndex(batch: DataFrame, path: String,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): Unit = {
-    val spark = batch.sparkSession
-    val (cents, books) =
-      try (readCentroids(spark, path), readCodebooks(spark, path))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalArgumentException(
-            s"appendIvfPqIndex: no IVF+PQ index at $path (write one with " +
-              s"writeIvfPqIndex first): ${e.getMessage}")
-      }
-    val dim = cents.head.head.length
-    require(books.length * books.head.head.length == dim,
-      s"appendIvfPqIndex: corrupt index at $path — codebooks cover " +
-        s"${books.length}×${books.head.head.length} dims, centroids $dim")
-    val dims = batch.agg(
-      min(size(col(vecCol))).as("mn"), max(size(col(vecCol))).as("mx")).head()
-    require(!dims.isNullAt(0) && dims.getInt(0) == dim && dims.getInt(1) == dim,
-      s"appendIvfPqIndex: batch vector dims [${dims.get(0)}, ${dims.get(1)}] " +
-        s"!= stored quantizer dim $dim at $path")
-    ivfPqPostingRows(batch, cents, books, idCol, vecCol)
-      .repartition(col("tbl"), col("centroid")) // one file per cell per batch
-      .write.partitionBy("tbl", "centroid")
-      .mode("append")
-      .parquet(s"$path/postings")
-  }
-
-  /** Compact a stored index's postings after incremental appends — the
-    * small-file maintenance step short of a full retrain: every append
-    * lands one file per (tbl, centroid) cell per
-    * batch, so a daily-ingest index accumulates one file per cell per DAY
-    * and probe latency decays into file-open overhead. This job rewrites
-    * the postings tree with one file per cell again — rows unchanged, and
-    * the quantizer/codebook artifacts are untouched, so assignments and
-    * codes stay valid — then swaps the postings dir under
-    * [[graft.sinks.Sinks.replaceDir]]. Works on the compressed
-    * ([[writeIvfPqIndex]]) layout and, with `partCols = Seq("grp")`, on
-    * the sparse inverted index. Single-writer: do not run concurrently
-    * with appends (same ownership contract as the append).
-    */
-  def compactIndexPostings(spark: org.apache.spark.sql.SparkSession,
-                           path: String,
-                           partCols: Seq[String] = Seq("tbl", "centroid"))
-  : Unit = {
-    val post = s"$path/postings"
-    graft.sinks.Sinks.replaceDir(spark, post) { tmp =>
-      val postP = new org.apache.hadoop.fs.Path(post)
-      require(postP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(postP),
-        s"compactIndexPostings: no postings at $post (write an index first)")
-      // lazy read + eager tmp write: the rewrite executes while the live
-      // postings dir still exists, BEFORE the swap
-      spark.read.parquet(post)
-        .repartition(partCols.map(col): _*)
-        .write.partitionBy(partCols: _*).parquet(tmp)
-    }
   }
 
   /** Search the compressed index: queries probe their `probes` nearest

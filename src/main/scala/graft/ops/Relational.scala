@@ -12,18 +12,13 @@ object Relational {
     * `groupBy(k, v).select(k, v)` then `groupBy(k).count`) — kept as an
     * explicit two-phase plan for exactness at scale: the inner distinct
     * shuffles on (k, v) so no single reducer sees all values of a hot key;
-    * Spark's `countDistinct` expands to the same two-phase plan, and
-    * [[approxCountDistinct]] is the sketch variant for mergeable rollups.
+    * Spark's `countDistinct` expands to the same two-phase plan.
     */
   def countDistinctTwoPhase(df: DataFrame, key: Column, value: Column,
                             as: String = "cnt"): DataFrame =
     df.select(key.as("__k"), value.as("__v")).distinct()
       .groupBy(col("__k")).agg(count(lit(1)).as(as))
       .withColumnRenamed("__k", "key")
-
-  def approxCountDistinct(df: DataFrame, key: Column, value: Column,
-                          rsd: Double = 0.05, as: String = "cnt"): DataFrame =
-    df.groupBy(key.as("key")).agg(approx_count_distinct(value, rsd).as(as))
 
   /** J9: coGroup — grouped two-input processing
     * (`flink-itemcf/.../huaban/ShuJuStatSecond.java:68-73`; the reference's

@@ -122,18 +122,12 @@ object Scale {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[P]]()
   }
 
-  /** String-payload top-K (the q22 ordered-toplist shape). */
-  class TopKAgg(k: Int) extends TopKPayloadAgg[String](k)
-
   /** Long-payload top-K — the ANN refine-rank shape: per query, the
     * `refine` best neighbor ids by (score desc, id asc) with O(refine)
     * aggregation state, replacing an n-row sort per query window
     * partition. */
   class TopKLongAgg(k: Int, distinctPayloads: Boolean = false)
     extends TopKPayloadAgg[Long](k, distinctPayloads)
-
-  def topKColumn(k: Int): TypedColumn[(Double, String), Seq[String]] =
-    new TopKAgg(k).toColumn
 
   def topKLongColumn(k: Int, distinctPayloads: Boolean = false)
   : TypedColumn[(Double, Long), Seq[Long]] =

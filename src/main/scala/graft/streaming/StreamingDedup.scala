@@ -281,8 +281,9 @@ object StreamingDedup {
     * [[minHashDedupStream]]: each micro-batch's vectors are assigned their
     * `probes` nearest cells per table under quantizers TRAINED ON BATCH 0
     * and FROZEN into the store (cell ids are only comparable under one
-    * quantizer family — the same reason [[graft.llm.Similarity
-    * .appendIvfPqIndex]] never retrains), cell-joined against the persisted
+    * quantizer family — the same reason a stored IVF+PQ index
+    * ([[graft.llm.Similarity.writeIvfPqIndex]]) is rebuilt whole, never
+    * retrained in place), cell-joined against the persisted
     * assignments of every earlier batch plus itself, exact-cosine-verified
     * at ≥ `tau`, and the surviving (id_a, id_b, cosine) pairs handed to
     * `onPairs`. The union of emissions equals the batch IVF pipeline run

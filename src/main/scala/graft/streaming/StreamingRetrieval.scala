@@ -18,7 +18,7 @@ import graft.llm.{Retrieval, TextAnalysis}
   *
   * Freshness trade, stated plainly: scores use the store's statistics as
   * of scorer start — documents arriving after that shift neither df nor
-  * avgdl until the batch index is rewritten/appended and the stream
+  * avgdl until the batch index is rewritten and the stream
   * restarted (same retrain contract as the frozen-quantizer stream).
   * Per-document scores do not depend on other STREAM documents at all, so
   * the union of micro-batch emissions equals the batch scorer under the

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -157,31 +158,33 @@ class LlmOpsSpec extends SparkSpecBase {
     val emb = Tables.embeddings(spark, sfDir)
     val exact = Similarity.embeddingNearDupPairs(emb, tau = 0.45)
       .as[(Long, Long, Double)].collect().toSet
-    val ivf = Similarity.embeddingNearDupPairsIvf(emb, tau = 0.45)
-      .as[(Long, Long, Double)].collect().toSet
+    val ivf = graft.core.CacheScope.scoped {
+      Similarity.embeddingNearDupPairsCertified(emb, tau = 0.45,
+          exactBelow = 0L)
+        .as[(Long, Long, Double)].collect().toSet
+    }
     assert(exact.nonEmpty)
     assert(ivf == exact, s"IVF missed ${exact -- ivf}")
-    // the hyperplane-LSH variant stays recall-1.0 on this corpus too (its
-    // applicable regime is high τ; kept verified so the doc claim is honest)
-    val lsh = Similarity.embeddingNearDupPairsLsh(emb, tau = 0.45)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(lsh == exact, s"LSH missed ${exact -- lsh}")
   }
+
+  /** The rung `embeddingNearDupPairsCertified`'s ladder certifies on
+    * `emb`, at the operator's default sample and recall target. */
+  private def certifiedRung(emb: DataFrame, tau: Double, k: Int,
+                            tables: Int, probeLadder: Seq[Int]): Option[Int] =
+    Similarity.certifiedRung(
+        emb.select(col("vec_id").cast("long").as("id"),
+          col("embedding").as("v")),
+        tau, k, tables, iters = 8, sampleN = 1024, certQueries = 256,
+        targetRecall = 1.0, probeLadder = probeLadder)
+      ._1
 
   test("certified near-dup: the gate corpus certifies at rung 1 (sampled " +
     "recall 1.0) and the certified output IS the exact relation") {
     val emb = Tables.embeddings(spark, sfDir)
-    graft.core.CacheScope.scoped {
-      val curve = Similarity.nearDupCertCurve(emb, tau = 0.45,
-          probeLadder = Seq(1))
-        .select("rung", "sample_recall", "n_cand")
-        .as[(String, Double, Long)].collect()
-        .map { case (r, rec, c) => r -> ((rec, c)) }.toMap
-      assert(curve("1")._1 == 1.0, s"rung 1 must certify here: $curve")
-      // and the cells genuinely prune: IVF candidates ≪ all-pairs
-      assert(curve("1")._2 < curve("exact")._2,
-        s"rung 1 must cost less than exact: $curve")
+    val rung = graft.core.CacheScope.scoped {
+      certifiedRung(emb, tau = 0.45, k = 64, tables = 12, probeLadder = Seq(1))
     }
+    assert(rung.contains(1), s"rung 1 must certify here: $rung")
     val exact = graft.core.CacheScope.scoped {
       Similarity.embeddingNearDupPairs(emb, tau = 0.45)
         .as[(Long, Long, Double)].collect().toSet
@@ -195,7 +198,7 @@ class LlmOpsSpec extends SparkSpecBase {
     assert(exact.nonEmpty && cert == exact,
       s"certified missed ${exact -- cert}, extra ${cert -- exact}")
     // cutover disabled: the IVF-certified branch itself is also exact here
-    // (rung 1 genuinely certifies on this corpus, per the curve above)
+    // (rung 1 genuinely certifies on this corpus, per the ladder above)
     val certIvf = graft.core.CacheScope.scoped {
       Similarity.embeddingNearDupPairsCertified(emb, tau = 0.45,
           exactBelow = 0L)
@@ -217,13 +220,11 @@ class LlmOpsSpec extends SparkSpecBase {
         .as[(Long, Long, Double)].collect().toSet
     }
     assert(exact.nonEmpty, "τ must sit inside the random-cosine bulk")
-    graft.core.CacheScope.scoped {
-      val curve = Similarity.nearDupCertCurve(uni, tau = 0.3,
-          probeLadder = Seq(1, 2), k = 16, tables = 4)
-        .select("rung", "sample_recall").as[(String, Double)].collect().toMap
-      assert(curve("1") < 1.0 && curve("2") < 1.0,
-        s"unclustered data must fail the certificate: $curve")
+    val rung = graft.core.CacheScope.scoped {
+      certifiedRung(uni, tau = 0.3, k = 16, tables = 4,
+        probeLadder = Seq(1, 2))
     }
+    assert(rung.isEmpty, s"unclustered data must fail the certificate: $rung")
     val cert = graft.core.CacheScope.scoped {
       Similarity.embeddingNearDupPairsCertified(uni, tau = 0.3,
           k = 16, tables = 4, probeLadder = Seq(1, 2), exactBelow = 0L)
@@ -235,6 +236,34 @@ class LlmOpsSpec extends SparkSpecBase {
     intercept[IllegalArgumentException] {
       Similarity.embeddingNearDupPairsCertified(uni, tau = 0.3,
         probeLadder = Seq(4, 1))
+    }
+  }
+
+  test("IVF assignment scan: ties take the highest cell index, the " +
+    "probes = 1 fast path is the ranked scan's rnk = 1 row, and probes = p " +
+    "is its rnk <= p rows") {
+    // one table of four cells, duplicated: cells 0/2 and 1/3 are equal
+    val x = Array(1f, 0f)
+    val y = Array(0f, 1f)
+    val cents = Array(Array(x, y, x, y))
+    val emb = Seq((1L, Array(1f, 0f)), (2L, Array(0f, 1f)),
+        (3L, Array(1f, 1f)), (4L, Array(-1f, 0f)))
+      .toDF("vec_id", "embedding")
+    def asg(probes: Int): Set[(Long, Int, Int)] =
+      Similarity.ivfAssignments(emb, cents, probes)
+        .as[(Long, Int, Int)].collect().toSet
+    val ranked = Similarity.rankedIvfAssignments(emb, cents, probes = 4)
+      .as[(Long, Int, Int, Int)].collect().toSet
+    // (1,0)·x ties at cells 0 and 2; (0,1)·y at 1 and 3; (1,1) ties all
+    // four; (-1,0) ties the two y cells at 0
+    assert(asg(1) == Set((1L, 0, 2), (2L, 0, 3), (3L, 0, 3), (4L, 0, 3)))
+    val order = ranked.groupBy(_._1).map { case (id, rs) =>
+      id -> rs.toSeq.sortBy(_._4).map(_._3) }
+    assert(order == Map(1L -> Seq(2, 0, 3, 1), 2L -> Seq(3, 1, 2, 0),
+      3L -> Seq(3, 2, 1, 0), 4L -> Seq(3, 1, 2, 0)), s"rank order: $order")
+    (1 to 4).foreach { p =>
+      assert(asg(p) == ranked.filter(_._4 <= p).map(r => (r._1, r._2, r._3)),
+        s"probes = $p differs from the ranked rows with rnk <= $p")
     }
   }
 
@@ -333,12 +362,15 @@ class LlmOpsSpec extends SparkSpecBase {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     val expected = ids.map(i => i -> find(i)).toMap
-    val got = Dedup.connectedComponents(
-        emb.select(col("vec_id")),
-        Similarity.embeddingNearDupPairsIvf(emb, tau = 0.45)
-          .select("id_a", "id_b"),
-        idCol = "vec_id")
-      .as[(Long, Long)].collect().toMap
+    val got = graft.core.CacheScope.scoped {
+      Dedup.connectedComponents(
+          emb.select(col("vec_id")),
+          Similarity.embeddingNearDupPairsCertified(emb, tau = 0.45,
+              exactBelow = 0L)
+            .select("id_a", "id_b"),
+          idCol = "vec_id")
+        .as[(Long, Long)].collect().toMap
+    }
     assert(pairs.nonEmpty, "gate corpus should contain embedding near-dups")
     assert(got == expected)
   }
@@ -369,10 +401,12 @@ class LlmOpsSpec extends SparkSpecBase {
     assert(maxScore < 0.45, s"a near-dup positive leaked into negatives: $maxScore")
     // and for anchors that HAVE near-dups, the exclusion freed slots: the
     // plain top-5 differs from the negative top-5 exactly on those anchors
-    val dupAnchors = Similarity.embeddingNearDupPairsIvf(emb, tau = 0.45)
-      .select(col("id_a")).union(
-        Similarity.embeddingNearDupPairsIvf(emb, tau = 0.45).select(col("id_b")))
-      .as[Long].collect().toSet.filter(_ < 10)
+    val dupAnchors = graft.core.CacheScope.scoped {
+      val pairs = Similarity.embeddingNearDupPairsCertified(emb, tau = 0.45,
+        exactBelow = 0L)
+      pairs.select(col("id_a")).union(pairs.select(col("id_b")))
+        .as[Long].collect().toSet.filter(_ < 10)
+    }
     if (dupAnchors.nonEmpty) {
       val plain = Similarity.ivfTopK(emb, queries, k = 5)
         .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
@@ -499,58 +533,6 @@ class LlmOpsSpec extends SparkSpecBase {
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(got == brute,
       s"compressed index missed ${brute -- got}, extra ${got -- brute}")
-  }
-
-  test("incremental IVF+PQ append equals a full rebuild with the same " +
-    "training sample; dim mismatch fails loud before writing") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val mid = 250L
-    val first = emb.filter(col("vec_id") < mid)
-    val rest = emb.filter(col("vec_id") >= mid)
-    val queries = emb.filter(col("vec_id") < 10)
-    val incDir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_inc").toString
-    Similarity.writeIvfPqIndex(first, incDir)
-    Similarity.appendIvfPqIndex(rest, incDir)
-    val fullDir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_full").toString
-    Similarity.writeIvfPqIndex(emb, fullDir, trainOn = first)
-    val inc = Similarity.searchIvfPqIndex(spark, incDir, queries, emb, k = 5)
-    val full = Similarity.searchIvfPqIndex(spark, fullDir, queries, emb, k = 5)
-    val a = inc.select("query_id", "neighbor_id", "rnk")
-      .as[(Long, Long, Int)].collect().toSet
-    val b = full.select("query_id", "neighbor_id", "rnk")
-      .as[(Long, Long, Int)].collect().toSet
-    assert(a == b, s"append diverged: missing ${b -- a}, extra ${a -- b}")
-    val bad = emb.select(col("vec_id"), slice(col("embedding"), 1, 8).as("embedding"))
-    intercept[IllegalArgumentException] {
-      Similarity.appendIvfPqIndex(bad, incDir)
-    }
-    intercept[IllegalArgumentException] {
-      Similarity.appendIvfPqIndex(emb, incDir + "_nope")
-    }
-    // maintenance: the append left one file per cell per batch; compaction
-    // folds each cell back to one file without changing a single result
-    def parquetFiles(dir: String): Int = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(p, true)
-      var n = 0
-      while (it.hasNext) {
-        if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      }
-      n
-    }
-    val before = parquetFiles(s"$incDir/postings")
-    Similarity.compactIndexPostings(spark, incDir)
-    val after = parquetFiles(s"$incDir/postings")
-    assert(after < before,
-      s"compaction should shrink the file count ($before -> $after)")
-    val compacted = Similarity
-      .searchIvfPqIndex(spark, incDir, queries, emb, k = 5)
-      .select("query_id", "neighbor_id", "rnk")
-      .as[(Long, Long, Int)].collect().toSet
-    assert(compacted == a, "compaction changed search results")
   }
 
   test("top terms rank corpus-rare, doc-frequent tokens first (rational IDF)") {
@@ -1154,7 +1136,8 @@ class LlmOpsSpec extends SparkSpecBase {
   }
 
   test("incremental dedup equals the batch pair relation restricted to " +
-    "pairs with a non-stored member; parquet store + append round-trips") {
+    "pairs with a non-stored member, over a parquet store of banded " +
+    "signatures") {
     import spark.implicits._
     val split = graft.llm.TextAnalysis.dataSplit(docs).select("doc_id", "split")
     val trainIds = split.filter($"split" === "train")
@@ -1178,21 +1161,10 @@ class LlmOpsSpec extends SparkSpecBase {
       .select("doc_id"), "doc_id")
     val dir = java.nio.file.Files.createTempDirectory("sigstore").toString
     val path = s"$dir/store"
-    // write half the train corpus, append the rest: the combined store must
-    // behave exactly like a one-shot build
-    val (h1, h2) = (oldDocs.filter($"doc_id" % 2 === 0),
-      oldDocs.filter($"doc_id" % 2 =!= 0))
-    Dedup.writeSignatureStore(h1, path, w = 3, bands = 32, rowsPerBand = 2)
-    Dedup.appendSignatureStore(h2, path, w = 3, bands = 32, rowsPerBand = 2)
-    val oneShot = Dedup.bandedSignatures(
-      Dedup.shingles(oldDocs, w = 3).filter(col("shingle").isNotNull),
-      bands = 32, rowsPerBand = 2)
-    assert(spark.read.parquet(path).as[(Long, Int, Long)].collect().toSet ==
-      oneShot.as[(Long, Int, Long)].collect().toSet)
-    // mismatched band layout fails loud
-    intercept[IllegalArgumentException] {
-      Dedup.appendSignatureStore(h2, path, w = 3, bands = 16, rowsPerBand = 4)
-    }
+    Dedup.bandedSignatures(
+        Dedup.shingles(oldDocs, w = 3).filter(col("shingle").isNotNull),
+        bands = 32, rowsPerBand = 2)
+      .write.parquet(path)
     val got = Dedup.incrementalDedupPairs(newDocs, docs,
         spark.read.parquet(path), w = 3, tau = 0.5,
         bands = 32, rowsPerBand = 2)
@@ -1524,12 +1496,8 @@ class LlmOpsSpec extends SparkSpecBase {
     val meta = Multimodal.decodeMeta(media).collect()
     assert(meta.length == 10 && meta.forall(m => m.nBytes > 0 &&
       m.width < 640 && m.height < 480))
-    val feats = Multimodal.extractFeatures(media, dim = 16).collect()
-    assert(feats.forall(_.features.length == 16))
     val frames = Multimodal.sampleFrames(media, stride = 2).collect()
     assert(frames.nonEmpty && frames.forall(_.frameBytes.length <= 1024))
-    val resized = Multimodal.resize(media, targetW = 64, targetH = 64).collect()
-    assert(resized.forall(_.content.length == 64 * 64 / 16))
   }
 
   test("Gopher repetition battery: hand-computed top/dup n-gram char " +
@@ -1976,16 +1944,12 @@ class LlmOpsSpec extends SparkSpecBase {
   }
 
   test("stored inverted index: search equals inline BM25 bit-for-bit; " +
-    "append equals rebuild; posting read prunes to the query-term groups; " +
-    "compaction changes files, not results") {
+    "posting read prunes to the query-term groups") {
     val dir = java.nio.file.Files.createTempDirectory("graft_inv_t")
       .toString + "/index"
     val inline = Retrieval.bm25TopK(docs, Retrieval.DefaultQueries, k = 10)
       .as[(Long, Long, Double, Long)].collect().toSet
-    // half-then-append must equal the one-shot build (stats folded in,
-    // same group sharding) — and both must equal the inline path exactly
-    Retrieval.writeInvertedIndex(docs.filter(col("doc_id") < 250), dir)
-    Retrieval.appendInvertedIndex(docs.filter(col("doc_id") >= 250), dir)
+    Retrieval.writeInvertedIndex(docs, dir)
     val stored = Retrieval.searchInvertedIndex(spark, dir,
         Retrieval.DefaultQueries, k = 10)
       .as[(Long, Long, Double, Long)].collect().toSet
@@ -2004,25 +1968,6 @@ class LlmOpsSpec extends SparkSpecBase {
     assert(grps.size < allDirs,
       s"fixture degenerate: ${grps.size} query groups vs $allDirs dirs " +
         "— pruning would be vacuous")
-    // append left a second file in appended group dirs; compaction folds
-    // them back to one per dir and results are unchanged
-    val filesBefore = new java.io.File(s"$dir/postings").listFiles()
-      .filter(_.getName.startsWith("grp="))
-      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).max
-    assert(filesBefore > 1, "append should leave >1 file in some group dir")
-    Similarity.compactIndexPostings(spark, dir, Seq("grp"))
-    val filesAfter = new java.io.File(s"$dir/postings").listFiles()
-      .filter(_.getName.startsWith("grp="))
-      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).max
-    assert(filesAfter == 1, s"compaction must leave one file per dir")
-    val compacted = Retrieval.searchInvertedIndex(spark, dir,
-        Retrieval.DefaultQueries, k = 10)
-      .as[(Long, Long, Double, Long)].collect().toSet
-    assert(compacted == inline)
-    // fail-loud contract: appending to a missing index throws
-    intercept[IllegalArgumentException] {
-      Retrieval.appendInvertedIndex(docs, dir + "_nope")
-    }
   }
 
   test("hybrid stored search equals the inline fusion relation (q86 == " +
@@ -2033,28 +1978,6 @@ class LlmOpsSpec extends SparkSpecBase {
       .as[(Long, Long, Long, Long, Double, Long)].collect().toSet
     assert(a == b, s"stored-only ${a -- b}; inline-only ${b -- a}")
     assert(a.nonEmpty)
-  }
-
-  test("inverted index: a crash parked mid-swap (stats__old, no published " +
-    "stats) is repaired by the next append; search then sees both batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_inv_crash")
-      .toString + "/index"
-    Retrieval.writeInvertedIndex(docs.filter(col("doc_id") < 250), dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // simulate the append's crash window: stats parked to __old, the
-    // replacement never published
-    graft.sinks.Sinks.renameOrThrow(fs,
-      new org.apache.hadoop.fs.Path(s"$dir/stats"),
-      new org.apache.hadoop.fs.Path(s"$dir/stats__old"))
-    Retrieval.appendInvertedIndex(docs.filter(col("doc_id") >= 250), dir)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/stats__old")))
-    val stored = Retrieval.searchInvertedIndex(spark, dir,
-        Retrieval.DefaultQueries, k = 10)
-      .as[(Long, Long, Double, Long)].collect().toSet
-    val inline = Retrieval.bm25TopK(docs, Retrieval.DefaultQueries, k = 10)
-      .as[(Long, Long, Double, Long)].collect().toSet
-    assert(stored == inline)
   }
 
   test("RRF fusion: items on both lists outrank single-list items; absent " +

@@ -154,15 +154,15 @@ class ScaleSpec extends SparkSpecBase {
     val viaAgg = scores.as[(String, Double, String)]
       .groupByKey(_._1)
       .mapValues(r => (r._2, r._3))
-      .agg(Scale.topKColumn(2).name("top"))
+      .agg(new Scale.TopKPayloadAgg[String](2).toColumn.name("top"))
       .collect().toMap
     // expected: desc score, asc payload tie-break, capped at 2
     assert(viaAgg("a") == Seq("w", "y"))
     assert(viaAgg("b") == Seq("q"))
   }
 
-  test("bounded-insertion TopKAgg equals sort-and-take on a seeded 400-row " +
-    "group (duplicate scores, multi-partition merge path)") {
+  test("bounded-insertion TopKPayloadAgg equals sort-and-take on a " +
+    "seeded 400-row group (duplicate scores, multi-partition merge path)") {
     val rnd = new scala.util.Random(42)
     val rows = (1 to 400).map(i =>
       ("g", rnd.nextInt(50).toDouble, f"p$i%03d"))
@@ -174,7 +174,7 @@ class ScaleSpec extends SparkSpecBase {
       .as[(String, Double, String)]
       .groupByKey(_._1)
       .mapValues(r => (r._2, r._3))
-      .agg(Scale.topKColumn(7).name("top"))
+      .agg(new Scale.TopKPayloadAgg[String](7).toColumn.name("top"))
       .collect().toMap
     assert(got("g") == expected)
   }
