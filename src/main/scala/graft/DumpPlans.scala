@@ -18,10 +18,14 @@ import java.nio.file.{Files, Paths}
   */
 object DumpPlans {
   /** The rank and prefix-sum devices are dumped past their bounded-input
-    * cutover: the session sets `spark.graft.rank.cutoverRows` to 0 unless
-    * the JVM already supplies a value
-    * (`JAVA_TOOL_OPTIONS=-Dspark.graft.rank.cutoverRows=…`). */
-  private val CutoverKey = "spark.graft.rank.cutoverRows"
+    * cutover: the session sets the [[graft.ops.Scale.Cutover.Rank]] key,
+    * `spark.graft.rank.cutoverRows`, to 0 unless the JVM already supplies
+    * a value (`JAVA_TOOL_OPTIONS=-Dspark.graft.rank.cutoverRows=…`). The
+    * graph and near-dup families keep their default bounds, so the dumped
+    * inputs take their small side; `spark.graft.graph.cutoverRows=0` or
+    * `spark.graft.nearDup.cutoverRows=0` in the same variable dumps their
+    * at-scale plans instead. */
+  private val CutoverKey = graft.ops.Scale.Cutover.Rank.key
   private val RankCutoverRows = "0"
   private val AtScale = " [at-scale shape: dumped with " +
     s"$CutoverKey=$RankCutoverRows, so the plan below is " +

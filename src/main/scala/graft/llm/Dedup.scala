@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1165,9 +1165,11 @@ object Dedup {
     * materialization survivable at 100 TB (and measured ~2× off the q96
     * chain's two fixpoints at sf0.1).
     *
-    * Below `driverBelow` symmetrized edges the duplicate graph is
+    * With at most `driverBelow` symmetrized edges (by default the active
+    * session's [[graft.ops.Scale.Cutover.Graph]] bound, 2^18; the rule is
+    * [[graft.ops.Scale.smallSide]]) the duplicate graph is
     * COLLECTED and solved by driver-side union-find instead — the q42
-    * `exactBelow` cutover device, applied to the fixpoint: a bounded
+    * near-dup cutover device, applied to the fixpoint: a bounded
     * edge list costs one collect and zero per-round shuffles, where
     * the distributed loop pays 4-5 shuffles + a checkpoint PER ROUND
     * in fixed overhead (measured ~2 s across q96's two fixpoints at
@@ -1179,12 +1181,13 @@ object Dedup {
     * Min-label union-find emits EXACTLY the propagation fixpoint's
     * labels — comp = min id of the component — so the cutover is
     * invisible in results (OperatorSpec pins driver == distributed);
-    * pass `driverBelow = 0` to force the distributed path.
+    * a bound of 0 forces the distributed path.
     */
   def connectedComponents(vertices: DataFrame, pairs: DataFrame,
                           idCol: String = "id",
                           maxIters: Int = 50,
-                          driverBelow: Long = 1L << 18): DataFrame = {
+                          driverBelow: Long = graft.ops.Scale.Cutover.Graph
+                            .bound(SparkSession.active)): DataFrame = {
     // cast FIRST, then drop NULLs: the id contract is long, and an
     // endpoint that is non-NULL but uncastable (a non-numeric string
     // id) must be dropped like a NULL — filtering before the cast let
@@ -1222,15 +1225,11 @@ object Dedup {
     val verts = vertices.select(col(idCol).as("__v0"))
       .select(expr("try_cast(__v0 AS BIGINT)").as("id"))
       .filter(col("id").isNotNull)
-    // bounded probe, not a full count (r16 VERDICT): the cutover only
-    // needs "are there more than driverBelow/2 directed edges", and a
-    // limit+count short-circuits at the bound — a full count() is a
-    // complete pass over a corpus-sized relation at 100 TB purely to
-    // learn "is it small?" (here the leaf is a cached localCheckpoint,
-    // but the probe keeps the decision O(bound) by contract, not by
-    // cache luck)
-    // nSym = 2·nDir ≤ driverBelow  ⟺  nDir ≤ ⌊driverBelow / 2⌋
-    if (graft.ops.Scale.atMostRows(edges0, driverBelow / 2)) {
+    // the probe runs on the directed relation, each row two symmetrized
+    // edges: nSym = 2·nDir ≤ driverBelow  ⟺  nDir ≤ ⌊driverBelow / 2⌋
+    // (here the leaf is a cached localCheckpoint, but the probe keeps the
+    // decision O(bound) by contract, not by cache luck)
+    if (graft.ops.Scale.smallSide(edges0, driverBelow, perRow = 2L)) {
       // bounded duplicate graph: one collect, zero per-round shuffles.
       // Union-by-min keeps every tree's root at the component's minimum
       // id, so find() returns exactly the propagation fixpoint's label

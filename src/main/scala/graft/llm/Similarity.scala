@@ -413,7 +413,7 @@ object Similarity {
     * exact-verifies cosine ≥ `tau`. No cartesian anywhere; candidate volume
     * ≈ Σ_cells (cell/n)² per table instead of all pairs. The registry
     * parameters are recall-1.0-tuned on the gate corpora (LlmOpsSpec pins
-    * the IVF branch through `exactBelow = 0`; ScaleSpec bounds the
+    * the IVF branch through a near-dup bound of 0; ScaleSpec bounds the
     * candidate fraction); re-tune whenever fixtures or scales change (the
     * TuneIvf/TuneIvfSf01 sweeps that set them can be recovered from commit
     * f372b9f). At 100 TB: scale `k` with corpus size (bucket size n/k
@@ -443,8 +443,9 @@ object Similarity {
     * multi-probe genuinely prunes ([[certifiedRung]] reports which rung
     * passed).
     *
-    * Below `exactBelow` vectors (a bounded [[graft.ops.Scale.atMostRows]]
-    * probe; `exactBelow <= 0` skips it) the operator skips IVF entirely and
+    * With at most the [[graft.ops.Scale.Cutover.NearDup]] bound of vectors
+    * (3,999 by default; [[graft.ops.Scale.smallSide]]'s bounded probe, none
+    * at a bound of 0) the operator skips IVF entirely and
     * runs the exact scan — the flat-index-below-threshold cutover every ANN
     * stack has: at small n the all-pairs scan costs LESS than quantizer
     * training + assignment + certificate (measured at sf0.1's n = 2000:
@@ -470,7 +471,6 @@ object Similarity {
                                      certQueries: Int = 256,
                                      targetRecall: Double = 1.0,
                                      probeLadder: Seq[Int] = Seq(1),
-                                     exactBelow: Long = 4000L,
                                      idCol: String = "vec_id",
                                      vecCol: String = "embedding")
   : DataFrame = {
@@ -479,7 +479,8 @@ object Similarity {
     val e = graft.core.CacheScope.track(embeddings
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .persist())
-    if (exactBelow > 0L && graft.ops.Scale.atMostRows(e, exactBelow - 1))
+    val nearDup = graft.ops.Scale.Cutover.NearDup
+    if (graft.ops.Scale.smallSide(e, nearDup.bound(e.sparkSession)))
       return embeddingNearDupPairs(e, tau, "id", "v")
     certifiedRung(e, tau, k, tables, iters, sampleN, certQueries,
         targetRecall, probeLadder) match {

@@ -775,8 +775,9 @@ object Graph {
     * are the edge endpoints; callers wanting isolated vertices union
     * them in as identity rows (they are their own singleton SCCs).
     *
-    * Below `driverBelow` normalized edges the graph is COLLECTED and
-    * solved by iterative driver-side Tarjan instead — the
+    * With at most the [[Scale.Cutover.Graph]] bound of normalized edges
+    * (2^18 by default) the graph is COLLECTED and solved by iterative
+    * driver-side Tarjan instead — the
     * [[graft.llm.Dedup.connectedComponents]] cutover device applied to
     * SCC: a bounded edge list costs one typed collect and zero
     * fixpoint shuffles, where the distributed trim+color+mark loop
@@ -785,14 +786,14 @@ object Graph {
     * no data). Tarjan emits the same definitional answer (rep = MAX
     * member id, the mutual-reachability maximum), so the cutover is
     * invisible in results (OperatorSpec pins driver == distributed on
-    * randomized digraphs); pass `driverBelow = 0` to force the
-    * distributed path. `maxPeels`/`maxIters` bound only that path.
+    * randomized digraphs); a bound of 0 forces the distributed path.
+    * `maxPeels`/`maxIters` bound only that path.
     */
   def stronglyConnectedComponents(edges: DataFrame, maxPeels: Int = 50,
-                                  maxIters: Int = 200,
-                                  driverBelow: Long = 1L << 18): DataFrame = {
+                                  maxIters: Int = 200): DataFrame = {
     val e0 = normalizeDirectedEdges(edges)
-    if (Scale.atMostRows(e0, driverBelow)) sccOnDriver(e0)
+    if (Scale.smallSide(e0, Scale.Cutover.Graph.bound(e0.sparkSession)))
+      sccOnDriver(e0)
     else sccOfNormalized(e0, maxPeels, maxIters)._1
   }
 
@@ -1195,16 +1196,16 @@ object Graph {
     * 100 TB posture: the SCC pass dominates; everything after runs on
     * the ≤ |components| condensation relation (component-keyed joins,
     * localCheckpoint per round, nothing driver-side but the scalars).
-    * Below `driverBelow` normalized edges the WHOLE condensation
+    * With at most the graph bound of normalized edges the WHOLE condensation
     * (Tarjan + sizes + longest-path levels by Kahn-order DP) runs on
     * the one collected edge list — same cutover contract as
     * [[stronglyConnectedComponents]], parity pinned in OperatorSpec.
     */
   def sccCondensation(edges: DataFrame, maxPeels: Int = 50,
-                      maxIters: Int = 200,
-                      driverBelow: Long = 1L << 18): DataFrame = {
+                      maxIters: Int = 200): DataFrame = {
     val e0 = normalizeDirectedEdges(edges)
-    if (Scale.atMostRows(e0, driverBelow)) return condensationOnDriver(e0)
+    if (Scale.smallSide(e0, Scale.Cutover.Graph.bound(e0.sparkSession)))
+      return condensationOnDriver(e0)
     val scc = sccOfNormalized(e0, maxPeels, maxIters)._1
       .localCheckpoint(true)
     val members = scc.groupBy(col("scc")).agg(count(lit(1)).as("n_members"))

@@ -313,15 +313,14 @@ object Scale {
 
   /** Bounded size probe: "does `df` have at most `bound` rows?" via
     * limit(bound + 1).count() — short-circuits after pulling bound + 1
-    * rows instead of running a complete count() pass. The graph driver
-    * cutovers (CC / SCC / condensation) decide "is this graph small
-    * enough to collect?" with this, so the decision costs O(bound) rows
-    * even when the probed relation is corpus-sized — a full count()
-    * there was a complete pass over a 100 TB-scale edge relation purely
-    * to learn "is it small?" (r16 VERDICT item). OperatorSpec pins the
-    * short-circuit with an accumulator-instrumented scan. The short-circuit
-    * holds for an unpersisted frame only: on a persisted one, every
-    * partition the probe touches is computed and cached whole. */
+    * rows instead of running a complete count() pass, so a cutover
+    * decision costs O(bound) rows even when the probed relation is
+    * corpus-sized — a full count() there was a complete pass over a
+    * 100 TB-scale edge relation purely to learn "is it small?" (r16
+    * VERDICT item). [[smallSide]] is its one caller. OperatorSpec pins
+    * the short-circuit with an accumulator-instrumented scan. The
+    * short-circuit holds for an unpersisted frame only: on a persisted
+    * one, every partition the probe touches is computed and cached whole. */
   def atMostRows(df: DataFrame, bound: Long): Boolean = {
     require(bound >= 0L, s"bound must be non-negative: $bound")
     // limit() takes an Int: past Int.MaxValue the short-circuit cannot
@@ -333,50 +332,62 @@ object Scale {
     else df.limit(bound.toInt + 1).count() <= bound
   }
 
-  /** Sentinel for the rank/prefix-sum devices' `cutoverRows` parameter:
-    * resolve the bound from the session conf
-    * (`spark.graft.rank.cutoverRows`, default [[DefaultRankCutoverRows]];
-    * 0 disables the probe and always takes the two-phase path). */
-  val RankCutoverFromConf: Long = -1L
-
-  /** Default bounded-input cutover for [[globalCumSumOrdered]] /
-    * [[groupedRankOrdered]]: inputs of at most this many rows take one
-    * ordinary window instead of the two-phase device. 2^20 rows of rank
-    * input (ids + order keys, ~50-100 B each) is well under one task's
-    * sort budget at any deployment size — the same scale-adaptive-cutover
-    * pattern as [[graft.llm.Dedup.connectedComponents]]'s `driverBelow`.
-    * The bound is a row count, not a core count: it does not change
-    * between local[8]/local[32]/a cluster. */
-  val DefaultRankCutoverRows: Long = 1L << 20
-
-  private def resolveRankCutover(df: DataFrame, cutoverRows: Long): Long =
-    if (cutoverRows >= 0L) cutoverRows
-    else df.sparkSession.conf
-      .get("spark.graft.rank.cutoverRows", DefaultRankCutoverRows.toString)
-      .toLong
-
-  /** Bounded-input probe shared by the two-phase devices: persist the
-    * input (scope-tracked) and ask [[atMostRows]]; returns the persisted
-    * frame and whether it holds at most `cutover` rows. The probe is one
-    * full pass of the caller's upstream whichever way it answers: reading
-    * any row of a persisted partition computes and caches the whole
-    * partition, and the limit's per-partition LocalLimit runs on every
-    * partition. So both paths read the cached frame — the bounded one
-    * windows it, the unbounded one range-partitions it — and the upstream
-    * runs once either way. The cache backs the returned plan until the
-    * caller's CacheScope ends (or clearCache outside one), like the
-    * two-phase path's own partitioned frame. `cutover` <= 0 skips the
-    * probe: `df` comes back as it is, unbounded. */
-  private def boundedForRank(df: DataFrame, cutover: Long)
-  : (DataFrame, Boolean) = {
-    if (cutover <= 0L) return (df, false)
-    // respect a caller's existing persist (tokenBudgetSelectBy hands in a
-    // frame it already cached) — re-persisting the same plan only warns
-    val cached =
-      if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
-      else graft.core.CacheScope.track(df.persist())
-    (cached, atMostRows(cached, cutover))
+  /** A family of small-input switches: devices that take a cheaper plan
+    * when their input has at most the family's bound of rows. The bound
+    * is a row count, not a core count: it does not change between
+    * local[8]/local[32]/a cluster. Each family's bound is the session key
+    * `spark.graft.<family>.cutoverRows`, else its default. */
+  sealed abstract class Cutover(family: String, val default: Long) {
+    val key: String = s"spark.graft.$family.cutoverRows"
+    def bound(spark: SparkSession): Long =
+      spark.conf.get(key, default.toString).toLong
   }
+
+  object Cutover {
+    /** [[globalCumSum]], [[globalCumSumOrdered]], [[groupedRankOrdered]]:
+      * at most 2^20 rows of rank input (ids + order keys, ~50-100 B each)
+      * take one ordinary window — well under one task's sort budget at
+      * any deployment size. */
+    case object Rank extends Cutover("rank", 1L << 20)
+    /** [[graft.ops.Graph.stronglyConnectedComponents]] and
+      * [[graft.ops.Graph.sccCondensation]] (normalized edges) and
+      * [[graft.llm.Dedup.connectedComponents]] (symmetrized edges): at
+      * most 2^18 edges are collected and solved on the driver. */
+    case object Graph extends Cutover("graph", 1L << 18)
+    /** [[graft.llm.Similarity.embeddingNearDupPairsCertified]]: at most
+      * 3,999 vectors run the exact all-pairs scan instead of IVF. */
+    case object NearDup extends Cutover("nearDup", 3999L)
+  }
+
+  /** The one cutover rule: the small side runs only when `bound` > 0 and
+    * the measured relation has at most `bound` rows, asked of the probed
+    * relation through [[atMostRows]], where each probed row stands for
+    * `perRow` measured ones (a directed edge is two symmetrized edges).
+    * A bound of 0 or less never probes: `probed` is by name, so it is not
+    * even built then, and every input takes the at-scale side. */
+  def smallSide(probed: => DataFrame, bound: Long, perRow: Long = 1L)
+  : Boolean =
+    bound > 0L && atMostRows(probed, bound / perRow)
+
+  /** The rank devices' switch: persist the input (scope-tracked) and ask
+    * [[smallSide]] at the session's [[Cutover.Rank]] bound; after a probe
+    * `df` reads the cache, since `persist` marks `df`'s own plan. The
+    * probe is one full pass of the caller's upstream whichever way it
+    * answers: reading any row of a persisted partition computes and
+    * caches the whole partition, and the limit's per-partition LocalLimit
+    * runs on every partition. So both paths read the cached frame — the
+    * bounded one windows it, the unbounded one range-partitions it — and
+    * the upstream runs once either way. The cache backs the returned plan
+    * until the caller's CacheScope ends (or clearCache outside one), like
+    * the two-phase path's own partitioned frame. At a bound of 0 nothing
+    * is persisted or probed: `df` goes on as it is, unbounded. */
+  private def boundedForRank(df: DataFrame): Boolean =
+    smallSide(
+      // respect a caller's existing persist (tokenBudgetSelectBy hands in
+      // a frame it already cached) — re-persisting the same plan only warns
+      if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
+      else graft.core.CacheScope.track(df.persist()),
+      Cutover.Rank.bound(df.sparkSession))
 
   /** Range-partition `input` on `keys` and sort each partition on them,
     * persisted (scope-tracked): the at-scale devices' one data exchange.
@@ -420,16 +431,14 @@ object Scale {
     * r19 bounded-input cutover: the two-phase form costs two extra jobs a
     * bounded input never needs (the range partitioner's sample pass plus
     * the per-partition summary). The input is persisted and
-    * probed with [[atMostRows]] — a full pass that fills the cache — and
+    * probed with [[smallSide]] — a full pass that fills the cache — and
     * both answers read that cache, so the caller's upstream runs ONCE.
-    * At most `cutoverRows` rows take one ordinary window over the cached
-    * rows — row-identical by the same order-independence argument, and the
-    * SinglePartition exchange it plans carries at most `cutoverRows` rows
-    * by construction. Above the bound the two-phase plan range-partitions
-    * the cached frame. `cutoverRows`:
-    * [[RankCutoverFromConf]] resolves `spark.graft.rank.cutoverRows`
-    * (default [[DefaultRankCutoverRows]]); 0 disables the probe — the
-    * PlanSpec locks pin the at-scale shape through that setting. Both
+    * At most the [[Cutover.Rank]] bound of rows take one ordinary window
+    * over the cached rows — row-identical by the same order-independence
+    * argument, and the SinglePartition exchange it plans carries at most
+    * the bound of rows by construction. Above the bound the two-phase plan
+    * range-partitions the cached frame. A bound of 0 disables the probe —
+    * the PlanSpec locks pin the at-scale shape through that setting. Both
     * paths return the input's columns in order with `outCol` last (or in
     * place, if the input has it).
     *
@@ -440,9 +449,8 @@ object Scale {
     * partitions than the summary saw fails loud).
     */
   def globalCumSum(df: DataFrame, orderCol: String, valueCol: String,
-                   outCol: String = "cum",
-                   cutoverRows: Long = RankCutoverFromConf): DataFrame =
-    globalCumSumOrdered(df, Seq(orderCol), valueCol, outCol, cutoverRows)
+                   outCol: String = "cum"): DataFrame =
+    globalCumSumOrdered(df, Seq(orderCol), valueCol, outCol)
 
   /** [[globalCumSum]] over a composite order key (e.g. (draw, id) for a
     * deterministic corpus shuffle: the draw orders, the unique id breaks
@@ -450,19 +458,16 @@ object Scale {
     * be unique. */
   def globalCumSumOrdered(df: DataFrame, orderCols: Seq[String],
                           valueCol: String,
-                          outCol: String = "cum",
-                          cutoverRows: Long = RankCutoverFromConf)
+                          outCol: String = "cum")
   : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (input, bounded) =
-      boundedForRank(df, resolveRankCutover(df, cutoverRows))
     val value = col(valueCol).cast("long")
-    if (bounded) {
+    if (boundedForRank(df)) {
       val w = Window.orderBy(orderCols.map(col): _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      return input.withColumn(outCol, sum(value).over(w))
+      return df.withColumn(outCol, sum(value).over(w))
     }
-    val parts = rangeSorted(input, orderCols)
+    val parts = rangeSorted(df, orderCols)
     // per range partition: (total, holds a non-NULL value)
     val totals = perPartition(parts.select(value)) { rows =>
       var t = 0L
@@ -499,32 +504,29 @@ object Scale {
     * composite key. Deterministic when (group ++ order) is unique.
     *
     * r19 bounded-input cutover (same device and conf as
-    * [[globalCumSumOrdered]]): at most `cutoverRows` rows rank through one
+    * [[globalCumSumOrdered]]): at most the bound of rows rank through one
     * ordinary `row_number` window over the probe's cached frame —
     * partitioned by the group columns when there are any (parallel by
     * group, no funnel at all), global otherwise (a SinglePartition
-    * exchange of at most `cutoverRows` rows). Row-identical: rank under a
+    * exchange of at most the bound of rows). Row-identical: rank under a
     * total order does not depend on the partitioning. Above the bound the
     * two-phase plan range-partitions that same cached frame, so the
     * caller's upstream runs once on either side of the bound.
     */
   def groupedRankOrdered(df: DataFrame, groupCols: Seq[String],
                          orderCols: Seq[String],
-                         outCol: String = "rank",
-                         cutoverRows: Long = RankCutoverFromConf)
+                         outCol: String = "rank")
   : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.catalyst.expressions.RowOrdering
-    val (input, bounded) =
-      boundedForRank(df, resolveRankCutover(df, cutoverRows))
-    if (bounded) {
+    if (boundedForRank(df)) {
       val w =
         if (groupCols.isEmpty) Window.orderBy(orderCols.map(col): _*)
         else Window.partitionBy(groupCols.map(col): _*)
           .orderBy(orderCols.map(col): _*)
-      return input.withColumn(outCol, row_number().over(w).cast("long"))
+      return df.withColumn(outCol, row_number().over(w).cast("long"))
     }
-    val parts = rangeSorted(input, groupCols ++ orderCols)
+    val parts = rangeSorted(df, groupCols ++ orderCols)
     val keys = parts.select(groupCols.map(col): _*)
     val keyTypes = keys.schema.map(_.dataType)
     // per range partition: (rows, first key, its run length, last key,

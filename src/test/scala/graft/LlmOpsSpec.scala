@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.llm.{Dedup, Multimodal, Retrieval, Similarity, TextAnalysis}
+import graft.ops.Scale.Cutover
 
 /** LLM-operator behavior tests: LSH candidate recall vs exact ground truth,
   * SimHash near-dup detection, ANN recall vs brute force, multimodal
@@ -159,8 +160,8 @@ class LlmOpsSpec extends SparkSpecBase {
     val exact = Similarity.embeddingNearDupPairs(emb, tau = 0.45)
       .as[(Long, Long, Double)].collect().toSet
     val ivf = graft.core.CacheScope.scoped {
-      Similarity.embeddingNearDupPairsCertified(emb, tau = 0.45,
-          exactBelow = 0L)
+      withCutover(Cutover.NearDup)(
+        Similarity.embeddingNearDupPairsCertified(emb, tau = 0.45))
         .as[(Long, Long, Double)].collect().toSet
     }
     assert(exact.nonEmpty)
@@ -189,7 +190,7 @@ class LlmOpsSpec extends SparkSpecBase {
       Similarity.embeddingNearDupPairs(emb, tau = 0.45)
         .as[(Long, Long, Double)].collect().toSet
     }
-    // registry defaults: this corpus sits under the exactBelow cutover,
+    // registry defaults: this corpus sits under the near-dup cutover,
     // so the certain path runs
     val cert = graft.core.CacheScope.scoped {
       Similarity.embeddingNearDupPairsCertified(emb, tau = 0.45)
@@ -200,8 +201,8 @@ class LlmOpsSpec extends SparkSpecBase {
     // cutover disabled: the IVF-certified branch itself is also exact here
     // (rung 1 genuinely certifies on this corpus, per the ladder above)
     val certIvf = graft.core.CacheScope.scoped {
-      Similarity.embeddingNearDupPairsCertified(emb, tau = 0.45,
-          exactBelow = 0L)
+      withCutover(Cutover.NearDup)(
+        Similarity.embeddingNearDupPairsCertified(emb, tau = 0.45))
         .as[(Long, Long, Double)].collect().toSet
     }
     assert(certIvf == exact,
@@ -226,8 +227,9 @@ class LlmOpsSpec extends SparkSpecBase {
     }
     assert(rung.isEmpty, s"unclustered data must fail the certificate: $rung")
     val cert = graft.core.CacheScope.scoped {
-      Similarity.embeddingNearDupPairsCertified(uni, tau = 0.3,
-          k = 16, tables = 4, probeLadder = Seq(1, 2), exactBelow = 0L)
+      withCutover(Cutover.NearDup)(
+        Similarity.embeddingNearDupPairsCertified(uni, tau = 0.3,
+          k = 16, tables = 4, probeLadder = Seq(1, 2)))
         .as[(Long, Long, Double)].collect().toSet
     }
     assert(cert == exact,
@@ -277,11 +279,11 @@ class LlmOpsSpec extends SparkSpecBase {
       .as[(Long, Long)].collect().toMap
     assert((10L to 15L).forall(got(_) == 10L))
     assert(got(20L) == 20L && got(21L) == 20L && got(30L) == 30L)
-    // the driverBelow cutover must be invisible: the distributed
-    // fixpoint (forced with driverBelow = 0) and the default driver-side
+    // the graph cutover must be invisible: the distributed fixpoint
+    // (forced with a graph bound of 0) and the default driver-side
     // union-find emit identical labels
-    val dist = Dedup.connectedComponents(verts.toDF("id"), pairs,
-        driverBelow = 0L)
+    val dist = withCutover(Cutover.Graph)(
+        Dedup.connectedComponents(verts.toDF("id"), pairs))
       .as[(Long, Long)].collect().toMap
     assert(dist == got, s"cutover changed labels: $dist vs $got")
     // dirty input: NULL-endpoint pairs are dropped on BOTH paths (the
@@ -294,8 +296,8 @@ class LlmOpsSpec extends SparkSpecBase {
     val gotDirty = Dedup.connectedComponents(verts.toDF("id"), dirty)
       .as[(Long, Long)].collect().toMap
     assert(gotDirty == wantDirty, s"driver path on dirty input: $gotDirty")
-    val distDirty = Dedup.connectedComponents(verts.toDF("id"), dirty,
-        driverBelow = 0L)
+    val distDirty = withCutover(Cutover.Graph)(
+        Dedup.connectedComponents(verts.toDF("id"), dirty))
       .as[(Long, Long)].collect().toMap
     assert(distDirty == wantDirty,
       s"distributed path on dirty input: $distDirty")
@@ -310,8 +312,8 @@ class LlmOpsSpec extends SparkSpecBase {
       .as[(Long, Long)].collect().toMap
     assert(gotUncast == wantDirty,
       s"driver path on uncastable input: $gotUncast")
-    val distUncast = Dedup.connectedComponents(verts.toDF("id"), uncastable,
-        driverBelow = 0L)
+    val distUncast = withCutover(Cutover.Graph)(
+        Dedup.connectedComponents(verts.toDF("id"), uncastable))
       .as[(Long, Long)].collect().toMap
     assert(distUncast == wantDirty,
       s"distributed path on uncastable input: $distUncast")
@@ -323,8 +325,8 @@ class LlmOpsSpec extends SparkSpecBase {
     val gotDv = Dedup.connectedComponents(dirtyVerts, pairs)
       .as[(Long, Long)].collect().toMap
     assert(gotDv == got, s"driver path on dirty vertices: $gotDv")
-    val distDv = Dedup.connectedComponents(dirtyVerts, pairs,
-        driverBelow = 0L)
+    val distDv = withCutover(Cutover.Graph)(
+        Dedup.connectedComponents(dirtyVerts, pairs))
       .as[(Long, Long)].collect().toMap
     assert(distDv == got, s"distributed path on dirty vertices: $distDv")
   }
@@ -365,8 +367,8 @@ class LlmOpsSpec extends SparkSpecBase {
     val got = graft.core.CacheScope.scoped {
       Dedup.connectedComponents(
           emb.select(col("vec_id")),
-          Similarity.embeddingNearDupPairsCertified(emb, tau = 0.45,
-              exactBelow = 0L)
+          withCutover(Cutover.NearDup)(
+            Similarity.embeddingNearDupPairsCertified(emb, tau = 0.45))
             .select("id_a", "id_b"),
           idCol = "vec_id")
         .as[(Long, Long)].collect().toMap
@@ -402,8 +404,8 @@ class LlmOpsSpec extends SparkSpecBase {
     // and for anchors that HAVE near-dups, the exclusion freed slots: the
     // plain top-5 differs from the negative top-5 exactly on those anchors
     val dupAnchors = graft.core.CacheScope.scoped {
-      val pairs = Similarity.embeddingNearDupPairsCertified(emb, tau = 0.45,
-        exactBelow = 0L)
+      val pairs = withCutover(Cutover.NearDup)(
+        Similarity.embeddingNearDupPairsCertified(emb, tau = 0.45))
       pairs.select(col("id_a")).union(pairs.select(col("id_b")))
         .as[Long].collect().toSet.filter(_ < 10)
     }

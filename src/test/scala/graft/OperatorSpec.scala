@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.jobs.{Auc, ItemCf}
 import graft.ops.Ranking
+import graft.ops.Scale.Cutover
 
 /** Operator-level golden tests. The decay test re-derives the reference's
   * increment-emission weights with a direct in-memory reimplementation of
@@ -578,7 +579,7 @@ class OperatorSpec extends SparkSpecBase {
       7L -> ((1L, 0L))), s"wrong condensation: $got")
     // driver == distributed parity on the same fixture (the default
     // path above took the Tarjan/Kahn cutover)
-    val dist = graft.ops.Graph.sccCondensation(edges, driverBelow = 0)
+    val dist = withCutover(Cutover.Graph)(graft.ops.Graph.sccCondensation(edges))
       .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3)))
       .toMap
     assert(dist == got, s"distributed condensation $dist != driver $got")
@@ -619,9 +620,8 @@ class OperatorSpec extends SparkSpecBase {
         // path above took the Tarjan cutover; the forced-distributed
         // trim+color+mark run must emit the identical map
         if (trial % 8 == 0) {
-          val dist = graft.ops.Graph
-            .stronglyConnectedComponents(es.toDF("src", "dst"),
-              driverBelow = 0)
+          val dist = withCutover(Cutover.Graph)(graft.ops.Graph
+            .stronglyConnectedComponents(es.toDF("src", "dst")))
             .as[(Long, Long)].collect().toMap
           assert(dist == got, s"trial $trial: distributed $dist != " +
             s"driver $got edges=$es")
@@ -654,8 +654,8 @@ class OperatorSpec extends SparkSpecBase {
     // maxPeels bounds the DISTRIBUTED path; force past the driver
     // cutover to pin it (the driver path has no peels to bound)
     intercept[IllegalArgumentException] {
-      graft.ops.Graph.stronglyConnectedComponents(cyc, maxPeels = 2,
-        driverBelow = 0)
+      withCutover(Cutover.Graph)(
+        graft.ops.Graph.stronglyConnectedComponents(cyc, maxPeels = 2))
     }
     // NULL endpoints are dropped before anything is counted
     val withNulls = Seq((Some(1L), Some(2L)), (Some(2L), Some(1L)),
@@ -669,8 +669,8 @@ class OperatorSpec extends SparkSpecBase {
     // ADVICE deep-path concern; maxPeels stays the only topology bound)
     val ring = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L))
       .toDF("src", "dst")
-    val ringGot = graft.ops.Graph
-      .stronglyConnectedComponents(ring, maxIters = 1, driverBelow = 0)
+    val ringGot = withCutover(Cutover.Graph)(graft.ops.Graph
+      .stronglyConnectedComponents(ring, maxIters = 1))
       .as[(Long, Long)].collect().toMap
     assert(ringGot == Map(1L -> 4L, 2L -> 4L, 3L -> 4L, 4L -> 4L),
       s"wrong: $ringGot")

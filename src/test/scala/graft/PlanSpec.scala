@@ -1,5 +1,7 @@
 package graft
 
+import graft.ops.Scale.Cutover
+
 /** Plan-shape regression tests: lock in the physical-plan properties the
   * 100 TB posture depends on (column pruning, filter pushdown, broadcast
   * joins, anti-join rewrite) so a refactor that silently loses them fails
@@ -15,26 +17,14 @@ class PlanSpec extends SparkSpecBase {
   // the two-phase 100 TB shape. The cutover path itself is locked by the
   // dedicated "bounded-input cutover" tests below and result-equivalence
   // in ScaleSpec.
-  private def atScale[T](body: => T): T = {
-    val before = spark.conf.getOption("spark.graft.rank.cutoverRows")
-    spark.conf.set("spark.graft.rank.cutoverRows", "0")
-    try body
-    finally {
-      before match {
-        case Some(v) => spark.conf.set("spark.graft.rank.cutoverRows", v)
-        case None => spark.conf.unset("spark.graft.rank.cutoverRows")
-      }
-    }
-  }
-
-  private def planOf(q: String): String = atScale {
+  private def planOf(q: String): String = withCutover(Cutover.Rank) {
     val df = SparkEntry.queries(q)(spark, sfDir)
     df.queryExecution.executedPlan.toString
   }
 
   // planOf for queries whose construction persists intermediates — same
   // at-scale conf, the caches released on exit
-  private def planOfScoped(q: String): String = atScale {
+  private def planOfScoped(q: String): String = withCutover(Cutover.Rank) {
     graft.core.CacheScope.scoped {
       SparkEntry.queries(q)(spark, sfDir)
         .queryExecution.executedPlan.toString
@@ -72,8 +62,8 @@ class PlanSpec extends SparkSpecBase {
     val docs = graft.core.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("n_chars"))
     graft.core.CacheScope.scoped {
-      val bounded = graft.ops.Scale
-        .globalCumSum(docs, "doc_id", "n_chars", cutoverRows = 1L << 20)
+      val bounded = withCutover(Cutover.Rank, 1L << 20)(graft.ops.Scale
+        .globalCumSum(docs, "doc_id", "n_chars"))
         .queryExecution.executedPlan.toString
       // bounded plan: a plain running-sum window over the cached probe —
       // none of the two-phase machinery (no carry, no range exchange)
@@ -84,8 +74,8 @@ class PlanSpec extends SparkSpecBase {
         s"bounded path must window the probe's cached rows:\n$bounded")
     }
     graft.core.CacheScope.scoped {
-      val atScale = graft.ops.Scale
-        .globalCumSum(docs, "doc_id", "n_chars", cutoverRows = 0L)
+      val atScale = withCutover(Cutover.Rank)(graft.ops.Scale
+        .globalCumSum(docs, "doc_id", "n_chars"))
         .queryExecution.executedPlan.toString
       // cutover disabled = the range-partitioned two-phase shape: one
       // carry pass over the range partitions, no window, no join
@@ -103,9 +93,9 @@ class PlanSpec extends SparkSpecBase {
     val docs = graft.core.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.core.CacheScope.scoped {
-      val p = graft.ops.Scale
+      val p = withCutover(Cutover.Rank, 1L << 20)(graft.ops.Scale
         .groupedRankOrdered(docs, Seq("lang"), Seq("n_chars", "doc_id"),
-          "r", cutoverRows = 1L << 20)
+          "r"))
         .queryExecution.executedPlan.toString
       assert(!p.contains("range_row_number") &&
         !p.contains("rangepartitioning"),
@@ -150,8 +140,8 @@ class PlanSpec extends SparkSpecBase {
     // 100 TB posture to lock is the IVF-certified branch itself
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val p = graft.core.CacheScope.scoped {
-      graft.llm.Similarity
-        .embeddingNearDupPairsCertified(emb, tau = 0.45, exactBelow = 0L)
+      withCutover(Cutover.NearDup)(graft.llm.Similarity
+        .embeddingNearDupPairsCertified(emb, tau = 0.45))
         .queryExecution.executedPlan.toString
     }
     assert(!p.contains("CartesianProduct") &&

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.llm.Similarity
+import graft.llm.{Dedup, Similarity}
 import graft.ops.Scale
+import graft.ops.Scale.Cutover
 
 /** Scale-technique tests: the rank devices on both sides of their
   * cutover, bounded top-K aggregators vs collect_list+sort, pair caps.
@@ -22,11 +23,11 @@ class ScaleSpec extends SparkSpecBase {
         Window.orderBy("doc_id")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("doc_id", "cum").as[(Long, Long)].collect().toMap
-    // cutoverRows = 0 forces the two-phase device (the gate corpus is
+    // a rank bound of 0 forces the two-phase device (the gate corpus is
     // under the default bound, so the default would test the window
     // against itself — the pre-r19 coverage must stay)
-    val twoPhase = Scale.globalCumSum(docs, "doc_id", "n_chars",
-        cutoverRows = 0L)
+    val twoPhase = withCutover(Cutover.Rank)(
+        Scale.globalCumSum(docs, "doc_id", "n_chars"))
       .select("doc_id", "cum").as[(Long, Long)].collect().toMap
     assert(twoPhase == naive)
     spark.sqlContext.clearCache()
@@ -47,8 +48,8 @@ class ScaleSpec extends SparkSpecBase {
         Window.orderBy("draw", "doc_id")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("doc_id", "cum").as[(Long, Long)].collect().toMap
-    val scaled = Scale.globalCumSumOrdered(rows, Seq("draw", "doc_id"),
-        "n_chars", cutoverRows = 0L)
+    val scaled = withCutover(Cutover.Rank)(
+        Scale.globalCumSumOrdered(rows, Seq("draw", "doc_id"), "n_chars"))
       .select("doc_id", "cum").as[(Long, Long)].collect().toMap
     assert(scaled == naive)
     spark.sqlContext.clearCache()
@@ -61,7 +62,6 @@ class ScaleSpec extends SparkSpecBase {
 
   test("global cumsum on empty input returns empty; CC fails loud when " +
     "round budget is too small for the diameter") {
-    import graft.llm.Dedup
     val empty = Seq.empty[(Long, Long)].toDF("doc_id", "n_chars")
     assert(Scale.globalCumSum(empty, "doc_id", "n_chars").count() == 0)
     spark.sqlContext.clearCache()
@@ -70,15 +70,15 @@ class ScaleSpec extends SparkSpecBase {
       Seq.empty[Long].toDF("id"),
       Seq.empty[(Long, Long)].toDF("id_a", "id_b")).count() == 0)
     // chain 1-2-3-4 needs 3 propagation rounds; 1 round must throw, not
-    // silently return half-merged labels. driverBelow = 0 forces the
+    // silently return half-merged labels. A graph bound of 0 forces the
     // DISTRIBUTED fixpoint — the default driver union-find cutover has
     // no rounds to run out of (and that path's correctness is pinned in
     // LlmOpsSpec against this very fixpoint)
     val verts = Seq(1L, 2L, 3L, 4L).toDF("id")
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
     intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(verts, chain, maxIters = 1,
-        driverBelow = 0L).collect()
+      withCutover(Cutover.Graph)(
+        Dedup.connectedComponents(verts, chain, maxIters = 1)).collect()
     }
   }
 
@@ -347,8 +347,8 @@ class ScaleSpec extends SparkSpecBase {
     }
     val df = rows.toDF("id", "ga", "gb", "v")
     val twoPhase = graft.core.CacheScope.scoped {
-      Scale.groupedRankOrdered(df, Seq("ga", "gb"), Seq("v", "id"), "r",
-          cutoverRows = 0L)
+      withCutover(Cutover.Rank)(
+        Scale.groupedRankOrdered(df, Seq("ga", "gb"), Seq("v", "id"), "r"))
         .select("id", "r").as[(Long, Long)].collect().toMap
     }
     val w = Window.partitionBy("ga", "gb").orderBy(col("v"), col("id"))
@@ -363,8 +363,9 @@ class ScaleSpec extends SparkSpecBase {
     assert(viaCutover == viaWindow)
     // single group degenerates to the global rank
     val one = graft.core.CacheScope.scoped {
-      Scale.groupedRankOrdered(df.withColumn("ga", lit("x")),
-          Seq("ga"), Seq("v", "id"), "r", cutoverRows = 0L)
+      withCutover(Cutover.Rank)(
+        Scale.groupedRankOrdered(df.withColumn("ga", lit("x")),
+          Seq("ga"), Seq("v", "id"), "r"))
         .select("id", "r").as[(Long, Long)].collect().toMap
     }
     val wg = Window.orderBy(col("v"), col("id"))
@@ -388,8 +389,8 @@ class ScaleSpec extends SparkSpecBase {
     }
     val df = rows.toDF("id", "ga", "gb", "v")
     val twoPhase = graft.core.CacheScope.scoped {
-      Scale.groupedRankOrdered(df, Seq("ga", "gb"), Seq("v", "id"), "r",
-          cutoverRows = 0L)
+      withCutover(Cutover.Rank)(
+        Scale.groupedRankOrdered(df, Seq("ga", "gb"), Seq("v", "id"), "r"))
         .select("id", "r").as[(Long, Long)].collect().toMap
     }
     assert(twoPhase.size == rows.size, "no rows may vanish")
@@ -436,7 +437,7 @@ class ScaleSpec extends SparkSpecBase {
       s"the shapes need an all-NULL range and a NULL-headed one: $ranges")
     for ((df, name) <- Seq(a -> "a", b -> "b", c -> "c")) {
       def run(cutover: Long) = graft.core.CacheScope.scoped {
-        Scale.globalCumSum(df, "id", "v", cutoverRows = cutover)
+        withCutover(Cutover.Rank, cutover)(Scale.globalCumSum(df, "id", "v"))
           .select("id", "cum").as[(Long, Option[Long])].collect().toMap
       }
       val bounded = run(1L << 20)
@@ -469,8 +470,8 @@ class ScaleSpec extends SparkSpecBase {
       s"need group m over >= 3 ranges and an empty range: " +
         layout.map(_.size))
     def run(cutover: Long) = graft.core.CacheScope.scoped {
-      Scale.groupedRankOrdered(df, Seq("g"), Seq("v"), "r",
-          cutoverRows = cutover)
+      withCutover(Cutover.Rank, cutover)(
+        Scale.groupedRankOrdered(df, Seq("g"), Seq("v"), "r"))
         .select("g", "v", "r").as[(Option[String], Long, Long)].collect()
         .toSeq.sorted
     }
@@ -491,7 +492,8 @@ class ScaleSpec extends SparkSpecBase {
         .select(col("id"), (col("id") % 3).as("g"), (col("id") % 11).as("v"))
     val accSum = spark.sparkContext.longAccumulator("cumsum-upstream")
     val cum = graft.core.CacheScope.scoped {
-      Scale.globalCumSum(counted(accSum), "id", "v", cutoverRows = 16L)
+      withCutover(Cutover.Rank, 16L)(
+        Scale.globalCumSum(counted(accSum), "id", "v"))
         .select("id", "cum").as[(Long, Long)].collect()
     }
     assert(cum.length == n)
@@ -500,13 +502,171 @@ class ScaleSpec extends SparkSpecBase {
       s"globalCumSum ran its upstream ${accSum.value} rows for $n")
     val accRank = spark.sparkContext.longAccumulator("rank-upstream")
     val ranks = graft.core.CacheScope.scoped {
-      Scale.groupedRankOrdered(counted(accRank), Seq("g"), Seq("id"), "r",
-          cutoverRows = 16L)
+      withCutover(Cutover.Rank, 16L)(
+        Scale.groupedRankOrdered(counted(accRank), Seq("g"), Seq("id"), "r"))
         .select("id", "r").as[(Long, Long)].collect()
     }
     assert(ranks.length == n)
     assert(ranks.forall { case (id, r) => r == id / 3 + 1 })
     assert(accRank.value == n,
       s"groupedRankOrdered ran its upstream ${accRank.value} rows for $n")
+  }
+
+  /** Run `body` and return the call-site stack (innermost user frame
+    * first) of every Spark job and SQL execution it started. A SQL
+    * execution carries its caller's stack even when adaptive execution
+    * submits its jobs from another thread. Listener events arrive
+    * asynchronously, so a marker job brackets `body`: events before the
+    * opening marker are dropped, and the result waits until the closing
+    * marker has been delivered. */
+  private def jobSites[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val MarkKey = "graft.test.jobMark"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val marks = new java.util.concurrent.LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(MarkKey))) match {
+          case Some(m) => marks.put(m)
+          case None => sites.add(e.stageInfos.map(_.details).mkString("\n"))
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => sites.add(x.details)
+        case _ =>
+      }
+    }
+    def mark(m: String): Unit = {
+      sc.setLocalProperty(MarkKey, m)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(MarkKey, null)
+      var seen = ""
+      while (seen != m) {
+        seen = marks.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        assert(seen != null, s"job marker $m never reached the listener")
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      mark("open")
+      sites.clear()
+      val out = body
+      mark("close")
+      import scala.jdk.CollectionConverters._
+      (out, sites.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** One family's cutover boundary. `device(n)` runs the family's device
+    * on an input of `n` rows of the family's measure and returns the call
+    * sites of the jobs it started; `atScaleSite` names a frame only the
+    * at-scale side runs. At `bound` rows the small side runs after a
+    * probe, at `bound` + 1 the at-scale side runs after a probe, and at a
+    * bound of 0 the at-scale side runs with no probe job, also on an
+    * empty input when `empty`. */
+  private def cutoverBoundary(family: Cutover, bound: Long, atScaleSite: String,
+                              empty: Boolean = true)
+                             (device: Long => Seq[String]): Unit = {
+    def probes(sites: Seq[String]) = sites.count(_.contains("Scale$.atMostRows"))
+    def atScale(sites: Seq[String]) = sites.exists(_.contains(atScaleSite))
+    val at = withCutover(family, bound)(device(bound))
+    assert(probes(at) > 0 && !atScale(at),
+      s"${family.key}: $bound rows at bound $bound must probe and take " +
+        s"the small side:\n${at.mkString("\n--\n")}")
+    val past = withCutover(family, bound)(device(bound + 1))
+    assert(probes(past) > 0 && atScale(past),
+      s"${family.key}: ${bound + 1} rows at bound $bound must probe and " +
+        s"take the at-scale side:\n${past.mkString("\n--\n")}")
+    for (n <- if (empty) Seq(bound, 0L) else Seq(bound)) {
+      val off = withCutover(family, 0L)(device(n))
+      assert(probes(off) == 0 && atScale(off),
+        s"${family.key}: $n rows at bound 0 must take the at-scale side " +
+          s"with no probe job:\n${off.mkString("\n--\n")}")
+    }
+  }
+
+  test("rank cutover boundary: bound rows window, bound + 1 take the " +
+    "two-phase device, bound 0 never probes (globalCumSum, " +
+    "groupedRankOrdered)") {
+    val bound = 40L
+    def input(n: Long) =
+      spark.range(n).select(col("id"), (col("id") % 3).as("g"), lit(1L).as("v"))
+    cutoverBoundary(Cutover.Rank, bound, "Scale$.perPartition") { n =>
+      val (cum, sites) = jobSites(graft.core.CacheScope.scoped {
+        Scale.globalCumSum(input(n), "id", "v")
+          .select("id", "cum").as[(Long, Long)].collect().toSeq.sorted
+      })
+      assert(cum == (0L until n).map(i => (i, i + 1)))
+      sites
+    }
+    cutoverBoundary(Cutover.Rank, bound, "Scale$.perPartition") { n =>
+      val (ranks, sites) = jobSites(graft.core.CacheScope.scoped {
+        Scale.groupedRankOrdered(input(n), Seq("g"), Seq("id"), "r")
+          .select("id", "r").as[(Long, Long)].collect().toSeq.sorted
+      })
+      assert(ranks == (0L until n).map(i => (i, i / 3 + 1)))
+      sites
+    }
+  }
+
+  test("graph cutover boundary: bound edges solve on the driver, bound + 1 " +
+    "run the distributed fixpoint, bound 0 never probes — also on an " +
+    "empty graph (SCC, condensation, connected components)") {
+    val bound = 12L
+    // a directed ring of n distinct edges: one SCC, rep = n - 1
+    def ring(n: Long) =
+      spark.range(n).select(col("id").as("src"), ((col("id") + 1) % n).as("dst"))
+    cutoverBoundary(Cutover.Graph, bound, "Graph$.sccOfNormalized") { n =>
+      val (scc, sites) = jobSites(
+        graft.ops.Graph.stronglyConnectedComponents(ring(n))
+          .as[(Long, Long)].collect().toMap)
+      assert(scc == (0L until n).map(_ -> (n - 1)).toMap)
+      sites
+    }
+    cutoverBoundary(Cutover.Graph, bound, "Graph$.sccOfNormalized") { n =>
+      val (cond, sites) = jobSites(
+        graft.ops.Graph.sccCondensation(ring(n))
+          .as[(Long, Long, Long)].collect().toSeq)
+      assert(cond == (if (n == 0) Nil else Seq((n - 1, n, 0L))))
+      sites
+    }
+    // connected components count symmetrized edges: a path of n / 2 pairs
+    // is n of them, so the rank and graph tests' odd bound + 1 becomes a
+    // path one pair longer than the bound admits
+    cutoverBoundary(Cutover.Graph, bound, "labelSum") { n =>
+      val pairs = (n + 1) / 2
+      val verts = spark.range(pairs + 1).toDF("id")
+      val path = spark.range(pairs).select(col("id").as("a"), (col("id") + 1).as("b"))
+      val (cc, sites) = jobSites(
+        Dedup.connectedComponents(verts, path).as[(Long, Long)].collect().toMap)
+      assert(cc == (0L to pairs).map(_ -> 0L).toMap)
+      sites
+    }
+  }
+
+  test("near-dup cutover boundary: bound vectors take the exact scan, " +
+    "bound + 1 the certified IVF ladder, bound 0 never probes") {
+    val bound = 30L
+    val rnd = new scala.util.Random(11)
+    val vecs = (0L to bound).map(i => (i, Array.fill(8)(rnd.nextFloat() * 2f - 1f)))
+    // no empty corpus: the IVF ladder cannot train k cells on fewer than
+    // k vectors, so its at-scale side rejects one
+    cutoverBoundary(Cutover.NearDup, bound, "Similarity$.certifiedRung",
+        empty = false) { n =>
+      val emb = vecs.take(n.toInt).toDF("vec_id", "embedding")
+      val (pairs, sites) = jobSites(graft.core.CacheScope.scoped {
+        Similarity.embeddingNearDupPairsCertified(emb, tau = 0.5, k = 4,
+            tables = 2, sampleN = 16)
+          .as[(Long, Long, Double)].collect().toSet
+      })
+      val exact = graft.core.CacheScope.scoped {
+        Similarity.embeddingNearDupPairs(emb, tau = 0.5)
+          .as[(Long, Long, Double)].collect().toSet
+      }
+      assert(pairs == exact)
+      sites
+    }
   }
 }
