@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1147,14 +1147,19 @@ object Dedup {
     *
     * Hash-min label propagation: every vertex starts as its own component;
     * each round takes the min label over the closed neighborhood; fixpoint
-    * when the global label sum stops decreasing (labels are monotonically
-    * non-increasing, so an unchanged sum means no label moved). Rounds =
-    * graph diameter — near-dup clusters are shallow (dups of one document),
-    * so this converges in a handful of rounds; each round is one shuffle
-    * join + one aggregation, no driver-side graph state. Every round is
-    * eagerly localCheckpoint'ed, truncating lineage so round N's plan does
-    * not replay rounds 1..N−1 (at a real cluster use a reliable checkpoint
-    * dir for executor-loss tolerance; the algorithm is unchanged).
+    * when the labels stop moving (labels are monotonically non-increasing,
+    * so an unchanged Σ(id − label) means no label moved). Rounds = graph
+    * diameter + 1 — near-dup clusters are shallow (dups of one document),
+    * so this converges in a handful of rounds. The rounds run on
+    * [[graft.ops.Graph.neighbourhoodRounds]]: the closed neighbourhood
+    * (each pair both ways plus a self-loop per endpoint) is hash-partitioned
+    * and checkpointed once; round 1 is one aggregate of it, with no join;
+    * each later round joins it to the labels where both already lie and
+    * aggregates, ONE data exchange and one job per round, no driver-side
+    * graph state. The checkpoint of each round's labels truncates lineage
+    * and observes the convergence sum on the same job (at a real cluster
+    * use a reliable checkpoint dir for executor-loss tolerance; the
+    * algorithm is unchanged).
     *
     * The fixpoint runs over the EDGE-INCIDENT vertices only: a vertex in
     * no pair can never change its label, so it joins the result as an
@@ -1167,13 +1172,13 @@ object Dedup {
     *
     * With at most `driverBelow` symmetrized edges (by default the active
     * session's [[graft.ops.Scale.Cutover.Graph]] bound, 2^18; the rule is
-    * [[graft.ops.Scale.smallSide]]) the duplicate graph is
-    * COLLECTED and solved by driver-side union-find instead — the q42
-    * near-dup cutover device, applied to the fixpoint: a bounded
-    * edge list costs one collect and zero per-round shuffles, where
-    * the distributed loop pays 4-5 shuffles + a checkpoint PER ROUND
-    * in fixed overhead (measured ~2 s across q96's two fixpoints at
-    * sf0.1 for a 241-pair graph). The default (2^18 edges) admits
+    * [[graft.ops.Scale.smallSide]], fed the edge count the edge
+    * checkpoint's own job observes, so the decision runs no probe) the
+    * duplicate graph is COLLECTED and solved by driver-side union-find
+    * instead — the q42 near-dup cutover device, applied to the fixpoint: a
+    * bounded edge list costs one collect and zero per-round shuffles,
+    * where the distributed loop pays a job per round plus the closed
+    * neighbourhood's build in fixed overhead. The default (2^18 edges) admits
     * ~4 MB of raw longs but transiently ~50-100 MB of driver heap —
     * collect materializes boxed tuples plus the union-find HashMap —
     * which is the honest budget the threshold is sized to, not the
@@ -1207,17 +1212,15 @@ object Dedup {
     // caller's whole pair pipeline (minhash/IVF), and every fixpoint
     // round re-analyzes any plan that references it — a persisted frame
     // keeps that subtree alive in every round's analyzer pass, a
-    // checkpoint is a leaf. Checkpoint BEFORE symmetrizing: the union's
-    // two branches both reference the caller plan, so a post-union
-    // checkpoint ran the (expensive — minhash/IVF) pair pipeline TWICE
-    // in its one materialization job; checkpointing the directed
-    // relation first runs it once and the swap reads cached rows
-    val edges0 = edges.localCheckpoint(true)
-    // no second checkpoint: sym is a plain union over the checkpointed
-    // leaf, so every downstream read is two cached scans — a dedicated
-    // re-materialization job bought nothing
-    val sym = edges0.union(
-      edges0.select(col("__dst").as("__src"), col("__src").as("__dst")))
+    // checkpoint is a leaf. Checkpoint BEFORE symmetrizing: both
+    // directions read the caller plan, and a symmetrized relation over
+    // it would run the (expensive — minhash/IVF) pair pipeline TWICE;
+    // checkpointed first, it runs once, and the closed neighbourhood's
+    // explode reads cached rows
+    val counted = Observation()
+    val edges0 = edges.observe(counted, count(lit(1)).as("n"))
+      .localCheckpoint(true)
+    val directed = counted.get.get("n").fold(0L)(_.asInstanceOf[Long])
     // same try_cast discipline as the edges (r17 review: a plain cast
     // here contradicted the "dirty endpoints of BOTH kinds" contract —
     // under ANSI mode one non-numeric vertex id threw at action time
@@ -1225,85 +1228,69 @@ object Dedup {
     val verts = vertices.select(col(idCol).as("__v0"))
       .select(expr("try_cast(__v0 AS BIGINT)").as("id"))
       .filter(col("id").isNotNull)
-    // the probe runs on the directed relation, each row two symmetrized
-    // edges: nSym = 2·nDir ≤ driverBelow  ⟺  nDir ≤ ⌊driverBelow / 2⌋
-    // (here the leaf is a cached localCheckpoint, but the probe keeps the
-    // decision O(bound) by contract, not by cache luck)
-    if (graft.ops.Scale.smallSide(edges0, driverBelow, perRow = 2L)) {
-      // bounded duplicate graph: one collect, zero per-round shuffles.
-      // Union-by-min keeps every tree's root at the component's minimum
-      // id, so find() returns exactly the propagation fixpoint's label
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      // typed collect of the DIRECTED relation: union-find is
-      // direction-agnostic, so collecting the pre-swap half materializes
-      // half the boxed tuples the symmetrized relation would — the
-      // driver-heap hot spot the threshold is budgeted against
-      val sp = vertices.sparkSession
-      import sp.implicits._
-      edges0 // already long-typed and NULL-free from the initial select
-        .as[(Long, Long)]
-        .collect().foreach { case (a, b) =>
-          parent.getOrElseUpdate(a, a)
-          parent.getOrElseUpdate(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    // the checkpoint's job counts the directed relation as it fills it,
+    // each row two symmetrized edges: the cutover needs no probe job
+    val comp =
+      if (graft.ops.Scale.smallSide(directed, driverBelow, perRow = 2L))
+        componentsOnDriver(edges0)
+      else {
+        // hash-min over the closed neighbourhood: round 1 takes each
+        // vertex's least neighbour id (the self-loops keep its own), every
+        // later round its least neighbour label. Σ(id − comp) is 0 at the
+        // start and grows while any label falls, so an unchanged sum is
+        // the fixpoint
+        val dec = "decimal(38,0)"
+        val (labels, converged) = graft.ops.Graph.neighbourhoodRounds(edges0,
+            selfLoops = true, init = None, maxRounds = maxIters,
+            progress = Some(sum(col("id").cast(dec) - col("v").cast(dec)))) {
+          _.groupBy(col("__src").as("id")).agg(min(col("v")).as("v"))
         }
-      val comp = parent.keysIterator.map(v => (v, find(v))).toSeq
-        .toDF("id", "comp")
-      return comp.union(
-        verts.join(comp.select("id"), Seq("id"), "left_anti")
-          .select(col("id"), col("id").as("comp")))
-    }
-    // the fixpoint runs over the edge ENDPOINTS only (pairs are between
-    // known vertices, so the distinct src set IS the incident vertex
-    // set): per-round joins and checkpoints are duplicate-graph-sized,
-    // not corpus-sized — the difference between rounds × |dups| and
-    // rounds × |corpus| materializations at 100 TB
-    var labels = sym.select(col("__src").as("id")).distinct()
-      .select(col("id"), col("id").as("comp"))
-      .localCheckpoint(true)
-    // decimal sum: overflow-safe at any corpus size (ANSI mode raises on
-    // long-sum wrap); strictly decreasing until the fixpoint. Empty vertex
-    // set sums to SQL NULL — normalize to zero so the loop converges on
-    // round one instead of NPEing on compareTo
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val s = df.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0)
-      if (s == null) java.math.BigDecimal.ZERO else s
-    }
-    var last = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (iter < maxIters && !converged) {
-        val nbrMin = sym.join(labels, sym("__dst") === labels("id"))
-          .groupBy(col("__src").as("id")).agg(min(col("comp")).as("__nbr"))
-        val next = labels.join(nbrMin, Seq("id"), "left")
-          .select(col("id"),
-            least(col("comp"), coalesce(col("__nbr"), col("comp"))).as("comp"))
-          .localCheckpoint(true)
-        val s = labelSum(next)
-        labels = next
-        converged = s.compareTo(last) == 0
-        last = s
-        iter += 1
-    }
-    // the checkpointed edge/label RDDs are reclaimed by the
-    // ContextCleaner once unreferenced — localCheckpoint has no explicit
-    // release hook, so there is nothing to unpersist on the error path
-    require(converged,
-      s"connectedComponents did not converge in $maxIters rounds — " +
-        "component diameter exceeds the bound; raise maxIters")
-    // isolated vertices re-enter as identity labels — a lazy anti-join
-    // projection, never materialized through the loop
-    labels.union(
-      verts.join(labels.select("id"), Seq("id"), "left_anti")
+        // the checkpointed edge/label RDDs are reclaimed by the
+        // ContextCleaner once unreferenced — localCheckpoint has no
+        // explicit release hook, so there is nothing to unpersist on the
+        // error path
+        require(converged,
+          s"connectedComponents did not converge in $maxIters rounds — " +
+            "component diameter exceeds the bound; raise maxIters")
+        labels.select(col("id"), col("v").as("comp"))
+      }
+    // both sides label the edge endpoints only; isolated vertices re-enter
+    // as identity labels — a lazy anti-join projection, never
+    // materialized through the loop
+    comp.union(
+      verts.join(comp.select("id"), Seq("id"), "left_anti")
         .select(col("id"), col("id").as("comp")))
+  }
+
+  /** [[connectedComponents]]' small side: the directed (`__src`, `__dst`)
+    * relation collected and solved by union-find into (id, comp) labels of
+    * its endpoints. Union-by-min keeps every tree's root at the
+    * component's minimum id, so find() returns exactly the propagation
+    * fixpoint's label. */
+  private def componentsOnDriver(edges0: DataFrame): DataFrame = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    // typed collect of the DIRECTED relation: union-find is
+    // direction-agnostic, so collecting the pre-swap half materializes
+    // half the boxed tuples the symmetrized relation would — the
+    // driver-heap hot spot the threshold is budgeted against
+    val sp = edges0.sparkSession
+    import sp.implicits._
+    edges0 // already long-typed and NULL-free from the initial select
+      .as[(Long, Long)]
+      .collect().foreach { case (a, b) =>
+        parent.getOrElseUpdate(a, a)
+        parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+    parent.keysIterator.map(v => (v, find(v))).toSeq.toDF("id", "comp")
   }
 
   /** Near-duplicate cluster assignment: exact n-gram Jaccard pairs at τ →

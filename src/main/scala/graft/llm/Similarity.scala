@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -211,12 +211,23 @@ object Similarity {
                         iters: Int = 8, sampleN: Int = 1024,
                         idCol: String = "vec_id",
                         vecCol: String = "embedding")
-  : Array[Array[Array[Float]]] = {
-    val rows = embeddings
+  : Array[Array[Array[Float]]] =
+    ivfCentroidsOf(ivfSample(embeddings, sampleN, idCol, vecCol), k, tables,
+      iters)
+
+  /** The bounded, seed-stable training sample of [[trainIvfCentroids]]:
+    * at most `sampleN` (id, v) rows in hash order. */
+  private def ivfSample(embeddings: DataFrame, sampleN: Int, idCol: String,
+                        vecCol: String): Array[Row] =
+    embeddings
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .sort(abs(xxhash64(col("id"))), col("id")) // deterministic pseudo-random sample
       .limit(sampleN)
       .collect()
+
+  /** [[trainIvfCentroids]]' Lloyd runs over a collected sample. */
+  private def ivfCentroidsOf(rows: Array[Row], k: Int, tables: Int,
+                             iters: Int): Array[Array[Array[Float]]] = {
     require(rows.length >= k, s"IVF needs ≥ k=$k sample vectors, got ${rows.length}")
     val ids = rows.map(_.getLong(0))
     val unit: Array[Array[Double]] = rows.map { r =>
@@ -452,7 +463,10 @@ object Similarity {
     * exact 0.82 s vs raw IVF 0.84 s warm), and its recall certainty is
     * free, where the sampled certificate's is not. So every corpus small
     * enough to measure exhaustively IS measured exhaustively, and the
-    * sampled machinery governs only at the scale it was built for.
+    * sampled machinery governs only at the scale it was built for. Past
+    * a bound below `k` (a bound of 0 included), a corpus whose training
+    * sample holds fewer than `k` vectors escalates to the exact scan as
+    * well: it has no `k` cells to train.
     *
     * 100 TB posture: the certificate costs one bounded-sample m×n scan
     * plus per-rung joins on sample-touching candidates only; the one
@@ -484,30 +498,34 @@ object Similarity {
       return embeddingNearDupPairs(e, tau, "id", "v")
     certifiedRung(e, tau, k, tables, iters, sampleN, certQueries,
         targetRecall, probeLadder) match {
-      case (Some(p), ranked) =>
+      case Some((p, ranked)) =>
         verifyPairs(e, sameCellPairs(ranked.filter(col("rnk") <= p)),
           tau, "id", "v")
-      case (None, _) => embeddingNearDupPairs(e, tau, "id", "v")
+      case None => embeddingNearDupPairs(e, tau, "id", "v")
     }
   }
 
   /** The certificate ladder of [[embeddingNearDupPairsCertified]] over its
     * (id: long, v) frame: the first rung of `probeLadder` whose sampled
-    * recall reaches `targetRecall` (None when none does), with the ranked
-    * assignment scan — ONE corpus pass for the whole ladder — that the
-    * certified branch joins. Scope-tracked caches: call inside a
-    * `CacheScope`. */
+    * recall reaches `targetRecall`, with the ranked assignment scan — ONE
+    * corpus pass for the whole ladder — that the certified branch joins.
+    * None when no rung certifies, or when the training sample holds fewer
+    * than `k` vectors (a corpus that small has no `k` cells to train, so
+    * it escalates to the exact scan the same way). Scope-tracked caches:
+    * call inside a `CacheScope`. */
   private[graft] def certifiedRung(e: DataFrame, tau: Double, k: Int,
                                    tables: Int, iters: Int, sampleN: Int,
                                    certQueries: Int, targetRecall: Double,
                                    probeLadder: Seq[Int])
-  : (Option[Int], DataFrame) = {
+  : Option[(Int, DataFrame)] = {
+    val sample = ivfSample(e, sampleN, "id", "v")
+    if (sample.length < k) return None
     val ids = certSampleIds(e, certQueries)
     val truth = graft.core.CacheScope.track(
       certTruthPairs(e, ids, tau).select("id_a", "id_b").persist())
     val nTruth = truth.count()
     val need = math.ceil(targetRecall * nTruth).toLong
-    val cents = trainIvfCentroids(e, k, tables, iters, sampleN, "id", "v")
+    val cents = ivfCentroidsOf(sample, k, tables, iters)
     val ranked = graft.core.CacheScope.track(
       rankedIvfAssignments(e, cents, probeLadder.max, "id", "v").persist())
     ranked.count()
@@ -522,7 +540,7 @@ object Similarity {
         truth.join(cand, Seq("id_a", "id_b"), "left_semi").count() >= need
       }
     }
-    (rung, ranked)
+    rung.map((_, ranked))
   }
 
   /** Scalar int8 quantization of the embedding column — the 4× storage cut

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -264,6 +264,106 @@ object Graph {
       .distinct()
       .localCheckpoint()
 
+  /** The round driver of the neighbourhood fixpoints
+    * ([[graft.llm.Dedup.connectedComponents]]' distributed side,
+    * [[bfsDistance]], [[labelPropagation]]): each round gives every vertex
+    * an aggregate of its neighbours' state.
+    *
+    * The edge side is built once: each undirected pair of `edges`' first
+    * two (non-NULL) columns becomes the arcs a→b and b→a as
+    * (`__src`, `__dst`) rows, plus a→a and b→b with `selfLoops`, so that a
+    * vertex's own state rides the same join as its neighbours'. One
+    * explode, hash-partitioned on `__dst` and checkpointed; it never
+    * moves again.
+    *
+    * The state is (`id`, `v`), hash-partitioned on `id` the same way. A
+    * round joins the two on `__dst = id`, where neither side moves, and
+    * `step` aggregates the joined (`__src`, `__dst`, `v`) rows by `__src`
+    * into the next (`id`, `v`) state. The aggregate's exchange is the
+    * round's one data exchange, and it leaves the state partitioned for
+    * the next round's join. With `init` None, round 1 reads each vertex's
+    * own id as its state, with no join.
+    *
+    * `edges` and `init` should read checkpoints: the rounds plan without
+    * adaptive execution (below), and a caller's pipeline under them
+    * would run that way too. Each round's state is checkpointed eagerly,
+    * which cuts its lineage. `progress`, if given, is a decimal aggregate over the state that is 0
+    * at the initial state and grows while any `v` moves (so only a
+    * monotone fixpoint has one). The checkpoint's job observes it, so the
+    * convergence test costs no job of its own, and the rounds stop after
+    * the first one that leaves it unchanged. Returns the state after at
+    * most `maxRounds` rounds and whether `progress` settled.
+    *
+    * Adaptive execution is off while the rounds are planned and run. A
+    * checkpoint of an adaptive plan reports no output partitioning, so
+    * the next round's join would shuffle the edge side again. Without it,
+    * each checkpoint is also one job instead of one job per stage. The
+    * setting is session-wide while the rounds run and is restored after. */
+  private[graft] def neighbourhoodRounds(edges: DataFrame, selfLoops: Boolean,
+                                         init: Option[DataFrame],
+                                         maxRounds: Int,
+                                         progress: Option[Column] = None)
+                                        (step: DataFrame => DataFrame)
+  : (DataFrame, Boolean) = {
+    require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
+    val spark = edges.sparkSession
+    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val (a, b) = (col(edges.columns(0)), col(edges.columns(1)))
+    def arc(s: Column, d: Column) = struct(s.as("s"), d.as("d"))
+    val arcs = Seq(arc(a, b), arc(b, a)) ++
+      (if (selfLoops) Seq(arc(a, a), arc(b, b)) else Nil)
+    // without a user repartition on top, the aggregate's exchange could
+    // plan a different partition count; with one, the planner drops it
+    // when the aggregate already delivers this partitioning
+    def checkpointed(state: DataFrame) =
+      state.repartition(nParts, col("id")).localCheckpoint(true)
+    nonAdaptive(spark) {
+      val closed = edges.filter(a.isNotNull && b.isNotNull)
+        .select(explode(array(arcs: _*)).as("__arc"))
+        .select(col("__arc.s").as("__src"), col("__arc.d").as("__dst"))
+        .repartition(nParts, col("__dst"))
+        .localCheckpoint(true)
+      var state = init.map(checkpointed)
+      var last = java.math.BigDecimal.ZERO
+      var settled = false
+      var round = 0
+      while (round < maxRounds && !settled) {
+        val joined = state match {
+          case None => closed.select(col("__src"), col("__dst"),
+            col("__dst").as("v"))
+          case Some(s) => closed
+            .join(s.hint("shuffle_hash"), closed("__dst") === s("id"))
+            .select(col("__src"), col("__dst"), col("v"))
+        }
+        val next = step(joined)
+        state = Some(progress match {
+          case None => checkpointed(next)
+          case Some(p) =>
+            val seen = Observation()
+            val cp = checkpointed(next.observe(seen, p.as("progress")))
+            val now = seen.get.get("progress").collect {
+              case d: java.math.BigDecimal => d
+            }.getOrElse(java.math.BigDecimal.ZERO)
+            settled = now.compareTo(last) == 0
+            last = now
+            cp
+        })
+        round += 1
+      }
+      (state.get, settled)
+    }
+  }
+
+  /** Runs `body` with adaptive execution off in `spark`'s session, then
+    * restores the setting. */
+  private def nonAdaptive[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, false)
+    try body
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** Per-vertex triangle statistics over an undirected simple graph —
     * degree, incident-triangle count, and local clustering coefficient.
     *
@@ -375,37 +475,33 @@ object Graph {
     * twin runs the identical recurrence and the gate checks the
     * distributed form bit-for-bit, converged or not.
     *
-    * 100 TB posture: per round one neighbor-vs-labels key join, one
-    * map-side-combined (vertex, label) count, one per-vertex argmax as
-    * a MIN over (−count, label) structs (an aggregate, never a rank
-    * window), one left join back onto the vertex set; localCheckpoint
-    * truncates lineage per round.
+    * 100 TB posture: the rounds run on [[neighbourhoodRounds]]. The
+    * neighbour arcs (each edge both ways) are hash-partitioned and
+    * checkpointed once; round 1 counts each vertex's neighbour ids with
+    * no join, every later round joins the arcs to the labels where both
+    * already lie. The joined rows move ONCE, to their vertex's partition,
+    * where the (vertex, label) count and the per-vertex argmax (a MIN over
+    * (−count, label) structs — an aggregate, never a rank window) both
+    * run: one data exchange and one job per round. Every vertex of the
+    * graph has a neighbour, so every vertex gets a vote each round and no
+    * join back onto the vertex set is needed.
     *
     * Output: (v, label) — community assignment after `rounds` rounds.
     */
   def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val e = canonicalEdges(edges)
-    val nbr = e.select(col("a").as("u"), col("b").as("w"))
-      .union(e.select(col("b").as("u"), col("a").as("w")))
-      .localCheckpoint()
-    val verts = nbr.select(col("u").as("v")).distinct().localCheckpoint()
-    var labels = verts.select(col("v"), col("v").as("label"))
-      .localCheckpoint()
-    for (_ <- 0 until rounds) {
-      val pick = nbr
-        .join(labels.select(col("v").as("w"), col("label")), Seq("w"))
-        .groupBy(col("u"), col("label")).agg(count(lit(1)).as("__c"))
-        .groupBy(col("u"))
-        .agg(min(struct((-col("__c")).as("nc"), col("label").as("lbl")))
-          .as("__m"))
-        .select(col("u").as("v"), col("__m.lbl").as("__new"))
-      labels = labels.join(pick, Seq("v"), "left")
-        .select(col("v"),
-          coalesce(col("__new"), col("label")).as("label"))
-        .localCheckpoint()
+    val (labels, _) = neighbourhoodRounds(canonicalEdges(edges),
+        selfLoops = false, init = None, maxRounds = rounds) {
+      // one exchange on the vertex (the session's shuffle partitions, the
+      // driver's count) serves both aggregates: the count's grouping
+      // contains the argmax's
+      _.repartition(col("__src"))
+        .groupBy(col("__src"), col("v")).agg(count(lit(1)).as("__c"))
+        .groupBy(col("__src").as("id"))
+        .agg(min(struct((-col("__c")).as("nc"), col("v").as("lbl"))).as("__m"))
+        .select(col("id"), col("__m.lbl").as("v"))
     }
-    labels
+    labels.select(col("id").as("v"), col("v").as("label"))
   }
 
   /** Newman modularity of a vertex partition over an undirected simple
@@ -468,37 +564,33 @@ object Graph {
     * (the q138/q162/q166 device): the SQL twin replays the identical
     * recurrence, so the gate checks bit-for-bit at any horizon.
     *
-    * 100 TB posture: per round one neighbor-vs-distance key join, one
-    * map-side-combined per-vertex MIN, one full outer join against the
-    * (monotonically growing, ≤ |V|-row) distance relation;
-    * localCheckpoint truncates lineage per round. Seeds with no edges
-    * still appear at distance 0 — membership comes from the caller's
-    * seed relation, not the edge scan.
+    * 100 TB posture: the rounds run on [[neighbourhoodRounds]]. The
+    * closed neighbourhood (each edge both ways plus a self-loop per
+    * endpoint, which carries a vertex's own distance at +0) is
+    * hash-partitioned and checkpointed once; a round joins it to the
+    * (≤ |V|-row, monotonically growing) distance relation where both
+    * already lie and takes one map-side-combined per-vertex MIN: one data
+    * exchange and one job per round. Seeds with no edges still appear at
+    * distance 0 — membership comes from the caller's seed relation, not
+    * the edge scan — joined back after the rounds.
     *
     * Output: (v, dist) for every vertex within `rounds` hops.
     */
   def bfsDistance(edges: DataFrame, seeds: DataFrame,
                   rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val e = canonicalEdges(edges)
-    val nbr = e.select(col("a").as("u"), col("b").as("w"))
-      .union(e.select(col("b").as("u"), col("a").as("w")))
+    val seed = seeds.select(col(seeds.columns.head).as("id")).distinct()
       .localCheckpoint()
-    var dist = seeds.select(col(seeds.columns.head).as("v")).distinct()
-      .select(col("v"), lit(0L).as("dist"))
-      .localCheckpoint()
-    for (_ <- 0 until rounds) {
-      val cand = nbr
-        .join(dist.select(col("v").as("w"), col("dist")), Seq("w"))
-        .groupBy(col("u")).agg(min(col("dist") + lit(1L)).as("__nd"))
-        .select(col("u").as("v"), col("__nd"))
-      dist = dist.join(cand, Seq("v"), "full")
-        .select(col("v"),
-          coalesce(least(col("dist"), col("__nd")),
-            col("dist"), col("__nd")).as("dist"))
-        .localCheckpoint()
+    val (dist, _) = neighbourhoodRounds(canonicalEdges(edges),
+        selfLoops = true, init = Some(seed.select(col("id"), lit(0L).as("v"))),
+        maxRounds = rounds) {
+      _.groupBy(col("__src").as("id"))
+        .agg(min(col("v") +
+          when(col("__src") === col("__dst"), 0L).otherwise(1L)).as("v"))
     }
-    dist
+    dist.union(seed.join(dist.select("id"), Seq("id"), "left_anti")
+        .select(col("id"), lit(0L).as("v")))
+      .select(col("id").as("v"), col("v").as("dist"))
   }
 
   /** One-row structural summary of an undirected simple graph: vertex /

@@ -367,7 +367,16 @@ object Scale {
     * even built then, and every input takes the at-scale side. */
   def smallSide(probed: => DataFrame, bound: Long, perRow: Long = 1L)
   : Boolean =
-    bound > 0L && atMostRows(probed, bound / perRow)
+    underBound(bound, perRow)(atMostRows(probed, _))
+
+  /** [[smallSide]] for a relation whose `rows` a job that ran anyway has
+    * already counted (an observed metric): the same rule, no probe. */
+  def smallSide(rows: Long, bound: Long, perRow: Long): Boolean =
+    underBound(bound, perRow)(rows <= _)
+
+  private def underBound(bound: Long, perRow: Long)(fits: Long => Boolean)
+  : Boolean =
+    bound > 0L && fits(bound / perRow)
 
   /** The rank devices' switch: persist the input (scope-tracked) and ask
     * [[smallSide]] at the session's [[Cutover.Rank]] bound; after a probe

@@ -177,7 +177,7 @@ class LlmOpsSpec extends SparkSpecBase {
           col("embedding").as("v")),
         tau, k, tables, iters = 8, sampleN = 1024, certQueries = 256,
         targetRecall = 1.0, probeLadder = probeLadder)
-      ._1
+      .map(_._1)
 
   test("certified near-dup: the gate corpus certifies at rung 1 (sampled " +
     "recall 1.0) and the certified output IS the exact relation") {
@@ -329,6 +329,53 @@ class LlmOpsSpec extends SparkSpecBase {
         Dedup.connectedComponents(dirtyVerts, pairs))
       .as[(Long, Long)].collect().toMap
     assert(distDv == got, s"distributed path on dirty vertices: $distDv")
+  }
+
+  test("connected components: 40 seeded random undirected graphs — the " +
+    "distributed fixpoint (graph key 0) equals the driver union-find and " +
+    "a brute-force reachability closure") {
+    val rnd = new scala.util.Random(71L) // fixed seed: deterministic test
+    for (trial <- 1 to 40) {
+      val n = 2 + rnd.nextInt(14)
+      val pairs: Seq[(Long, Long)] = trial match {
+        case 1 => Nil // empty edge set
+        // a chain of diameter 12 over scrambled ids
+        case 2 => (0L until 12L).map(i => ((i * 5) % 13, ((i + 1) * 5) % 13))
+        case _ =>
+          // equal endpoints are self-loops; some pairs come again as is,
+          // some reversed
+          val base = Seq.fill(rnd.nextInt(2 * n))(
+            (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+          base ++ base.filter(_ => rnd.nextDouble() < 0.3).map(_.swap) ++
+            base.filter(_ => rnd.nextDouble() < 0.2)
+      }
+      // a random subset of the ids plus a few no pair touches: pair
+      // endpoints may be absent from the vertices, vertices isolated
+      val verts = (0L until n + 3L).filter(_ => rnd.nextDouble() < 0.7)
+      val nodes = verts ++ pairs.flatMap(p => Seq(p._1, p._2))
+      val reach = nodes.map(v => v -> scala.collection.mutable.Set(v)).toMap
+      var grew = true
+      while (grew) {
+        grew = false
+        for ((a, b) <- pairs; (x, y) <- Seq((a, b), (b, a)))
+          if (!reach(y).subsetOf(reach(x))) { reach(x) ++= reach(y); grew = true }
+      }
+      val want = reach.map { case (v, r) => v -> r.min }
+      val (vdf, pdf) = (verts.toDF("id"), pairs.toDF("id_a", "id_b"))
+      def labels(df: DataFrame): Map[Long, Long] = {
+        val rows = df.as[(Long, Long)].collect()
+        assert(rows.map(_._1).distinct.length == rows.length,
+          s"trial $trial: a vertex labeled twice: ${rows.toSeq}")
+        rows.toMap
+      }
+      val driver = labels(Dedup.connectedComponents(vdf, pdf))
+      val dist = labels(withCutover(Cutover.Graph)(
+        Dedup.connectedComponents(vdf, pdf)))
+      assert(driver == want, s"trial $trial: driver $driver want $want " +
+        s"pairs=$pairs verts=$verts")
+      assert(dist == driver, s"trial $trial: distributed $dist != driver " +
+        s"$driver pairs=$pairs verts=$verts")
+    }
   }
 
   test("near-dup clusters equal a driver-side union-find over the exact " +

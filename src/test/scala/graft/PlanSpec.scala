@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.col
+
 import graft.ops.Scale.Cutover
 
 /** Plan-shape regression tests: lock in the physical-plan properties the
@@ -821,6 +823,96 @@ class PlanSpec extends SparkSpecBase {
     assert(!p.contains("row_number() windowspecdefinition"),
       s"the rank must be the range carry — the carry, never a window:\n$p")
     spark.sqlContext.clearCache()
+  }
+
+  /** The executed plan of every checkpoint `body` runs, in order. The
+    * listener hears of executions asynchronously, so a marker query after
+    * `body` is waited for: the listener bus delivers in order. */
+  private def checkpointPlans(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val mark = "graft_checkpoint_plans_marker"
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") plans.add(qe.executedPlan.toString)
+        else if (qe.analyzed.output.exists(_.name == mark)) marked.countDown()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception)
+      : Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(mark).collect()
+      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker query never reached the listener")
+      import scala.jdk.CollectionConverters._
+      plans.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The neighbourhood-round shape ([[graft.ops.Graph]]'s round driver) in
+    * the checkpoints `plans` of one device call: the edge side is built
+    * once, with one exchange, its hash partitioning on `__dst`; there are
+    * `rounds` rounds; each round's only exchange is its aggregate's, on
+    * `__src`, and every round with a join reads the checkpointed edge
+    * side below that join with no exchange above the scan. Returns the
+    * rounds' plans. */
+  private def neighbourhoodRounds(plans: Seq[String], rounds: Int,
+                                  joins: Int): Seq[String] = {
+    def exchanges(p: String) = p.linesIterator.filter(_.contains("Exchange ")).toSeq
+    val all = plans.mkString("\n====\n")
+    val builds = plans.filter(_.contains("Generate explode"))
+    assert(builds.size == 1 && exchanges(builds.head).size == 1 &&
+      exchanges(builds.head).head.contains("hashpartitioning(__dst"),
+      s"the closed neighbourhood must be built once, one exchange on __dst:\n$all")
+    val rs = plans.filter(p => p.contains("HashAggregate(keys=[__src"))
+    assert(rs.size == rounds, s"expected $rounds rounds:\n$all")
+    for (r <- rs) {
+      val ex = exchanges(r)
+      assert(ex.size == 1 && ex.head.contains("hashpartitioning(__src"),
+        s"a round's one data exchange must be its aggregate's:\n$r")
+      val lines = r.linesIterator.toIndexedSeq
+      val join = lines.indexWhere(_.contains("Join"))
+      if (join >= 0) {
+        assert(lines.indexWhere(_.contains("Exchange ")) < join &&
+          lines.drop(join).exists(_.contains("Scan ExistingRDD[__src")),
+          s"the round must join the checkpointed edge side in place:\n$r")
+      }
+    }
+    assert(rs.count(_.contains("Join")) == joins,
+      s"expected $joins rounds with a join:\n$all")
+    rs
+  }
+
+  test("connected components at scale: the closed neighbourhood is built " +
+    "once, round 1 has no join, and every later round joins the edge " +
+    "side in place with one data exchange, the aggregate's") {
+    // a path 0-1-…-5 plus an isolated vertex: 5 label-moving rounds and
+    // one that confirms the fixpoint
+    val verts = spark.range(7).toDF("id")
+    val path = spark.range(5).select(col("id").as("a"), (col("id") + 1).as("b"))
+    val plans = checkpointPlans(withCutover(Cutover.Graph)(
+      graft.llm.Dedup.connectedComponents(verts, path).collect()))
+    neighbourhoodRounds(plans, rounds = 6, joins = 5)
+  }
+
+  test("q171 BFS: three neighbourhood rounds, each joining the edge side " +
+    "in place with one data exchange, the aggregate's") {
+    val plans = checkpointPlans(graft.core.CacheScope.scoped {
+      SparkEntry.queries("q171_bfs_distance")(spark, sfDir).collect()
+    })
+    neighbourhoodRounds(plans, rounds = 3, joins = 3)
+  }
+
+  test("q166 label propagation: round 1 counts neighbour ids with no " +
+    "join, rounds 2-3 join the edge side in place; the count and the " +
+    "argmax share the round's one data exchange") {
+    val plans = checkpointPlans(graft.core.CacheScope.scoped {
+      SparkEntry.queries("q166_label_propagation")(spark, sfDir).collect()
+    })
+    neighbourhoodRounds(plans, rounds = 3, joins = 2)
   }
 
   test("q208 HITS: per-round propagation is edge-keyed joins — no " +

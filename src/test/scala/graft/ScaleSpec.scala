@@ -65,10 +65,13 @@ class ScaleSpec extends SparkSpecBase {
     val empty = Seq.empty[(Long, Long)].toDF("doc_id", "n_chars")
     assert(Scale.globalCumSum(empty, "doc_id", "n_chars").count() == 0)
     spark.sqlContext.clearCache()
-    // empty vertex set: label sum is SQL NULL — must converge, not NPE
-    assert(Dedup.connectedComponents(
-      Seq.empty[Long].toDF("id"),
-      Seq.empty[(Long, Long)].toDF("id_a", "id_b")).count() == 0)
+    // empty vertex set: the label sum is SQL NULL — must converge, not
+    // NPE — on both sides of the graph cutover
+    val noVerts = Seq.empty[Long].toDF("id")
+    val noPairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    assert(Dedup.connectedComponents(noVerts, noPairs).count() == 0)
+    assert(withCutover(Cutover.Graph)(
+      Dedup.connectedComponents(noVerts, noPairs)).count() == 0)
     // chain 1-2-3-4 needs 3 propagation rounds; 1 round must throw, not
     // silently return half-merged labels. A graph bound of 0 forces the
     // DISTRIBUTED fixpoint — the default driver union-find cutover has
@@ -565,21 +568,29 @@ class ScaleSpec extends SparkSpecBase {
     * at-scale side runs. At `bound` rows the small side runs after a
     * probe, at `bound` + 1 the at-scale side runs after a probe, and at a
     * bound of 0 the at-scale side runs with no probe job, also on an
-    * empty input when `empty`. */
+    * empty input. A device whose decision reads a row count
+    * that one of its own jobs already observed names its small side's
+    * frame as `observedSmallSite`: it must then run no probe job at any
+    * bound, and `bound` rows must run that frame. */
   private def cutoverBoundary(family: Cutover, bound: Long, atScaleSite: String,
-                              empty: Boolean = true)
+                              observedSmallSite: Option[String] = None)
                              (device: Long => Seq[String]): Unit = {
     def probes(sites: Seq[String]) = sites.count(_.contains("Scale$.atMostRows"))
+    def decided(sites: Seq[String]) =
+      if (observedSmallSite.isEmpty) probes(sites) > 0 else probes(sites) == 0
     def atScale(sites: Seq[String]) = sites.exists(_.contains(atScaleSite))
+    def small(sites: Seq[String]) = !atScale(sites) &&
+      observedSmallSite.forall(s => sites.exists(_.contains(s)))
+    val how = if (observedSmallSite.isEmpty) "probe" else "run no probe job"
     val at = withCutover(family, bound)(device(bound))
-    assert(probes(at) > 0 && !atScale(at),
-      s"${family.key}: $bound rows at bound $bound must probe and take " +
+    assert(decided(at) && small(at),
+      s"${family.key}: $bound rows at bound $bound must $how and take " +
         s"the small side:\n${at.mkString("\n--\n")}")
     val past = withCutover(family, bound)(device(bound + 1))
-    assert(probes(past) > 0 && atScale(past),
-      s"${family.key}: ${bound + 1} rows at bound $bound must probe and " +
+    assert(decided(past) && atScale(past),
+      s"${family.key}: ${bound + 1} rows at bound $bound must $how and " +
         s"take the at-scale side:\n${past.mkString("\n--\n")}")
-    for (n <- if (empty) Seq(bound, 0L) else Seq(bound)) {
+    for (n <- Seq(bound, 0L)) {
       val off = withCutover(family, 0L)(device(n))
       assert(probes(off) == 0 && atScale(off),
         s"${family.key}: $n rows at bound 0 must take the at-scale side " +
@@ -634,8 +645,10 @@ class ScaleSpec extends SparkSpecBase {
     }
     // connected components count symmetrized edges: a path of n / 2 pairs
     // is n of them, so the rank and graph tests' odd bound + 1 becomes a
-    // path one pair longer than the bound admits
-    cutoverBoundary(Cutover.Graph, bound, "labelSum") { n =>
+    // path one pair longer than the bound admits. The edge checkpoint's
+    // job counts the pairs, so no bound runs a probe
+    cutoverBoundary(Cutover.Graph, bound, "Graph$.neighbourhoodRounds",
+        observedSmallSite = Some("Dedup$.componentsOnDriver")) { n =>
       val pairs = (n + 1) / 2
       val verts = spark.range(pairs + 1).toDF("id")
       val path = spark.range(pairs).select(col("id").as("a"), (col("id") + 1).as("b"))
@@ -651,10 +664,9 @@ class ScaleSpec extends SparkSpecBase {
     val bound = 30L
     val rnd = new scala.util.Random(11)
     val vecs = (0L to bound).map(i => (i, Array.fill(8)(rnd.nextFloat() * 2f - 1f)))
-    // no empty corpus: the IVF ladder cannot train k cells on fewer than
-    // k vectors, so its at-scale side rejects one
-    cutoverBoundary(Cutover.NearDup, bound, "Similarity$.certifiedRung",
-        empty = false) { n =>
+    // the empty corpus too: a training sample of fewer than k vectors
+    // escalates to the exact scan instead of training k cells
+    cutoverBoundary(Cutover.NearDup, bound, "Similarity$.certifiedRung") { n =>
       val emb = vecs.take(n.toInt).toDF("vec_id", "embedding")
       val (pairs, sites) = jobSites(graft.core.CacheScope.scoped {
         Similarity.embeddingNearDupPairsCertified(emb, tau = 0.5, k = 4,
