@@ -70,27 +70,4 @@ object VectorFunctions {
   def vec_dot(a: Column, b: Column): Column =
     GraftExpressionBridge.column(FloatVecDot(
       GraftExpressionBridge.expression(a), GraftExpressionBridge.expression(b)))
-
-  /** Register `vec_dot` / `vec_cosine` for SQL use
-    * (`SELECT vec_dot(embedding, other) FROM …`). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "vec_dot", exprs => FloatVecDot(exprs(0), exprs(1)), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "vec_cosine", exprs => {
-        def dot(a: org.apache.spark.sql.catalyst.expressions.Expression,
-                b: org.apache.spark.sql.catalyst.expressions.Expression) =
-          FloatVecDot(a, b)
-        import org.apache.spark.sql.catalyst.expressions.{Divide, Multiply, Sqrt}
-        Divide(dot(exprs(0), exprs(1)),
-          Multiply(Sqrt(dot(exprs(0), exprs(0))), Sqrt(dot(exprs(1), exprs(1)))))
-      }, "scala_udf")
-  }
-
-  def vec_norm(a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(vec_dot(a, a))
-
-  def vec_cosine(a: Column, b: Column): Column =
-    vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
 }

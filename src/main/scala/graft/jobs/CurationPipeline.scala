@@ -222,11 +222,8 @@ object CurationPipeline {
 
     tick("mixture")
 
-    Seq("exact" -> exact, "near_dup" -> afterNear,
-      "chunk_rewrite" -> rewritten, "substring_rewrite" -> unstraddled,
-      "semantic" -> afterSem, "repetition" -> afterRep,
-      "quality" -> afterQuality, "length_trim" -> trimmed,
-      "source_cap" -> capped, "mixture" -> mixed)
+    StageNames.zip(Seq(exact, afterNear, rewritten, unstraddled, afterSem,
+      afterRep, afterQuality, trimmed, capped, mixed))
   }
 
   /** The composed per-document verdict — q96's relation: every input

@@ -105,9 +105,11 @@ object Graph {
     // caller's whole lazy edge pipeline (q138: the co-click self-join,
     // rebuilt once per round) plus the degree aggregate and its join —
     // loop-invariant work × iters (guide §2.4). The round now reads one
-    // cached (src, dst, __deg) leaf whose join-output partitioning on
-    // src is preserved by the checkpoint, so only the n-row ranks side
-    // moves per round.
+    // cached (src, dst, __deg) leaf. The checkpoint cuts the lineage but
+    // does not keep the join's partitioning on src: a checkpoint of an
+    // adaptive plan reports UnknownPartitioning, so at scale every
+    // round's join re-shuffles the edge side as well as the ranks (at
+    // small sizes AQE broadcasts the ranks instead).
     val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
     val ed = e.join(deg, Seq("src")).localCheckpoint(true)
@@ -181,7 +183,9 @@ object Graph {
     val tw = e.groupBy(col("src")).agg(sum(col("w")).as("__tw"))
     // r18: loop-invariant total-weight join hoisted and checkpointed —
     // same move as pageRank's degree-annotated edges (each round used to
-    // recompute the tw aggregate and re-shuffle the cached edge relation)
+    // recompute the tw aggregate). As there, the checkpoint cuts the
+    // lineage but keeps no src partitioning: at scale each round's join
+    // still re-shuffles the edge side
     val ed = e.join(tw, Seq("src")).localCheckpoint(true)
     val base = (u * 15L) / 100L
     var ranks = verts.select(col("id"), lit(u).as("r")).localCheckpoint()
@@ -231,7 +235,9 @@ object Graph {
       .localCheckpoint()
     // r18: same loop-invariant hoist as pageRank — one cached
     // degree-annotated edge leaf instead of re-running the caller's edge
-    // pipeline + degree aggregate + join every round
+    // pipeline + degree aggregate + join every round. The checkpoint cuts
+    // the lineage only: at scale each round's join still re-shuffles the
+    // edge side
     val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
     val ed = e.join(deg, Seq("src")).localCheckpoint(true)
@@ -738,6 +744,9 @@ object Graph {
     * two 1-row aggregates broadcast back by the crossJoin idiom; state
     * is one (id, score) row per vertex per side; lineage truncated per
     * round with localCheckpoint, same contract as the PageRank family.
+    * The checkpointed edge relation keeps no key partitioning (a
+    * checkpoint of an adaptive plan reports none), so at scale both
+    * joins re-shuffle it every round.
     *
     * Output: (id, hub_micro, auth_micro) after `iters` full rounds.
     */

@@ -237,24 +237,9 @@ object Scale {
       .agg(topFreqColumn(k).name("top"))
       .select(explode(col("top")).as(Seq("item", "cnt")))
 
-  /** Pre-r16 top-freq stores recorded `k=<n>` — the SAME key set the
-    * KMV family uses, which is why r16 renamed the key to `tfk=`. The
-    * rename shipped with no migration hint, so a store written by a
-    * pre-rename revision failed every read with a bare "not a top-freq
-    * store" (r16 ADVICE). This hint upgrades that to an explicit
-    * migration message: the fix is a one-line rewrite of the store's
-    * `_graft_layout` record, not a rebuild of the data. */
-  private val TopFreqLegacyHints = Map(
-    Set("k") -> ("has the legacy pre-rename top-freq layout 'k=<n>' — " +
-      "or is a KMV store, the key sets collide, which is why the key " +
-      "was renamed. If this store was written by appendTopFreqStore " +
-      "before the rename, rewrite its _graft_layout record once from " +
-      "'k=<n>' to 'tfk=<n>' (the rows are unchanged); if it is a KMV " +
-      "store, use mergedKmvEstimate or mergedKmvHashes"))
-
-  /** Misra-Gries heavy-hitter STORE — the frequency member of the
-    * mergeable-store family (bloom words OR, HLL registers MAX,
-    * histogram counters ADD; MG counters ADD with a decrement budget):
+  /** Misra-Gries heavy-hitter STORE — the "what is hot" member of the
+    * epoch-store families (bloom words OR, CMS counters ADD; MG counters
+    * ADD with a decrement budget):
     * [[writeTopFreqStore]]/[[appendTopFreqStore]] persist one ≤ k-row
     * summary per epoch, [[mergedHeavyHitters]] sums counters per item
     * over any epoch span. Contract (Agarwal et al., mergeable
@@ -262,19 +247,19 @@ object Scale {
     * n/(k+1) over the merged span's n rows, and every item with true
     * count > n/(k+1) is present in the merge — so the store answers
     * "what was hot across these epochs" with k·epochs rows of state
-    * where the exact answer needs the vocabulary. Unlike the
-    * bloom/HLL/histogram stores the COUNTERS are not bit-reproducible
-    * across runs (which rows absorb the decrements depends on partition
-    * fold order) — the BOUND is the contract, and the tests pin the
+    * where the exact answer needs the vocabulary. Unlike the bloom and
+    * CMS stores the COUNTERS are not bit-reproducible across runs
+    * (which rows absorb the decrements depends on partition fold
+    * order) — the BOUND is the contract, and the tests pin the
     * bound, not bits. The layout record pins k: a span mixing summary
     * widths has no single decrement budget, so mismatched appends fail
     * loud.
     */
-  private[graft] val TopFreqStore = Sketch.StoreFamily("top-freq",
+  private val TopFreqStore = Sketch.StoreFamily("top-freq",
     Seq("tfk"),
-    _ => "item STRING, cnt BIGINT, epoch BIGINT",
-    (rows, _) => rows.groupBy(col("item")).agg(sum(col("cnt")).as("cnt")),
-    Sketch.SelfOverwritingAdd, TopFreqLegacyHints)
+    "item STRING, cnt BIGINT, epoch BIGINT",
+    _.groupBy(col("item")).agg(sum(col("cnt")).as("cnt")),
+    Sketch.SelfOverwritingAdd)
 
   /** Create/replace a top-freq store at `path` with one epoch's summary. */
   def writeTopFreqStore(items: org.apache.spark.sql.Dataset[String],
@@ -283,7 +268,7 @@ object Scale {
       k)
 
   /** Append one epoch's ≤ k-row summary; fails loud on a missing layout
-    * record, a different k, or an epoch at or below the fold watermark.
+    * record or a different k.
     * The epoch's partition is rewritten by dynamic overwrite, so an
     * at-least-once re-delivery (foreachBatch replays the same batch id
     * after a failure) replaces its own summary instead of adding a
@@ -293,12 +278,6 @@ object Scale {
                          path: String, epoch: Long, k: Int): Unit =
     Sketch.appendStore(TopFreqStore, topFreqSummary(items, k), path, epoch,
       k)
-
-  /** Quiesced compaction: every epoch EXCEPT the newest folds into one
-    * per-item counter-sum baseline (see [[Sketch.compactStore]]). */
-  def compactTopFreqStore(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit =
-    Sketch.compactStore(spark, path, TopFreqStore)
 
   /** Merge a store's epochs (all, or the span `epochFilter` keeps) into
     * (item, est_cnt), counters summed per item — ≤ k rows per epoch in,

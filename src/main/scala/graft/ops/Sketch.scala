@@ -207,9 +207,9 @@ object Sketch {
       .agg(sum("__c").as("counter"))
   }
 
-  private[graft] val CmsStore = StoreFamily("CMS", Seq("cmsd", "cmsw"),
-    _ => "row_j INT, bucket BIGINT, counter BIGINT, epoch BIGINT",
-    (rows, _) => rows.groupBy(col("row_j"), col("bucket"))
+  private val CmsStore = StoreFamily("CMS", Seq("cmsd", "cmsw"),
+    "row_j INT, bucket BIGINT, counter BIGINT, epoch BIGINT",
+    _.groupBy(col("row_j"), col("bucket"))
       .agg(sum(col("counter")).as("counter")),
     SelfOverwritingAdd)
 
@@ -221,20 +221,12 @@ object Sketch {
       epoch, d, w)
 
   /** Append one epoch's counter slab (its own partition, rewritten by a
-    * replay); fails loud on a geometry mismatch or an epoch at or below
-    * the fold watermark. */
+    * replay); fails loud on a geometry mismatch. */
   def appendCmsStore(items: DataFrame, path: String, epoch: Long,
                      valueCol: String = "item", d: Int = 4,
                      w: Int = 64): Unit =
     appendStore(CmsStore, cmsCounterSlab(items, valueCol, d, w), path,
       epoch, d, w)
-
-  /** The merged (row_j, bucket, counter) relation of an epoch span —
-    * per-cell SUM, d·w rows out at most, never the stream. */
-  def mergedCmsCounters(spark: org.apache.spark.sql.SparkSession,
-                        path: String,
-                        epochFilter: Column = lit(true)): DataFrame =
-    mergedStore(spark, path, CmsStore, epochFilter)._2
 
   /** Probe `probes`' distinct values against the merged span: est = min
     * over hash rows of the summed counter — bit-identical to
@@ -267,12 +259,6 @@ object Sketch {
       .groupBy(col(valueCol))
       .agg(min(coalesce(col("counter"), lit(0L))).as("est_cnt"))
   }
-
-  /** Quiesced compaction: every epoch except the newest folds into one
-    * per-cell SUM baseline at [[FoldEpoch]] (see [[compactStore]]). */
-  def compactCmsStore(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Unit =
-    compactStore(spark, path, CmsStore)
 
   /** HyperLogLog registers + estimate with NO floating-point anywhere
     * until the final two operations: the 57-bit fingerprint splits into
@@ -356,8 +342,7 @@ object Sketch {
   /** The full m-row HLL register relation for one batch of items:
     * (bucket ∈ [0, m), register = max rank, 0 where the bucket is empty —
     * the spine is part of the relation so two register relations merge by
-    * a plain bucket-key MAX with no outer-join fiddling). This is the
-    * mergeable unit [[writeHllStore]] persists per epoch.
+    * a plain bucket-key MAX with no outer-join fiddling).
     */
   def hllRegisters(items: DataFrame, valueCol: String = "item",
                    p: Int = 6): DataFrame = {
@@ -386,9 +371,9 @@ object Sketch {
 
   /** HLL set algebra (q177): estimate |A ∩ B| by inclusion–exclusion
     * over three register relations — A's, B's, and their bucket-wise
-    * MAX union (the union of two HLL sketches IS the register max, the
-    * same merge the store uses; there is no register-level intersection,
-    * which is why the estimate subtracts). Every harmonic numerator is
+    * MAX union (the union of two HLL sketches IS the register max; there
+    * is no register-level intersection, which is why the estimate
+    * subtracts). Every harmonic numerator is
     * the exact integer the q140 estimator carries, the three estimates
     * are single divisions by the folded constant, and the intersection
     * is `(est_a + est_b) − est_u` in that fixed association — so even
@@ -426,8 +411,7 @@ object Sketch {
   }
 
   /** One-row (m, harm_num, n_zero, estimate) from an m-row register
-    * relation — the estimator stage shared by the one-shot
-    * [[hllEstimate]] and the store-merged [[mergedHllEstimate]]. */
+    * relation — [[hllEstimate]]'s estimator stage. */
   def estimateFromRegisters(registers: DataFrame, p: Int): DataFrame = {
     val m = 1L << p
     // Σ 2^(maxRank − register), maxRank = bits + 1, exact in a BIGINT
@@ -442,73 +426,43 @@ object Sketch {
   }
 
   // ---------------------------------------------------------------------
-  // The epoch-store protocol. Eight store families persist one mergeable
-  // sketch slab per epoch (a day, a micro-batch): HLL registers, bloom
-  // words, KMV and grouped KMV bottom-k hashes, histogram and grouped
-  // histogram counters, CMS counters and MG (top-freq) summaries. A
-  // store is a parquet dir of per-epoch rows plus a `_graft_layout`
-  // record pinning what the rows cannot say (precision, geometry, grid,
-  // group column). Each family is a [[StoreFamily]] descriptor kept next
-  // to its slab builder and post-merge read; create, append, merged
-  // read, compaction and the streaming runner step live here once, with
-  // the replay rule chosen by the family's [[ReplayClass]].
+  // The epoch-store protocol. Three store families persist one mergeable
+  // sketch slab per epoch (a day, a micro-batch): bloom words, CMS
+  // counters and MG (top-freq) summaries. A store is a parquet dir of
+  // per-epoch rows plus a `_graft_layout` record pinning what the rows
+  // cannot say (geometry, summary width). Each family is a
+  // [[StoreFamily]] descriptor kept next to its slab builder and
+  // post-merge read; create, append, merged read and the runners'
+  // create-or-append test ([[storeExists]]) live here once, with the
+  // replay rule chosen by the family's [[ReplayClass]]. Stores are never compacted: state grows
+  // by one bounded slab per epoch, the posture of the reference's
+  // per-day HBase state (`ActionLogJobSecond.java:359-376`).
   // ---------------------------------------------------------------------
 
   /** How a family survives an at-least-once replay of an epoch — the
     * snapshot / replay / idempotent-sink model of "State Management in
-    * Apache Flink" (VLDB 2017), in three classes. */
+    * Apache Flink" (VLDB 2017). */
   private[graft] sealed trait ReplayClass
 
-  /** HLL MAX, bloom OR, KMV set union: a replayed slab merges to the
-    * same sketch. Plain append, accepted even at or below the fold
-    * watermark (an at-least-once source replaying a folded micro-batch
-    * must not crash-loop; the re-appended epoch is live again, see
-    * [[guardFoldedWindow]]); the fold merges every epoch, and its
-    * watermark exists for readers only. */
+  /** Bloom OR: a replayed slab merges to the same sketch, so an epoch
+    * is a plain append. */
   private[graft] case object Idempotent extends ReplayClass
-
-  /** Histogram counters ADD, so a replayed slab double-counts: plain
-    * append, refused at or below the fold watermark (folded rows can no
-    * longer witness the duplicate) and for an epoch id already live in
-    * the store; the fold merges every epoch. */
-  private[graft] case object ExactlyOnceAdd extends ReplayClass
 
   /** CMS and MG counters ADD, made replay-safe by the write layout: each
     * epoch is its own `epoch=<id>` partition, appended by dynamic
     * overwrite, so a re-delivered batch rewrites its own dir (read-side
     * dedup is no alternative: MG summaries are not bit-reproducible
-    * across runs). Appends at or below the fold watermark are refused,
-    * and the fold keeps the newest epoch live, so a replay of the last
-    * batch stays a self-overwrite instead of re-adding folded rows. */
+    * across runs). */
   private[graft] case object SelfOverwritingAdd extends ReplayClass
 
   /** One store family. `keys` are its layout keys in record order; the
     * exact key set is the family's identity, so a reader pointed at a
     * foreign store fails loud ([[readStoreLayout]]). `rowDdl` is the
-    * per-epoch row schema given the layout (the grouped families name
-    * their group column there). `fold` merges any set of epoch rows into
-    * one slab without the epoch column; it is both the merged read and
-    * the compaction. `hints` upgrade specific foreign key sets to a
-    * redirecting message (e.g. "use mergedGroupedHistQuantiles"). */
+    * per-epoch row schema. `merge` merges any set of epoch rows into one
+    * slab without the epoch column: the merged read. */
   private[graft] final case class StoreFamily(
-      name: String, keys: Seq[String],
-      rowDdl: Map[String, String] => String,
-      fold: (DataFrame, Map[String, String]) => DataFrame,
-      replay: ReplayClass,
-      hints: Map[Set[String], String] = Map.empty)
-
-  /** The reserved epoch id every fold writes its baseline under —
-    * OUTSIDE the id space of real batches (stream batch ids and date
-    * epochs are ≥ 0), so an at-least-once replay of a batch after a
-    * fold can never collide with the folded baseline: idempotent-merge
-    * families (HLL MAX, bloom OR, KMV union) re-merge the replayed slab
-    * harmlessly next to it, and the partitioned ADD families' per-epoch
-    * dynamic overwrite keeps rewriting the replayed batch's OWN
-    * partition. */
-  val FoldEpoch: Long = -1L
-
-  /** The fold-watermark layout key: the max epoch id a fold erased. */
-  private val FoldedThroughKey = "folded_through"
+      name: String, keys: Seq[String], rowDdl: String,
+      merge: DataFrame => DataFrame, replay: ReplayClass)
 
   private def layoutFile(spark: org.apache.spark.sql.SparkSession,
                          path: String) = {
@@ -517,9 +471,8 @@ object Sketch {
   }
 
   /** The `_graft_layout` record of the dir at `path`, if it has one. */
-  private[graft] def readLayoutRecord(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[String] = {
+  private def readLayoutRecord(spark: org.apache.spark.sql.SparkSession,
+                               path: String): Option[String] = {
     val (fs, lp) = layoutFile(spark, path)
     if (!fs.exists(lp)) None
     else {
@@ -532,9 +485,8 @@ object Sketch {
 
   /** Write `line` as the `_graft_layout` record of the dir at `path` —
     * after the rows, since an overwrite write replaces the dir. */
-  private[graft] def writeLayoutRecord(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, line: String): Unit = {
+  private def writeLayoutRecord(spark: org.apache.spark.sql.SparkSession,
+                                path: String, line: String): Unit = {
     val (fs, lp) = layoutFile(spark, path)
     val out = fs.create(lp, true)
     try out.write((line + "\n")
@@ -550,25 +502,12 @@ object Sketch {
   private def layoutLine(fam: StoreFamily, values: Seq[Any]): String =
     fam.keys.zip(values).map { case (k, v) => s"$k=$v" }.mkString(",")
 
-  private def recordedLine(fam: StoreFamily,
-                           kv: Map[String, String]): String =
-    layoutLine(fam, fam.keys.map(kv))
-
-  /** Whether a store (with its layout record) exists at `path` — the
-    * create-vs-append decision of incremental writers. The layout
-    * filename is shared by every family, so this answers for all. */
-  def storeExists(spark: org.apache.spark.sql.SparkSession,
-                  path: String): Boolean = {
-    val (fs, lp) = layoutFile(spark, path)
-    fs.exists(lp)
-  }
-
   /** Store-row read that survives a FILELESS store dir (r17 review
     * fallout): families whose per-epoch relation is data-derived —
     * MG summaries (a uniform rotation legitimately decrements every
-    * counter away), CMS/KMV/histogram slabs of an EMPTY first batch —
-    * can write ZERO rows, and `partitionBy` of an empty frame creates a
-    * dir holding only `_SUCCESS` + the layout record. A plain
+    * counter away), the CMS slab of an EMPTY first batch — can write
+    * ZERO rows, and `partitionBy` of an empty frame creates a dir
+    * holding only `_SUCCESS` + the layout record. A plain
     * `spark.read.parquet` then dies with UNABLE_TO_INFER_SCHEMA on a
     * store that is perfectly healthy, just empty. The fallback returns
     * an empty frame with the family's declared row schema, so merges
@@ -587,12 +526,10 @@ object Sketch {
 
   /** THE layout-record reader: parses the record's `k1=v1,k2=v2` pairs
     * and validates the family's EXACT key set — key-set identity is what
-    * distinguishes the families (`k=` KMV vs `bits=,k=` bloom vs `p=`
-    * HLL vs the two histogram grids vs `gk=,group=` …), and the r14
-    * KMV-reads-HLL bug showed the drift risk is real — so any store
-    * pointed at the wrong family's reader fails loud with the family
-    * name and the recorded text. The fold watermark is optional: a
-    * folded store is still its family. */
+    * distinguishes the families (`bits=,k=` bloom vs `cmsd=,cmsw=` CMS
+    * vs `tfk=` top-freq), and the r14 KMV-reads-HLL bug showed the
+    * drift risk is real — so any store pointed at the wrong family's
+    * reader fails loud with the family name and the recorded text. */
   private def readStoreLayout(spark: org.apache.spark.sql.SparkSession,
                               path: String,
                               fam: StoreFamily): Map[String, String] = {
@@ -603,41 +540,19 @@ object Sketch {
         "(the layout cannot be recovered from rows)")
     val recorded = record.get
     val kv = parseLayout(recorded)
-    val core = kv.keySet - FoldedThroughKey
     val keys = fam.keys.toSet
-    fam.hints.get(core).foreach(h => require(core == keys,
-      s"store at $path $h (layout record '$recorded')"))
-    require(core == keys,
+    require(kv.keySet == keys,
       s"store at $path is not a ${fam.name} store (layout record " +
         s"'$recorded'; a ${fam.name} layout carries exactly " +
         s"${keys.toSeq.sorted.mkString("[", ",", "]")})")
     kv
   }
 
-  /** The fold watermark recorded in ANY graft store's layout, if the
-    * store has ever been compacted: every epoch at or below it was
-    * merged into the [[FoldEpoch]] baseline and no longer exists as
-    * per-epoch rows. Windowed readers slicing history on a store that
-    * also gets compacted should consult this before trusting an epoch
-    * span. Family-agnostic on purpose: "was this compacted" is a
-    * question every family answers the same way. A negative value (a
-    * pre-r17 nothing-to-fold compaction's vestigial record) reads as
-    * nothing folded away. */
-  def storeFoldedThrough(spark: org.apache.spark.sql.SparkSession,
-                         path: String): Option[Long] =
-    readLayoutRecord(spark, path)
-      .flatMap(parseLayout(_).get(FoldedThroughKey))
-      .map(_.toLong).filter(_ >= 0L)
-
-  /** Every store create/append calls this first (r17 ADVICE): a
-    * negative caller epoch — `writeXStore(epoch = -1)` most of all —
-    * would create a partition indistinguishable from the [[FoldEpoch]]
-    * baseline, silently corrupting [[guardFoldedWindow]] /
-    * [[compactStore]] semantics. Rejected uniformly at create AND
-    * append so the invariant cannot be bypassed by the create path. */
+  /** Every store create/append calls this first: epoch ids are a
+    * stream's batch ids or dates, never negative. Rejected at create
+    * AND append so no entry point can write one. */
   private def requireEpochId(epoch: Long): Unit =
-    require(epoch >= 0, s"epoch must be >= 0 (negative ids are reserved " +
-      s"for fold baselines): $epoch")
+    require(epoch >= 0, s"epoch must be >= 0: $epoch")
 
   /** `slab` with the epoch column: first for the plain families, last
     * (then the `epoch=` partition key) for [[SelfOverwritingAdd]]. */
@@ -672,290 +587,42 @@ object Sketch {
   }
 
   /** Append one epoch's `slab`. Fails loud when the store has no layout
-    * record or was written with a different layout (mixed precisions,
-    * geometries or grids silently merge garbage), and applies the
-    * family's replay class. */
+    * record or was written with a different layout (mixed geometries or
+    * summary widths silently merge garbage); the family's replay class
+    * decides how a re-delivered epoch lands. */
   private[graft] def appendStore(fam: StoreFamily, slab: => DataFrame,
                                  path: String, epoch: Long,
                                  layout: Any*): Unit = {
     requireEpochId(epoch)
     val s = slab
-    val spark = s.sparkSession
-    val kv = readStoreLayout(spark, path, fam)
-    val (recorded, requested) = (recordedLine(fam, kv),
+    val kv = readStoreLayout(s.sparkSession, path, fam)
+    val (recorded, requested) = (layoutLine(fam, fam.keys.map(kv)),
       layoutLine(fam, layout))
     require(recorded == requested,
       s"${fam.name} store at $path was written with ($recorded), append " +
         s"requested ($requested) — rebuild the store, mixed layouts " +
         "cannot merge")
-    if (fam.replay != Idempotent)
-      kv.get(FoldedThroughKey).foreach(ft => require(epoch > ft.toLong,
-        s"epoch $epoch was folded into the baseline of $path (watermark " +
-          s"$ft) — ADD-merged ${fam.name} counters double-count on " +
-          "replay; use a fresh epoch id above the watermark"))
-    if (fam.replay == ExactlyOnceAdd) {
-      val dup = readStoreRows(spark, path, fam.rowDdl(kv))
-        .filter(col("epoch") === epoch).limit(1).count()
-      require(dup == 0L,
-        s"epoch $epoch already present in $path — ADD-merged counters " +
-          "double-count on replay; use a fresh epoch id")
-    }
     writeEpoch(fam, s, path, epoch, create = false)
   }
 
   /** A store's layout and its merged slab over the epochs `epochFilter`
-    * keeps (all by default): the family's fold over the filtered rows,
-    * after [[guardFoldedWindow]] has refused a window over folded
-    * epochs. Reads bounded slabs, never a corpus. */
+    * keeps (all by default): the family's merge over the filtered rows.
+    * Reads bounded slabs, never a corpus. */
   private[graft] def mergedStore(spark: org.apache.spark.sql.SparkSession,
                                  path: String, fam: StoreFamily,
                                  epochFilter: Column)
   : (Map[String, String], DataFrame) = {
     val kv = readStoreLayout(spark, path, fam)
-    val rows = readStoreRows(spark, path, fam.rowDdl(kv))
-    guardFoldedWindow(spark, path, kv, epochFilter)
-    (kv, fam.fold(rows.filter(epochFilter), kv))
+    val rows = readStoreRows(spark, path, fam.rowDdl)
+    (kv, fam.merge(rows.filter(epochFilter)))
   }
 
-  /** Quiesced in-place compaction: a long-running monitor appends one
-    * slab per micro-batch forever, so the merged read grows with elapsed
-    * triggers while the useful content stays bounded. The fold is the
-    * family's own merge, so every merged read is bit-identical across it.
-    *  - [[Idempotent]] / [[ExactlyOnceAdd]]: every epoch folds into one
-    *    baseline at [[FoldEpoch]].
-    *  - [[SelfOverwritingAdd]]: every epoch EXCEPT the newest folds; the
-    *    newest partition stays live so a replayed last batch remains a
-    *    self-overwrite. A store with one live epoch folds nothing.
-    *
-    * The `folded_through` watermark advances monotonically to the max
-    * folded id and is omitted when nothing was ever folded (a store that
-    * never lost per-epoch rows must not arm the folded-window guard).
-    * A parked store left by a crashed swap is recovered first (the
-    * layout read would otherwise fail on the torn window). Single-writer
-    * while the owning stream is quiesced; the swap is [[swapFolded]]. */
-  private[graft] def compactStore(spark: org.apache.spark.sql.SparkSession,
-                                  path: String, fam: StoreFamily): Unit = {
-    graft.sinks.Sinks.recoverSwap(spark, path)
-    val kv = readStoreLayout(spark, path, fam)
-    // cast: a partitionBy("epoch") column reads back with an INFERRED
-    // (int-sized) type when every dir name fits one
-    val rows = readStoreRows(spark, path, fam.rowDdl(kv))
-      .withColumn("epoch", col("epoch").cast("long"))
-    def maxEpoch(df: DataFrame): Option[Long] = {
-      val r = df.agg(max(col("epoch"))).head()
-      if (r.isNullAt(0)) None else Some(r.getLong(0))
-    }
-    val prevFt = kv.get(FoldedThroughKey).map(_.toLong).getOrElse(FoldEpoch)
-    def line(folded: Option[Long]) = withFoldWatermark(
-      recordedLine(fam, kv), folded.fold(prevFt)(math.max(prevFt, _)))
-    if (fam.replay == SelfOverwritingAdd)
-      maxEpoch(rows).foreach { newest =>
-        val below = rows.filter(col("epoch") < newest)
-        swapFolded(spark, path, line(maxEpoch(below)),
-          fam.fold(below, kv).withColumn("epoch", lit(FoldEpoch))
-            .unionByName(rows.filter(col("epoch") === newest)),
-          partitionCols = Seq("epoch"))
-      }
-    else
-      swapFolded(spark, path, line(maxEpoch(rows)),
-        withEpoch(fam, fam.fold(rows, kv), FoldEpoch))
-  }
-
-  /** One micro-batch of a streaming store runner, shared by all of
-    * them: recover a swap the previous run left parked, create the store
-    * on its first batch or append the epoch, then fold on the
-    * `compactEvery` cadence (0 = never). Recovery comes BEFORE the
-    * exists-check: a batch replayed into a torn fold window would
-    * otherwise see no store, overwrite-create one holding only itself,
-    * and the next fold's recovery would then delete the parked history
-    * as a stale leftover. The fold runs between batch commits, so it is
-    * single-writer; a fold that lands before the checkpoint commit only
-    * means the batch replays next to the baseline, which the runners'
-    * replay classes absorb (an idempotent merge, or a newest epoch the
-    * fold kept live). */
-  private[graft] def epochStep(fam: StoreFamily, slab: DataFrame,
-                               path: String, epoch: Long,
-                               compactEvery: Int, layout: Any*): Unit = {
-    val spark = slab.sparkSession
-    graft.sinks.Sinks.recoverSwap(spark, path)
-    if (storeExists(spark, path))
-      appendStore(fam, slab, path, epoch, layout: _*)
-    else createStore(fam, slab, path, epoch, layout: _*)
-    if (compactEvery > 0 && epoch % compactEvery == compactEvery - 1)
-      compactStore(spark, path, fam)
-  }
-
-  /** Layout line with the fold watermark appended — OMITTED when the
-    * fold had nothing to erase (ft < 0): a store that never lost
-    * per-epoch rows must not carry a vestigial watermark
-    * ([[storeFoldedThrough]] answers "was anything folded away"). */
-  private def withFoldWatermark(base: String, ft: Long): String =
-    if (ft >= 0L) s"$base,$FoldedThroughKey=$ft" else base
-
-  /** The swap half of every compaction: write the folded relation plus
-    * the layout record into the swap's tmp dir and publish it under
-    * [[graft.sinks.Sinks.replaceDir]] — a crash mid-swap leaves either
-    * the old store or the folded one, never a torn dir. The folded plan
-    * MUST read the live store lazily: it materializes during the tmp
-    * write, before the live dir moves. */
-  private def swapFolded(spark: org.apache.spark.sql.SparkSession,
-                         path: String, layoutLine: String,
-                         folded: DataFrame,
-                         partitionCols: Seq[String] = Nil): Unit =
-    graft.sinks.Sinks.replaceDir(spark, path) { tmp =>
-      val w = folded.write
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(tmp)
-      writeLayoutRecord(spark, tmp, layoutLine)
-    }
-
-  /** Post-fold window guard (r16 ADVICE, tightened by the r17 review):
-    * a fold erases the per-epoch rows at or below the recorded
-    * `folded_through` watermark, so an epoch window that claims any
-    * folded id can only return empty/partial data — the span's own rows
-    * were merged into the [[FoldEpoch]] baseline. The guard refuses
-    * exactly when it can PROVE the overlap: the filter rejects the
-    * baseline (a read including the baseline legitimately sees the
-    * whole folded history) AND accepts at least one epoch in [0, ft] —
-    * point-evaluated against a local range with limit(1), no store
-    * read. Windows entirely above the watermark pass even when they
-    * match nothing (a dashboard polling the current epoch before its
-    * append lands must get its empty answer, not an error — the
-    * r17-review false positive). Watermarks below zero (a compaction
-    * that had nothing to fold) arm nothing.
-    *
-    * Proof cost, by domain size (the r17 VERDICT #3 refinement): below
-    * 2^25 the probe is the EXACT [0, ft] range pass — a few ms of
-    * codegen for batch-id and yyyymmdd-style domains (21001231 < 2^25).
-    * For larger domains (unix seconds/millis epochs), where the exact
-    * pass would scan billions of synthetic rows on every read, the probe
-    * degrades to a SAMPLED one: the endpoints, a dense run at each end
-    * of [0, ft], and a linear grid across it — ~48k local points, so any
-    * folded-window claim wider than ft/2^14 (about 30 h of millis for a
-    * 2026 unix-millis watermark, seconds-wide for a unix-seconds one) or
-    * touching either end is still PROVEN and refused. A sampled miss
-    * passes: refusal only ever fires on proof, so the dashboard-poll
-    * empty window can never false-refuse; undetected narrow interior
-    * windows fall back to the documented skip path (the layout still
-    * carries the watermark; callers have [[storeFoldedThrough]]). A
-    * filter that references non-epoch columns (legal against the full
-    * store schema) cannot be point-evaluated against the synthetic
-    * one-column frames — AnalysisException from the probe falls back to
-    * the unguarded read for the same reason (r17 ADVICE), never to a
-    * spurious unresolved-column error. And a below-watermark epoch an
-    * idempotent-family replay RE-APPENDED is live again — the refusal
-    * consults the store's actual epoch set and fires only for claimed
-    * epochs with no per-epoch rows left (r17 ADVICE's false-refusal
-    * class). */
-  private def guardFoldedWindow(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      kv: Map[String, String], epochFilter: Column): Unit =
-    kv.get(FoldedThroughKey).map(_.toLong)
-      .filter(_ >= 0L).foreach { ft =>
-      try {
-        val seesBaseline = !spark.range(1)
-          .select(lit(FoldEpoch).as("epoch"))
-          .filter(epochFilter).isEmpty
-        if (!seesBaseline) {
-          val probes =
-            if (ft < (1L << 25))
-              spark.range(0L, ft + 1).select(col("id").as("epoch"))
-            else {
-              // endpoints + dense runs at both ends + a 2^14 grid:
-              // every probe point is genuinely in [0, ft], so a hit is
-              // a real folded-id claim, never a false positive
-              val dense = 1L << 14
-              val step = ft / dense
-              val ends = spark.range(0L, dense.min(ft + 1)).toDF("id")
-              val tail = spark.range((ft - dense).max(0L), ft + 1)
-                .toDF("id")
-              val grid = spark.range(0L, dense)
-                .select((col("id") * step).as("id"))
-              ends.union(tail).union(grid).select(col("id").as("epoch"))
-            }
-          val accepted = probes.filter(epochFilter)
-          val claimsBelowWatermark = !accepted.limit(1).isEmpty
-          // live-epoch refinement (r17 ADVICE): an idempotent-family
-          // replay may have re-appended an already-folded epoch, whose
-          // complete slab is then LIVE again — a window over it answers
-          // real rows and must pass. Refuse only when the filter claims
-          // a below-watermark id with NO per-epoch rows in the store.
-          // The live set is O(#epochs) — sketch stores hold bounded
-          // slabs per epoch, never corpora — and is consulted only on
-          // the (rare) would-refuse path.
-          val claimsFolded = claimsBelowWatermark && {
-            val live = scala.util.Try(
-              spark.read.parquet(path).select(col("epoch").cast("long"))
-                .filter(col("epoch") >= 0L && col("epoch") <= ft)
-                .distinct().collect().map(_.getLong(0)).toSet)
-              .getOrElse(Set.empty[Long])
-            live.isEmpty ||
-              !accepted.filter(!col("epoch").isInCollection(live))
-                .limit(1).isEmpty
-          }
-          require(!claimsFolded,
-            s"epoch window over $path accepts epochs at or below the " +
-              s"fold watermark $ft but excludes the $FoldEpoch baseline " +
-              s"— the store was folded through epoch $ft and those " +
-              s"epochs' rows no longer exist per-epoch; include epoch " +
-              s"$FoldEpoch for the full folded history, or use epochs " +
-              s"above $ft")
-        }
-      } catch {
-        case _: org.apache.spark.sql.AnalysisException => ()
-      }
-    }
-
-  // ---------------------------------------------------------------------
-  // Persistent register store: the incremental-UV layer. The reference
-  // kept a per-day user SET in HBase and counted it per dashboard refresh
-  // (flink-statistics ActionLogJobSecond.java:359-376) — exact but
-  // corpus-sized state. Here each epoch (a day, a batch) persists its m
-  // bounded registers as (epoch, bucket, register) rows — the full m-row
-  // spine per epoch; any span of epochs merges with a bucket-key MAX
-  // (registers are max-mergeable by construction) into one estimate —
-  // state is m rows per epoch regardless of corpus size, and the merged
-  // result is bit-identical to recomputing over the union of the epochs'
-  // items, which is what the parity test pins. The layout pins `p` (the
-  // precision defines both the bucket split and the rank width; mixed-p
-  // registers silently estimate garbage). MAX is idempotent: a replayed
-  // epoch merges to the identical registers.
-  // ---------------------------------------------------------------------
-
-  private[graft] val HllStore = StoreFamily("HLL", Seq("p"),
-    _ => "epoch BIGINT, bucket BIGINT, register INT",
-    (rows, _) => rows.groupBy(col("bucket"))
-      .agg(max(col("register")).as("register")),
-    Idempotent)
-
-  /** Create/replace an HLL register store at `path` with one epoch. */
-  def writeHllStore(items: DataFrame, path: String, epoch: Long,
-                    valueCol: String = "item", p: Int = 6): Unit =
-    createStore(HllStore, hllRegisters(items, valueCol, p), path, epoch, p)
-
-  /** Append one epoch's registers; fails loud on a missing layout record
-    * or a different precision. */
-  def appendHllStore(items: DataFrame, path: String, epoch: Long,
-                     valueCol: String = "item", p: Int = 6): Unit =
-    appendStore(HllStore, hllRegisters(items, valueCol, p), path, epoch, p)
-
-  /** Merge a store's epochs (all, or the ones `epochFilter` keeps — e.g.
-    * a date range for a "UV over the last 7 days" ask) into one
-    * (m, harm_num, n_zero, estimate) row: MAX register per bucket across
-    * epochs, then the shared estimator. The merge reads m rows per epoch
-    * and shuffles m buckets — never anything corpus-sized. */
-  def mergedHllEstimate(spark: org.apache.spark.sql.SparkSession,
-                        path: String,
-                        epochFilter: Column = lit(true)): DataFrame = {
-    val (kv, registers) = mergedStore(spark, path, HllStore, epochFilter)
-    estimateFromRegisters(registers, kv("p").toInt)
-  }
-
-  /** Quiesced compaction: every epoch's registers fold into ONE baseline
-    * holding the per-bucket MAX (see [[compactStore]]). */
-  def compactHllStore(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Unit =
-    compactStore(spark, path, HllStore)
+  /** Whether a store (with its layout record) exists at `path` — the
+    * create-vs-append decision of the streaming runners. The layout
+    * filename is shared by every family, so this answers for all. */
+  def storeExists(spark: org.apache.spark.sql.SparkSession,
+                  path: String): Boolean =
+    readLayoutRecord(spark, path).isDefined
 
   // ---------------------------------------------------------------------
   // Bloom filter: the OR-mergeable sketch, completing the merge-class
@@ -1068,9 +735,9 @@ object Sketch {
   // from the rows and a mixed-geometry merge probes garbage.
   // ---------------------------------------------------------------------
 
-  private[graft] val BloomStore = StoreFamily("bloom", Seq("bits", "k"),
-    _ => "epoch BIGINT, word BIGINT, bits BIGINT",
-    (rows, _) => rows.groupBy(col("word"))
+  private val BloomStore = StoreFamily("bloom", Seq("bits", "k"),
+    "epoch BIGINT, word BIGINT, bits BIGINT",
+    _.groupBy(col("word"))
       .agg(expr("bit_or(bits)").as("bits")),
     Idempotent)
 
@@ -1108,12 +775,6 @@ object Sketch {
     bloomProbe(words, probes, valueCol, kv("bits").toInt, kv("k").toInt)
   }
 
-  /** Quiesced compaction: every epoch's words fold into ONE baseline
-    * holding the per-word BIT_OR (see [[compactStore]]). */
-  def compactBloomStore(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Unit =
-    compactStore(spark, path, BloomStore)
-
   // ---------------------------------------------------------------------
   // Fixed-bin histogram quantiles: the add-mergeable companion to the
   // max-mergeable HLL registers. One map-side-combined pass collapses the
@@ -1123,8 +784,7 @@ object Sketch {
   // Exactness statement: the estimate is the upper edge of the bin the
   // true quantile falls in — error ≤ one bin width by construction,
   // chosen at declaration time, not data-dependent. Mergeable because
-  // counters ADD (epochs union by summing), which is what the store
-  // below exploits.
+  // counters ADD.
   // ---------------------------------------------------------------------
 
   /** The full bins-row histogram relation (bin ∈ [0, bins), cnt — zero
@@ -1205,8 +865,7 @@ object Sketch {
 
   /** The grouped build alone: (groupCols..., bin, cnt) counters, one
     * map-side-combined aggregate, no empty-bin spine (the probe never
-    * needs one — see [[quantilesFromBins]] — and the store would only
-    * carry dead rows). */
+    * needs one — see [[quantilesFromBins]]). */
   def groupedHistogramBins(items: DataFrame, groupCols: Seq[String],
                            valueCol: String, lo: Double,
                            width: Double, bins: Int): DataFrame = {
@@ -1225,105 +884,6 @@ object Sketch {
                          pcts: Seq[Int]): DataFrame =
     quantilesFromBins(histogramBins(items, valueCol, lo, width, bins),
       lo, width, pcts)
-
-  // ---------------------------------------------------------------------
-  // Histogram stores: (epoch, bin, cnt) rows, and the GROUPED form
-  // (epoch, <group>, bin, cnt) — per-segment latency/size quantiles over
-  // epoch spans, the dashboard the ungrouped store cannot answer. The
-  // layout pins the grid (lo, width, bins) and, grouped, the group
-  // column: mixed grids sum garbage and the grid is not recoverable from
-  // rows. Counters ADD, so a replayed epoch id would double-count — epoch
-  // ids are exactly-once here ([[ExactlyOnceAdd]]). The two grids share
-  // keys modulo `group`, and an ungrouped merge over a GROUPED store
-  // would silently sum across segments (a real relation, the wrong
-  // question), so each family redirects to the other.
-  // ---------------------------------------------------------------------
-
-  private[graft] val HistStore = StoreFamily("histogram",
-    Seq("lo", "width", "bins"),
-    _ => "epoch BIGINT, bin BIGINT, cnt BIGINT",
-    (rows, _) => rows.groupBy(col("bin")).agg(sum(col("cnt")).as("cnt")),
-    ExactlyOnceAdd,
-    Map(Set("lo", "width", "bins", "group") ->
-      "is a grouped histogram store — use mergedGroupedHistQuantiles"))
-
-  private[graft] val GroupedHistStore = StoreFamily("grouped histogram",
-    Seq("lo", "width", "bins", "group"),
-    kv => s"epoch BIGINT, `${kv("group")}` STRING, bin BIGINT, cnt BIGINT",
-    (rows, kv) => rows.groupBy(col(kv("group")), col("bin"))
-      .agg(sum(col("cnt")).as("cnt")),
-    ExactlyOnceAdd,
-    Map(Set("lo", "width", "bins") ->
-      "is an UNGROUPED histogram store — use mergedHistQuantiles"))
-
-  /** Create/replace a histogram store at `path` with one epoch. */
-  def writeHistStore(items: DataFrame, path: String, epoch: Long,
-                     valueCol: String, lo: Double, width: Double,
-                     bins: Int): Unit =
-    createStore(HistStore, histogramBins(items, valueCol, lo, width, bins),
-      path, epoch, lo, width, bins)
-
-  /** Append one epoch's histogram; fails loud on grid mismatch or a
-    * reused epoch id (ADD-merged counters double-count on replay, unlike
-    * the HLL registers — the store enforces what the algebra cannot
-    * forgive). */
-  def appendHistStore(items: DataFrame, path: String, epoch: Long,
-                      valueCol: String, lo: Double, width: Double,
-                      bins: Int): Unit =
-    appendStore(HistStore, histogramBins(items, valueCol, lo, width, bins),
-      path, epoch, lo, width, bins)
-
-  /** Merge a store's epochs (optionally filtered) by bucket-key SUM and
-    * probe the quantiles — reads bins rows per epoch, never the data. */
-  def mergedHistQuantiles(spark: org.apache.spark.sql.SparkSession,
-                          path: String, pcts: Seq[Int],
-                          epochFilter: Column = lit(true)): DataFrame = {
-    val (kv, bins) = mergedStore(spark, path, HistStore, epochFilter)
-    quantilesFromBins(bins, kv("lo").toDouble, kv("width").toDouble, pcts)
-  }
-
-  /** Quiesced compaction: every epoch's counters fold into ONE baseline
-    * holding the per-bin SUM (see [[compactStore]]); appends at or below
-    * the recorded watermark then fail loud. */
-  def compactHistStore(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Unit =
-    compactStore(spark, path, HistStore)
-
-  /** Create/replace a grouped histogram store at `path` with one epoch. */
-  def writeGroupedHistStore(items: DataFrame, path: String, epoch: Long,
-                            groupCol: String, valueCol: String,
-                            lo: Double, width: Double, bins: Int): Unit =
-    createStore(GroupedHistStore,
-      groupedHistogramBins(items, Seq(groupCol), valueCol, lo, width, bins),
-      path, epoch, lo, width, bins, groupCol)
-
-  /** Append one epoch's grouped histogram; fails loud on a grid or
-    * group-column mismatch and on a reused epoch id. */
-  def appendGroupedHistStore(items: DataFrame, path: String, epoch: Long,
-                             groupCol: String, valueCol: String,
-                             lo: Double, width: Double, bins: Int): Unit =
-    appendStore(GroupedHistStore,
-      groupedHistogramBins(items, Seq(groupCol), valueCol, lo, width, bins),
-      path, epoch, lo, width, bins, groupCol)
-
-  /** Merge a grouped store's epochs by (group, bin) SUM and probe the
-    * per-group quantiles — reads (groups × bins) rows per epoch, never
-    * the data; bit-identical to [[groupedHistogramQuantiles]] over the
-    * union of everything the epochs saw (counter addition is exactly
-    * re-counting). */
-  def mergedGroupedHistQuantiles(spark: org.apache.spark.sql.SparkSession,
-                                 path: String, pcts: Seq[Int],
-                                 epochFilter: Column = lit(true))
-  : DataFrame = {
-    val (kv, bins) = mergedStore(spark, path, GroupedHistStore, epochFilter)
-    quantilesFromBins(bins, kv("lo").toDouble, kv("width").toDouble, pcts,
-      Seq(kv("group")))
-  }
-
-  /** [[compactHistStore]] for the grouped grid. */
-  def compactGroupedHistStore(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Unit =
-    compactStore(spark, path, GroupedHistStore)
 
   // ---------------------------------------------------------------------
   // KMV / theta sketch: the UNION-mergeable bottom-k distinct sketch —
@@ -1381,8 +941,7 @@ object Sketch {
   }
 
   /** The one KMV estimator expression over (n_kept, theta) — shared by
-    * the one-shot, grouped, and store-merged forms so the three can
-    * never drift. */
+    * the one-shot and grouped forms so the two can never drift. */
   private def kmvEstimateCol(k: Int): Column =
     when(col("n_kept") < k, col("n_kept"))
       .otherwise(expr(s"(cast(${k - 1} as decimal(38,0)) * $MixMod) " +
@@ -1478,22 +1037,17 @@ object Sketch {
   }
 
   /** Each group's bottom-k distinct hash array `__hs` (ascending), one
-    * row per group of `hashes` (columns `groupCol`, `h`). */
-  private def bottomKPerGroup(hashes: DataFrame, groupCol: String,
-                              k: Int): DataFrame =
-    hashes.groupBy(col(groupCol))
+    * row per group of `items`. */
+  private def groupedBottomK(items: DataFrame, groupCol: String,
+                             valueCol: String, k: Int): DataFrame =
+    items.select(col(groupCol), salted(col(valueCol), "|kmv").as("h"))
+      .groupBy(col(groupCol))
       .agg(udaf(new BottomKDistinctAgg(k), Encoders.LONG)(col("h"))
         .as("__hs"))
 
-  private def groupedBottomK(items: DataFrame, groupCol: String,
-                             valueCol: String, k: Int): DataFrame =
-    bottomKPerGroup(
-      items.select(col(groupCol), salted(col(valueCol), "|kmv").as("h")),
-      groupCol, k)
-
   /** Per-group bottom-k distinct-hash relation (groupCol, h) — the
-    * grouped twin of [[kmvHashes]], feeding the overlap matrix and the
-    * grouped stores: one `groupBy(group)` with the bounded
+    * grouped twin of [[kmvHashes]], feeding the overlap matrix: one
+    * `groupBy(group)` with the bounded
     * [[BottomKDistinctAgg]], exploded. The k smallest distinct hashes of
     * a group are unique, so no `distinct()` is needed; NULL values hash
     * to NULL and are ignored, as in [[kmvHashes]]. */
@@ -1521,8 +1075,7 @@ object Sketch {
     * sets are distinct within a group, so the inclusion–exclusion on
     * COUNTS is exact — unlike the cardinality estimates q177 chains).
     *
-    * `maxGroups` is the loud bound on the |G|² pair spine (the store
-    * guard discipline): a caller pointing the matrix at a million-key
+    * `maxGroups` is the loud bound on the |G|² pair spine: a caller pointing the matrix at a million-key
     * group column gets an error carrying the count, not a silent
     * 10¹²-row cross join. Raise it deliberately for a genuinely large
     * dashboard; the spine cost is quadratic in it.
@@ -1649,9 +1202,7 @@ object Sketch {
   /** The theta-threshold set algebra over two already-built bottom-k
     * hash relations (one column `h` each): (k, theta, n_inter,
     * est_inter, n_union, est_union) — [[kmvIntersection]]'s estimating
-    * core without the corpus-sized exact-audit legs, which is exactly
-    * what a STORED sketch can compute (the store never retained the
-    * data). */
+    * core without the corpus-sized exact-audit legs. */
   def thetaAlgebra(hashesA: DataFrame, hashesB: DataFrame,
                    k: Int): DataFrame = {
     val (theta, belowA, belowB) = thetaBelow(hashesA, hashesB, k)
@@ -1675,10 +1226,9 @@ object Sketch {
   private def thetaBelow(hashesA: DataFrame, hashesB: DataFrame, k: Int)
   : (DataFrame, DataFrame, DataFrame) = {
     // localCheckpoint, not persist: each side is ≤ k rows but read three
-    // times (threshold, below-theta, set algebra), and the long-lived
-    // monitor path (kmvStoreOverlap polled per quiesce) runs OUTSIDE any
-    // CacheScope — a persist there accumulates cache entries forever,
-    // where checkpoint blocks free with the reference
+    // times (threshold, below-theta, set algebra), and a caller outside
+    // any CacheScope would accumulate persisted entries forever, where
+    // checkpoint blocks free with the reference
     val ha = hashesA.localCheckpoint(true)
     val hb = hashesB.localCheckpoint(true)
     def thetaOf(h: DataFrame, as: String) =
@@ -1734,138 +1284,6 @@ object Sketch {
     thetaDifference(kmvHashes(a, valueCol, k), kmvHashes(b, valueCol, k), k)
       .crossJoin(exA).crossJoin(exB)
   }
-
-  // ---------------------------------------------------------------------
-  // KMV stores: (epoch, h) rows holding each epoch's bottom-k hash set,
-  // and the GROUPED form (epoch, <group>, h) — per-segment sketches
-  // feeding the overlap MATRIX without re-reading a corpus. Any hash
-  // among the k smallest of a merged span is among the k smallest of its
-  // own epoch, so union + re-trim recovers exactly the one-shot sketch of
-  // everything the epochs saw, reading ≤ k rows per epoch (per group).
-  // Set union is idempotent: a replayed epoch's hashes vanish in the
-  // merge. The layout pins k (an epoch sketched at a smaller k may have
-  // DROPPED hashes the merged bottom-k needs) and, grouped, the group
-  // column (rows from another grouping would cross-pollinate segments);
-  // the grouped key is `gk=`, not `k=`, so neither family's reader
-  // accepts the other's store.
-  // ---------------------------------------------------------------------
-
-  private[graft] val KmvStore = StoreFamily("KMV", Seq("k"),
-    _ => "epoch BIGINT, h BIGINT",
-    (rows, kv) => rows.select(col("h")).distinct().orderBy(col("h"))
-      .limit(kv("k").toInt),
-    Idempotent)
-
-  // the re-trim is the same bounded BottomKDistinctAgg the one-shot
-  // sketch uses; it also drops hashes an epoch replay stored twice
-  private[graft] val GroupedKmvStore = StoreFamily("grouped KMV",
-    Seq("gk", "group"),
-    kv => s"epoch BIGINT, `${kv("group")}` STRING, h BIGINT",
-    (rows, kv) => bottomKPerGroup(rows, kv("group"), kv("gk").toInt)
-      .select(col(kv("group")), explode(col("__hs")).as("h")),
-    Idempotent)
-
-  /** The merged bottom-k hash relation of a KMV store (all epochs, or
-    * an `epochFilter` span) — the stored-sketch twin of [[kmvHashes]]. */
-  def mergedKmvHashes(spark: org.apache.spark.sql.SparkSession,
-                      path: String,
-                      epochFilter: Column = lit(true)): DataFrame =
-    mergedStore(spark, path, KmvStore, epochFilter)._2
-
-  /** Direct theta-sketch overlap of two KMV STORES — the q226 row
-    * (minus the exact-audit columns no store can provide) computed
-    * entirely from ≤ 2k stored hashes. Fails loud when the stores were
-    * written at different k (their thresholds would not be comparable
-    * sample rates). */
-  def kmvStoreOverlap(spark: org.apache.spark.sql.SparkSession,
-                      pathA: String, pathB: String,
-                      epochFilter: Column = lit(true)): DataFrame = {
-    val (kvA, hashesA) = mergedStore(spark, pathA, KmvStore, epochFilter)
-    val (kvB, hashesB) = mergedStore(spark, pathB, KmvStore, epochFilter)
-    val (ka, kb) = (kvA("k").toInt, kvB("k").toInt)
-    require(ka == kb, s"KMV stores disagree on k ($ka vs $kb) — " +
-      "their bottom-k sets are different sample rates and cannot overlap")
-    thetaAlgebra(hashesA, hashesB, ka)
-  }
-
-  /** Create/replace a KMV store at `path` with one epoch's bottom-k
-    * hash set. */
-  def writeKmvStore(items: DataFrame, path: String, epoch: Long,
-                    valueCol: String = "item", k: Int = 256): Unit =
-    createStore(KmvStore, kmvHashes(items, valueCol, k), path, epoch, k)
-
-  /** Append one epoch's bottom-k hashes; fails loud on a k mismatch. */
-  def appendKmvStore(items: DataFrame, path: String, epoch: Long,
-                     valueCol: String = "item", k: Int = 256): Unit =
-    appendStore(KmvStore, kmvHashes(items, valueCol, k), path, epoch, k)
-
-  /** Merge a store's epochs (all, or an `epochFilter` span) into one
-    * (k, n_kept, theta, estimate) row, bit-identical to [[kmvEstimate]]
-    * over everything the epochs saw. (No `n_exact` column: the store
-    * deliberately does not retain the data that would compute one.) */
-  def mergedKmvEstimate(spark: org.apache.spark.sql.SparkSession,
-                        path: String,
-                        epochFilter: Column = lit(true)): DataFrame = {
-    val (kv, hashes) = mergedStore(spark, path, KmvStore, epochFilter)
-    val k = kv("k").toInt
-    hashes.agg(count(lit(1)).as("n_kept"), max(col("h")).as("theta"))
-      .select(lit(k.toLong).as("k"), col("n_kept"), col("theta"),
-        kmvEstimateCol(k).as("estimate"))
-  }
-
-  /** Quiesced compaction: every epoch's slab folds into ONE baseline
-    * holding the merged bottom-k set (see [[compactStore]]). */
-  def compactKmvStore(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Unit =
-    compactStore(spark, path, KmvStore)
-
-  /** Create/replace a grouped KMV store: one epoch's per-group bottom-k
-    * hash sets plus a `gk=<k>,group=<col>` layout record. */
-  def writeGroupedKmvStore(items: DataFrame, path: String, epoch: Long,
-                           groupCol: String, valueCol: String = "item",
-                           k: Int = 256): Unit =
-    createStore(GroupedKmvStore,
-      groupedKmvHashes(items, groupCol, valueCol, k), path, epoch, k,
-      groupCol)
-
-  /** Append one epoch's per-group bottom-k hashes; fails loud on a k or
-    * group-column mismatch. Epoch replay is harmless (set union). */
-  def appendGroupedKmvStore(items: DataFrame, path: String, epoch: Long,
-                            groupCol: String, valueCol: String = "item",
-                            k: Int = 256): Unit =
-    appendStore(GroupedKmvStore,
-      groupedKmvHashes(items, groupCol, valueCol, k), path, epoch, k,
-      groupCol)
-
-  /** The merged per-group bottom-k relation of a grouped KMV store:
-    * exactly the one-shot grouped sketch of everything the epochs saw
-    * (the [[mergedKmvEstimate]] argument, per group). */
-  def mergedGroupedKmvHashes(spark: org.apache.spark.sql.SparkSession,
-                             path: String,
-                             epochFilter: Column = lit(true)): DataFrame =
-    mergedStore(spark, path, GroupedKmvStore, epochFilter)._2
-
-  /** The pairwise audience-overlap matrix of a grouped KMV store —
-    * [[thetaOverlapMatrix]] over the merged per-group bottom-k sets:
-    * every segment pair's direct intersection/union estimate from ≤
-    * |G|·k stored hashes, no corpus anywhere (the store never retained
-    * one). */
-  def groupedKmvStoreOverlapMatrix(spark: org.apache.spark.sql.SparkSession,
-                                   path: String,
-                                   epochFilter: Column = lit(true))
-  : DataFrame = {
-    val (kv, hashes) =
-      mergedStore(spark, path, GroupedKmvStore, epochFilter)
-    thetaOverlapMatrix(hashes, kv("group"), kv("gk").toInt)
-  }
-
-  /** Quiesced compaction of a grouped KMV store: every epoch folds into
-    * ONE baseline holding each group's merged bottom-k set, so the
-    * overlap matrix is bit-identical across it (StreamingSpec pins it
-    * across a mid-stream compaction; see [[compactStore]]). */
-  def compactGroupedKmvStore(spark: org.apache.spark.sql.SparkSession,
-                             path: String): Unit =
-    compactStore(spark, path, GroupedKmvStore)
 
   /** The standard HLL bias-correction constant — a Scala-side double,
     * interpolated into the oracle as its exact decimal round-trip (the

@@ -5,7 +5,6 @@ import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, Row,
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.ops.Sketch
 import graft.sinks.Sinks
 
 /** Real-time dashboard core (SURVEY §2.10) — the reference's
@@ -213,110 +212,6 @@ object StreamingDashboard {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         incrementalFlush(batch, storePath, rollupSketch)
       }
-
-  /** The writeStream shell every epoch-store runner shares: append
-    * output, the checkpoint, the trigger, and `step` per micro-batch with
-    * its batch id as the epoch id. The step is normally one
-    * [[Sketch.epochStep]] per store. */
-  private[streaming] def epochStoreStream(input: DataFrame,
-                                          checkpoint: String,
-                                          trigger: Trigger)
-                                         (step: (DataFrame, Long) => Unit)
-  : DataStreamWriter[Row] =
-    input.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch(step)
-
-  /** Deterministic-HLL UV maintained at ingest: each micro-batch appends
-    * its m-row register spine to a [[graft.ops.Sketch]] register store
-    * (epoch = batchId), so the running UV over any epoch span is
-    * `Sketch.mergedHllEstimate` — BIT-IDENTICAL to the one-shot sketch of
-    * the union of everything ingested (registers are max-mergeable;
-    * StreamingSpec pins the equality). Complements [[runSketch]]: that
-    * path is the per-window production answer on DataSketches binaries;
-    * this one is the oracle-checkable register relation (q140's twin)
-    * kept incrementally, the way the reference's per-day HBase user sets
-    * were (`ActionLogJobSecond.java:359-376`) at m rows per epoch instead
-    * of corpus-sized state. A replayed batchId's duplicate epoch rows
-    * MAX-merge to the identical registers; `compactEvery` > 0 folds the
-    * store after every that-many batches ([[Sketch.epochStep]]).
-    */
-  def runHllRegisterStore(events: DataFrame, storePath: String,
-                          checkpoint: String, userCol: String = "user_id",
-                          p: Int = 6,
-                          trigger: Trigger = Trigger.AvailableNow(),
-                          compactEvery: Int = 0)
-  : DataStreamWriter[Row] =
-    epochStoreStream(events, checkpoint, trigger) { (batch, id) =>
-      Sketch.epochStep(Sketch.HllStore, Sketch.hllRegisters(batch, userCol, p),
-        storePath, id, compactEvery, p)
-    }
-
-  /** Streamed KMV bottom-k store maintenance — each micro-batch appends
-    * its bottom-k hash epoch (epoch = batchId), so
-    * [[graft.ops.Sketch.mergedKmvEstimate]] over the store is
-    * bit-identical to one-shot sketching everything ingested. Replayed
-    * batches reuse their epoch id and vanish in the merge's distinct —
-    * at-least-once tolerant like the HLL register store, and unlike HLL
-    * the merged sketch supports DIRECT set intersection downstream
-    * (q226).
-    */
-  def runKmvStore(events: DataFrame, storePath: String,
-                  checkpoint: String, userCol: String = "user_id",
-                  k: Int = 256,
-                  trigger: Trigger = Trigger.AvailableNow(),
-                  compactEvery: Int = 0)
-  : DataStreamWriter[Row] =
-    epochStoreStream(events, checkpoint, trigger) { (batch, id) =>
-      Sketch.epochStep(Sketch.KmvStore, Sketch.kmvHashes(batch, userCol, k),
-        storePath, id, compactEvery, k)
-    }
-
-  /** Streaming audience-overlap monitor: ONE stream maintains TWO KMV
-    * stores (each micro-batch appends the epoch of rows matching that
-    * store's predicate), and [[graft.ops.Sketch.kmvStoreOverlap]] over
-    * the stores answers "how much do the two audiences overlap so far"
-    * at any quiesce point — bit-identical to the batch
-    * `kmvIntersection` of everything ingested (store-merge == one-shot
-    * per side, and the theta algebra reads only the merged hashes).
-    * The q226 capability at ingest, without retaining the corpora.
-    */
-  def runKmvOverlapStores(events: DataFrame, pathA: String, pathB: String,
-                          checkpoint: String,
-                          predA: Column, predB: Column,
-                          valueCol: String = "item", k: Int = 256,
-                          trigger: Trigger = Trigger.AvailableNow())
-  : DataStreamWriter[Row] =
-    epochStoreStream(events, checkpoint, trigger) { (batch, id) =>
-      for ((path, pred) <- Seq(pathA -> predA, pathB -> predB))
-        Sketch.epochStep(Sketch.KmvStore,
-          Sketch.kmvHashes(batch.filter(pred), valueCol, k), path, id,
-          0, k)
-    }
-
-  /** Streaming grouped-audience store — [[runKmvOverlapStores]]' two-
-    * predicate form generalized to a GROUP COLUMN: each micro-batch
-    * appends its per-group bottom-k hash sets as one epoch (= batchId;
-    * at-least-once tolerant, the merge is a set union), and
-    * [[graft.ops.Sketch.groupedKmvStoreOverlapMatrix]] over the store
-    * answers the FULL pairwise audience-overlap matrix (the q238
-    * dashboard) at any quiesce point — bit-identical to the one-shot
-    * grouped matrix of everything ingested, for every segment pair at
-    * once, never retaining a corpus.
-    */
-  def runGroupedKmvStore(events: DataFrame, storePath: String,
-                         checkpoint: String, groupCol: String,
-                         valueCol: String = "item", k: Int = 256,
-                         trigger: Trigger = Trigger.AvailableNow(),
-                         compactEvery: Int = 0)
-  : DataStreamWriter[Row] =
-    epochStoreStream(events, checkpoint, trigger) { (batch, id) =>
-      Sketch.epochStep(Sketch.GroupedKmvStore,
-        Sketch.groupedKmvHashes(batch, groupCol, valueCol, k), storePath,
-        id, compactEvery, k, groupCol)
-    }
 
   /** Full pipeline: 5-min update-mode aggregation → per-trigger foreachBatch
     * that (a) upserts the changed 5-min partials into the metric store and

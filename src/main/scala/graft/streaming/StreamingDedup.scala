@@ -91,6 +91,25 @@ object StreamingDedup {
       }
     }
 
+  /** The writeStream shell both epoch-store runners share: append
+    * output, the checkpoint, the trigger, and per micro-batch the
+    * family's `create` on the store's first batch, else its `append`,
+    * with the batch id as the epoch id. */
+  private def epochStoreStream(input: DataFrame, storePath: String,
+                               checkpoint: String, trigger: Trigger)
+                              (create: (DataFrame, Long) => Unit,
+                               append: (DataFrame, Long) => Unit)
+  : DataStreamWriter[Row] =
+    input.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        if (Sketch.storeExists(batch.sparkSession, storePath))
+          append(batch, id)
+        else create(batch, id)
+      }
+
   /** Maintain a persistent bloom store at ingest — the seen-before gate
     * ([[graft.ops.Sketch.bloomWords]], q170) kept incrementally: each
     * micro-batch appends one epoch of m/32 OR-mergeable words;
@@ -99,21 +118,17 @@ object StreamingDedup {
     * history. The cheap front gate BEFORE the minhash/signature store
     * machinery: a negative probe is definitive (no false negatives), so
     * only maybe-seen keys pay the exact path. A re-run batchId appends
-    * duplicate epoch rows, which OR-merge to the identical words; a
-    * restart appends to the existing store (StreamingSpec pins both).
+    * duplicate epoch rows, which OR-merge to the identical words
+    * (StreamingSpec pins it); a restart appends to the existing store.
     */
   def runBloomStore(docs: DataFrame, storePath: String,
                     checkpoint: String, valueCol: String = "text",
                     bitsLog2: Int = 12, k: Int = 3,
-                    trigger: Trigger = Trigger.AvailableNow(),
-                    compactEvery: Int = 0)
+                    trigger: Trigger = Trigger.AvailableNow())
   : DataStreamWriter[Row] =
-    StreamingDashboard.epochStoreStream(docs, checkpoint, trigger) {
-      (batch, id) =>
-        Sketch.epochStep(Sketch.BloomStore,
-          Sketch.bloomWords(batch, valueCol, bitsLog2, k), storePath, id,
-          compactEvery, bitsLog2, k)
-    }
+    epochStoreStream(docs, storePath, checkpoint, trigger)(
+      Sketch.writeBloomStore(_, storePath, _, valueCol, bitsLog2, k),
+      Sketch.appendBloomStore(_, storePath, _, valueCol, bitsLog2, k))
 
   /** Heavy-hitter store maintained at ingest — each micro-batch appends
     * its ≤ k-row Misra-Gries summary
@@ -122,52 +137,25 @@ object StreamingDedup {
     * epoch span with [[graft.ops.Scale.mergedHeavyHitters]] under the
     * standard mergeable-summary bound (no overcount; undercount ≤
     * n/(k+1) over the span; every item above that threshold present).
-    * The frequency companion of [[runBloomStore]] (membership) and the
-    * HLL register sink (cardinality): three questions about an unbounded
-    * stream, each answered from bounded mergeable state. Replayed
-    * batches (foreachBatch is at-least-once) dynamically OVERWRITE their
-    * own epoch partition — ADD-merged counters, unlike the bloom OR /
-    * HLL MAX, would double-count a duplicated epoch, so idempotence here
-    * comes from the write layout, not the merge algebra.
+    * The frequency companion of [[runBloomStore]] (membership): two
+    * questions about an unbounded stream, each answered from bounded
+    * mergeable state. Replayed batches (foreachBatch is at-least-once)
+    * dynamically OVERWRITE their own epoch partition — ADD-merged
+    * counters, unlike the bloom OR, would double-count a duplicated
+    * epoch, so idempotence here comes from the write layout, not the
+    * merge algebra.
     */
   def runTopFreqStore(rows: DataFrame, storePath: String,
                       checkpoint: String, valueCol: String = "text",
                       k: Int = 64,
-                      trigger: Trigger = Trigger.AvailableNow(),
-                      compactEvery: Int = 0)
-  : DataStreamWriter[Row] =
-    StreamingDashboard.epochStoreStream(rows, checkpoint, trigger) {
-      (batch, id) =>
-        val items = batch.select(col(valueCol).cast("string"))
-          .as(Encoders.STRING)
-        Sketch.epochStep(Scale.TopFreqStore, Scale.topFreqSummary(items, k),
-          storePath, id, compactEvery, k)
-    }
-
-  /** Count-min store maintained at ingest: each micro-batch appends its
-    * d·w counter slab ([[graft.ops.Sketch.writeCmsStore]] /
-    * [[graft.ops.Sketch.appendCmsStore]]); any later reader probes an
-    * epoch span with [[graft.ops.Sketch.mergedCmsEstimates]] under the
-    * CMS one-sided guarantee (est ≥ true, bit-identical to one-shot
-    * sketching the span's union — counter addition is re-counting).
-    * Completes the frequency trio: [[runBloomStore]] membership,
-    * [[runTopFreqStore]] "what is hot" in ≤ k rows, this "how often is
-    * THIS item" for any probe. Replay safety is the MG store's: each
-    * batch dynamically overwrites its own epoch partition, and the fold
-    * keeps the newest batch's partition live (StreamingSpec pins
-    * mid-stream fold bit-identity + the loud below-watermark replay). */
-  def runCmsStore(rows: DataFrame, storePath: String,
-                  checkpoint: String, valueCol: String = "text",
-                  d: Int = 4, w: Int = 64,
-                  trigger: Trigger = Trigger.AvailableNow(),
-                  compactEvery: Int = 0)
-  : DataStreamWriter[Row] =
-    StreamingDashboard.epochStoreStream(rows, checkpoint, trigger) {
-      (batch, id) =>
-        Sketch.epochStep(Sketch.CmsStore,
-          Sketch.cmsCounterSlab(batch, valueCol, d, w), storePath, id,
-          compactEvery, d, w)
-    }
+                      trigger: Trigger = Trigger.AvailableNow())
+  : DataStreamWriter[Row] = {
+    def items(batch: DataFrame) =
+      batch.select(col(valueCol).cast("string")).as(Encoders.STRING)
+    epochStoreStream(rows, storePath, checkpoint, trigger)(
+      (batch, id) => Scale.writeTopFreqStore(items(batch), storePath, id, k),
+      (batch, id) => Scale.appendTopFreqStore(items(batch), storePath, id, k))
+  }
 
   /** Streaming NEAR-dup detection — the minhash-band counterpart of
     * [[dedupByContent]]: each micro-batch's documents are shingled,

@@ -651,7 +651,6 @@ class LlmOpsSpec extends SparkSpecBase {
   }
 
   test("vec_dot registers as a SQL function and matches the Column API") {
-    graft.functions.VectorFunctions.register(spark)
     Tables.embeddings(spark, sfDir).limit(5)
       .createOrReplaceTempView("g_emb")
     val viaSql = spark.sql(

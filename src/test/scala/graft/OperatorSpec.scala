@@ -1494,89 +1494,6 @@ class OperatorSpec extends SparkSpecBase {
     checkPerGroup(spread, Seq(Some("a"), Some("b"), Some("c"), None))
   }
 
-  test("KMV store: merged epochs are bit-identical to a one-shot sketch " +
-    "of the union, replays are harmless, mixed k fails loud") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kmv")
-      .toString + "/store"
-    val e1 = (1 to 3000).map(i => s"user$i").toDF("item")
-    val e2 = (2000 to 6000).map(i => s"user$i").toDF("item")
-    val e3 = (5500 to 7000).map(i => s"user$i").toDF("item")
-    graft.ops.Sketch.writeKmvStore(e1, dir, epoch = 1L)
-    graft.ops.Sketch.appendKmvStore(e2, dir, epoch = 2L)
-    graft.ops.Sketch.appendKmvStore(e3, dir, epoch = 3L)
-    val merged = graft.ops.Sketch.mergedKmvEstimate(spark, dir)
-      .as[(Long, Long, Long, Long)].head()
-    val oneShot = graft.ops.Sketch.kmvEstimate(e1.union(e2).union(e3))
-      .as[(Long, Long, Long, Long, Long)].head()
-    assert(merged == ((oneShot._1, oneShot._2, oneShot._3, oneShot._4)),
-      s"store-merge $merged != one-shot $oneShot")
-    // an epoch-range merge equals the sketch of just those epochs
-    val lastTwo = graft.ops.Sketch.mergedKmvEstimate(spark, dir,
-      col("epoch") >= 2L).as[(Long, Long, Long, Long)].head()
-    val lastTwoDirect = graft.ops.Sketch.kmvEstimate(e2.union(e3))
-      .as[(Long, Long, Long, Long, Long)].head()
-    assert(lastTwo._3 == lastTwoDirect._3 && lastTwo._4 == lastTwoDirect._4)
-    // an at-least-once replay of epoch 2 changes NOTHING (set union)
-    graft.ops.Sketch.appendKmvStore(e2, dir, epoch = 2L)
-    val replayed = graft.ops.Sketch.mergedKmvEstimate(spark, dir)
-      .as[(Long, Long, Long, Long)].head()
-    assert(replayed == merged, "replayed epoch must not move the estimate")
-    // the public merged-hash relation IS the one-shot bottom-k set
-    val mergedHashes = graft.ops.Sketch.mergedKmvHashes(spark, dir)
-      .as[Long].collect().sorted.toSeq
-    val oneShotHashes = graft.ops.Sketch
-      .kmvHashes(e1.union(e2).union(e3))
-      .as[Long].collect().sorted.toSeq
-    assert(mergedHashes == oneShotHashes,
-      "merged store hashes must equal the one-shot bottom-k set")
-    // crash-recovery of the fold swap: simulate a crash between the
-    // park (dst -> __old) and the rename-in — the next compact's
-    // recoverOld must restore the parked store and fold it, answer
-    // unchanged (replayed-epoch rows and all: set union)
-    val fsP = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sinks.Sinks.renameOrThrow(fs, fsP,
-      new org.apache.hadoop.fs.Path(dir + "__old"))
-    intercept[IllegalArgumentException] { // torn window is LOUD, not wrong
-      graft.ops.Sketch.mergedKmvEstimate(spark, dir)
-    }
-    graft.ops.Sketch.compactKmvStore(spark, dir)
-    assert(spark.read.parquet(dir).select("epoch").distinct()
-      .as[Long].collect().toSeq == Seq(graft.ops.Sketch.FoldEpoch))
-    assert(graft.ops.Sketch.mergedKmvEstimate(spark, dir)
-      .as[(Long, Long, Long, Long)].head() == merged,
-      "post-crash fold must recover the parked store bit-identically")
-    // the WRITER-side torn window (r16 review): a streaming batch
-    // replayed while the store sits parked must recover-then-append —
-    // an exists-check without recovery would overwrite-CREATE a fresh
-    // store holding only the replay, and the next fold's recovery would
-    // then delete the parked history. recoverSwap before the
-    // exists-check (what every runner now does) keeps history intact.
-    graft.sinks.Sinks.renameOrThrow(fs, fsP,
-      new org.apache.hadoop.fs.Path(dir + "__old"))
-    graft.sinks.Sinks.recoverSwap(spark, dir)
-    assert(graft.ops.Sketch.storeExists(spark, dir),
-      "recovery must restore the parked store before the exists-check")
-    graft.ops.Sketch.appendKmvStore(e3, dir, epoch = 5L)
-    assert(graft.ops.Sketch.mergedKmvEstimate(spark, dir)
-      .as[(Long, Long, Long, Long)].head() == merged,
-      "replay after recovery must merge into history, not replace it")
-    // k drift must fail loud, not silently under-estimate
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.appendKmvStore(e1, dir, epoch = 4L, k = 128)
-    }
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.appendKmvStore(e1, dir + "_nowhere", epoch = 1L)
-    }
-    // a KMV read of an HLL store must name the mismatch, not throw a
-    // bare NumberFormatException (both families share the layout file)
-    graft.ops.Sketch.writeHllStore(e1, dir + "_hll", epoch = 1L)
-    val wrong = intercept[IllegalArgumentException] {
-      graft.ops.Sketch.mergedKmvEstimate(spark, dir + "_hll")
-    }
-    assert(wrong.getMessage.contains("not a KMV store"), wrong.getMessage)
-  }
-
   test("theta difference: exact below saturation, and the set identity " +
     "n_only_a + n_only_b + n_inter = n_union holds against thetaAlgebra") {
     // unsaturated: everything exact
@@ -1640,208 +1557,6 @@ class OperatorSpec extends SparkSpecBase {
       boom.getMessage.contains("maxGroups"), boom.getMessage)
     assert(graft.ops.Sketch
       .groupedKmvOverlapMatrix(rows, "grp", maxGroups = 3).count() == 3L)
-  }
-
-  test("grouped KMV store: the merged overlap matrix is bit-identical " +
-    "to the one-shot matrix over everything the epochs saw") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gkmv")
-      .toString + "/store"
-    val e1 = ((1 to 2000).map(i => ("a", s"u$i")) ++
-      (1500 to 3000).map(i => ("b", s"u$i"))).toDF("grp", "item")
-    val e2 = ((1800 to 4000).map(i => ("a", s"u$i")) ++
-      (1 to 60).map(i => ("c", s"w$i"))).toDF("grp", "item")
-    graft.ops.Sketch.writeGroupedKmvStore(e1, dir, epoch = 1L, "grp")
-    graft.ops.Sketch.appendGroupedKmvStore(e2, dir, epoch = 2L, "grp")
-    val merged = graft.ops.Sketch.groupedKmvStoreOverlapMatrix(spark, dir)
-      .as[(String, String, Long, Long, Long, Long, Long, Long)]
-      .collect().sortBy(r => (r._1, r._2)).toSeq
-    val oneShot = graft.ops.Sketch.thetaOverlapMatrix(
-        graft.ops.Sketch.groupedKmvHashes(e1.union(e2), "grp", "item", 256),
-        "grp", 256)
-      .as[(String, String, Long, Long, Long, Long, Long, Long)]
-      .collect().sortBy(r => (r._1, r._2)).toSeq
-    assert(merged == oneShot, s"store-merge $merged != one-shot $oneShot")
-    // layout discipline: k and group column both fail loud on mismatch
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.appendGroupedKmvStore(e1, dir, epoch = 3L, "grp",
-        k = 128)
-    }
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.appendGroupedKmvStore(
-        e1.withColumnRenamed("grp", "seg"), dir, epoch = 3L, "seg")
-    }
-    // an ungrouped KMV call pointed at a grouped store must say so
-    val wrong = intercept[IllegalArgumentException] {
-      graft.ops.Sketch.mergedKmvEstimate(spark, dir)
-    }
-    assert(wrong.getMessage.contains("not a KMV store"), wrong.getMessage)
-  }
-
-  test("HLL register store: merged epochs are bit-identical to a " +
-    "recompute over the union, and mixed precision fails loud") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll")
-      .toString + "/store"
-    // three disjoint-ish epochs with overlap (users 1..3000, 2000..6000,
-    // 5500..7000) — overlap is where max-merge vs sum-merge differ
-    val e1 = (1 to 3000).map(i => s"user$i").toDF("item")
-    val e2 = (2000 to 6000).map(i => s"user$i").toDF("item")
-    val e3 = (5500 to 7000).map(i => s"user$i").toDF("item")
-    graft.ops.Sketch.writeHllStore(e1, dir, epoch = 1L)
-    graft.ops.Sketch.appendHllStore(e2, dir, epoch = 2L)
-    graft.ops.Sketch.appendHllStore(e3, dir, epoch = 3L)
-    val merged = graft.ops.Sketch.mergedHllEstimate(spark, dir)
-      .as[(Long, Long, Long, Double)].head()
-    val recomputed = graft.ops.Sketch
-      .hllEstimate(e1.union(e2).union(e3))
-      .as[(Long, Long, Long, Long, Double)].head()
-    // (m, harm_num, n_zero, estimate) must match the one-shot sketch of
-    // the union EXACTLY — registers are max-mergeable by construction
-    assert((merged._1, merged._2, merged._3, merged._4) ==
-      (recomputed._1, recomputed._3, recomputed._4, recomputed._5),
-      s"store-merge $merged != recompute $recomputed")
-    // an epoch-range merge equals the sketch of just those epochs
-    val lastTwo = graft.ops.Sketch.mergedHllEstimate(spark, dir,
-        col("epoch") >= 2L).as[(Long, Long, Long, Double)].head()
-    val lastTwoDirect = graft.ops.Sketch.hllEstimate(e2.union(e3))
-      .as[(Long, Long, Long, Long, Double)].head()
-    assert((lastTwo._2, lastTwo._4) == (lastTwoDirect._3, lastTwoDirect._5))
-    // precision drift must fail loud, not silently estimate garbage
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.appendHllStore(e1, dir, epoch = 4L, p = 8)
-    }
-    // appending to a path with no layout record must fail loud too
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.appendHllStore(e1, dir + "_nowhere", epoch = 1L)
-    }
-  }
-
-  test("histogram store: summed epochs are bit-identical to a recompute " +
-    "over the union; duplicate epochs and grid drift fail loud") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hist")
-      .toString + "/store"
-    val e1 = (1 to 4000).map(i => (i % 97).toDouble / 3.0).toDF("v")
-    val e2 = (1 to 3000).map(i => (i % 53).toDouble / 2.0).toDF("v")
-    graft.ops.Sketch.writeHistStore(e1, dir, epoch = 1L, "v",
-      lo = 0.0, width = 1.0, bins = 64)
-    graft.ops.Sketch.appendHistStore(e2, dir, epoch = 2L, "v",
-      lo = 0.0, width = 1.0, bins = 64)
-    val merged = graft.ops.Sketch
-      .mergedHistQuantiles(spark, dir, Seq(50, 95, 99))
-      .as[(Long, Long, Long, Long, Double)].collect().toSet
-    val oneShot = graft.ops.Sketch
-      .histogramQuantiles(e1.union(e2), "v", 0.0, 1.0, 64, Seq(50, 95, 99))
-      .as[(Long, Long, Long, Long, Double)].collect().toSet
-    assert(merged == oneShot, s"store-merge $merged != recompute $oneShot")
-    assert(merged.size == 3)
-    // sanity: the p50 estimate brackets the true median within one bin
-    val true50 = {
-      val all = ((1 to 4000).map(i => (i % 97).toDouble / 3.0) ++
-        (1 to 3000).map(i => (i % 53).toDouble / 2.0)).sorted
-      all(all.length / 2)
-    }
-    val est50 = merged.find(_._1 == 50L).get._5
-    assert(math.abs(est50 - true50) <= 1.0,
-      s"p50 estimate $est50 vs true $true50 exceeds the one-bin bound")
-    // counters ADD: a replayed epoch would double-count — must fail loud
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.appendHistStore(e2, dir, epoch = 2L, "v",
-        0.0, 1.0, 64)
-    }
-    // and so must a different grid
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.appendHistStore(e2, dir, epoch = 3L, "v",
-        0.0, 2.0, 64)
-    }
-    // quiesced fold: counter-sum associativity makes the post-fold
-    // quantiles bit-identical, epochs collapse to the reserved baseline,
-    // and a FRESH epoch still appends on top of it
-    graft.ops.Sketch.compactHistStore(spark, dir)
-    assert(spark.read.parquet(dir).select("epoch").distinct()
-      .as[Long].collect().toSeq == Seq(graft.ops.Sketch.FoldEpoch))
-    val folded = graft.ops.Sketch
-      .mergedHistQuantiles(spark, dir, Seq(50, 95, 99))
-      .as[(Long, Long, Long, Long, Double)].collect().toSet
-    assert(folded == merged, s"fold changed the quantiles: $folded")
-    // the fold ERASED epoch 2's rows, so the row-probe guard alone
-    // would wave a replayed id through as a silent double count — the
-    // folded_through watermark keeps the refusal loud (r16 review)
-    val replayedAfterFold = intercept[IllegalArgumentException] {
-      graft.ops.Sketch.appendHistStore(e2, dir, epoch = 2L, "v",
-        0.0, 1.0, 64)
-    }
-    assert(replayedAfterFold.getMessage.contains("folded into the baseline"),
-      replayedAfterFold.getMessage)
-    graft.ops.Sketch.appendHistStore(e2, dir, epoch = 3L, "v",
-      0.0, 1.0, 64)
-    assert(graft.ops.Sketch.mergedHistQuantiles(spark, dir, Seq(50))
-      .as[(Long, Long, Long, Long, Double)].head()._4 == 10000L,
-      "post-fold append must keep counting (4000 + 3000 + 3000)")
-  }
-
-  test("grouped histogram store: merged per-group quantiles are " +
-    "bit-identical to the one-shot grouped probe over the union; layout " +
-    "and family mismatches fail loud") {
-    graft.core.CacheScope.scoped {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ghist")
-        .toString + "/store"
-      val e1 = (1 to 4000).map { i =>
-        (if (i % 3 == 0) "a" else "b", (i % 97).toDouble / 3.0)
-      }.toDF("seg", "v")
-      val e2 = (1 to 3000).map { i =>
-        (if (i % 4 == 0) "a" else "c", (i % 53).toDouble / 2.0)
-      }.toDF("seg", "v")
-      graft.ops.Sketch.writeGroupedHistStore(e1, dir, epoch = 1L, "seg",
-        "v", lo = 0.0, width = 1.0, bins = 64)
-      graft.ops.Sketch.appendGroupedHistStore(e2, dir, epoch = 2L, "seg",
-        "v", lo = 0.0, width = 1.0, bins = 64)
-      val merged = graft.ops.Sketch
-        .mergedGroupedHistQuantiles(spark, dir, Seq(50, 95, 99))
-        .as[(String, Long, Long, Long, Long, Double)].collect().toSet
-      val oneShot = graft.ops.Sketch
-        .groupedHistogramQuantiles(e1.union(e2), Seq("seg"), "v",
-          0.0, 1.0, 64, Seq(50, 95, 99))
-        .as[(String, Long, Long, Long, Long, Double)].collect().toSet
-      assert(merged == oneShot, s"store-merge $merged != one-shot $oneShot")
-      assert(merged.map(_._1) == Set("a", "b", "c"),
-        "every segment any epoch saw must surface")
-      // ADD-merged counters: replayed epoch and layout drift fail loud
-      intercept[IllegalArgumentException] {
-        graft.ops.Sketch.appendGroupedHistStore(e2, dir, epoch = 2L,
-          "seg", "v", 0.0, 1.0, 64)
-      }
-      intercept[IllegalArgumentException] {
-        graft.ops.Sketch.appendGroupedHistStore(e2, dir, epoch = 3L,
-          "seg", "v", 0.0, 2.0, 64)
-      }
-      intercept[IllegalArgumentException] {
-        graft.ops.Sketch.appendGroupedHistStore(
-          e2.withColumnRenamed("seg", "cohort"), dir, epoch = 3L,
-          "cohort", "v", 0.0, 1.0, 64)
-      }
-      // family confusion is named, not silently mis-summed
-      val wrongG = intercept[IllegalArgumentException] {
-        graft.ops.Sketch.mergedHistQuantiles(spark, dir, Seq(50))
-      }
-      assert(wrongG.getMessage.contains("grouped histogram store"),
-        wrongG.getMessage)
-      val udir = java.nio.file.Files.createTempDirectory("graft_uhist")
-        .toString + "/store"
-      graft.ops.Sketch.writeHistStore(e1.select("v"), udir, epoch = 1L,
-        "v", 0.0, 1.0, 64)
-      val wrongU = intercept[IllegalArgumentException] {
-        graft.ops.Sketch.mergedGroupedHistQuantiles(spark, udir, Seq(50))
-      }
-      assert(wrongU.getMessage.contains("UNGROUPED"), wrongU.getMessage)
-      // quiesced fold: per-(group, bin) sums collapse to the baseline
-      // epoch and the per-group quantiles stay bit-identical
-      graft.ops.Sketch.compactGroupedHistStore(spark, dir)
-      assert(spark.read.parquet(dir).select("epoch").distinct()
-        .as[Long].collect().toSeq == Seq(graft.ops.Sketch.FoldEpoch))
-      val folded = graft.ops.Sketch
-        .mergedGroupedHistQuantiles(spark, dir, Seq(50, 95, 99))
-        .as[(String, Long, Long, Long, Long, Double)].collect().toSet
-      assert(folded == merged, s"fold changed grouped quantiles: $folded")
-    }
   }
 
   test("grouped histogram quantiles: per-group estimates within one bin " +
@@ -2037,6 +1752,45 @@ class OperatorSpec extends SparkSpecBase {
     intercept[IllegalArgumentException] {
       graft.ops.Scale.appendTopFreqStore(Seq("x").toDS(), store, 9L, k + 1)
     }
+    // CMS, the other ADD family, rides the same replay layout. Its
+    // counters are deterministic, so the merge is checked for bit
+    // identity: the epochs merge to the one-shot countMinEstimates of
+    // their union, and an epoch span to that of its own epochs
+    val cms = s"$dir/cms"
+    val slabs = epochs.map(_.toDF("item"))
+    def cmsAppend(e: Int, slab: org.apache.spark.sql.DataFrame,
+                  w: Int = 32): Unit =
+      if (e == 0) graft.ops.Sketch.writeCmsStore(slab, cms, 0L, d = 4, w = w)
+      else graft.ops.Sketch.appendCmsStore(slab, cms, e.toLong, d = 4, w = w)
+    slabs.zipWithIndex.foreach { case (slab, e) => cmsAppend(e, slab) }
+    def cmsMerged(span: org.apache.spark.sql.Column = lit(true)) =
+      graft.ops.Sketch.mergedCmsEstimates(spark, cms,
+          rows.map(_._1).distinct.toDF("item"), epochFilter = span)
+        .as[(String, Long)].collect().toMap
+    def cmsOneShot(parts: Seq[org.apache.spark.sql.DataFrame]) =
+      graft.ops.Sketch.countMinEstimates(parts.reduce(_ union _), d = 4,
+          w = 32)
+        .select("item", "est_cnt").as[(String, Long)].collect().toMap
+    val cmsAll = cmsMerged()
+    assert(cmsAll == cmsOneShot(slabs),
+      "merged CMS epochs must equal the one-shot sketch of their union")
+    val late = slabs.drop(1).reduce(_ union _).distinct()
+      .as[String].collect().toSet
+    assert(cmsMerged(col("epoch") >= 1L).filter(c => late(c._1)) ==
+      cmsOneShot(slabs.drop(1)),
+      "an epoch span must merge to the one-shot sketch of its epochs")
+    // re-appending epoch 1 rewrites its own epoch=1 partition: the same
+    // slab leaves every estimate unchanged, and a re-delivered epoch 1
+    // carrying other rows REPLACES the old slab instead of adding to it
+    cmsAppend(1, slabs(1))
+    assert(cmsMerged() == cmsAll, "a replayed CMS epoch must not add")
+    cmsAppend(1, slabs(2))
+    val redelivered = cmsOneShot(Seq(slabs(0), slabs(2), slabs(2)))
+    assert(cmsMerged().filter(c => redelivered.contains(c._1)) ==
+      redelivered, "a re-delivered epoch must replace its own partition")
+    assert(spark.read.parquet(cms).select("epoch").distinct().count() == 3)
+    // geometry drift fails loud
+    intercept[IllegalArgumentException](cmsAppend(3, slabs(0), w = 64))
   }
 
   test("SCD intervals tile each user's timeline: half-open chain with no " +
@@ -2109,137 +1863,9 @@ class OperatorSpec extends SparkSpecBase {
     assert(graft.ops.Scale.atMostRows(big, n))
   }
 
-  test("fold watermark on idempotent store families (r16 ADVICE): folds " +
-    "record folded_through, and a windowed read over erased epochs " +
-    "fails loud instead of answering empty") {
-    val base = java.nio.file.Files.createTempDirectory("graft_ftwm")
-      .toString
-    // --- HLL (MAX-merge) ---
-    val hll = base + "/hll"
-    graft.ops.Sketch.writeHllStore(
-      (1 to 500).map(i => s"u$i").toDF("item"), hll, epoch = 10L)
-    graft.ops.Sketch.appendHllStore(
-      (300 to 900).map(i => s"u$i").toDF("item"), hll, epoch = 11L)
-    assert(graft.ops.Sketch.storeFoldedThrough(spark, hll).isEmpty,
-      "an unfolded store must carry no watermark")
-    val before = graft.ops.Sketch.mergedHllEstimate(spark, hll)
-      .select("estimate").as[Double].head()
-    graft.ops.Sketch.compactHllStore(spark, hll)
-    assert(graft.ops.Sketch.storeFoldedThrough(spark, hll) == Some(11L),
-      "fold must record the max folded epoch")
-    // the estimate is bit-identical across the fold, and a full read
-    // (baseline included) stays fine
-    assert(graft.ops.Sketch.mergedHllEstimate(spark, hll)
-      .select("estimate").as[Double].head() == before)
-    // a historical window that the fold erased must refuse, not return
-    // a degenerate estimate over zero registers
-    val err = intercept[IllegalArgumentException] {
-      graft.ops.Sketch.mergedHllEstimate(spark, hll,
-        col("epoch").between(10L, 11L)).collect()
-    }
-    assert(err.getMessage.contains("folded through epoch 11"),
-      err.getMessage)
-    // post-fold appends (idempotent MAX-merge: replay-safe) still work,
-    // and a window over LIVE epochs passes the guard
-    graft.ops.Sketch.appendHllStore(
-      (1 to 100).map(i => s"u$i").toDF("item"), hll, epoch = 12L)
-    assert(graft.ops.Sketch.mergedHllEstimate(spark, hll,
-      col("epoch") === 12L).select("estimate").as[Double].head() > 0.0)
-    // --- KMV (set-union merge) ---
-    val kmv = base + "/kmv"
-    graft.ops.Sketch.writeKmvStore(
-      (1 to 3000).map(i => s"u$i").toDF("item"), kmv, epoch = 5L)
-    graft.ops.Sketch.appendKmvStore(
-      (2000 to 4000).map(i => s"u$i").toDF("item"), kmv, epoch = 6L)
-    graft.ops.Sketch.compactKmvStore(spark, kmv)
-    assert(graft.ops.Sketch.storeFoldedThrough(spark, kmv) == Some(6L))
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.mergedKmvEstimate(spark, kmv,
-        col("epoch") === 5L).collect()
-    }
-    // --- bloom (OR-merge) ---
-    val blm = base + "/bloom"
-    graft.ops.Sketch.writeBloomStore(
-      (1 to 200).map(i => s"w$i").toDF("item"), blm, epoch = 3L)
-    graft.ops.Sketch.compactBloomStore(spark, blm)
-    assert(graft.ops.Sketch.storeFoldedThrough(spark, blm) == Some(3L))
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.mergedBloomProbe(spark, blm,
-        Seq("w1").toDF("item"), epochFilter = col("epoch") === 3L).collect()
-    }
-    // --- grouped KMV ---
-    val gk = base + "/gkmv"
-    graft.ops.Sketch.writeGroupedKmvStore(
-      (1 to 2000).map(i => (s"g${i % 3}", s"u$i")).toDF("grp", "item"),
-      gk, groupCol = "grp", epoch = 7L)
-    val matBefore = graft.ops.Sketch
-      .groupedKmvStoreOverlapMatrix(spark, gk).collect().toSet
-    graft.ops.Sketch.compactGroupedKmvStore(spark, gk)
-    assert(graft.ops.Sketch.storeFoldedThrough(spark, gk) == Some(7L))
-    assert(graft.ops.Sketch.groupedKmvStoreOverlapMatrix(spark, gk)
-      .collect().toSet == matBefore,
-      "overlap matrix must be bit-identical across the fold")
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.mergedGroupedKmvHashes(spark, gk,
-        col("epoch") === 7L).collect()
-    }
-    // repeated folds carry the watermark monotonically
-    graft.ops.Sketch.compactHllStore(spark, hll)
-    assert(graft.ops.Sketch.storeFoldedThrough(spark, hll) == Some(12L),
-      "second fold must advance the watermark to the newest folded epoch")
-    // r17 review: a window entirely ABOVE the watermark that matches
-    // nothing must get its empty answer, not an error — the dashboard
-    // polling the current epoch before its append lands
-    val emptyRow = graft.ops.Sketch.mergedHllEstimate(spark, hll,
-      col("epoch") === 99L).head()
-    assert(emptyRow.isNullAt(emptyRow.fieldIndex("estimate")),
-      "an empty above-watermark window answers its degenerate " +
-        s"zero-register row, never throws: $emptyRow")
-    // and a PARTIAL window (straddling the fold with live rows) is now
-    // provably refused too — the filter accepts a folded id
-    graft.ops.Sketch.appendHllStore(
-      (1 to 50).map(i => s"u$i").toDF("item"), hll, epoch = 20L)
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.mergedHllEstimate(spark, hll,
-        col("epoch").between(5L, 20L)).collect()
-    }
-  }
-
-  test("keep-newest fold with nothing to fold records NO watermark — a " +
-    "store that never lost per-epoch rows must not arm the folded-" +
-    "window guard (r17 review)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nofold")
-      .toString + "/store"
-    graft.ops.Sketch.writeCmsStore(
-      (1 to 100).map(i => s"it${i % 9}").toDF("item"), dir, epoch = 0L,
-      d = 4, w = 32)
-    // single live epoch: the keep-newest fold has nothing below it
-    graft.ops.Sketch.compactCmsStore(spark, dir)
-    assert(graft.ops.Sketch.storeFoldedThrough(spark, dir).isEmpty,
-      "nothing folded -> no watermark")
-    // an empty-window read on that store stays a plain empty answer
-    assert(graft.ops.Sketch.mergedCmsCounters(spark, dir,
-      col("epoch") === 5L).isEmpty)
-    // same for the MG store (the shared compactKeepNewest protocol) —
-    // skewed data, so the k-counter summary is non-empty
-    import spark.implicits._
-    val tf = dir + "_tf"
-    graft.ops.Scale.writeTopFreqStore(
-      (Seq.fill(40)("hot") ++ (1 to 10).map(i => s"w$i")).toDS(),
-      tf, epoch = 3L, k = 4)
-    graft.ops.Scale.compactTopFreqStore(spark, tf)
-    assert(graft.ops.Sketch.storeFoldedThrough(spark, tf).isEmpty)
-    // a REAL fold still records it
-    graft.ops.Sketch.appendCmsStore(
-      (1 to 10).map(i => s"x$i").toDF("item"), dir, epoch = 1L,
-      d = 4, w = 32)
-    graft.ops.Sketch.compactCmsStore(spark, dir)
-    assert(graft.ops.Sketch.storeFoldedThrough(spark, dir) == Some(0L))
-  }
-
   test("fileless stores read as empty, not UNABLE_TO_INFER_SCHEMA: a " +
     "uniform rotation legitimately empties an MG summary, and an empty " +
-    "first batch writes a KMV/CMS store with zero rows (r17 review " +
+    "first batch writes a CMS store with zero rows (r17 review " +
     "fallout)") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_fileless")
@@ -2253,8 +1879,6 @@ class OperatorSpec extends SparkSpecBase {
       (1 to 50).map(i => s"w${i % 5}").toDS(), tf, epoch = 0L, k = 4)
     assert(graft.ops.Scale.mergedHeavyHitters(spark, tf).isEmpty,
       "an empty summary store answers its empty relation")
-    graft.ops.Scale.compactTopFreqStore(spark, tf) // no-op, no throw
-    assert(graft.ops.Sketch.storeFoldedThrough(spark, tf).isEmpty)
     // appends into the fileless store work, and reads then see them
     graft.ops.Scale.appendTopFreqStore(
       (Seq.fill(30)("hot") ++ (1 to 5).map(i => s"x$i")).toDS(),
@@ -2262,19 +1886,9 @@ class OperatorSpec extends SparkSpecBase {
     val hh = graft.ops.Scale.mergedHeavyHitters(spark, tf)
       .as[(String, Long)].collect().toMap
     assert(hh.contains("hot") && hh("hot") > 0L, s"$hh")
-    // KMV store written from an EMPTY first batch (empty first
+    // CMS store written from an EMPTY first batch (empty first
     // micro-batch in a runner): fileless, must read as empty and
     // accept the next epoch
-    val kmv = base + "/kmv"
-    graft.ops.Sketch.writeKmvStore(
-      spark.emptyDataset[String].toDF("item"), kmv, epoch = 0L)
-    assert(graft.ops.Sketch.mergedKmvEstimate(spark, kmv)
-      .select("n_kept").as[Long].head() == 0L)
-    graft.ops.Sketch.appendKmvStore(
-      (1 to 500).map(i => s"u$i").toDF("item"), kmv, epoch = 1L)
-    assert(graft.ops.Sketch.mergedKmvEstimate(spark, kmv)
-      .select("n_kept").as[Long].head() > 0L)
-    // CMS: same
     val cms = base + "/cms"
     graft.ops.Sketch.writeCmsStore(
       spark.emptyDataset[String].toDF("item"), cms, epoch = 0L,
@@ -2285,18 +1899,6 @@ class OperatorSpec extends SparkSpecBase {
       Seq.fill(7)("x").toDF("item"), cms, epoch = 1L, d = 4, w = 32)
     assert(graft.ops.Sketch.mergedCmsEstimates(spark, cms,
         Seq("x").toDF("item")).as[(String, Long)].head() == (("x", 7L)))
-    // FULL-fold asymmetry: the histogram family folds EVERY epoch into
-    // the baseline (it keeps no newest-live partition), so compacting
-    // even a single-epoch store genuinely erases that epoch's per-epoch
-    // identity — the watermark records it. (An epoch written from empty
-    // input still exists as its zero-count bins spine.)
-    val hist = base + "/hist"
-    graft.ops.Sketch.writeHistStore(
-      spark.emptyDataset[(Long, Double)].toDF("doc_id", "v"), hist,
-      epoch = 0L, valueCol = "v", lo = 0.0, width = 1.0, bins = 10)
-    graft.ops.Sketch.compactHistStore(spark, hist)
-    assert(graft.ops.Sketch.storeFoldedThrough(spark, hist) == Some(0L),
-      "a full fold erases its epochs, single-epoch included")
   }
 
   test("CMS probe of unseen items: empty cells read as 0 (never another " +
@@ -2367,127 +1969,31 @@ class OperatorSpec extends SparkSpecBase {
   }
 
   test("store epoch-id hygiene (r17 ADVICE): negative caller epochs are " +
-    "rejected at EVERY write/append entry point — writeXStore(-1) would " +
-    "forge a partition indistinguishable from the fold baseline") {
+    "rejected at every write/append entry point of the three store " +
+    "families") {
     val base = java.nio.file.Files.createTempDirectory("graft_negep")
       .toString
     val items = Seq("a", "b").toDF("item")
     def rejected(f: => Unit): Unit = {
       val e = intercept[IllegalArgumentException](f)
-      assert(e.getMessage.contains("reserved"), e.getMessage)
+      assert(e.getMessage.contains("epoch must be >= 0"), e.getMessage)
     }
     rejected(graft.ops.Sketch.writeCmsStore(items, base + "/c", epoch = -1L))
-    rejected(graft.ops.Sketch.writeHllStore(items, base + "/h", epoch = -1L))
     rejected(graft.ops.Sketch.writeBloomStore(items, base + "/b",
       epoch = -2L))
-    rejected(graft.ops.Sketch.writeKmvStore(items, base + "/k", epoch = -1L))
-    rejected(graft.ops.Sketch.writeHistStore(
-      Seq(1.0).toDF("v"), base + "/hi", epoch = -1L, valueCol = "v",
-      lo = 0.0, width = 1.0, bins = 4))
-    rejected(graft.ops.Sketch.writeGroupedHistStore(
-      Seq(("g", 1.0)).toDF("grp", "v"), base + "/gh", epoch = -1L,
-      groupCol = "grp", valueCol = "v", lo = 0.0, width = 1.0, bins = 4))
-    rejected(graft.ops.Sketch.writeGroupedKmvStore(
-      Seq(("g", "a")).toDF("grp", "item"), base + "/gk", epoch = -1L,
-      groupCol = "grp"))
     rejected(graft.ops.Scale.writeTopFreqStore(
       Seq("a").toDS(), base + "/tf", epoch = -1L, k = 4))
-    // appends too — a valid store first, then the forged epoch
-    graft.ops.Sketch.writeHllStore(items, base + "/h2", epoch = 0L)
-    rejected(graft.ops.Sketch.appendHllStore(items, base + "/h2",
-      epoch = -1L))
-    graft.ops.Sketch.writeKmvStore(items, base + "/k2", epoch = 0L)
-    rejected(graft.ops.Sketch.appendKmvStore(items, base + "/k2",
+    // appends too — a valid store first, then the negative epoch
+    graft.ops.Sketch.writeCmsStore(items, base + "/c2", epoch = 0L)
+    rejected(graft.ops.Sketch.appendCmsStore(items, base + "/c2",
       epoch = -1L))
     graft.ops.Sketch.writeBloomStore(items, base + "/b2", epoch = 0L)
     rejected(graft.ops.Sketch.appendBloomStore(items, base + "/b2",
       epoch = -1L))
-    graft.ops.Sketch.writeGroupedKmvStore(
-      Seq(("g", "a")).toDF("grp", "item"), base + "/gk2", epoch = 0L,
-      groupCol = "grp")
-    rejected(graft.ops.Sketch.appendGroupedKmvStore(
-      Seq(("g", "a")).toDF("grp", "item"), base + "/gk2", epoch = -1L,
-      groupCol = "grp"))
-    graft.ops.Sketch.writeHistStore(Seq(1.0).toDF("v"), base + "/hi2",
-      epoch = 0L, valueCol = "v", lo = 0.0, width = 1.0, bins = 4)
-    rejected(graft.ops.Sketch.appendHistStore(Seq(1.0).toDF("v"),
-      base + "/hi2", epoch = -1L, valueCol = "v", lo = 0.0, width = 1.0,
-      bins = 4))
-    graft.ops.Sketch.writeGroupedHistStore(
-      Seq(("g", 1.0)).toDF("grp", "v"), base + "/gh2", epoch = 0L,
-      groupCol = "grp", valueCol = "v", lo = 0.0, width = 1.0, bins = 4)
-    rejected(graft.ops.Sketch.appendGroupedHistStore(
-      Seq(("g", 1.0)).toDF("grp", "v"), base + "/gh2", epoch = -1L,
-      groupCol = "grp", valueCol = "v", lo = 0.0, width = 1.0, bins = 4))
-  }
-
-  test("folded-window guard on unix-millis epoch domains (r17 VERDICT " +
-    "#3): a window claiming folded millis is refused by the sampled " +
-    "probe, an above-watermark empty poll still passes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_msguard")
-      .toString + "/hll"
-    val ms = 1723939200000L // an epoch-millis batch id, far above 2^25
-    graft.ops.Sketch.writeHllStore(
-      (1 to 300).map(i => s"u$i").toDF("item"), dir, epoch = ms)
-    graft.ops.Sketch.appendHllStore(
-      (200 to 600).map(i => s"u$i").toDF("item"), dir, epoch = ms + 60000L)
-    graft.ops.Sketch.compactHllStore(spark, dir)
-    assert(graft.ops.Sketch.storeFoldedThrough(spark, dir)
-      == Some(ms + 60000L))
-    // the watermark endpoint is inside the sampled probe's dense tail,
-    // so this folded-window claim is PROVEN and refused — pre-r18 the
-    // guard skipped all domains >= 2^25 wholesale
-    val err = intercept[IllegalArgumentException] {
-      graft.ops.Sketch.mergedHllEstimate(spark, dir,
-        col("epoch").between(ms, ms + 60000L)).collect()
-    }
-    assert(err.getMessage.contains("folded through"), err.getMessage)
-    // a poll of the NEXT batch's epoch before its append lands must get
-    // its empty answer, never a refusal (the r17-review contract, now
-    // holding on large domains too)
-    val emptyRow = graft.ops.Sketch.mergedHllEstimate(spark, dir,
-      col("epoch") === ms + 120000L).head()
-    assert(emptyRow.isNullAt(emptyRow.fieldIndex("estimate")))
-    // full-history read (baseline included) is untouched
-    assert(graft.ops.Sketch.mergedHllEstimate(spark, dir)
-      .select("estimate").as[Double].head() > 0.0)
-  }
-
-  test("folded-window guard fallbacks (r17 ADVICE): a filter on " +
-    "non-epoch columns falls back to the unguarded read, and a " +
-    "re-appended (live-again) below-watermark epoch is not refused") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_guardfb")
-      .toString + "/hll"
-    graft.ops.Sketch.writeHllStore(
-      (1 to 400).map(i => s"u$i").toDF("item"), dir, epoch = 1L)
-    graft.ops.Sketch.appendHllStore(
-      (300 to 800).map(i => s"u$i").toDF("item"), dir, epoch = 2L)
-    graft.ops.Sketch.compactHllStore(spark, dir)
-    assert(graft.ops.Sketch.storeFoldedThrough(spark, dir) == Some(2L))
-    // a filter over the full store schema was legal before the guard
-    // existed — it cannot be point-evaluated against the synthetic
-    // epoch frame, and must fall back to the (filtered) unguarded read,
-    // not die with an unresolved-column AnalysisException
-    val est = graft.ops.Sketch.mergedHllEstimate(spark, dir,
-      col("register") >= 0L).select("estimate").as[Double].head()
-    assert(est > 0.0, s"fallback read must answer: $est")
-    // an at-least-once replay re-appends folded epoch 2's complete
-    // slab: the epoch is live again, and a window over it must answer
-    // from the recreated rows instead of the pre-refinement refusal
-    graft.ops.Sketch.appendHllStore(
-      (300 to 800).map(i => s"u$i").toDF("item"), dir, epoch = 2L)
-    val replayEst = graft.ops.Sketch.mergedHllEstimate(spark, dir,
-      col("epoch") === 2L).select("estimate").as[Double].head()
-    val oneShot = graft.ops.Sketch.hllEstimate(
-        (300 to 800).map(i => s"u$i").toDF("item"))
-      .select("estimate").as[Double].head()
-    assert(replayEst == oneShot,
-      s"live-again epoch must answer its own slab: $replayEst vs $oneShot")
-    // a window claiming folded epoch 1 (NOT re-appended) still refuses
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.mergedHllEstimate(spark, dir,
-        col("epoch") === 1L).collect()
-    }
+    graft.ops.Scale.writeTopFreqStore(Seq("a").toDS(), base + "/tf2",
+      epoch = 0L, k = 4)
+    rejected(graft.ops.Scale.appendTopFreqStore(Seq("a").toDS(),
+      base + "/tf2", epoch = -1L, k = 4))
   }
 
   test("fingerprint-keyed temp-store caches (r17 ADVICE / VERDICT #5): " +
@@ -2517,69 +2023,31 @@ class OperatorSpec extends SparkSpecBase {
       s"a fresh single-item store answers exactly: ${got2(9L)}")
   }
 
-  test("legacy top-freq layout (pre-rename 'k=') fails with a migration " +
-    "message, not a bare family mismatch (r16 ADVICE)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tflegacy")
-      .toString + "/store"
-    // a legitimate pre-rename top-freq store: rows are fine, only the
-    // layout key is the old name
-    graft.ops.Scale.writeTopFreqStore(
-      (1 to 100).map(i => s"w${i % 7}").toDS(), dir, epoch = 1L, k = 5)
-    val lp = new org.apache.hadoop.fs.Path(dir, "_graft_layout")
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(lp, true)
-    try out.write("k=5\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val err = intercept[IllegalArgumentException] {
-      graft.ops.Scale.mergedHeavyHitters(spark, dir).collect()
-    }
-    assert(err.getMessage.contains("tfk=<n>") &&
-      err.getMessage.contains("legacy"),
-      s"want the migration hint, got: ${err.getMessage}")
-    // the documented migration (rewrite the record once) restores reads
-    val out2 = fs.create(lp, true)
-    try out2.write("tfk=5\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out2.close()
-    val n = graft.ops.Scale.mergedHeavyHitters(spark, dir).count()
-    assert(n > 0L && n <= 5L, s"post-migration read: $n rows")
-  }
-
   test("store families: each writes its exact layout record, CMS and " +
     "top-freq partition by epoch, and every other family's merged " +
-    "reader refuses the store by name or with its redirect hint") {
+    "reader refuses the store by name") {
     import graft.ops.{Scale, Sketch}
     val base = java.nio.file.Files.createTempDirectory("graft_families")
       .toString
     val items = Seq("a", "b", "c").toDF("item")
-    val grouped = Seq(("x", "a"), ("y", "b")).toDF("g", "item")
-    val values = Seq(0.5, 1.5).toDF("v")
-    val groupedValues = Seq(("x", 0.5), ("y", 1.5)).toDF("g", "v")
-    // (family, writer, exact layout record)
-    val writers: Seq[(String, String => Unit, String)] = Seq(
-      ("HLL", Sketch.writeHllStore(items, _, 1L), "p=6"),
-      ("bloom", Sketch.writeBloomStore(items, _, 1L), "bits=12,k=3"),
-      ("KMV", Sketch.writeKmvStore(items, _, 1L), "k=256"),
-      ("grouped KMV", Sketch.writeGroupedKmvStore(grouped, _, 1L, "g"),
-        "gk=256,group=g"),
-      ("histogram", Sketch.writeHistStore(values, _, 1L, "v", 0.0, 0.5, 8),
-        "lo=0.0,width=0.5,bins=8"),
-      ("grouped histogram", Sketch.writeGroupedHistStore(groupedValues, _,
-        1L, "g", "v", 0.0, 0.5, 8), "lo=0.0,width=0.5,bins=8,group=g"),
-      ("CMS", Sketch.writeCmsStore(items, _, 1L), "cmsd=4,cmsw=64"),
+    // (family, writer, appender, exact layout record)
+    val writers: Seq[(String, String => Unit, String => Unit, String)] = Seq(
+      ("bloom", Sketch.writeBloomStore(items, _, 1L),
+        Sketch.appendBloomStore(items, _, 2L), "bits=12,k=3"),
+      ("CMS", Sketch.writeCmsStore(items, _, 1L),
+        Sketch.appendCmsStore(items, _, 2L), "cmsd=4,cmsw=64"),
       ("top-freq", Scale.writeTopFreqStore(Seq("a", "a", "b").toDS(), _,
-        1L, 64), "tfk=64"))
+        1L, 64), Scale.appendTopFreqStore(Seq("a").toDS(), _, 2L, 64),
+        "tfk=64"))
     val readers: Map[String, String => org.apache.spark.sql.DataFrame] = Map(
-      "HLL" -> (Sketch.mergedHllEstimate(spark, _)),
       "bloom" -> (Sketch.mergedBloomWords(spark, _)),
-      "KMV" -> (Sketch.mergedKmvEstimate(spark, _)),
-      "grouped KMV" -> (Sketch.mergedGroupedKmvHashes(spark, _)),
-      "histogram" -> (Sketch.mergedHistQuantiles(spark, _, Seq(50))),
-      "grouped histogram" ->
-        (Sketch.mergedGroupedHistQuantiles(spark, _, Seq(50))),
-      "CMS" -> (Sketch.mergedCmsCounters(spark, _)),
+      "CMS" -> (Sketch.mergedCmsEstimates(spark, _, items)),
       "top-freq" -> (Scale.mergedHeavyHitters(spark, _)))
-    for ((family, write, layout) <- writers) {
+    for ((family, write, append, layout) <- writers) {
       val path = s"$base/${family.replace(' ', '_')}"
+      // appending to a path with no layout record fails loud
+      val bare = intercept[IllegalArgumentException](append(path))
+      assert(bare.getMessage.contains("no layout record"), bare.getMessage)
       write(path)
       val lp = new org.apache.hadoop.fs.Path(path, "_graft_layout")
       val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2593,8 +2061,7 @@ class OperatorSpec extends SparkSpecBase {
       assert(readers(family)(path).count() > 0L, s"$family reads itself")
       for ((other, read) <- readers if other != family) {
         val err = intercept[IllegalArgumentException](read(path))
-        assert(err.getMessage.contains(s"not a $other store") ||
-          err.getMessage.contains("use merged"),
+        assert(err.getMessage.contains(s"not a $other store"),
           s"$other reader on a $family store: ${err.getMessage}")
       }
     }

@@ -343,240 +343,6 @@ class StreamingSpec extends SparkSpecBase {
     assert(hour == ((4L, 3L)), s"pv/uv: $hour") // 4 events, 3 distinct users
   }
 
-  test("T13 deterministic registers: streamed per-batch HLL store merges " +
-    "bit-identically to the one-shot sketch of everything ingested") {
-    implicit val s = spark
-    val dir = Files.createTempDirectory("graft_hllstream").toString
-    val mem = MemoryStream[Long]
-    val events = mem.toDF().toDF("user_id")
-    // continuous trigger: each addData below becomes its own micro-batch
-    // (AvailableNow would terminate at start — no data pending yet)
-    val q = StreamingDashboard.runHllRegisterStore(
-      events, s"$dir/store", s"$dir/ckpt",
-      trigger = Trigger.ProcessingTime("0 seconds")).start()
-    val batches = Seq((1L to 2000L), (1500L to 4500L), (4000L to 6000L))
-    // quiesced mid-stream fold after batch 2: MAX-merge is idempotent,
-    // so everything asserted below must hold identically across it
-    try {
-      batches.zipWithIndex.foreach { case (b, i) =>
-        mem.addData(b); q.processAllAvailable()
-        if (i == 1) graft.ops.Sketch.compactHllStore(spark, s"$dir/store")
-      }
-    } finally q.stop()
-    // the fold collapsed epochs {0,1} into the reserved baseline; batch 2
-    // then appended its own slab
-    val epochs = spark.read.parquet(s"$dir/store")
-      .select("epoch").distinct().as[Long].collect().sorted
-    assert(epochs.toSeq == Seq(graft.ops.Sketch.FoldEpoch, 2L),
-      s"epochs: ${epochs.toSeq}")
-    val merged = graft.ops.Sketch.mergedHllEstimate(spark, s"$dir/store")
-      .as[(Long, Long, Long, Double)].head()
-    val oneShot = graft.ops.Sketch.hllEstimate(
-        batches.flatten.toDF("user_id"), valueCol = "user_id")
-      .as[(Long, Long, Long, Long, Double)].head()
-    assert((merged._1, merged._2, merged._3, merged._4) ==
-      (oneShot._1, oneShot._3, oneShot._4, oneShot._5),
-      s"streamed store $merged != one-shot $oneShot")
-    // a duplicate epoch append (the replayed-batch case) changes nothing
-    graft.ops.Sketch.appendHllStore(
-      (1500L to 4500L).toDF("user_id"), s"$dir/store", epoch = 1L,
-      valueCol = "user_id")
-    val replayed = graft.ops.Sketch.mergedHllEstimate(spark, s"$dir/store")
-      .as[(Long, Long, Long, Double)].head()
-    assert(replayed == merged, "replayed epoch must not drift the estimate")
-  }
-
-  test("T13d streamed KMV store: per-batch bottom-k epochs union-merge " +
-    "bit-identically to the one-shot sketch, replays change nothing") {
-    implicit val s = spark
-    val dir = Files.createTempDirectory("graft_kmvstream").toString
-    val mem = MemoryStream[Long]
-    val events = mem.toDF().toDF("user_id")
-    val q = StreamingDashboard.runKmvStore(
-      events, s"$dir/store", s"$dir/ckpt",
-      trigger = Trigger.ProcessingTime("0 seconds")).start()
-    val batches = Seq((1L to 2000L), (1500L to 4500L), (4000L to 6000L))
-    // quiesced mid-stream fold: union + re-trim is exactly the merged
-    // read, so the estimate must be bit-identical across it
-    try {
-      batches.zipWithIndex.foreach { case (b, i) =>
-        mem.addData(b); q.processAllAvailable()
-        if (i == 1) graft.ops.Sketch.compactKmvStore(spark, s"$dir/store")
-      }
-    } finally q.stop()
-    val epochs = spark.read.parquet(s"$dir/store")
-      .select("epoch").distinct().as[Long].collect().sorted
-    assert(epochs.toSeq == Seq(graft.ops.Sketch.FoldEpoch, 2L),
-      s"epochs: ${epochs.toSeq}")
-    val merged = graft.ops.Sketch.mergedKmvEstimate(spark, s"$dir/store")
-      .as[(Long, Long, Long, Long)].head()
-    val oneShot = graft.ops.Sketch.kmvEstimate(
-        batches.flatten.toDF("user_id"), valueCol = "user_id")
-      .as[(Long, Long, Long, Long, Long)].head()
-    assert(merged == ((oneShot._1, oneShot._2, oneShot._3, oneShot._4)),
-      s"streamed store $merged != one-shot $oneShot")
-    // a replayed micro-batch (same epoch id, same rows) changes nothing
-    graft.ops.Sketch.appendKmvStore(
-      (1500L to 4500L).toDF("user_id"), s"$dir/store", epoch = 1L,
-      valueCol = "user_id")
-    val replayed = graft.ops.Sketch.mergedKmvEstimate(spark, s"$dir/store")
-      .as[(Long, Long, Long, Long)].head()
-    assert(replayed == merged, "replayed epoch must not drift the estimate")
-  }
-
-  test("T13d auto-fold cadence: a runner with compactEvery = 2 keeps the " +
-    "epoch count bounded across 4 batches and the estimate bit-identical") {
-    implicit val s = spark
-    val dir = Files.createTempDirectory("graft_kmvauto").toString
-    val mem = MemoryStream[Long]
-    val q = StreamingDashboard.runKmvStore(
-      mem.toDF().toDF("user_id"), s"$dir/store", s"$dir/ckpt",
-      trigger = Trigger.ProcessingTime("0 seconds"), compactEvery = 2)
-      .start()
-    val batches = Seq((1L to 1500L), (1000L to 3000L), (2500L to 4000L),
-      (3500L to 5000L))
-    try {
-      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-    } finally q.stop()
-    // folds fired after batches 1 and 3: everything is in the baseline
-    val epochs = spark.read.parquet(s"$dir/store")
-      .select("epoch").distinct().as[Long].collect().sorted
-    assert(epochs.toSeq == Seq(graft.ops.Sketch.FoldEpoch),
-      s"epochs: ${epochs.toSeq}")
-    val merged = graft.ops.Sketch.mergedKmvEstimate(spark, s"$dir/store")
-      .as[(Long, Long, Long, Long)].head()
-    val oneShot = graft.ops.Sketch.kmvEstimate(
-        batches.flatten.toDF("user_id"), valueCol = "user_id")
-      .as[(Long, Long, Long, Long, Long)].head()
-    assert(merged == ((oneShot._1, oneShot._2, oneShot._3, oneShot._4)),
-      s"auto-folded store $merged != one-shot $oneShot")
-  }
-
-  test("T13e streamed KMV overlap stores: the stored-sketch theta row " +
-    "after quiesce equals the batch intersection of everything " +
-    "ingested; mixed-k stores fail loud") {
-    implicit val s = spark
-    val dir = Files.createTempDirectory("graft_kmvoverlap").toString
-    val mem = MemoryStream[(Long, String)]
-    val events = mem.toDF().toDF("user_id", "kind")
-    val q = StreamingDashboard.runKmvOverlapStores(
-      events, s"$dir/a", s"$dir/b", s"$dir/ckpt",
-      predA = col("kind") === "click", predB = col("kind") === "buy",
-      valueCol = "user_id",
-      trigger = Trigger.ProcessingTime("0 seconds")).start()
-    // clicks 1..3000, buys 2000..5000 per batch thirds — real overlap
-    val batches = Seq(
-      (1L to 1000L).map(u => (u, "click")) ++
-        (2000L to 3000L).map(u => (u, "buy")),
-      (1001L to 2500L).map(u => (u, "click")) ++
-        (3001L to 4200L).map(u => (u, "buy")),
-      (2501L to 3000L).map(u => (u, "click")) ++
-        (4201L to 5000L).map(u => (u, "buy")))
-    try {
-      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-    } finally q.stop()
-    val streamed = graft.ops.Sketch
-      .kmvStoreOverlap(spark, s"$dir/a", s"$dir/b")
-      .as[(Long, Long, Long, Long, Long, Long)].head()
-    val batch = graft.ops.Sketch.kmvIntersection(
-        (1L to 3000L).toDF("user_id"), (2000L to 5000L).toDF("user_id"),
-        valueCol = "user_id")
-      .as[(Long, Long, Long, Long, Long, Long, Long, Long)].head()
-    assert(streamed == ((batch._1, batch._2, batch._3, batch._4,
-      batch._5, batch._6)),
-      s"streamed stores $streamed != batch intersection $batch")
-    // exact overlap for reference: 1001 shared users of 5000
-    assert(batch._7 == 1001 && batch._8 == 5000)
-    // a store written at a different k cannot overlap — loud, not wrong
-    graft.ops.Sketch.writeKmvStore((1L to 100L).toDF("user_id"),
-      s"$dir/c", epoch = 0L, valueCol = "user_id", k = 128)
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.kmvStoreOverlap(spark, s"$dir/a", s"$dir/c")
-    }
-  }
-
-  test("T13e overlap runner recovers a parked store before its exists-" +
-    "check: a batch after a fold that crashed mid-swap appends to the " +
-    "history instead of replacing it") {
-    implicit val s = spark
-    val dir = Files.createTempDirectory("graft_kmvoverlap_park").toString
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamingDashboard.runKmvOverlapStores(
-      mem.toDF().toDF("user_id", "kind"), s"$dir/a", s"$dir/b",
-      s"$dir/ckpt", predA = col("kind") === "click",
-      predB = col("kind") === "buy", valueCol = "user_id",
-      trigger = Trigger.ProcessingTime("0 seconds")).start()
-    val batch1 = (1L to 2000L).map(u => (u, "click")) ++
-      (1L to 100L).map(u => (u, "buy"))
-    val batch2 = (1500L to 4000L).map(u => (u, "click"))
-    try {
-      mem.addData(batch1); q.processAllAvailable()
-      // a compaction of store A that crashed after parking the live dir
-      val pathA = new org.apache.hadoop.fs.Path(s"$dir/a")
-      graft.sinks.Sinks.renameOrThrow(
-        pathA.getFileSystem(spark.sparkContext.hadoopConfiguration),
-        pathA, new org.apache.hadoop.fs.Path(s"$dir/a__old"))
-      mem.addData(batch2); q.processAllAvailable()
-    } finally q.stop()
-    val merged = graft.ops.Sketch.mergedKmvEstimate(spark, s"$dir/a")
-      .as[(Long, Long, Long, Long)].head()
-    val clicks = (batch1 ++ batch2).toDF("user_id", "kind")
-      .filter(col("kind") === "click")
-    val oneShot = graft.ops.Sketch.kmvEstimate(clicks, valueCol = "user_id")
-      .as[(Long, Long, Long, Long, Long)].head()
-    assert(merged == ((oneShot._1, oneShot._2, oneShot._3, oneShot._4)),
-      s"store A after the parked fold $merged != both batches $oneShot")
-  }
-
-  test("T13f streamed grouped KMV store: the quiesce-time overlap " +
-    "MATRIX equals the one-shot grouped matrix of everything ingested, " +
-    "for every segment pair at once") {
-    implicit val s = spark
-    val dir = Files.createTempDirectory("graft_gkmvstream").toString
-    val mem = MemoryStream[(Long, String)]
-    val events = mem.toDF().toDF("user_id", "kind")
-    val q = StreamingDashboard.runGroupedKmvStore(
-      events, s"$dir/store", s"$dir/ckpt", groupCol = "kind",
-      valueCol = "user_id",
-      trigger = Trigger.ProcessingTime("0 seconds")).start()
-    // three segments with planted pairwise overlaps, split over batches
-    val all = (1L to 3000L).map(u => (u, "click")) ++
-      (2000L to 5000L).map(u => (u, "buy")) ++
-      (4500L to 6000L).map(u => (u, "view"))
-    // compact mid-stream (quiesced between triggers): the fold must be
-    // invisible in the final matrix and collapse the epoch slabs
-    try {
-      val chunks = all.grouped((all.size + 2) / 3).toSeq
-      chunks.zipWithIndex.foreach { case (b, i) =>
-        mem.addData(b.toSeq); q.processAllAvailable()
-        if (i == 1)
-          graft.ops.Sketch.compactGroupedKmvStore(spark, s"$dir/store")
-      }
-    } finally q.stop()
-    assert(spark.read.parquet(s"$dir/store").select("epoch").distinct()
-      .count() == 2L,
-      "fold must collapse the first two epoch slabs into one")
-    val streamed = graft.ops.Sketch
-      .groupedKmvStoreOverlapMatrix(spark, s"$dir/store")
-      .as[(String, String, Long, Long, Long, Long, Long, Long)]
-      .collect().sortBy(r => (r._1, r._2)).toSeq
-    val oneShot = graft.ops.Sketch.thetaOverlapMatrix(
-        graft.ops.Sketch.groupedKmvHashes(
-          all.toDF("user_id", "kind").select(col("kind"),
-            col("user_id").as("item")), "kind"),
-        "kind", 256)
-      .as[(String, String, Long, Long, Long, Long, Long, Long)]
-      .collect().sortBy(r => (r._1, r._2)).toSeq
-    assert(streamed == oneShot,
-      s"streamed matrix $streamed != one-shot $oneShot")
-    assert(streamed.map(r => (r._1, r._2)) ==
-      Seq(("buy", "click"), ("buy", "view"), ("click", "view")),
-      s"all three segment pairs must surface: $streamed")
-    // buy∩view is real (4500..5000), click∩view is empty — both rows exist
-    val cv = streamed.find(r => r._1 == "click" && r._2 == "view").get
-    assert(cv._5 == 0L, s"disjoint pair must estimate zero inter: $cv")
-  }
-
   test("T13b streamed bloom store: per-batch epochs OR-merge " +
     "bit-identically to the one-shot filter, probes never miss, and " +
     "replays cannot drift") {
@@ -589,18 +355,12 @@ class StreamingSpec extends SparkSpecBase {
       trigger = Trigger.ProcessingTime("0 seconds")).start()
     val batches = Seq((1 to 200).map(i => s"doc$i"),
       (150 to 400).map(i => s"doc$i"), (350 to 500).map(i => s"doc$i"))
-    // quiesced mid-stream fold: OR-merge is idempotent, so the probe
-    // behavior below must be identical across it
     try {
-      batches.zipWithIndex.foreach { case (b, i) =>
-        mem.addData(b); q.processAllAvailable()
-        if (i == 1) graft.ops.Sketch.compactBloomStore(spark, s"$dir/store")
-      }
+      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
     } finally q.stop()
     val epochs = spark.read.parquet(s"$dir/store")
       .select("epoch").distinct().as[Long].collect().sorted
-    assert(epochs.toSeq == Seq(graft.ops.Sketch.FoldEpoch, 2L),
-      s"epochs: ${epochs.toSeq}")
+    assert(epochs.toSeq == Seq(0L, 1L, 2L), s"epochs: ${epochs.toSeq}")
     val merged = graft.ops.Sketch.mergedBloomWords(spark, s"$dir/store")
       .as[(Long, Long)].collect().sorted.toSeq
     val oneShot = graft.ops.Sketch.bloomWords(
@@ -641,21 +401,12 @@ class StreamingSpec extends SparkSpecBase {
     val batches = (0 until 3).map(b =>
       (0 to 5).flatMap(i => Seq.fill(1 << (10 - i))(s"h$i")) ++
         (1 to 100).map(i => s"s${b}_$i"))
-    // quiesced mid-stream fold: epochs below the newest collapse into
-    // the reserved baseline, the newest partition stays live (the MG
-    // replay contract rides on per-epoch dynamic overwrite), and
-    // counter-sum associativity keeps every bound below identical
     try {
-      batches.zipWithIndex.foreach { case (b, i) =>
-        mem.addData(b); q.processAllAvailable()
-        if (i == 1)
-          graft.ops.Scale.compactTopFreqStore(spark, s"$dir/store")
-      }
+      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
     } finally q.stop()
     val epochs = spark.read.parquet(s"$dir/store")
       .select("epoch").distinct().as[Long].collect().sorted
-    assert(epochs.toSeq == Seq(graft.ops.Sketch.FoldEpoch, 1L, 2L),
-      s"epochs: ${epochs.toSeq}")
+    assert(epochs.toSeq == Seq(0L, 1L, 2L), s"epochs: ${epochs.toSeq}")
     val est = graft.ops.Scale.mergedHeavyHitters(spark, s"$dir/store")
       .as[(String, Long)].collect().toMap
     val exact = batches.flatten.groupBy(identity)
@@ -676,66 +427,6 @@ class StreamingSpec extends SparkSpecBase {
       .as[(String, Long)].collect().toMap
     assert(spanned.values.sum < est.values.sum,
       "a narrower epoch span must carry less mass")
-  }
-
-  test("T13g streamed CMS store: merged span estimates are bit-identical " +
-    "to the one-shot sketch across a mid-stream fold; below-watermark " +
-    "replays fail loud") {
-    implicit val s = spark
-    val dir = Files.createTempDirectory("graft_cmsstream").toString
-    val mem = MemoryStream[String]
-    val q = StreamingDedup.runCmsStore(
-      mem.toDF().toDF("text"), s"$dir/store", s"$dir/ckpt",
-      d = 4, w = 32, trigger = Trigger.ProcessingTime("0 seconds")).start()
-    val batches = (0 until 3).map(b =>
-      (0 to 9).flatMap(i => Seq.fill((i + 1) * (b + 1))(s"it$i")) ++
-        (1 to 40).map(i => s"r${b}_$i"))
-    try {
-      batches.zipWithIndex.foreach { case (b, i) =>
-        mem.addData(b); q.processAllAvailable()
-        // quiesced mid-stream fold: epochs below the newest collapse
-        // into the baseline, newest stays live (the ADD-family replay
-        // contract rides on per-epoch dynamic overwrite)
-        if (i == 1)
-          graft.ops.Sketch.compactCmsStore(spark, s"$dir/store")
-      }
-    } finally q.stop()
-    val epochs = spark.read.parquet(s"$dir/store")
-      .select("epoch").distinct().as[Long].collect().sorted
-    assert(epochs.toSeq == Seq(graft.ops.Sketch.FoldEpoch, 1L, 2L),
-      s"epochs: ${epochs.toSeq}")
-    assert(graft.ops.Sketch.storeFoldedThrough(spark, s"$dir/store")
-      == Some(0L), "the fold must record the erased epoch")
-    // bit-identity: the merged span == one-shot countMinEstimates over
-    // the whole replay (counter addition is exactly re-counting)
-    val all = batches.flatten.toDF("item")
-    val got = graft.ops.Sketch.mergedCmsEstimates(spark, s"$dir/store",
-        all, "item").as[(String, Long)].collect().toMap
-    val oneShot = graft.ops.Sketch.countMinEstimates(all, d = 4, w = 32)
-      .select("item", "est_cnt").as[(String, Long)].collect().toMap
-    assert(got == oneShot,
-      "merged store estimates must equal the one-shot sketch bit-for-bit")
-    // est >= true for every probe (the CMS one-sided guarantee)
-    val exact = batches.flatten.groupBy(identity)
-      .view.mapValues(_.size.toLong)
-    assert(got.forall { case (it, e) => e >= exact(it) },
-      "CMS never undercounts")
-    // a replay of the folded-away epoch 0 must fail loud, not double-add
-    val err = intercept[IllegalArgumentException] {
-      graft.ops.Sketch.appendCmsStore(Seq("x").toDF("item"),
-        s"$dir/store", epoch = 0L, d = 4, w = 32)
-    }
-    assert(err.getMessage.contains("watermark"), err.getMessage)
-    // geometry drift fails loud
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.appendCmsStore(Seq("x").toDF("item"),
-        s"$dir/store", epoch = 9L, d = 4, w = 64)
-    }
-    // a windowed read over the erased epoch refuses (fold watermark)
-    intercept[IllegalArgumentException] {
-      graft.ops.Sketch.mergedCmsEstimates(spark, s"$dir/store", all,
-        "item", epochFilter = col("epoch") === 0L).collect()
-    }
   }
 
   test("T14 stream-stream interval join: shuffled two-sided replay " +
