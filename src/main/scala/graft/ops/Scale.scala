@@ -323,11 +323,6 @@ object Scale {
   }
 
   object Cutover {
-    /** [[globalCumSum]], [[globalCumSumOrdered]], [[groupedRankOrdered]]:
-      * at most 2^20 rows of rank input (ids + order keys, ~50-100 B each)
-      * take one ordinary window — well under one task's sort budget at
-      * any deployment size. */
-    case object Rank extends Cutover("rank", 1L << 20)
     /** [[graft.ops.Graph.stronglyConnectedComponents]] and
       * [[graft.ops.Graph.sccCondensation]] (normalized edges) and
       * [[graft.llm.Dedup.connectedComponents]] (symmetrized edges): at
@@ -357,31 +352,14 @@ object Scale {
   : Boolean =
     bound > 0L && fits(bound / perRow)
 
-  /** The rank devices' switch: persist the input (scope-tracked) and ask
-    * [[smallSide]] at the session's [[Cutover.Rank]] bound; after a probe
-    * `df` reads the cache, since `persist` marks `df`'s own plan. The
-    * probe is one full pass of the caller's upstream whichever way it
-    * answers: reading any row of a persisted partition computes and
-    * caches the whole partition, and the limit's per-partition LocalLimit
-    * runs on every partition. So both paths read the cached frame — the
-    * bounded one windows it, the unbounded one range-partitions it — and
-    * the upstream runs once either way. The cache backs the returned plan
-    * until the caller's CacheScope ends (or clearCache outside one), like
-    * the two-phase path's own partitioned frame. At a bound of 0 nothing
-    * is persisted or probed: `df` goes on as it is, unbounded. */
-  private def boundedForRank(df: DataFrame): Boolean =
-    smallSide(
-      // respect a caller's existing persist (tokenBudgetSelectBy hands in
-      // a frame it already cached) — re-persisting the same plan only warns
-      if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
-      else graft.core.CacheScope.track(df.persist()),
-      Cutover.Rank.bound(df.sparkSession))
-
   /** Range-partition `input` on `keys` and sort each partition on them,
-    * persisted (scope-tracked): the at-scale devices' one data exchange.
+    * persisted (scope-tracked): the rank devices' one data exchange.
     * Partition p holds the p-th contiguous key range, so the partition
     * index and then the position within the partition are the global key
-    * order — the [[graft.functions.RangeCarry]] pass relies on that. */
+    * order — the [[graft.functions.RangeCarry]] pass relies on that. The
+    * persist makes the summary job and the carry pass read the same rows;
+    * `input` itself is read twice, by the range partitioner's sample pass
+    * and by the exchange, as Spark's own `orderBy` reads it. */
   private def rangeSorted(input: DataFrame, keys: Seq[String]): DataFrame = {
     val k = keys.map(col)
     graft.core.CacheScope.track(input
@@ -414,27 +392,15 @@ object Scale {
     * boundaries land. NULL values follow SUM's window semantics across
     * partitions: NULL until the first non-NULL value of the whole order,
     * the running total after — an all-NULL partition or a NULL head of a
-    * later partition carries the total before it.
+    * later partition carries the total before it. The result has the
+    * input's columns in order with `outCol` last (or in place, if the
+    * input has it).
     *
-    * r19 bounded-input cutover: the two-phase form costs two extra jobs a
-    * bounded input never needs (the range partitioner's sample pass plus
-    * the per-partition summary). The input is persisted and
-    * probed with [[smallSide]] — a full pass that fills the cache — and
-    * both answers read that cache, so the caller's upstream runs ONCE.
-    * At most the [[Cutover.Rank]] bound of rows take one ordinary window
-    * over the cached rows — row-identical by the same order-independence
-    * argument, and the SinglePartition exchange it plans carries at most
-    * the bound of rows by construction. Above the bound the two-phase plan
-    * range-partitions the cached frame. A bound of 0 disables the probe —
-    * the PlanSpec locks pin the at-scale shape through that setting. Both
-    * paths return the input's columns in order with `outCol` last (or in
-    * place, if the input has it).
-    *
-    * Cache note: the probed input and the partitioned frame back the
-    * returned plan — released by the caller's CacheScope after its action
-    * (or clearCache outside). The pass is valid only over that cached
-    * layout: its starts index the cached partitions (a pass over more
-    * partitions than the summary saw fails loud).
+    * Cache note: the partitioned frame backs the returned plan — released
+    * by the caller's CacheScope after its action (or clearCache outside).
+    * The pass is valid only over that cached layout: its starts index the
+    * cached partitions (a pass over more partitions than the summary saw
+    * fails loud).
     */
   def globalCumSum(df: DataFrame, orderCol: String, valueCol: String,
                    outCol: String = "cum"): DataFrame =
@@ -448,13 +414,7 @@ object Scale {
                           valueCol: String,
                           outCol: String = "cum")
   : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val value = col(valueCol).cast("long")
-    if (boundedForRank(df)) {
-      val w = Window.orderBy(orderCols.map(col): _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      return df.withColumn(outCol, sum(value).over(w))
-    }
     val parts = rangeSorted(df, orderCols)
     // per range partition: (total, holds a non-NULL value)
     val totals = perPartition(parts.select(value)) { rows =>
@@ -490,30 +450,12 @@ object Scale {
     * whole values under the sort's own ordering — NULL groups and values
     * containing any delimiter rank correctly, with no string-encoded
     * composite key. Deterministic when (group ++ order) is unique.
-    *
-    * r19 bounded-input cutover (same device and conf as
-    * [[globalCumSumOrdered]]): at most the bound of rows rank through one
-    * ordinary `row_number` window over the probe's cached frame —
-    * partitioned by the group columns when there are any (parallel by
-    * group, no funnel at all), global otherwise (a SinglePartition
-    * exchange of at most the bound of rows). Row-identical: rank under a
-    * total order does not depend on the partitioning. Above the bound the
-    * two-phase plan range-partitions that same cached frame, so the
-    * caller's upstream runs once on either side of the bound.
     */
   def groupedRankOrdered(df: DataFrame, groupCols: Seq[String],
                          orderCols: Seq[String],
                          outCol: String = "rank")
   : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.catalyst.expressions.RowOrdering
-    if (boundedForRank(df)) {
-      val w =
-        if (groupCols.isEmpty) Window.orderBy(orderCols.map(col): _*)
-        else Window.partitionBy(groupCols.map(col): _*)
-          .orderBy(orderCols.map(col): _*)
-      return df.withColumn(outCol, row_number().over(w).cast("long"))
-    }
     val parts = rangeSorted(df, groupCols ++ orderCols)
     val keys = parts.select(groupCols.map(col): _*)
     val keyTypes = keys.schema.map(_.dataType)

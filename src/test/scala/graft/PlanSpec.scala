@@ -11,27 +11,16 @@ import graft.ops.Scale.Cutover
   */
 class PlanSpec extends SparkSpecBase {
 
-  // r19: every lock here pins the AT-SCALE plan, so the rank/prefix-sum
-  // bounded-input cutover (Scale.globalCumSumOrdered/groupedRankOrdered,
-  // conf spark.graft.rank.cutoverRows) is disabled while the plan is
-  // built — at the gate scale every input is under the default bound and
-  // the locks would otherwise be asserting the small-input window, not
-  // the two-phase 100 TB shape. The cutover path itself is locked by the
-  // dedicated "bounded-input cutover" tests below and result-equivalence
-  // in ScaleSpec.
-  private def planOf(q: String): String = withCutover(Cutover.Rank) {
-    val df = SparkEntry.queries(q)(spark, sfDir)
-    df.queryExecution.executedPlan.toString
-  }
+  private def planOf(q: String): String =
+    SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan.toString
 
-  // planOf for queries whose construction persists intermediates — same
-  // at-scale conf, the caches released on exit
-  private def planOfScoped(q: String): String = withCutover(Cutover.Rank) {
+  // planOf for queries whose construction persists intermediates — the
+  // caches released on exit
+  private def planOfScoped(q: String): String =
     graft.core.CacheScope.scoped {
       SparkEntry.queries(q)(spark, sfDir)
         .queryExecution.executedPlan.toString
     }
-  }
 
   // The at-scale rank devices' shape in a plan string: every `carry`
   // (range_running_sum or range_row_number) is a Project straight over
@@ -55,57 +44,6 @@ class PlanSpec extends SparkSpecBase {
         !below.take(ex).exists(l => l.contains("Window") || l.contains("Join")),
         s"the device's one data exchange must be its rangepartitioning:\n$p")
     }
-  }
-
-  test("rank cutover: a bounded input plans ONE window over the probe's " +
-    "cached rows (no range repartition, no offset machinery), and the " +
-    "at-scale path is unchanged two-phase") {
-    import org.apache.spark.sql.functions._
-    val docs = graft.core.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("n_chars"))
-    graft.core.CacheScope.scoped {
-      val bounded = withCutover(Cutover.Rank, 1L << 20)(graft.ops.Scale
-        .globalCumSum(docs, "doc_id", "n_chars"))
-        .queryExecution.executedPlan.toString
-      // bounded plan: a plain running-sum window over the cached probe —
-      // none of the two-phase machinery (no carry, no range exchange)
-      assert(!bounded.contains("range_running_sum") &&
-        !bounded.contains("rangepartitioning"),
-        s"bounded path must not build the two-phase device:\n$bounded")
-      assert(bounded.contains("InMemory"),
-        s"bounded path must window the probe's cached rows:\n$bounded")
-    }
-    graft.core.CacheScope.scoped {
-      val atScale = withCutover(Cutover.Rank)(graft.ops.Scale
-        .globalCumSum(docs, "doc_id", "n_chars"))
-        .queryExecution.executedPlan.toString
-      // cutover disabled = the range-partitioned two-phase shape: one
-      // carry pass over the range partitions, no window, no join
-      rangeCarries(atScale, "range_running_sum")
-      assert(!atScale.contains("Window") && !atScale.contains("Join"),
-        s"at-scale path must stay the range-partitioned two-phase:\n$atScale")
-    }
-    spark.sqlContext.clearCache()
-  }
-
-  test("rank cutover: a grouped bounded input windows by the group " +
-    "columns — parallel by group, no single-task funnel even below the " +
-    "bound") {
-    import org.apache.spark.sql.functions._
-    val docs = graft.core.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    graft.core.CacheScope.scoped {
-      val p = withCutover(Cutover.Rank, 1L << 20)(graft.ops.Scale
-        .groupedRankOrdered(docs, Seq("lang"), Seq("n_chars", "doc_id"),
-          "r"))
-        .queryExecution.executedPlan.toString
-      assert(!p.contains("range_row_number") &&
-        !p.contains("rangepartitioning"),
-        s"bounded grouped rank must not build the two-phase device:\n$p")
-      assert(!p.contains("Exchange SinglePartition"),
-        s"grouped bounded rank must partition by the group columns:\n$p")
-    }
-    spark.sqlContext.clearCache()
   }
 
   test("q01 scan prunes to the four referenced columns") {

@@ -7,14 +7,14 @@ import graft.llm.{Dedup, Similarity}
 import graft.ops.Scale
 import graft.ops.Scale.Cutover
 
-/** Scale-technique tests: the rank devices on both sides of their
-  * cutover, bounded top-K aggregators vs collect_list+sort, pair caps.
+/** Scale-technique tests: the rank devices against a plain window,
+  * bounded top-K aggregators vs collect_list+sort, pair caps, and the
+  * graph and near-dup cutover boundaries.
   */
 class ScaleSpec extends SparkSpecBase {
   import spark.implicits._
 
-  test("two-phase global cumsum equals the single-window form — on BOTH " +
-    "sides of the r19 bounded-input cutover") {
+  test("two-phase global cumsum equals the single-window form") {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("n_chars"))
@@ -23,17 +23,9 @@ class ScaleSpec extends SparkSpecBase {
         Window.orderBy("doc_id")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("doc_id", "cum").as[(Long, Long)].collect().toMap
-    // a rank bound of 0 forces the two-phase device (the gate corpus is
-    // under the default bound, so the default would test the window
-    // against itself — the pre-r19 coverage must stay)
-    val twoPhase = withCutover(Cutover.Rank)(
-        Scale.globalCumSum(docs, "doc_id", "n_chars"))
+    val twoPhase = Scale.globalCumSum(docs, "doc_id", "n_chars")
       .select("doc_id", "cum").as[(Long, Long)].collect().toMap
     assert(twoPhase == naive)
-    spark.sqlContext.clearCache()
-    val viaCutover = Scale.globalCumSum(docs, "doc_id", "n_chars")
-      .select("doc_id", "cum").as[(Long, Long)].collect().toMap
-    assert(viaCutover == naive)
     spark.sqlContext.clearCache()
   }
 
@@ -48,15 +40,10 @@ class ScaleSpec extends SparkSpecBase {
         Window.orderBy("draw", "doc_id")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("doc_id", "cum").as[(Long, Long)].collect().toMap
-    val scaled = withCutover(Cutover.Rank)(
-        Scale.globalCumSumOrdered(rows, Seq("draw", "doc_id"), "n_chars"))
-      .select("doc_id", "cum").as[(Long, Long)].collect().toMap
-    assert(scaled == naive)
-    spark.sqlContext.clearCache()
-    val viaCutover = Scale.globalCumSumOrdered(rows, Seq("draw", "doc_id"),
+    val scaled = Scale.globalCumSumOrdered(rows, Seq("draw", "doc_id"),
         "n_chars")
       .select("doc_id", "cum").as[(Long, Long)].collect().toMap
-    assert(viaCutover == naive)
+    assert(scaled == naive)
     spark.sqlContext.clearCache()
   }
 
@@ -350,25 +337,17 @@ class ScaleSpec extends SparkSpecBase {
     }
     val df = rows.toDF("id", "ga", "gb", "v")
     val twoPhase = graft.core.CacheScope.scoped {
-      withCutover(Cutover.Rank)(
-        Scale.groupedRankOrdered(df, Seq("ga", "gb"), Seq("v", "id"), "r"))
+      Scale.groupedRankOrdered(df, Seq("ga", "gb"), Seq("v", "id"), "r")
         .select("id", "r").as[(Long, Long)].collect().toMap
     }
     val w = Window.partitionBy("ga", "gb").orderBy(col("v"), col("id"))
     val viaWindow = df.withColumn("r", row_number().over(w).cast("long"))
       .select("id", "r").as[(Long, Long)].collect().toMap
     assert(twoPhase == viaWindow)
-    // the r19 bounded-input cutover path must agree too
-    val viaCutover = graft.core.CacheScope.scoped {
-      Scale.groupedRankOrdered(df, Seq("ga", "gb"), Seq("v", "id"), "r")
-        .select("id", "r").as[(Long, Long)].collect().toMap
-    }
-    assert(viaCutover == viaWindow)
     // single group degenerates to the global rank
     val one = graft.core.CacheScope.scoped {
-      withCutover(Cutover.Rank)(
-        Scale.groupedRankOrdered(df.withColumn("ga", lit("x")),
-          Seq("ga"), Seq("v", "id"), "r"))
+      Scale.groupedRankOrdered(df.withColumn("ga", lit("x")),
+          Seq("ga"), Seq("v", "id"), "r")
         .select("id", "r").as[(Long, Long)].collect().toMap
     }
     val wg = Window.orderBy(col("v"), col("id"))
@@ -392,8 +371,7 @@ class ScaleSpec extends SparkSpecBase {
     }
     val df = rows.toDF("id", "ga", "gb", "v")
     val twoPhase = graft.core.CacheScope.scoped {
-      withCutover(Cutover.Rank)(
-        Scale.groupedRankOrdered(df, Seq("ga", "gb"), Seq("v", "id"), "r"))
+      Scale.groupedRankOrdered(df, Seq("ga", "gb"), Seq("v", "id"), "r")
         .select("id", "r").as[(Long, Long)].collect().toMap
     }
     assert(twoPhase.size == rows.size, "no rows may vanish")
@@ -405,20 +383,20 @@ class ScaleSpec extends SparkSpecBase {
 
   /** The at-scale devices' layout of `df`: the rows of each range
     * partition of `keys` (the test session has 4 shuffle partitions).
-    * Persisted like the devices' frames: a cached plan keeps its range
-    * partitions, where AQE would coalesce these small ones into one. */
+    * The range-sorted frame is persisted and its input is not, like the
+    * devices' frame: a cached plan keeps its range partitions, where AQE
+    * would coalesce these small ones into one. */
   private def rangeLayout(df: org.apache.spark.sql.DataFrame,
                           keys: Seq[String]): Seq[Seq[org.apache.spark.sql.Row]] =
     graft.core.CacheScope.scoped {
-      import graft.core.CacheScope.track
-      track(df.persist()).count()
-      track(df.repartitionByRange(keys.map(col): _*)
+      graft.core.CacheScope.track(df.repartitionByRange(keys.map(col): _*)
           .sortWithinPartitions(keys.map(col): _*).persist()).rdd
         .mapPartitions(it => Iterator.single(it.toSeq)).collect().toSeq
     }
 
   test("at-scale global cumsum equals the bounded window row for row when " +
     "NULL values fill a range partition or head a later one") {
+    import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(5)
     // 1000 ids range-partition into 4 ranges of about 250. Shape (a) is
     // NULL below 3 and on [150, 600): the second range is all NULL and
@@ -439,12 +417,15 @@ class ScaleSpec extends SparkSpecBase {
       ranges.exists { case (lo, _) => lo > 450 && lo < 560 },
       s"the shapes need an all-NULL range and a NULL-headed one: $ranges")
     for ((df, name) <- Seq(a -> "a", b -> "b", c -> "c")) {
-      def run(cutover: Long) = graft.core.CacheScope.scoped {
-        withCutover(Cutover.Rank, cutover)(Scale.globalCumSum(df, "id", "v"))
+      // the reference: one running `sum` window, ROWS BETWEEN UNBOUNDED
+      // PRECEDING AND CURRENT ROW, over the whole order
+      val bounded = df.withColumn("cum", sum(col("v")).over(Window.orderBy("id")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .select("id", "cum").as[(Long, Option[Long])].collect().toMap
+      val atScale = graft.core.CacheScope.scoped {
+        Scale.globalCumSum(df, "id", "v")
           .select("id", "cum").as[(Long, Option[Long])].collect().toMap
       }
-      val bounded = run(1L << 20)
-      val atScale = run(16L)
       assert(atScale.size == 1000 && bounded.size == 1000)
       val diff = bounded.toSeq.sorted.filter { case (id, c) => atScale(id) != c }
       assert(diff.isEmpty, s"shape $name: (id, bounded) where at-scale " +
@@ -455,6 +436,7 @@ class ScaleSpec extends SparkSpecBase {
   test("at-scale grouped rank equals the bounded window on partition-" +
     "boundary shapes: a group over three ranges, one-row groups, a NULL " +
     "group and an empty range") {
+    import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(13)
     // rows in key order: 60 NULL-group rows, 660 rows of group "m" (over
     // the first three of the 4 ranges), 36 one-row groups, then 444
@@ -472,46 +454,48 @@ class ScaleSpec extends SparkSpecBase {
     assert(mRanges >= 3 && layout.exists(_.isEmpty),
       s"need group m over >= 3 ranges and an empty range: " +
         layout.map(_.size))
-    def run(cutover: Long) = graft.core.CacheScope.scoped {
-      withCutover(Cutover.Rank, cutover)(
-        Scale.groupedRankOrdered(df, Seq("g"), Seq("v"), "r"))
-        .select("g", "v", "r").as[(Option[String], Long, Long)].collect()
+    // the reference: one `row_number` window partitioned by the group
+    def ranks(ranked: org.apache.spark.sql.DataFrame) =
+      ranked.select("g", "v", "r").as[(Option[String], Long, Long)].collect()
         .toSeq.sorted
+    val bounded = ranks(df.withColumn("r", row_number()
+      .over(Window.partitionBy("g").orderBy("v")).cast("long")))
+    val atScale = graft.core.CacheScope.scoped {
+      ranks(Scale.groupedRankOrdered(df, Seq("g"), Seq("v"), "r"))
     }
-    val bounded = run(1L << 20)
-    val atScale = run(16L)
     assert(atScale.size == rows.size)
     assert(atScale == bounded,
       s"first differences: ${atScale.zip(bounded).filter(p => p._1 != p._2).take(8)}")
     assert(atScale.filter(_._1 == Some("z")).map(_._3) == (1L to 444L))
   }
 
-  test("above the rank cutover the upstream runs once: the probe's cache " +
-    "feeds the two-phase plan (globalCumSum and groupedRankOrdered)") {
+  test("the rank devices read their upstream twice, the range sample " +
+    "pass and the exchange (globalCumSum and groupedRankOrdered)") {
     val n = 5000L
     // every upstream row passes this map once per execution of the plan
     def counted(acc: org.apache.spark.util.LongAccumulator) =
       spark.range(n).map { x => acc.add(1); x }.toDF("id")
         .select(col("id"), (col("id") % 3).as("g"), (col("id") % 11).as("v"))
+    // the input is not cached: the range partitioner samples every row
+    // once, the exchange reads them once more, and the summary job and
+    // the carry pass both read the range-sorted cache
     val accSum = spark.sparkContext.longAccumulator("cumsum-upstream")
     val cum = graft.core.CacheScope.scoped {
-      withCutover(Cutover.Rank, 16L)(
-        Scale.globalCumSum(counted(accSum), "id", "v"))
+      Scale.globalCumSum(counted(accSum), "id", "v")
         .select("id", "cum").as[(Long, Long)].collect()
     }
     assert(cum.length == n)
     assert(cum.toMap.apply(n - 1) == (0L until n).map(_ % 11).sum)
-    assert(accSum.value == n,
+    assert(accSum.value == 2 * n,
       s"globalCumSum ran its upstream ${accSum.value} rows for $n")
     val accRank = spark.sparkContext.longAccumulator("rank-upstream")
     val ranks = graft.core.CacheScope.scoped {
-      withCutover(Cutover.Rank, 16L)(
-        Scale.groupedRankOrdered(counted(accRank), Seq("g"), Seq("id"), "r"))
+      Scale.groupedRankOrdered(counted(accRank), Seq("g"), Seq("id"), "r")
         .select("id", "r").as[(Long, Long)].collect()
     }
     assert(ranks.length == n)
     assert(ranks.forall { case (id, r) => r == id / 3 + 1 })
-    assert(accRank.value == n,
+    assert(accRank.value == 2 * n,
       s"groupedRankOrdered ran its upstream ${accRank.value} rows for $n")
   }
 
@@ -562,6 +546,38 @@ class ScaleSpec extends SparkSpecBase {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("the rank devices run no probe job and cache one frame, the " +
+    "range-sorted one (globalCumSum and groupedRankOrdered)") {
+    val n = 3000L
+    val input = spark.range(n)
+      .select(col("id"), (col("id") % 3).as("g"), (col("id") % 11).as("v"))
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation,
+      InMemoryTableScanExec}
+    val stages = new AdaptiveSparkPlanHelper {}
+    // every cached relation the plan reads, and those their cached plans read
+    def cached(p: SparkPlan): Seq[InMemoryRelation] =
+      stages.collect(p) { case s: InMemoryTableScanExec => s.relation }
+        .flatMap(r => r +: cached(r.cachedPlan))
+    def oneRun(device: => org.apache.spark.sql.DataFrame): Unit = {
+      val (frames, sites) = jobSites(graft.core.CacheScope.scoped {
+        val df = device
+        assert(df.collect().length == n)
+        cached(df.queryExecution.executedPlan)
+      })
+      assert(!sites.exists(_.contains("Scale$.atMostRows")),
+        s"a rank device ran a probe job:\n${sites.mkString("\n--\n")}")
+      assert(frames.size == 1, s"one cached frame, not ${frames.size}:\n" +
+        frames.map(_.cachedPlan).mkString("\n--\n"))
+      assert(frames.head.cachedPlan.toString.contains("rangepartitioning"),
+        s"the cached frame must be the range-sorted one:\n" +
+          frames.head.cachedPlan)
+    }
+    oneRun(Scale.globalCumSum(input, "id", "v"))
+    oneRun(Scale.groupedRankOrdered(input, Seq("g"), Seq("id"), "r"))
+  }
+
   /** One family's cutover boundary. `device(n)` runs the family's device
     * on an input of `n` rows of the family's measure and returns the call
     * sites of the jobs it started; `atScaleSite` names a frame only the
@@ -598,30 +614,6 @@ class ScaleSpec extends SparkSpecBase {
     }
   }
 
-  test("rank cutover boundary: bound rows window, bound + 1 take the " +
-    "two-phase device, bound 0 never probes (globalCumSum, " +
-    "groupedRankOrdered)") {
-    val bound = 40L
-    def input(n: Long) =
-      spark.range(n).select(col("id"), (col("id") % 3).as("g"), lit(1L).as("v"))
-    cutoverBoundary(Cutover.Rank, bound, "Scale$.perPartition") { n =>
-      val (cum, sites) = jobSites(graft.core.CacheScope.scoped {
-        Scale.globalCumSum(input(n), "id", "v")
-          .select("id", "cum").as[(Long, Long)].collect().toSeq.sorted
-      })
-      assert(cum == (0L until n).map(i => (i, i + 1)))
-      sites
-    }
-    cutoverBoundary(Cutover.Rank, bound, "Scale$.perPartition") { n =>
-      val (ranks, sites) = jobSites(graft.core.CacheScope.scoped {
-        Scale.groupedRankOrdered(input(n), Seq("g"), Seq("id"), "r")
-          .select("id", "r").as[(Long, Long)].collect().toSeq.sorted
-      })
-      assert(ranks == (0L until n).map(i => (i, i / 3 + 1)))
-      sites
-    }
-  }
-
   test("graph cutover boundary: bound edges solve on the driver, bound + 1 " +
     "run the distributed fixpoint, bound 0 never probes — also on an " +
     "empty graph (SCC, condensation, connected components)") {
@@ -644,7 +636,7 @@ class ScaleSpec extends SparkSpecBase {
       sites
     }
     // connected components count symmetrized edges: a path of n / 2 pairs
-    // is n of them, so the rank and graph tests' odd bound + 1 becomes a
+    // is n of them, so the SCC tests' odd bound + 1 becomes a
     // path one pair longer than the bound admits. The edge checkpoint's
     // job counts the pairs, so no bound runs a probe
     cutoverBoundary(Cutover.Graph, bound, "Graph$.neighbourhoodRounds",
