@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.{CacheScope, Sessions, Tables}
 import graft.ops.Ranking
 import graft.sinks.Sinks
 
@@ -81,10 +81,13 @@ object OfflineMetricsJob {
     val spark = session("offline")
     spark.sparkContext.setLogLevel("WARN")
     val events = Tables.events(spark, sfDir)
-    val wide = OfflineMetrics.metricsWide(events)
-    Sinks.upsertMetricStore(spark, s"$outDir/metricstore", wide, Seq("scene"))
-    Sinks.writeText(wide.select(concat_ws("_",
-      wide.columns.toIndexedSeq.map(col): _*)), s"$outDir/allStatResult")
+    // both sinks read one computed copy of the ratios
+    CacheScope.scoped {
+      val wide = CacheScope.track(OfflineMetrics.metricsWide(events).persist())
+      Sinks.upsertMetricStore(spark, s"$outDir/metricstore", wide, Seq("scene"))
+      Sinks.writeText(wide.select(concat_ws("_",
+        wide.columns.toIndexedSeq.map(col): _*)), s"$outDir/allStatResult")
+    }
     val dayCache = OfflineMetrics.actionLog(events)
       .select(col("scene").cast("string").as("yesSceneId"),
         col("user_id").cast("string").as("yesUserId")).distinct()

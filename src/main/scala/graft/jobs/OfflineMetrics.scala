@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Offline dashboard metrics — the reference's
@@ -14,8 +14,11 @@ import org.apache.spark.sql.functions._
   *    (`OfflineJob.java:386-390`), so a user with clicks but no shows has
   *    `showCount = NULL` (not 0) and the reference's `showCount=0 &&
   *    detailCount>0` branch never fires (NULL comparisons are false in both
-  *    Calcite and Catalyst). We reproduce the join + predicate verbatim
-  *    rather than "fixing" it with coalesce.
+  *    Calcite and Catalyst). [[ctrAbnormal]] reproduces the join +
+  *    predicate verbatim rather than "fixing" it with coalesce, and the
+  *    DuckDB oracle `graft.queries.OfflineMetricsOracle` spells the whole
+  *    dashboard in that full-outer form; [[metricsWide]] computes the same
+  *    values from two fine aggregates with no join.
   *  - Ratios are single IEEE divisions of two longs → bit-identical across
   *    engines, with the reference's 1e-5 zero-floor
   *    (`OfflineJob.java:415-421`).
@@ -58,18 +61,7 @@ object OfflineMetrics {
       .agg(count(lit(1)).as("abnormal_count"),
         sum("detail_count").as("detail_sum"))
 
-  /** Scene-level UV / click-PV / item-UV — the reference pulls these from
-    * HBase (`OfflineJob.java:97`) and probes the map in closures (a manual
-    * broadcast join, SURVEY J10); here they're a tiny aggregate joined with
-    * an explicit `broadcast()` hint.
-    */
-  def sceneTotals(log: DataFrame): DataFrame =
-    log.groupBy("scene").agg(
-      countDistinct(col("user_id")).as("uv"),
-      countDistinct(col("item")).as("item_uv"),
-      sum(when(col("action") === "click", 1L).otherwise(0L)).as("click_pv"))
-
-  private def floorTiny(c: org.apache.spark.sql.Column) =
+  private def floorTiny(c: Column) =
     when(c < 1e-5, 0.0).otherwise(c)
 
   /** The six per-scene dashboard ratios of `OfflineJob.java:396-523`, wide
@@ -79,68 +71,67 @@ object OfflineMetrics {
     * transforErrorRatio is recast as error-events / all-events per scene
     * (the reference computes failed-transfer / nginx-requests,
     * `OfflineDataSetUtils.java:320-356` — same algebra, different source).
+    * user_fluctuate_ratio (`OfflineDataSetUtils.java:230-268`) is, of the
+    * users a scene had on the day before the last day in the data, the
+    * share absent on the last day (the reference reads yesterday's users
+    * from its CSV day-cache, SURVEY S9/K2).
+    *
+    * Every ratio comes from the one cached action log through two fine
+    * aggregates: per (scene, user_id) the view, click, error and row
+    * counts and whether the user is seen on the last day and on the day
+    * before it; per (scene, item) the view and click counts. Each fine row
+    * turns into its scene's summands (one distinct key, its clicks, its
+    * abnormal flag, …) and one aggregate over both rolls them up per
+    * scene — three shuffles, no join. The action that fills the cache also
+    * reads the last day.
+    *
+    * The output is exactly what the reference's join form gives (the full
+    * outer show/detail joins of [[ctrAbnormal]], left-joined per scene to
+    * the totals, and a left outer join of the two days' users; the DuckDB
+    * oracle `OfflineMetricsOracle` spells that form), NULL keys included:
+    * a fine row whose key is NULL is never abnormal, as the equi-joins
+    * never match a NULL key and so never see its shows and clicks on one
+    * row; and the NULL scene, which the per-scene left joins never match,
+    * reads 0.0 in every ratio.
     */
   def metricsWide(events: DataFrame): DataFrame = {
     val log = graft.core.CacheScope.track(actionLog(events).cache())
-    log.count() // eager: five subplans race to populate a lazy cache,
-                // re-running the events scan + JSON parse once per branch
-    val totals = sceneTotals(log)
-    val userAb = ctrAbnormal(log, "user_id")
-      .select(col("scene"), col("abnormal_count").as("ab_users"),
-        col("detail_sum").as("ab_user_clicks"))
-    val itemAb = ctrAbnormal(log, "item")
-      .select(col("scene"), col("abnormal_count").as("ab_items"),
-        col("detail_sum").as("ab_item_clicks"))
-    val errors = log.groupBy("scene").agg(
-      sum(when(col("action") === "error", 1L).otherwise(0L)).as("err_pv"),
-      count(lit(1)).as("all_pv"))
-    val fluct = userFluctuation(log)
-
-    totals
-      .join(broadcast(userAb), Seq("scene"), "left_outer")
-      .join(broadcast(itemAb), Seq("scene"), "left_outer")
-      .join(broadcast(errors), Seq("scene"), "left_outer")
-      .join(broadcast(fluct), Seq("scene"), "left_outer")
-      .select(
-        col("scene"),
-        floorTiny(coalesce(col("err_pv").cast("double") / col("all_pv"), lit(0.0)))
-          .as("transfor_error_ratio"),
-        floorTiny(coalesce(col("ab_users").cast("double") / col("uv"), lit(0.0)))
-          .as("abnormal_user_ratio"),
-        floorTiny(coalesce(col("ab_user_clicks").cast("double") / col("click_pv"), lit(0.0)))
-          .as("abnormal_user_click_ratio"),
-        floorTiny(coalesce(col("ab_items").cast("double") / col("item_uv"), lit(0.0)))
-          .as("abnormal_item_ratio"),
-        floorTiny(coalesce(col("ab_item_clicks").cast("double") / col("click_pv"), lit(0.0)))
-          .as("abnormal_item_click_ratio"),
-        coalesce(col("user_fluctuate_ratio"), lit(0.0)).as("user_fluctuate_ratio"))
-  }
-
-  /** User fluctuation (`OfflineDataSetUtils.java:230-268`): of yesterday's
-    * distinct users, the share absent today — left outer join yesterday→today
-    * per scene. "Yesterday/today" = the last two calendar days present in the
-    * data (the reference reads yesterday's users from its CSV day-cache,
-    * SURVEY S9/K2).
-    */
-  def userFluctuation(log: DataFrame): DataFrame = {
-    val byDay = log.select(col("scene"), col("user_id"),
-      to_date(col("ts")).as("day")).distinct()
-    val days = byDay.agg(max("day").as("today")).withColumn(
-      "yesterday", date_sub(col("today"), 1))
-    val dated = byDay.join(broadcast(days), byDay("day") === days("today") ||
-      byDay("day") === days("yesterday"))
-    // explicit aliases: yest/today share the `dated` lineage, so unaliased
-    // column refs would resolve to the same attribute (trivially-true join)
-    val yest = dated.filter(col("day") === col("yesterday"))
-      .select(col("scene").as("y_scene"), col("user_id").as("y_user"))
-    val today = dated.filter(col("day") === col("today"))
-      .select(col("scene").as("t_scene"), col("user_id").as("t_user"))
-    yest.join(today,
-        col("y_scene") === col("t_scene") && col("y_user") === col("t_user"),
-        "left_outer")
-      .groupBy(col("y_scene").as("scene"))
-      .agg((sum(when(col("t_user").isNull, 1L).otherwise(0L)).cast("double") /
-        count(lit(1))).as("user_fluctuate_ratio"))
+    val day = unix_date(to_date(col("ts")))
+    val last = lit(log.agg(max(day)).head().get(0)).cast("int")
+    def n(action: String) = sum(when(col("action") === action, 1L).otherwise(0L))
+    def seen(d: Column) = max(when(day === d, 1L).otherwise(0L))
+    def abnormal(key: String) = col(key).isNotNull &&
+      try_divide(col("clicks").cast("double"), col("views")) > CtrThreshold
+    def flag(c: Column, v: Column = lit(1L)) = when(c, v).otherwise(0L)
+    val users = log.groupBy("scene", "user_id").agg(n("view").as("views"),
+        n("click").as("clicks"), n("error").as("errors"), count(lit(1)).as("rows"),
+        seen(last).as("on_last"), seen(last - 1).as("on_prev"))
+      .select(col("scene"), flag(col("user_id").isNotNull).as("uv"),
+        col("clicks").as("click_pv"), col("errors").as("err_pv"),
+        col("rows").as("all_pv"),
+        flag(abnormal("user_id")).as("ab_users"),
+        flag(abnormal("user_id"), col("clicks")).as("ab_user_clicks"),
+        col("on_prev").as("prev_uv"),
+        flag(col("on_prev") === 1L && col("on_last") === 0L).as("gone_uv"))
+    val items = log.groupBy("scene", "item").agg(n("view").as("views"),
+        n("click").as("clicks"))
+      .select(col("scene"), flag(col("item").isNotNull).as("item_uv"),
+        flag(abnormal("item")).as("ab_items"),
+        flag(abnormal("item"), col("clicks")).as("ab_item_clicks"))
+    val sums = (users.columns ++ items.columns).distinct.filter(_ != "scene")
+      .map(c => sum(c).as(c))
+    val perScene = users.unionByName(items, allowMissingColumns = true)
+      .groupBy("scene").agg(sums.head, sums.tail.toIndexedSeq: _*)
+    def ratio(num: String, den: String) = when(col("scene").isNull, 0.0)
+      .otherwise(coalesce(try_divide(col(num).cast("double"), col(den)), lit(0.0)))
+    perScene.select(
+      col("scene"),
+      floorTiny(ratio("err_pv", "all_pv")).as("transfor_error_ratio"),
+      floorTiny(ratio("ab_users", "uv")).as("abnormal_user_ratio"),
+      floorTiny(ratio("ab_user_clicks", "click_pv")).as("abnormal_user_click_ratio"),
+      floorTiny(ratio("ab_items", "item_uv")).as("abnormal_item_ratio"),
+      floorTiny(ratio("ab_item_clicks", "click_pv")).as("abnormal_item_click_ratio"),
+      ratio("gone_uv", "prev_uv").as("user_fluctuate_ratio"))
   }
 
   /** Faithful long shape: (scene, metric, value) union of all metric streams

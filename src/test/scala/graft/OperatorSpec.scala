@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.jobs.{Auc, ItemCf}
+import graft.jobs.{Auc, ItemCf, OfflineMetrics}
 import graft.ops.Ranking
 import graft.ops.Scale.Cutover
 
@@ -2065,5 +2066,111 @@ class OperatorSpec extends SparkSpecBase {
           s"$other reader on a $family store: ${err.getMessage}")
       }
     }
+  }
+
+  /** The offline dashboard in the reference's join form
+    * (`OfflineJob.java:376-523`), as [[OfflineMetrics.metricsWide]] spelled
+    * it before it read two fine aggregates: per-scene totals with
+    * count-distincts, the full-outer CTR-abnormal aggregates, the error
+    * counts and the last two days' users, each left-joined per scene. */
+  private def joinFormMetrics(events: DataFrame): DataFrame = {
+    import OfflineMetrics.{actionLog, ctrAbnormal}
+    def floorTiny(c: Column) = when(c < 1e-5, 0.0).otherwise(c)
+    val log = actionLog(events)
+    val totals = log.groupBy("scene").agg(
+      countDistinct(col("user_id")).as("uv"),
+      countDistinct(col("item")).as("item_uv"),
+      sum(when(col("action") === "click", 1L).otherwise(0L)).as("click_pv"))
+    val userAb = ctrAbnormal(log, "user_id")
+      .select(col("scene"), col("abnormal_count").as("ab_users"),
+        col("detail_sum").as("ab_user_clicks"))
+    val itemAb = ctrAbnormal(log, "item")
+      .select(col("scene"), col("abnormal_count").as("ab_items"),
+        col("detail_sum").as("ab_item_clicks"))
+    val errors = log.groupBy("scene").agg(
+      sum(when(col("action") === "error", 1L).otherwise(0L)).as("err_pv"),
+      count(lit(1)).as("all_pv"))
+    val byDay = log.select(col("scene"), col("user_id"),
+      to_date(col("ts")).as("day")).distinct()
+    val days = byDay.agg(max("day").as("today")).withColumn(
+      "yesterday", date_sub(col("today"), 1))
+    val dated = byDay.join(broadcast(days), byDay("day") === days("today") ||
+      byDay("day") === days("yesterday"))
+    val yest = dated.filter(col("day") === col("yesterday"))
+      .select(col("scene").as("y_scene"), col("user_id").as("y_user"))
+    val today = dated.filter(col("day") === col("today"))
+      .select(col("scene").as("t_scene"), col("user_id").as("t_user"))
+    val fluct = yest.join(today,
+        col("y_scene") === col("t_scene") && col("y_user") === col("t_user"),
+        "left_outer")
+      .groupBy(col("y_scene").as("scene"))
+      .agg((sum(when(col("t_user").isNull, 1L).otherwise(0L)).cast("double") /
+        count(lit(1))).as("user_fluctuate_ratio"))
+    def ratio(num: String, den: String) =
+      floorTiny(coalesce(col(num).cast("double") / col(den), lit(0.0)))
+    totals
+      .join(broadcast(userAb), Seq("scene"), "left_outer")
+      .join(broadcast(itemAb), Seq("scene"), "left_outer")
+      .join(broadcast(errors), Seq("scene"), "left_outer")
+      .join(broadcast(fluct), Seq("scene"), "left_outer")
+      .select(col("scene"),
+        ratio("err_pv", "all_pv").as("transfor_error_ratio"),
+        ratio("ab_users", "uv").as("abnormal_user_ratio"),
+        ratio("ab_user_clicks", "click_pv").as("abnormal_user_click_ratio"),
+        ratio("ab_items", "item_uv").as("abnormal_item_ratio"),
+        ratio("ab_item_clicks", "click_pv").as("abnormal_item_click_ratio"),
+        coalesce(col("user_fluctuate_ratio"), lit(0.0)).as("user_fluctuate_ratio"))
+  }
+
+  test("metricsWide equals the reference's join form on the NULL keys and " +
+    "edge cases no events table holds") {
+    def at(day: String) =
+      java.sql.Timestamp.from(java.time.Instant.parse(s"${day}T12:00:00Z"))
+    val (d0, d1, d2) = ("2023-12-31", "2024-01-01", "2024-01-02")
+    def ev(user: java.lang.Long, action: String, day: String,
+           item: java.lang.Integer, times: Int = 1) =
+      Seq.fill(times)((Option(user).map(_.longValue), action, at(day),
+        Option(item).map(k => s"""{"k": $k}""")))
+    val rows =
+      // scene 1: u1 on both days, CTR 1.0 on item 10 and on a NULL item
+      // (the join form keeps (1, NULL)'s shows and clicks on two rows, so
+      // never abnormal); u6 only errors, on the day before the last; u11 a
+      // click with no view
+      ev(1L, "view", d1, 10) ++ ev(1L, "view", d2, 10) ++
+      ev(1L, "click", d2, 10) ++ ev(1L, "view", d2, null) ++
+      ev(1L, "click", d2, null) ++ ev(6L, "error", d1, null, times = 2) ++
+      ev(11L, "click", d2, 12) ++
+      // scene 2: u2's CTR is exactly 0.2 (not abnormal), u7 a view with no
+      // click and an error
+      ev(2L, "view", d1, 11, times = 5) ++ ev(2L, "click", d1, 11) ++
+      ev(7L, "view", d2, 13) ++ ev(7L, "error", d1, null) ++
+      // scene 3: views only, no click in the scene; scene 4: a user seen
+      // two days before the last only
+      ev(3L, "view", d2, 14, times = 3) ++ ev(4L, "view", d0, 10) ++
+      // the NULL scene: a NULL user with shows and clicks on item 10
+      ev(null, "view", d1, 10) ++ ev(null, "view", d2, 10) ++
+      ev(null, "click", d2, 10)
+    val events = rows.toDF("user_id", "event_type", "ts", "props")
+    def same(evs: DataFrame): Seq[Row] = {
+      def sorted(df: DataFrame) = df.collect().toSeq
+        .sortBy(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+      val got = graft.core.CacheScope.scoped(sorted(OfflineMetrics.metricsWide(evs)))
+      val want = sorted(joinFormMetrics(evs))
+      assert(got == want, s"\ngot  ${got.mkString("\n     ")}" +
+        s"\nwant ${want.mkString("\n     ")}")
+      got
+    }
+    val all = same(events)
+    assert(all.map(r => Option(r.get(0))) ==
+      Seq(None, Some(1L), Some(2L), Some(3L), Some(4L)))
+    assert(all.head.toSeq.tail.forall(_ == 0.0), s"the NULL scene: ${all.head}")
+    val scene1 = all(1)
+    assert(scene1.getDouble(2) == 1.0 / 3 && scene1.getDouble(4) == 0.5 &&
+      scene1.getDouble(6) == 0.5, s"scene 1: $scene1")
+    assert(all(2).getDouble(2) == 0.0 && all(2).getDouble(6) == 0.5,
+      s"scene 2: ${all(2)}")
+    val lastDay = same(events.filter(to_date(col("ts")) === d2))
+    assert(lastDay.size == 4 && lastDay.forall(_.getDouble(6) == 0.0))
+    assert(same(events.limit(0)).isEmpty)
   }
 }

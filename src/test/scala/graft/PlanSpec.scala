@@ -1065,4 +1065,33 @@ class PlanSpec extends SparkSpecBase {
       .filterNot(SparkEntry.queries.contains)
     assert(unknown.isEmpty, s"not in SparkEntry.queries: $unknown")
   }
+
+  test("q14 offline metrics: two fine aggregates rolled up per scene in " +
+    "one aggregate — no join, three data shuffles, and a pinned number " +
+    "of jobs per collect") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val stages = new AdaptiveSparkPlanHelper {}
+    val (plan, jobs) = graft.core.CacheScope.scoped {
+      val wide = SparkEntry.queries("q14_offline_metrics")(spark, sfDir)
+      val (_, jobs, _) = jobEvents(wide.collect())
+      (wide.queryExecution.executedPlan, jobs)
+    }
+    assert(stages.collect(plan) { case j: BaseJoinExec => j }.isEmpty,
+      s"the dashboard must read its fine aggregates with no join:\n$plan")
+    val shuffles = stages.collect(plan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.map(_.asInstanceOf[Attribute].name).mkString(",")
+        case p => p.toString
+      }
+    }
+    assert(shuffles.sorted == Seq("scene", "scene,item", "scene,user_id"),
+      s"one shuffle per fine aggregate and one for the roll-up:\n$plan")
+    // each adaptive query stage is a job, and so is the result stage
+    assert(jobs.size == 4, s"${jobs.size} jobs:\n${jobs.mkString("\n--\n")}")
+  }
 }
